@@ -827,7 +827,7 @@ def q_hll_distinct(spark, sf_dir):
     # both sides — the sketch ITSELF is oracle-gated, with the exact
     # count(DISTINCT) audit column alongside
     out = text_analysis.hll_distinct_terms(
-        documents(spark, sf_dir), m=64, include_exact=True
+        documents(spark, sf_dir), include_exact=True
     )
     return out.select(
         "source",

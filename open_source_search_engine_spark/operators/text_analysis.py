@@ -663,11 +663,16 @@ def corpus_profile(
     )
 
 
+#: HyperLogLog register count and its bias constant alpha_64 (Flajolet et
+#: al. 2007); the two are fixed together so they can never disagree
+_HLL_M = 64
+_HLL_ALPHA = 0.709
+
+
 def hll_distinct_terms(
     docs: DataFrame,
     text_col: str = "text",
     group_col: str = "source",
-    m: int = 64,
     include_exact: bool = True,
 ) -> DataFrame:
     """Per-group distinct-term estimate via a DETERMINISTIC HyperLogLog
@@ -682,7 +687,8 @@ def hll_distinct_terms(
     registers and the identical estimate — the sketch itself is
     oracle-gated, not just sanity-bounded.
 
-    Per token: h = md5(term); register = first byte mod ``m``; rho = 1 +
+    Per token: h = md5(term); register = first byte mod ``m`` (``_HLL_M``
+    = 64 registers, matched by the bias constant ``_HLL_ALPHA``); rho = 1 +
     number of leading zero BITS of the next 48 bits (12 hex digits,
     counted via string ops: 4 per leading '0' digit plus the first
     nonzero digit's own leading zeros; all-zero -> 49). Registers
@@ -718,19 +724,18 @@ def hll_distinct_terms(
     tok = tok.select(
         "grp",
         "term",
-        F.expr(f"({d0} * 16 + {d1}) % {int(m)}").alias("reg"),
+        F.expr(f"({d0} * 16 + {d1}) % {_HLL_M}").alias("reg"),
         F.expr(
             f"CASE WHEN {z} = 12 THEN 49 ELSE {z} * 4 + {lzd} + 1 END"
         ).alias("rho"),
     )
     regs = tok.groupBy("grp", "reg").agg(F.max("rho").alias("mx"))
-    alpha = 0.709  # alpha_64; callers changing m supply the matching alpha
     per = regs.groupBy("grp").agg(
         F.sum(F.pow(F.lit(2.0), -F.col("mx"))).alias("sumexp"),
         F.count(F.lit(1)).alias("n_regs"),
     )
-    mm = float(m)
-    raw = F.lit(alpha * mm * mm) / (
+    mm = float(_HLL_M)
+    raw = F.lit(_HLL_ALPHA * mm * mm) / (
         F.col("sumexp") + (F.lit(mm) - F.col("n_regs"))
     )
     v = F.lit(mm) - F.col("n_regs")

@@ -116,63 +116,6 @@ def test_children_matches_child_docs(spark, tmp_path_factory):
     assert e.search_expanded(["children"], "AND", 10, morphology=False).collect() == []
 
 
-# ---------------------------------------------------------------------------
-# batch proximity (r5): search_many_proximity must be per-query rank- and
-# score-identical to search_proximity on EVERY routing path — certified
-# one-shot, fallback (certificate impossible), single-term, OR-mode.
-# ---------------------------------------------------------------------------
-
-def _exact_rows(eng, terms, k, w, mode="AND"):
-    out = eng.search_proximity(sorted(set(terms)), k=k, prox_weight=w, mode=mode)
-    return [
-        (i + 1, r["doc_id"], round(r["score"], 9), r["matched"])
-        for i, r in enumerate(out.collect())
-    ]
-
-
-BATCH = [
-    {"query_id": "qa", "terms": ["spark", "index"], "mode": "AND", "k": 5},
-    {"query_id": "qb", "terms": ["merge", "sort", "shard"], "mode": "AND", "k": 5},
-    {"query_id": "qc", "terms": ["spark"], "mode": "AND", "k": 5},
-    {"query_id": "qd", "terms": ["vector", "window"], "mode": "OR", "k": 5},
-    {"query_id": "qe", "terms": ["zzzabsent", "spark"], "mode": "AND", "k": 5},
-]
-
-
-def test_batch_proximity_identity_all_shapes(eng):
-    out = eng.search_many_proximity(BATCH, prox_weight=1.0)
-    by_q = {}
-    for r in out.orderBy("query_id", "rank").collect():
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9), r["matched"])
-        )
-    for q in BATCH:
-        qid = q["query_id"]
-        want = _exact_rows(eng, q["terms"], q["k"], 1.0, q["mode"])
-        assert by_q.get(qid, []) == want, qid
-    assert "qe" not in by_q  # unanswerable AND query yields no rows
-
-
-def test_batch_proximity_forced_fallback_is_exact(eng):
-    # overfetch=1 gives m = k+1 candidates and a huge prox_weight makes the
-    # certificate unsatisfiable unless the match set is exhausted -- the
-    # common-term query routes through the exact fallback branch and must
-    # STILL be identical to the exact path
-    batch = [{"query_id": "fb", "terms": ["the", "spark"], "mode": "AND", "k": 3}]
-    out = eng.search_many_proximity(batch, prox_weight=50.0, overfetch=1)
-    got = [
-        (r["rank"], r["doc_id"], round(r["score"], 9), r["matched"])
-        for r in out.collect()
-    ]
-    assert got == _exact_rows(eng, ["the", "spark"], 3, 50.0)
-
-
-def test_batch_proximity_weight_zero_is_search_many(eng):
-    a = [tuple(r) for r in eng.search_many_proximity(BATCH, prox_weight=0.0).collect()]
-    b = [tuple(r) for r in eng.search_many(BATCH).collect()]
-    assert a == b
-
-
 def test_warehouse_relocation_reads_identically(spark, tmp_path_factory):
     # a warehouse built in a scratch dir then MOVED (the bench.py 10M cache
     # does exactly this: build in /tmp, copy under the repo) must stay
@@ -247,35 +190,6 @@ def test_suggestion_requery_preserves_exclusions(eng):
         for r in eng.search_terms(["index"], mode="OR", k=1000).collect()
     }
     assert not ({r["doc_id"] for r in out} & with_excl)
-
-
-def test_wand_proximity_exact_fallback_honors_exclusions(eng):
-    from open_source_search_engine_spark.operators.wand import wand_proximity
-
-    with_excl = {
-        r["doc_id"]
-        for r in eng.search_terms(["spark"], mode="OR", k=10_000).collect()
-    }
-    # overfetch=1 + tiny max_candidates + huge weight forces the exact
-    # fallback branch; the exclusion must survive into it
-    out = wand_proximity(
-        eng,
-        ["the", "to"],
-        k=3,
-        prox_weight=50.0,
-        overfetch=1,
-        max_candidates=4,
-        exclude_terms=["spark"],
-    ).collect()
-    assert out
-    assert not ({r["doc_id"] for r in out} & with_excl)
-    # and the result equals the exact path with the same exclusion
-    want = eng.search_proximity(
-        ["the", "to"], k=3, prox_weight=50.0, exclude_terms=["spark"]
-    ).collect()
-    assert [(r["doc_id"], round(r["score"], 9)) for r in out] == [
-        (r["doc_id"], round(r["score"], 9)) for r in want
-    ]
 
 
 def test_append_after_copy_rebases_onto_new_root(spark, tmp_path_factory):

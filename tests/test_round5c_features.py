@@ -282,6 +282,18 @@ def test_plain_queries_keep_the_fast_path(eng):
     ]
 
 
+def test_negated_wildcard_raises_instead_of_literal(eng):
+    # '-ind*' used to become a literal exclusion of the token 'ind'
+    with pytest.raises(ValueError, match=re.escape("'-ind*'")):
+        eng.search("spark -ind*", mode="AND", k=10)
+
+
+def test_infix_wildcard_raises_instead_of_empty_page(eng):
+    # '*dex*' used to score as the literal group '*dex*': an empty page
+    with pytest.raises(ValueError, match=re.escape("'*dex*'")):
+        eng.search("spark *dex*", mode="AND", k=10)
+
+
 # ----------------------------------------------- linear score-fold guard ----
 def test_wide_vote_group_plans_in_linear_time(spark, tmp_path_factory):
     # regression guard for the O(2^n) fold: a 30-member wildcard vote
@@ -464,6 +476,31 @@ def test_bm25f_field_hit_outranks_body_hit(spark, tmp_path_factory):
         ["query"], "OR", 10, field_col="role", field_weight=3.0
     ).collect()
     assert [r["doc_id"] for r in out] == [1, 2]
+
+
+def test_bm25f_keeps_docs_with_a_null_field(spark, tmp_path_factory):
+    # doc 2 has a NULL source and matches only in the body: the dl join on
+    # the field value must keep it (dl_field = 0), so at w=0 BM25F is
+    # still exactly plain BM25 and at w>0 the doc still scores
+    wh = str(tmp_path_factory.mktemp("r5c-fnull-wh"))
+    catalog = Catalog(spark, wh)
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha query gamma delta", "src0"),
+            (2, "query beta gamma delta", None),
+            (3, "alpha beta gamma delta", "src1"),
+        ],
+        "doc_id long, text string, source string",
+    )
+    build_index(spark, catalog, docs, IndexConfig())
+    engine = SearchEngine(spark, catalog)
+    plain = engine.search_terms(["query"], "OR", 10).collect()
+    flat = engine.search_fielded(["query"], "OR", 10, field_weight=0.0)
+    assert [(r["doc_id"], round(r["score"], 9)) for r in flat.collect()] == [
+        (r["doc_id"], round(r["score"], 9)) for r in plain
+    ]
+    weighted = engine.search_fielded(["query"], "OR", 10, field_weight=2.0)
+    assert {r["doc_id"] for r in weighted.collect()} == {1, 2}
 
 
 # --------------------------------------------------------- index diff ----

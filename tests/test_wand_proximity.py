@@ -1,4 +1,5 @@
-"""Proximity rescoring on the WAND scale path (r4 VERDICT task 1).
+"""Proximity rescoring on the WAND and batch paths, and the shared
+certified re-rank (operators/rerank.py) behind all five re-rank entry points.
 
 Gates:
 * wand_proximity == search_proximity (rank AND score) on 2-, 3- and 4-term
@@ -6,10 +7,15 @@ Gates:
 * the guarantee loop is exercised (tiny overfetch forces the candidate set
   below the match count, so the exactness check / growth path must fire);
 * prox_weight=0 is rank-identical to wand_search (the verdict's
-  rank-identity-at-w=0 gate).
+  rank-identity-at-w=0 gate);
+* search_many_proximity is per-query identical to search_proximity;
+* the Spark job count of each re-rank entry point's exhaustive fast path
+  is pinned, so an extra collect or rescore job fails.
 """
 
 from __future__ import annotations
+
+import time
 
 import pytest
 
@@ -21,6 +27,8 @@ from open_source_search_engine_spark.operators.index_build import (
 )
 from open_source_search_engine_spark.operators.query import SearchEngine
 from open_source_search_engine_spark.operators.wand import (
+    wand_boosted,
+    wand_phrase,
     wand_proximity,
     wand_search,
 )
@@ -126,3 +134,143 @@ def test_w0_rank_identity_with_wand(eng):
         base = _rows(wand_search(eng, terms, "AND", k))
         prox0 = _rows(wand_proximity(eng, terms, k=k, prox_weight=0.0))
         assert prox0 == base
+
+
+def test_wand_proximity_exact_fallback_honors_exclusions(eng):
+    from open_source_search_engine_spark.operators.wand import wand_proximity
+
+    with_excl = {
+        r["doc_id"]
+        for r in eng.search_terms(["spark"], mode="OR", k=10_000).collect()
+    }
+    # overfetch=1 + tiny max_candidates + huge weight forces the exact
+    # fallback branch; the exclusion must survive into it
+    out = wand_proximity(
+        eng,
+        ["the", "to"],
+        k=3,
+        prox_weight=50.0,
+        overfetch=1,
+        max_candidates=4,
+        exclude_terms=["spark"],
+    ).collect()
+    assert out
+    assert not ({r["doc_id"] for r in out} & with_excl)
+    # and the result equals the exact path with the same exclusion
+    want = eng.search_proximity(
+        ["the", "to"], k=3, prox_weight=50.0, exclude_terms=["spark"]
+    ).collect()
+    assert [(r["doc_id"], round(r["score"], 9)) for r in out] == [
+        (r["doc_id"], round(r["score"], 9)) for r in want
+    ]
+
+
+# ---------------------------------------------------------------------------
+# batch proximity (r5): search_many_proximity must be per-query rank- and
+# score-identical to search_proximity on EVERY routing path — certified
+# one-shot, fallback (certificate impossible), single-term, OR-mode.
+# ---------------------------------------------------------------------------
+
+def _exact_rows(eng, terms, k, w, mode="AND"):
+    out = eng.search_proximity(sorted(set(terms)), k=k, prox_weight=w, mode=mode)
+    return [
+        (i + 1, r["doc_id"], round(r["score"], 9), r["matched"])
+        for i, r in enumerate(out.collect())
+    ]
+
+
+BATCH = [
+    {"query_id": "qa", "terms": ["spark", "index"], "mode": "AND", "k": 5},
+    {"query_id": "qb", "terms": ["merge", "sort", "shard"], "mode": "AND", "k": 5},
+    {"query_id": "qc", "terms": ["spark"], "mode": "AND", "k": 5},
+    {"query_id": "qd", "terms": ["vector", "window"], "mode": "OR", "k": 5},
+    {"query_id": "qe", "terms": ["zzzabsent", "spark"], "mode": "AND", "k": 5},
+]
+
+
+def test_batch_proximity_identity_all_shapes(eng):
+    out = eng.search_many_proximity(BATCH, prox_weight=1.0)
+    by_q = {}
+    for r in out.orderBy("query_id", "rank").collect():
+        by_q.setdefault(r["query_id"], []).append(
+            (r["rank"], r["doc_id"], round(r["score"], 9), r["matched"])
+        )
+    for q in BATCH:
+        qid = q["query_id"]
+        want = _exact_rows(eng, q["terms"], q["k"], 1.0, q["mode"])
+        assert by_q.get(qid, []) == want, qid
+    assert "qe" not in by_q  # unanswerable AND query yields no rows
+
+
+def test_batch_proximity_forced_fallback_is_exact(eng):
+    # overfetch=1 gives m = k+1 candidates and a huge prox_weight makes the
+    # certificate unsatisfiable unless the match set is exhausted -- the
+    # common-term query routes through the exact fallback branch and must
+    # STILL be identical to the exact path
+    batch = [{"query_id": "fb", "terms": ["the", "spark"], "mode": "AND", "k": 3}]
+    out = eng.search_many_proximity(batch, prox_weight=50.0, overfetch=1)
+    got = [
+        (r["rank"], r["doc_id"], round(r["score"], 9), r["matched"])
+        for r in out.collect()
+    ]
+    assert got == _exact_rows(eng, ["the", "spark"], 3, 50.0)
+
+
+def test_batch_proximity_weight_zero_is_search_many(eng):
+    a = [tuple(r) for r in eng.search_many_proximity(BATCH, prox_weight=0.0).collect()]
+    b = [tuple(r) for r in eng.search_many(BATCH).collect()]
+    assert a == b
+
+
+# ---------------------------------------------------------------------------
+# job-count pin: one exhaustive-fast-path call per re-rank entry point,
+# counted with statusTracker() in a job group. The pins are the counts the
+# five entry points launched before they shared rerank.py's drivers.
+# ---------------------------------------------------------------------------
+
+ROLE_W = {"role": ({"user": 2.0, "assistant": 0.5}, 1.0)}
+JOB_BATCH = BATCH[:4]  # the answerable shapes: AND, 3-term, 1-term, OR
+RERANK_JOB_PINS = {
+    "wand_proximity": (
+        lambda e: wand_proximity(e, ["spark", "index", "query"], k=10), 7
+    ),
+    "wand_phrase": (lambda e: wand_phrase(e, ["to", "be"], k=10), 9),
+    "wand_boosted": (
+        lambda e: wand_boosted(
+            e, ["spark", "index"], "AND", 10, field_weights=ROLE_W
+        ),
+        6,
+    ),
+    "search_many_proximity": (
+        lambda e: e.search_many_proximity(JOB_BATCH, prox_weight=1.0), 15
+    ),
+    "search_many_boosted": (
+        lambda e: e.search_many_boosted(JOB_BATCH, field_weights=ROLE_W), 12
+    ),
+}
+
+
+def _settled_job_count(sc, group: str) -> int:
+    # the status store is fed by the async listener bus: poll until the
+    # group's job count has held still for half a second
+    seen, stable, deadline = -1, 0, time.time() + 10
+    while stable < 5 and time.time() < deadline:
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        stable, seen = (stable + 1, n) if n == seen else (0, n)
+        time.sleep(0.1)
+    return seen
+
+
+def test_rerank_entry_points_keep_their_job_counts(spark, eng):
+    sc = spark.sparkContext
+    got = {}
+    for name, (call, _) in RERANK_JOB_PINS.items():
+        call(eng).collect()  # warm the engine's plan cache
+        group = f"rerank-jobs-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            call(eng).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got[name] = _settled_job_count(sc, group)
+    assert got == {name: pin for name, (_, pin) in RERANK_JOB_PINS.items()}
