@@ -11,7 +11,7 @@ UDFs + a snapshot-isolated table catalog (Iceberg when the runtime jar is
 present; an equivalent atomic-manifest parquet warehouse otherwise).
 
 Package layout:
-  functions/  pure kernels: tokenizer, varbyte codec, BM25 formula, hashing
+  functions/  pure kernels: tokenizer, posting-block format, BM25 formula, hashing
   sources/    transcripts synthesizer + table readers/writers
   operators/  index build, query (exact + block-max WAND), dedup, similarity
   streaming/  incremental micro-batch index appends

@@ -31,6 +31,10 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 CURRENT = "_current.json"
+#: every table is written with the Parquet v2 writer, whose integer
+#: encodings (dictionary while it pays, else DELTA_BINARY_PACKED) pack the
+#: postings' list columns (functions/codec.py) with no codec of our own
+_PARQUET_WRITER = ("parquet.writer.version", "v2")
 
 
 class Catalog:
@@ -214,7 +218,7 @@ class Catalog:
         # only names the dir, uniqueness comes from the uuid suffix
         seq = ((self._read_manifest(name) or {}).get("sequence", -1)) + 1
         data_dir = os.path.join(tdir, f"data-{seq:06d}-{uuid.uuid4().hex[:8]}")
-        w = df.write.mode("overwrite")
+        w = df.write.mode("overwrite").option(*_PARQUET_WRITER)
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(data_dir)
@@ -323,7 +327,7 @@ class Catalog:
         data_dir = os.path.join(
             self._tdir(name), f"data-{parent['sequence'] + 1:06d}-{uuid.uuid4().hex[:8]}"
         )
-        df.write.mode("overwrite").parquet(data_dir)
+        df.write.mode("overwrite").option(*_PARQUET_WRITER).parquet(data_dir)
         with self._commit_lock(name):
             # a writer may have committed while we rewrote: committing the
             # merged dir would silently DROP that writer's data, so abort

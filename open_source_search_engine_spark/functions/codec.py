@@ -1,294 +1,99 @@
-"""Delta + varbyte posting-block codec (numpy-vectorized).
+"""Posting-block format: the one place the stored block layout is defined.
 
 Replaces the reference's 18->12->6-byte posdb prefix key compression
-(`Posdb.h:44-48,228-233`, `RdbList.h:34-46` useHalfKeys) with the standard
-inverted-index encoding the north rule names explicitly: per (term, block),
-sorted doc_ids are gap-encoded then varbyte-packed into a BinaryType column;
-tf / dl arrays are varbyte-packed; per-doc position lists are delta-encoded
-and varbyte-packed, with tf giving each doc's position count. The per-block
+(`Posdb.h:44-48,228-233`, `RdbList.h:34-46` useHalfKeys) with Parquet list
+columns: each ``postings`` row (index_build.POSTINGS_SCHEMA) is one block,
+the docs of one term inside one doc-hash prefix range, stored as
+
+  doc_ids    array<bigint>       sorted ascending, unique within the block
+  tfs        array<int>          term frequency per doc (parallel)
+  dls        array<int>          doc length per doc (parallel)
+  positions  array<array<int>>   one ascending token-position list per doc;
+                                 an EMPTY outer list when the index was
+                                 built with store_positions=False
+
+The catalog writes every table with the Parquet v2 writer, which packs
+these integers itself (dictionary-encoded while the dictionary pays, else
+DELTA_BINARY_PACKED) -- no codec of our own and no binary cells. Readers
+never decode in Python: the exact and batch paths explode
+``arrays_zip(doc_ids, tfs, dls[, positions])`` in the JVM
+(query.SearchEngine.decoded_postings) and the WAND scorer reads the
+arrays as numpy (wand._make_scorer). The per-block
 ``first_doc_id/last_doc_id/block_max_tf/block_min_dl`` columns replace the
 reference's RdbMap page index + B-step skip bits (`Posdb.h:178-186`,
 `RdbMap.h:1-25`) as the skip/prune metadata for block-max WAND.
 
-Varbyte convention: little-endian 7-bit groups; 0x80 continuation bit set on
-every byte except the last byte of a value. Encode and decode are fully
-vectorized numpy (no per-value Python loops) so they run fast inside Arrow
-pandas UDFs.
+The build and the merge move between these columns and flat numpy arrays
+with :func:`encode_blocks` / :func:`decode_blocks`: one vectorized pass per
+column, offsets instead of per-row Python objects.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-_U64 = np.uint64
-_SEVEN = _U64(7)
-_MASK7 = _U64(0x7F)
+import pyarrow as pa
+import pyarrow.compute as pc
 
 
-def _vb_encode_arr(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized varbyte core: returns (uint8 output array, per-value byte
-    START offsets). Shared by the single-buffer and grouped encoders."""
-    v = np.ascontiguousarray(values, dtype=_U64)
-    n = v.size
-    if n == 0:
-        return np.empty(0, np.uint8), np.empty(0, np.int64)
-    # byte length per value: ceil(bitlen/7), minimum 1
-    nbits = np.zeros(n, dtype=np.int64)
-    tmp = v.copy()
-    nz = tmp > 0
-    while nz.any():
-        nbits[nz] += 1
-        tmp >>= _SEVEN
-        nz = tmp > 0
-    lengths = np.maximum(nbits, 1)
-    ends = np.cumsum(lengths)
-    total = int(ends[-1])
-    starts = ends - lengths
-    out = np.empty(total, dtype=np.uint8)
-    # position of each output byte within its value (0 = least significant)
-    pos_in_val = np.arange(total, dtype=np.int64) - np.repeat(starts, lengths)
-    val_rep = np.repeat(v, lengths)
-    shift = (pos_in_val.astype(np.uint64)) * _SEVEN
-    out[:] = ((val_rep >> shift) & _MASK7).astype(np.uint8)
-    # continuation bit on all but the last byte of each value
-    is_last = np.zeros(total, dtype=bool)
-    is_last[ends - 1] = True
-    out[~is_last] |= 0x80
-    return out, starts
-
-
-def varbyte_encode(values: np.ndarray) -> bytes:
-    """Encode a 1-D array of unsigned ints (< 2**64) to varbyte bytes."""
-    out, _ = _vb_encode_arr(values)
-    return out.tobytes()
-
-
-def varbyte_encode_groups(
-    values: np.ndarray, group_starts: np.ndarray
-) -> list[bytes]:
-    """Encode MANY groups' values in one vectorized pass.
-
-    ``values`` is the concatenation of all groups; ``group_starts`` the index
-    of each group's first value. One varbyte pass over everything, then the
-    byte buffer is sliced at group boundaries -- the per-group Python cost is
-    a single bytes slice (this is what makes posting-block encoding fast with
-    millions of (term, block) groups per build)."""
-    gs = np.asarray(group_starts, dtype=np.int64)
-    out, starts = _vb_encode_arr(values)
-    buf = out.tobytes()
-    if gs.size == 0:
-        return []
-    # sentinel entry: a group_starts value equal to values.size (a TRAILING
-    # empty group) must map to end-of-buffer, not index out of starts
-    starts_ext = np.empty(starts.size + 1, dtype=np.int64)
-    starts_ext[:-1] = starts
-    starts_ext[-1] = len(buf)
-    bounds = np.empty(gs.size + 1, dtype=np.int64)
-    bounds[:-1] = starts_ext[gs]
-    bounds[-1] = len(buf)
-    return [buf[bounds[i]: bounds[i + 1]] for i in range(gs.size)]
-
-
-def varbyte_decode_concat(bufs) -> tuple[np.ndarray, np.ndarray]:
-    """Decode MANY buffers in one vectorized pass.
-
-    Returns (values, counts) where ``counts[i]`` is the number of values that
-    came from ``bufs[i]``. One big frombuffer + one reduceat instead of a
-    Python call per buffer -- the reduce-side merge decodes entire Arrow
-    batches of posting blocks this way."""
-    n = len(bufs)
-    if n == 0:
-        return np.empty(0, _U64), np.empty(0, np.int64)
-    blens = np.fromiter((len(b) for b in bufs), np.int64, n)
-    joined = b"".join(bufs)
-    b = np.frombuffer(joined, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, _U64), np.zeros(n, np.int64)
-    is_last = (b & 0x80) == 0
-    # values per buffer = count of is_last bytes inside its byte range
-    cum_last = np.concatenate(([0], np.cumsum(is_last)))
-    bounds = np.concatenate(([0], np.cumsum(blens)))
-    counts = cum_last[bounds[1:]] - cum_last[bounds[:-1]]
-    # every non-empty buffer must END on a terminator byte (high bit
-    # clear), exactly like varbyte_decode's truncation check: without it
-    # a corrupted buffer ending mid-value silently merges its dangling
-    # bytes into the NEXT buffer's first value and shifts the counts
-    nonempty_ends = bounds[1:][blens > 0] - 1
-    if nonempty_ends.size and not bool(np.all(is_last[nonempty_ends])):
-        raise ValueError("truncated varbyte stream in buffer batch")
-    ends = np.flatnonzero(is_last)
-    starts = np.empty_like(ends)
-    if ends.size:
-        starts[0] = 0
-        starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    pos_in_val = np.arange(b.size, dtype=np.int64) - np.repeat(starts, lengths)
-    contrib = (b.astype(_U64) & _MASK7) << (pos_in_val.astype(np.uint64) * _SEVEN)
-    return np.add.reduceat(contrib, starts), counts
-
-
-def delta_decode_groups(gaps: np.ndarray, group_starts: np.ndarray) -> np.ndarray:
-    """Inverse of delta_encode_groups: per-group cumulative sums where each
-    group's first value is absolute. Vectorized via global cumsum minus a
-    per-group base offset (same trick as decode_positions)."""
-    g = np.ascontiguousarray(gaps, dtype=_U64)
-    if g.size == 0:
-        return g
-    gs = np.asarray(group_starts, dtype=np.int64)
-    flat = np.cumsum(g, dtype=_U64)
-    base = np.zeros_like(g)
-    # an EMPTY group (start == next start, or the trailing start == size
-    # sentinel varbyte_encode_groups supports) has no elements: its size
-    # below is 0 so it contributes nothing, but its start index must not
-    # be dereferenced (it can equal g.size)
-    nz = gs[(gs > 0) & (gs < g.size)]
-    base[nz] = flat[nz - 1]
-    # group sizes from starts
-    sizes = np.diff(np.append(gs, g.size))
-    return flat - np.repeat(base[np.minimum(gs, g.size - 1)], sizes)
-
-
-def permute_segments(
-    flat: np.ndarray, seg_lengths: np.ndarray, perm: np.ndarray
-) -> np.ndarray:
-    """Reorder variable-length segments of ``flat`` (lengths per segment in
-    original order) into ``perm`` order -- fully vectorized (repeat + arange
-    fancy indexing), no per-segment Python loop."""
-    seg_lengths = np.asarray(seg_lengths, dtype=np.int64)
-    if flat.size == 0:
-        return flat
-    src_starts = np.cumsum(seg_lengths) - seg_lengths
-    out_lens = seg_lengths[perm]
-    total = int(out_lens.sum())
-    # for output element i: source index = src_starts[perm[seg_of(i)]] + offset
-    seg_of = np.repeat(np.arange(perm.size), out_lens)
-    out_pos = np.arange(total, dtype=np.int64) - np.repeat(
-        np.cumsum(out_lens) - out_lens, out_lens
+def _lists(offsets: np.ndarray, values: pa.Array) -> pa.ListArray:
+    """One list per ``offsets`` interval; elements are never null."""
+    return pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32)),
+        values,
+        type=pa.list_(pa.field("element", values.type, nullable=False)),
     )
-    src_idx = src_starts[perm][seg_of] + out_pos
-    return flat[src_idx]
 
 
-def delta_encode_groups(
-    sorted_values: np.ndarray, group_starts: np.ndarray
-) -> np.ndarray:
-    """Gap-encode concatenated per-group sorted arrays: within each group the
-    first value stays absolute, the rest become deltas."""
-    v = np.ascontiguousarray(sorted_values, dtype=_U64)
-    if v.size == 0:
-        return v
-    gaps = np.empty_like(v)
-    gaps[0] = v[0]
-    gaps[1:] = v[1:] - v[:-1]
-    # drop empty-group sentinel starts (== v.size): nothing to re-absolute
-    gs = np.asarray(group_starts, dtype=np.int64)
-    gs = gs[gs < v.size]
-    gaps[gs] = v[gs]
-    return gaps
+def doc_positions(tfs: np.ndarray, pos_flat: np.ndarray) -> pa.ListArray:
+    """Per-doc position lists from flat positions grouped by ``tfs`` (doc i
+    owns the next ``tfs[i]`` values). Docs keep Arrow list identity, so
+    reordering or filtering docs is one ``take``/``filter``."""
+    offsets = np.zeros(tfs.size + 1, dtype=np.int64)
+    np.cumsum(tfs, out=offsets[1:])
+    return _lists(offsets, pa.array(pos_flat, pa.int32()))
 
 
-def varbyte_decode(buf: bytes) -> np.ndarray:
-    """Decode varbyte bytes back to a uint64 array."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=_U64)
-    is_last = (b & 0x80) == 0
-    ends = np.flatnonzero(is_last)
-    if ends.size == 0 or ends[-1] != b.size - 1:
-        raise ValueError("truncated varbyte stream")
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    pos_in_val = np.arange(b.size, dtype=np.int64) - np.repeat(starts, lengths)
-    contrib = (b.astype(_U64) & _MASK7) << (pos_in_val.astype(np.uint64) * _SEVEN)
-    return np.add.reduceat(contrib, starts)
+def encode_blocks(
+    block_starts: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    positions: pa.ListArray | None,
+) -> dict[str, pa.Array]:
+    """Per-doc arrays (grouped: block j owns docs
+    ``[block_starts[j], block_starts[j+1])``) -> the four list columns.
+    ``positions`` (one list per doc) is None for an index without
+    positions: every block then gets an empty outer list."""
+    off = np.append(block_starts, doc_ids.size)
+    if positions is None:
+        off_pos = np.zeros(off.size, dtype=np.int64)
+        positions = doc_positions(np.empty(0, np.int64), np.empty(0, np.int32))
+    else:
+        off_pos = off
+    return {
+        "doc_ids": _lists(off, pa.array(doc_ids, pa.int64())),
+        "tfs": _lists(off, pa.array(tfs, pa.int32())),
+        "dls": _lists(off, pa.array(dls, pa.int32())),
+        "positions": _lists(off_pos, positions),
+    }
 
 
-def delta_encode(sorted_values: np.ndarray) -> np.ndarray:
-    """Gap-encode a strictly-increasing uint64 array (first value absolute)."""
-    v = np.ascontiguousarray(sorted_values, dtype=_U64)
-    if v.size == 0:
-        return v
-    out = np.empty_like(v)
-    out[0] = v[0]
-    out[1:] = v[1:] - v[:-1]
-    return out
+def decode_blocks(batch: pa.RecordBatch, with_positions: bool):
+    """Inverse of :func:`encode_blocks` over a batch of block rows.
 
+    Returns ``(doc_ids, tfs, dls, positions, counts)``: flat int64 arrays in
+    row order, the per-doc position lists (None unless ``with_positions``)
+    and each row's doc count."""
+    counts = pc.list_value_length(batch.column("doc_ids"))
 
-def delta_decode(gaps: np.ndarray) -> np.ndarray:
-    g = np.ascontiguousarray(gaps, dtype=_U64)
-    return np.cumsum(g, dtype=_U64)
+    def flat(name: str) -> np.ndarray:
+        return (
+            batch.column(name).flatten().to_numpy(zero_copy_only=False)
+            .astype(np.int64)
+        )
 
-
-def encode_doc_ids(doc_ids: np.ndarray) -> bytes:
-    """Sorted non-negative int64 doc_ids -> delta+varbyte bytes."""
-    return varbyte_encode(delta_encode(doc_ids.astype(_U64)))
-
-
-def decode_doc_ids(buf: bytes) -> np.ndarray:
-    """Inverse of :func:`encode_doc_ids`; returns int64 (doc_ids are 63-bit)."""
-    return delta_decode(varbyte_decode(buf)).astype(np.int64)
-
-
-def encode_counts(counts: np.ndarray) -> bytes:
-    """tf / dl arrays (parallel to doc_ids) -> varbyte bytes."""
-    return varbyte_encode(counts.astype(_U64))
-
-
-def decode_counts(buf: bytes) -> np.ndarray:
-    return varbyte_decode(buf).astype(np.int64)
-
-
-def encode_positions(tfs: np.ndarray, flat_positions: np.ndarray) -> bytes:
-    """Per-doc position lists -> per-doc delta + varbyte bytes.
-
-    ``flat_positions`` is the concatenation of each doc's sorted position
-    list; ``tfs`` gives each doc's position count (so no explicit lengths are
-    stored -- same trick as posdb packing positions into key bits,
-    `Posdb.h:3-27`).
-
-    NOTE: the grouped-delta arithmetic here is the same algorithm as
-    delta_encode_groups/delta_decode_groups (which now also accept empty
-    groups); this copy additionally masks tf=0 docs inline because its
-    starts come from cumsum(tfs). A change to the delta contract must land
-    in BOTH places (gated by the codec property tests either way).
-    """
-    tfs = tfs.astype(np.int64)
-    p = np.ascontiguousarray(flat_positions, dtype=_U64)
-    if p.size == 0:
-        return b""
-    if int(tfs.sum()) != p.size:
-        raise ValueError("sum(tfs) != len(flat_positions)")
-    gaps = np.empty_like(p)
-    gaps[0] = p[0]
-    gaps[1:] = p[1:] - p[:-1]
-    starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-    # only docs that OWN positions get an absolute first position: a tf=0
-    # doc's start aliases its successor's (harmless) or equals p.size for a
-    # trailing empty doc (IndexError without the mask)
-    own = starts[tfs > 0]
-    gaps[own] = p[own]  # first position of each doc is absolute
-    return varbyte_encode(gaps)
-
-
-def decode_positions(tfs: np.ndarray, buf: bytes) -> np.ndarray:
-    """Inverse of :func:`encode_positions` -> flat int64 position array."""
-    tfs = tfs.astype(np.int64)
-    gaps = varbyte_decode(buf)
-    if gaps.size == 0:
-        return np.empty(0, dtype=np.int64)
-    starts = np.cumsum(tfs) - tfs
-    # per-doc cumulative sum: global cumsum minus offset carried across
-    # docs. Bases are computed ONLY for docs with tf > 0: the old scatter
-    # (base[starts[1:]] = flat[starts[1:]-1]) silently corrupted the first
-    # doc via flat[-1] wraparound when tfs[0] == 0, and indexed out of
-    # bounds for a trailing tf=0 doc
-    nz = tfs > 0
-    own = starts[nz]
-    flat = np.cumsum(gaps, dtype=_U64)
-    bases = np.zeros(own.size, dtype=_U64)
-    mask = own > 0
-    bases[mask] = flat[own[mask] - 1]
-    flat = flat - np.repeat(bases, tfs[nz])
-    return flat.astype(np.int64)
+    positions = batch.column("positions").flatten() if with_positions else None
+    return (
+        flat("doc_ids"), flat("tfs"), flat("dls"), positions,
+        counts.to_numpy(zero_copy_only=False).astype(np.int64),
+    )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..functions.bm25 import BM25Params
+from ..session import _empty_frame
 
 #: k1/b are part of the cache identity: the within-term ranking (tf_norm
 #: order) DEPENDS on them, so an engine may only serve from a cache built
@@ -75,7 +76,9 @@ def build_hot_term_cache(
     avgdl = float(corpus["avgdl"])
     if not hot:
         catalog.write_table(
-            spark.createDataFrame([], "term_id long, doc_id long, tf int, dl int, rnk int"),
+            _empty_frame(
+                spark, "term_id long, doc_id long, tf int, dl int, rnk int"
+            ),
             "hot_topk",
         )
         catalog.write_table(

@@ -10,14 +10,14 @@ Spark-first re-expression -- a MAP-SIDE COMBINER architecture (measured: the
 naive plan shipped 120M raw token tuples per 4M docs through Arrow twice;
 this plan ships ~3% of that):
 
-  documents ──ONE mapInPandas: tokenize + partial-encode──▶ partial blocks
+  documents ──ONE mapInArrow: tokenize + partial-encode──▶ partial blocks
       (python never hands raw tuples back to the JVM; partial rows are
-       delta+varbyte posting blocks keyed by (term_id, salt_bits, salt))
-      │ shuffle of compressed partial blocks only
+       posting blocks (codec.py format) keyed by (term_id, salt_bits, salt))
+      │ shuffle of partial blocks only
       ▼
   repartition(term_id, salt_bits, block_id) + sortWithinPartitions
       │
-      ▼ ONE mapInPandas: vectorized k-way merge
+      ▼ ONE mapInArrow: vectorized k-way merge
   final postings blocks: ONE row per (term_id, salt_bits, salt) group
 
 Block granularity is DF-ADAPTIVE per term (_partial_encoder): a term's
@@ -42,6 +42,8 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,13 +71,15 @@ TOKENS_SCHEMA = T.StructType(
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("term", T.StringType(), False),
         T.StructField("tf", T.IntegerType(), False),
-        # per-(doc, term) positions delta+varbyte encoded (binary beats
-        # Arrow list<int> ~5x in shuffle/serialization cost)
-        T.StructField("positions", T.BinaryType(), False),
+        T.StructField("positions", T.ArrayType(T.IntegerType(), False), False),
         T.StructField("dl", T.IntegerType(), False),
     ]
 )
 
+_INT_LIST = T.ArrayType(T.IntegerType(), False)
+
+#: One row per posting block; the per-doc list columns (doc_ids, tfs, dls,
+#: positions) are laid out as described in functions/codec.py.
 POSTINGS_SCHEMA = T.StructType(
     [
         T.StructField("term_id", T.LongType(), False),
@@ -94,12 +98,25 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("block_max_tf", T.IntegerType(), False),
         T.StructField("block_min_dl", T.IntegerType(), False),
         T.StructField("sum_tf", T.LongType(), False),
-        T.StructField("doc_ids", T.BinaryType(), False),
-        T.StructField("tfs", T.BinaryType(), False),
-        T.StructField("dls", T.BinaryType(), False),
-        T.StructField("positions", T.BinaryType(), False),
+        T.StructField("doc_ids", T.ArrayType(T.LongType(), False), False),
+        T.StructField("tfs", _INT_LIST, False),
+        T.StructField("dls", _INT_LIST, False),
+        T.StructField("positions", T.ArrayType(_INT_LIST, False), False),
     ]
 )
+_POSTING_COLS = POSTINGS_SCHEMA.fieldNames()
+
+
+def _check_block_format(postings: DataFrame) -> None:
+    """Refuse postings written in the retired varbyte block format (binary
+    ``doc_ids`` cells): the serving, compaction and update paths read the
+    list columns of functions/codec.py. Looks at the schema only, so it
+    fails before the caller starts any work."""
+    if isinstance(postings.schema["doc_ids"].dataType, T.BinaryType):
+        raise ValueError(
+            "postings use the old varbyte block format (binary doc_ids); "
+            "rebuild the index with build_index to get list-column blocks"
+        )
 
 
 @dataclass
@@ -427,8 +444,9 @@ def tokenize_docs(
     pattern = _pattern(mode)
     src = docs.select("doc_id", "text")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            b = rb.to_pandas()
             if bigrams:
                 term_strings: dict[int, str] = {}
                 if mode == "ascii":
@@ -448,43 +466,27 @@ def tokenize_docs(
                 if out is None:
                     continue
                 doc_id, tid, tf, dl, pos_flat = out
-                g_starts = np.cumsum(tf) - tf
-                pos_gaps = codec.delta_encode_groups(
-                    pos_flat.astype(np.uint64), g_starts
+                terms = [term_strings[t] for t in tid.tolist()]
+            else:
+                tk = _tokenize_batch(b, pattern)
+                if tk is None:
+                    continue
+                doc_id, tf, dl, pos_flat = (
+                    tk["doc_id"], tk["tf"], tk["dl"], tk["pos_flat"]
                 )
-                yield pd.DataFrame(
-                    {
-                        "doc_id": doc_id,
-                        "term": np.array(
-                            [term_strings[t] for t in tid.tolist()],
-                            dtype=object,
-                        ),
-                        "tf": tf.astype(np.int32),
-                        "positions": codec.varbyte_encode_groups(
-                            pos_gaps, g_starts
-                        ),
-                        "dl": dl.astype(np.int32),
-                    }
-                )
-                continue
-            tk = _tokenize_batch(b, pattern)
-            if tk is None:
-                continue
-            g_starts = np.cumsum(tk["tf"]) - tk["tf"]
-            pos_gaps = codec.delta_encode_groups(
-                tk["pos_flat"].astype(np.uint64), g_starts
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": tk["doc_id"],
-                    "term": tk["terms"][tk["codes"]],
-                    "tf": tk["tf"].astype(np.int32),
-                    "positions": codec.varbyte_encode_groups(pos_gaps, g_starts),
-                    "dl": tk["dl"].astype(np.int32),
-                }
+                terms = tk["terms"][tk["codes"]]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(doc_id, pa.int64()),
+                    pa.array(terms, pa.string()),
+                    pa.array(tf, pa.int32()),
+                    codec.doc_positions(tf, pos_flat),
+                    pa.array(dl, pa.int32()),
+                ],
+                names=TOKENS_SCHEMA.fieldNames(),
             )
 
-    return src.mapInPandas(run, schema=TOKENS_SCHEMA)
+    return src.mapInArrow(run, schema=TOKENS_SCHEMA)
 
 
 def doc_length_col(mode: str = "unicode"):
@@ -520,20 +522,21 @@ def doc_length_col(mode: str = "unicode"):
 
 def _encode_grouped(
     tid: np.ndarray,
-    terms: np.ndarray | None,
     bid: np.ndarray,
     sbits: np.ndarray,
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
-    pos_flat: np.ndarray | None,
-    term_strings: dict[int, str] | None = None,
-) -> pd.DataFrame:
+    positions: pa.ListArray | None,
+    term_at,
+) -> pa.RecordBatch:
     """Postings sorted by (tid, sbits, bid, doc_id) -> one POSTINGS row per
-    (tid, sbits, bid) group.
+    (tid, sbits, bid) group (the sorted-dump analog, `RdbDump.cpp:251`).
 
-    All reductions are reduceat; all varbyte packing is one shared pass +
-    byte slicing (the sorted-dump analog, `RdbDump.cpp:251`)."""
+    All reductions are reduceat; the list columns are one offsets array
+    over the flat values (codec.encode_blocks). ``positions`` holds one
+    list per posting; ``term_at(gs)`` returns the term strings of the
+    groups starting at posting indices ``gs``."""
     n = tid.size
     new_grp = np.empty(n, dtype=bool)
     new_grp[0] = True
@@ -542,40 +545,21 @@ def _encode_grouped(
     )
     gs = np.flatnonzero(new_grp)
     ge = np.append(gs[1:], n)
-    if pos_flat is not None:
-        doc_pos_starts = np.cumsum(tfs) - tfs
-        pos_gaps = codec.delta_encode_groups(
-            pos_flat.astype(np.uint64), doc_pos_starts
-        )
-        pos_bufs = codec.varbyte_encode_groups(pos_gaps, doc_pos_starts[gs])
-    else:
-        pos_bufs = [b""] * gs.size
-    if terms is not None:
-        term_col = terms[gs]
-    else:
-        # dictionary lookup only at GROUP level (thousands), never per posting
-        term_col = np.array(
-            [term_strings[t] for t in tid[gs].tolist()], dtype=object
-        )
-    return pd.DataFrame(
-        {
-            "term_id": tid[gs],
-            "term": term_col,
-            "block_id": bid[gs],
-            "salt_bits": sbits[gs].astype(np.int32),
-            "n_docs": (ge - gs).astype(np.int32),
-            "first_doc_id": doc_ids[gs],
-            "last_doc_id": doc_ids[ge - 1],
-            "block_max_tf": np.maximum.reduceat(tfs, gs).astype(np.int32),
-            "block_min_dl": np.minimum.reduceat(dls, gs).astype(np.int32),
-            "sum_tf": np.add.reduceat(tfs, gs),
-            "doc_ids": codec.varbyte_encode_groups(
-                codec.delta_encode_groups(doc_ids.astype(np.uint64), gs), gs
-            ),
-            "tfs": codec.varbyte_encode_groups(tfs, gs),
-            "dls": codec.varbyte_encode_groups(dls, gs),
-            "positions": pos_bufs,
-        }
+    cols = {
+        "term_id": pa.array(tid[gs], pa.int64()),
+        "term": term_at(gs),
+        "block_id": pa.array(bid[gs], pa.int64()),
+        "salt_bits": pa.array(sbits[gs], pa.int32()),
+        "n_docs": pa.array(ge - gs, pa.int32()),
+        "first_doc_id": pa.array(doc_ids[gs], pa.int64()),
+        "last_doc_id": pa.array(doc_ids[ge - 1], pa.int64()),
+        "block_max_tf": pa.array(np.maximum.reduceat(tfs, gs), pa.int32()),
+        "block_min_dl": pa.array(np.minimum.reduceat(dls, gs), pa.int32()),
+        "sum_tf": pa.array(np.add.reduceat(tfs, gs), pa.int64()),
+        **codec.encode_blocks(gs, doc_ids, tfs, dls, positions),
+    }
+    return pa.RecordBatch.from_arrays(
+        [cols[c] for c in _POSTING_COLS], names=_POSTING_COLS
     )
 
 
@@ -662,11 +646,11 @@ def _partial_encoder(
             np.concatenate([p[i] for p in parts]) for i in range(5)
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         term_strings: dict[int, str] = {}
         doc_l, tid_l, tf_l, dl_l, pos_l = [], [], [], [], []
-        for b in batches:
-            out = tokenize_one(b, term_strings)
+        for rb in batches:
+            out = tokenize_one(rb.to_pandas(), term_strings)
             if out is None:
                 continue
             doc_b, tid_b, tf_b, dl_b, pos_b = out
@@ -682,7 +666,11 @@ def _partial_encoder(
         tid = np.concatenate(tid_l)
         tfs = np.concatenate(tf_l)
         dls = np.concatenate(dl_l)
-        pos_flat = np.concatenate(pos_l) if store_positions else None
+        positions = (
+            codec.doc_positions(tfs, np.concatenate(pos_l))
+            if store_positions
+            else None
+        )
         # adaptive split bits per term from estimated global df
         uniq_tids, inv, local_df = np.unique(
             tid, return_inverse=True, return_counts=True
@@ -697,17 +685,19 @@ def _partial_encoder(
         sbits = kbits_u[inv]
         salt = h63 >> (np.int64(63) - sbits)
         perm = np.lexsort((doc_ids, salt, sbits, tid))
-        if pos_flat is not None:
-            pos_flat = codec.permute_segments(pos_flat, tfs, perm)
+        if positions is not None:
+            positions = positions.take(pa.array(perm))
         tid, salt, sbits = tid[perm], salt[perm], sbits[perm]
         doc_ids, tfs, dls = doc_ids[perm], tfs[perm], dls[perm]
         out = _encode_grouped(
-            tid, None, salt, sbits, doc_ids, tfs, dls, pos_flat,
-            term_strings=term_strings,
+            tid, salt, sbits, doc_ids, tfs, dls, positions,
+            lambda gs: pa.array(
+                [term_strings[t] for t in tid[gs].tolist()], pa.string()
+            ),
         )
         # chunk the yield so Arrow batches stay bounded
-        for i in range(0, len(out), 8192):
-            yield out.iloc[i: i + 8192]
+        for i in range(0, out.num_rows, 8192):
+            yield out.slice(i, 8192)
 
     return run
 
@@ -716,27 +706,30 @@ def _partial_encoder(
 # stage 2: vectorized k-way merge of partial blocks -> final blocks
 # --------------------------------------------------------------------------
 
-def _decode_rows(pdf: pd.DataFrame, with_positions: bool):
-    """Decode an Arrow batch of posting rows in ONE vectorized pass each for
-    doc_ids / tfs / dls / positions. Returns flat arrays + per-row counts."""
-    doc_bufs = [bytes(x) for x in pdf["doc_ids"]]
-    gaps, counts = codec.varbyte_decode_concat(doc_bufs)
-    row_starts = np.cumsum(counts) - counts
-    doc_ids = codec.delta_decode_groups(gaps, row_starts).astype(np.int64)
-    tfs, _ = codec.varbyte_decode_concat([bytes(x) for x in pdf["tfs"]])
-    dls, _ = codec.varbyte_decode_concat([bytes(x) for x in pdf["dls"]])
-    tfs = tfs.astype(np.int64)
-    dls = dls.astype(np.int64)
-    pos_flat = None
-    if with_positions:
-        pos_gaps, _ = codec.varbyte_decode_concat(
-            [bytes(x) for x in pdf["positions"]]
-        )
-        doc_pos_starts = np.cumsum(tfs) - tfs
-        pos_flat = codec.delta_decode_groups(
-            pos_gaps, doc_pos_starts
-        ).astype(np.int64) if pos_gaps.size else np.empty(0, np.int64)
-    return doc_ids, tfs, dls, pos_flat, counts, row_starts
+def _tombstoned(
+    batch: pa.RecordBatch, row_idx: np.ndarray, doc_ids: np.ndarray,
+    has_seg: bool,
+) -> np.ndarray:
+    """Mask of the postings whose doc is in their row's ``tombs`` list with
+    the row's seg_seq <= upto_seq (annihilation stays row-local)."""
+    tombs = batch.column("tombs")
+    n_t = pc.fill_null(pc.list_value_length(tombs), 0).to_numpy(
+        zero_copy_only=False
+    )
+    if not n_t.any():
+        return np.zeros(doc_ids.size, dtype=bool)
+    entries = tombs.flatten()
+    t_doc = entries.field("doc_id").to_numpy(zero_copy_only=False)
+    t_upto = entries.field("upto_seq").to_numpy(zero_copy_only=False)
+    t_row = np.repeat(np.arange(batch.num_rows), n_t)
+    segs = (
+        batch.column("seg_seq").to_numpy(zero_copy_only=False)
+        if has_seg
+        else np.zeros(batch.num_rows, np.int64)
+    )
+    live = t_upto >= segs[t_row]
+    dead = pd.MultiIndex.from_arrays([t_row[live], t_doc[live]])
+    return pd.MultiIndex.from_arrays([row_idx, doc_ids]).isin(dead)
 
 
 def _merge_stream_factory(
@@ -746,7 +739,9 @@ def _merge_stream_factory(
 ):
     """Streaming merge over rows sorted by (term_id, salt_bits, block_id
     [, seg_seq]): each group's partial rows (one per map partition /
-    segment) merge into ONE posting block row.
+    segment) merge into ONE posting block row. Partial and stored blocks
+    share POSTINGS_SCHEMA, so this reads build partials, delta segments
+    and compaction input alike.
 
     ``packed_tombs``: rows carry a ``tombs`` column
     (array<struct<doc_id, upto_seq>> | null) holding exactly THEIR block's
@@ -756,52 +751,23 @@ def _merge_stream_factory(
     tombstone state exists anywhere in the stream.
     """
 
-    def merge_groups(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        doc_ids, tfs, dls, pos_flat, counts, row_starts = _decode_rows(
-            pdf, store_positions
+    def merge_groups(batch: pa.RecordBatch) -> pa.RecordBatch | None:
+        doc_ids, tfs, dls, positions, counts = codec.decode_blocks(
+            batch, store_positions
         )
-        n_rows = len(pdf)
-        row_idx = np.repeat(np.arange(n_rows), counts)
-        tid = pdf["term_id"].to_numpy(np.int64)[row_idx]
-        bid = pdf["block_id"].to_numpy(np.int64)[row_idx]
-        sbits = pdf["salt_bits"].to_numpy(np.int64)[row_idx]
+        row_idx = np.repeat(np.arange(batch.num_rows), counts)
+
+        def per_posting(name: str) -> np.ndarray:
+            return batch.column(name).to_numpy(zero_copy_only=False)[row_idx]
+
+        tid = per_posting("term_id")
+        bid = per_posting("block_id")
+        sbits = per_posting("salt_bits").astype(np.int64)
         if packed_tombs:
-            segs_row = (
-                pdf["seg_seq"].to_numpy(np.int64)
-                if has_seg
-                else np.zeros(n_rows, np.int64)
-            )
-            keep = np.ones(doc_ids.size, dtype=bool)
-            touched = False
-            tomb_cells = pdf["tombs"].tolist()
-            for r_i, cell in enumerate(tomb_cells):
-                if cell is None or len(cell) == 0:
-                    continue
-                # annihilate within this row only: postings from segment
-                # seg die when tombstoned up to >= seg
-                seg = int(segs_row[r_i])
-                dead = np.array(
-                    [
-                        t["doc_id"]
-                        for t in cell
-                        if int(t["upto_seq"]) >= seg
-                    ],
-                    dtype=np.int64,
-                )
-                if dead.size == 0:
-                    continue
-                sl = slice(
-                    int(row_starts[r_i]),
-                    int(row_starts[r_i] + counts[r_i]),
-                )
-                hit = np.isin(doc_ids[sl], dead)
-                if hit.any():
-                    keep[sl] &= ~hit
-                    touched = True
-            if touched:
-                if pos_flat is not None and pos_flat.size:
-                    pos_keep = np.repeat(keep, tfs)
-                    pos_flat = pos_flat[pos_keep]
+            keep = ~_tombstoned(batch, row_idx, doc_ids, has_seg)
+            if not keep.all():
+                if positions is not None:
+                    positions = positions.filter(pa.array(keep))
                 doc_ids, tfs, dls = doc_ids[keep], tfs[keep], dls[keep]
                 tid, bid, sbits, row_idx = (
                     tid[keep], bid[keep], sbits[keep], row_idx[keep]
@@ -809,8 +775,8 @@ def _merge_stream_factory(
             if doc_ids.size == 0:
                 return None
         perm = np.lexsort((doc_ids, bid, sbits, tid))
-        if pos_flat is not None and pos_flat.size:
-            pos_flat = codec.permute_segments(pos_flat, tfs, perm)
+        if positions is not None:
+            positions = positions.take(pa.array(perm))
         tid, bid, sbits = tid[perm], bid[perm], sbits[perm]
         doc_s, tfs_s, dls_s = doc_ids[perm], tfs[perm], dls[perm]
         dup = (
@@ -822,35 +788,36 @@ def _merge_stream_factory(
                 "duplicate (term, doc) posting survived merge -- tombstones "
                 "must cover every prior version of an upserted doc"
             )
-        terms = pdf["term"].to_numpy()[row_idx][perm]
-        if pos_flat is not None and pos_flat.size == 0:
-            pos_flat = np.empty(0, np.int64)
+        src_row = row_idx[perm]
+        terms = batch.column("term")
         return _encode_grouped(
-            tid, terms, bid, sbits, doc_s, tfs_s, dls_s, pos_flat
+            tid, bid, sbits, doc_s, tfs_s, dls_s, positions,
+            lambda gs: terms.take(pa.array(src_row[gs])),
         )
 
-    def stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
+    def stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        carry: pa.RecordBatch | None = None
         for b in batches:
-            if carry is not None and len(carry):
-                b = pd.concat([carry, b], ignore_index=True)
-            if len(b) == 0:
+            if carry is not None and carry.num_rows:
+                both = pa.Table.from_batches([carry, b]).combine_chunks()
+                b = both.to_batches()[0]
+            if b.num_rows == 0:
                 continue
-            tid = b["term_id"].to_numpy(np.int64)
-            bid = b["block_id"].to_numpy(np.int64)
-            sb = b["salt_bits"].to_numpy(np.int64)
+            tid = b.column("term_id").to_numpy()
+            bid = b.column("block_id").to_numpy()
+            sb = b.column("salt_bits").to_numpy()
             last_mask = (
                 (tid == tid[-1]) & (bid == bid[-1]) & (sb == sb[-1])
             )
-            cut = int(len(b) - last_mask.sum())
-            carry = b.iloc[cut:]
+            cut = int(b.num_rows - last_mask.sum())
+            carry = b.slice(cut)
             if cut:
-                out = merge_groups(b.iloc[:cut])
-                if out is not None and len(out):
+                out = merge_groups(b.slice(0, cut))
+                if out is not None and out.num_rows:
                     yield out
-        if carry is not None and len(carry):
+        if carry is not None and carry.num_rows:
             out = merge_groups(carry)
-            if out is not None and len(out):
+            if out is not None and out.num_rows:
                 yield out
 
     return stream
@@ -878,7 +845,7 @@ def build_postings(
     if n_map < par * 2:
         n_map = par * 2
         src = src.repartition(n_map)
-    partial = src.mapInPandas(
+    partial = src.mapInArrow(
         _partial_encoder(
             tokenizer_mode, store_positions, n_map, target_reduce_docs, bigrams
         ),
@@ -887,7 +854,7 @@ def build_postings(
     merged = (
         partial.repartition(F.col("term_id"), F.col("salt_bits"), F.col("block_id"))
         .sortWithinPartitions("term_id", "salt_bits", "block_id")
-        .mapInPandas(
+        .mapInArrow(
             _merge_stream_factory(store_positions),
             schema=POSTINGS_SCHEMA,
         )

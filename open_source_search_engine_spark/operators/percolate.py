@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import _empty_frame
 from .dedup import tokens_col
 
 __all__ = ["percolate"]
@@ -87,8 +88,9 @@ def percolate(
             )
         )
     if not structs:
-        return docs.sparkSession.createDataFrame(
-            [], "doc_id long, query_id long, n_hit long, n_terms long"
+        return _empty_frame(
+            docs.sparkSession,
+            "doc_id long, query_id long, n_hit long, n_terms long",
         )
     return (
         docs.withColumn(

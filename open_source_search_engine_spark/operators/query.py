@@ -29,34 +29,18 @@ OR = any term; NOT (-term) = anti-join (`Query.h:191-193`).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..catalog import Catalog
-from ..functions import codec
 from ..functions.bm25 import BM25Params, idf as bm25_idf
 from ..functions.tokenizer import tokenize
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("term_id", T.LongType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("tf", T.IntegerType(), False),
-        T.StructField("dl", T.IntegerType(), False),
-        T.StructField("seg_seq", T.LongType(), False),
-    ]
-)
-
-DECODED_POS_SCHEMA = T.StructType(
-    DECODED_SCHEMA.fields
-    + [T.StructField("positions", T.ArrayType(T.IntegerType()), False)]
-)
+from ..session import _empty_frame
+from .index_build import _check_block_format
 
 
 @dataclass
@@ -214,6 +198,8 @@ class SearchEngine:
         self.catalog = catalog
         self.params = params or BM25Params()
         self.tokenizer_mode = tokenizer_mode
+        self._postings = catalog.read_table("postings")
+        _check_block_format(self._postings)
         row = catalog.read_table("corpus_stats").collect()[0]
         self.n_docs = int(row["n_docs"])
         self.avgdl = float(row["avgdl"])
@@ -221,7 +207,6 @@ class SearchEngine:
         # indexes written before the column existed always stored positions
         sp = row.asDict().get("store_positions")
         self.store_positions = True if sp is None else bool(sp)
-        self._postings = catalog.read_table("postings")
         if "seg_seq" not in self._postings.columns:
             self._postings = self._postings.withColumn(
                 "seg_seq", F.lit(0).cast("long")
@@ -352,37 +337,25 @@ class SearchEngine:
     def decoded_postings(
         self, term_ids: list[int], include_positions: bool = False
     ) -> DataFrame:
-        """Partition-pruned scan of the query terms' blocks, decoded back to
-        (term_id, doc_id, tf, dl[, positions]) rows via an Arrow UDF."""
-        cols = ["term_id", "seg_seq", "doc_ids", "tfs", "dls"] + (
+        """Partition-pruned scan of the query terms' blocks, exploded back
+        to (term_id, doc_id, tf, dl, seg_seq[, positions]) rows in the JVM:
+        the blocks are list columns (format: functions/codec.py), so one
+        ``arrays_zip`` + ``inline`` replaces any Python decode hop."""
+        lists = ["doc_ids", "tfs", "dls"] + (
             ["positions"] if include_positions else []
         )
-        blocks = self._postings.filter(F.col("term_id").isin(term_ids)).select(*cols)
-        schema = DECODED_POS_SCHEMA if include_positions else DECODED_SCHEMA
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for b in batches:
-                if len(b) == 0:
-                    continue
-                outs = []
-                for row in b.itertuples(index=False):
-                    ids = codec.decode_doc_ids(bytes(row.doc_ids))
-                    tfs = codec.decode_counts(bytes(row.tfs))
-                    out = {
-                        "term_id": np.full(ids.size, row.term_id, np.int64),
-                        "doc_id": ids,
-                        "tf": tfs.astype(np.int32),
-                        "dl": codec.decode_counts(bytes(row.dls)).astype(np.int32),
-                        "seg_seq": np.full(ids.size, row.seg_seq, np.int64),
-                    }
-                    if include_positions:
-                        flat = codec.decode_positions(tfs, bytes(row.positions))
-                        splits = np.cumsum(tfs)[:-1]
-                        out["positions"] = np.split(flat.astype(np.int32), splits)
-                    outs.append(pd.DataFrame(out))
-                yield pd.concat(outs, ignore_index=True)
-
-        decoded = blocks.mapInPandas(decode, schema=schema)
+        decoded = (
+            self._postings.filter(F.col("term_id").isin(term_ids))
+            .select("term_id", "seg_seq", F.inline(F.arrays_zip(*lists)))
+            .select(
+                "term_id",
+                F.col("doc_ids").alias("doc_id"),
+                F.col("tfs").alias("tf"),
+                F.col("dls").alias("dl"),
+                "seg_seq",
+                *(["positions"] if include_positions else []),
+            )
+        )
         if self._tombstones is not None:
             t = F.broadcast(self._tombstones)
             decoded = (
@@ -418,8 +391,8 @@ class SearchEngine:
         n_q = len(set(query_terms))
         if plan.empty or (mode == "AND" and len(plan) < n_q):
             # a required term is absent from the corpus -> empty result
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, matched int"
+            return _empty_frame(
+                self.spark, "doc_id long, score double, matched int"
             )
         contrib = self._contributions(plan)
         if filter_docs is not None:
@@ -547,8 +520,8 @@ class SearchEngine:
         """
         plan = self.plan_terms(query_terms)
         if plan.empty:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, matched int"
+            return _empty_frame(
+                self.spark, "doc_id long, score double, matched int"
             )
         if int(plan["df"].sum()) <= int(wand_df_cutoff):
             return self.search_terms(
@@ -701,8 +674,8 @@ class SearchEngine:
         plan = self.plan_terms(query_terms)
         n_q = len(set(query_terms))
         if plan.empty or (mode == "AND" and len(plan) < n_q):
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, matched int"
+            return _empty_frame(
+                self.spark, "doc_id long, score double, matched int"
             )
         scored = self.score_terms(
             query_terms, mode=mode, exclude_terms=exclude_terms
@@ -867,8 +840,8 @@ class SearchEngine:
         phrase absent from the corpus drops out of its group exactly like
         an absent term."""
         bases = sorted(groups)
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, score double, matched int"
+        empty = _empty_frame(
+            self.spark, "doc_id long, score double, matched int"
         )
         if not bases:
             return empty
@@ -923,8 +896,8 @@ class SearchEngine:
         if mode == "AND" and not all(viable.values()):
             return empty
         if plan.empty:
-            contrib = self.spark.createDataFrame(
-                [], "doc_id long, term string, contrib double"
+            contrib = _empty_frame(
+                self.spark, "doc_id long, term string, contrib double"
             )
         else:
             contrib = self._contributions(plan)
@@ -982,7 +955,7 @@ class SearchEngine:
         (positions_a + 1) with positions_b -- positions are unique per
         (term, doc), so the intersection size is the exact adjacency count.
         Both paths produce identical rows (gated)."""
-        empty = self.spark.createDataFrame([], "doc_id long, tf int, dl int")
+        empty = _empty_frame(self.spark, "doc_id long, tf int, dl int")
         bplan = self.plan_terms([f"{a} {b}"])
         if not bplan.empty:
             return (
@@ -1031,8 +1004,9 @@ class SearchEngine:
 
     def _require_positions(self, what: str) -> None:
         """Fail loudly instead of silently returning empty/unboosted
-        results: store_positions=False blocks carry positions=b'', which
-        positional intersection would read as tf=0 for every doc."""
+        results: store_positions=False blocks carry an empty positions
+        list, which positional intersection would read as no positions for
+        every doc."""
         if not self.store_positions:
             raise ValueError(
                 f"{what} needs word positions, but this index was built "
@@ -1049,7 +1023,7 @@ class SearchEngine:
         positional intersection: per doc, slot i's positions shifted by -i,
         tf = |∩_i (positions_i - i)|. Repeated words are handled (the same
         term's array shifts differently per slot)."""
-        empty = self.spark.createDataFrame([], "doc_id long, tf int, dl int")
+        empty = _empty_frame(self.spark, "doc_id long, tf int, dl int")
         n = len(words)
         if n == 0:
             return empty
@@ -1156,8 +1130,8 @@ class SearchEngine:
 
         words = query.split() if isinstance(query, str) else list(query)
         words = [w for w in words if w]
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, score double, matched int"
+        empty = _empty_frame(
+            self.spark, "doc_id long, score double, matched int"
         )
         if not words:
             return empty
@@ -1389,13 +1363,21 @@ class SearchEngine:
         ]
         if not qmeta_rows:
             if not heavy_frames:
-                return self.spark.createDataFrame([], _BATCH_SCHEMA)
+                return _empty_frame(self.spark, _BATCH_SCHEMA)
             out = heavy_frames[0]
             for f in heavy_frames[1:]:
                 out = out.unionByName(f)
             return out.orderBy("query_id", "rank")
+        # from pandas, so the Arrow path ships it to the JVM: a list of
+        # tuples would be a Python RDD, costing Python tasks per batch
         qmeta = self.spark.createDataFrame(
-            qmeta_rows,
+            pd.DataFrame(
+                qmeta_rows,
+                columns=[
+                    "query_id", "term", "pos", "term_id", "idf",
+                    "n_required", "k",
+                ],
+            ),
             "query_id string, term string, pos int, term_id long, idf double, "
             "n_required int, k int",
         )
@@ -1450,30 +1432,26 @@ class SearchEngine:
         # reference's per-shard TopTree -> Msg3a merge shape
         # (`TopTree.cpp:185`, `Msg3a.cpp:807-811`). A window alone is a
         # FULL SORT of every query's candidate set (at 10M docs: 64 sorts
-        # of ~7M rows each -- measured 590 s); any global top-k row is in
-        # its Arrow batch's per-query top-k, so the window then ranks at
-        # most n_batches * k rows per query.
+        # of ~7M rows each -- measured 590 s). The literal ``rank <= max_k``
+        # bound lets Spark plan a partial WindowGroupLimit below the
+        # shuffle (any global top-k row is in its partition's per-query
+        # top-k), so the window ranks at most n_partitions * max_k rows
+        # per query, all in the JVM (up to the optimizer's
+        # windowGroupLimitThreshold, 1000 by default).
         max_k = max(int(q.get("k", default_k)) for q in queries)
-        out_schema = scored.schema
-
-        def pre_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for b in batches:
-                if len(b) == 0:
-                    continue
-                b = b.sort_values(
-                    ["query_id", "score", "doc_id"],
-                    ascending=[True, False, True],
-                )
-                yield b.groupby("query_id", sort=False).head(max_k)
-
-        pre = scored.mapInPandas(pre_topk, schema=out_schema)
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
         out = (
-            pre.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "doc_id", "score", "matched")
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter((F.col("rank") <= max_k) & (F.col("rank") <= F.col("k")))
+            .select(
+                "query_id",
+                F.col("rank").cast("long").alias("rank"),
+                "doc_id",
+                "score",
+                "matched",
+            )
         )
         for f in heavy_frames:
             out = out.unionByName(f)
@@ -1715,7 +1693,7 @@ class SearchEngine:
         )
         terms, exclude = self._parse_signs(query)
         if not terms:
-            return self.spark.createDataFrame([], out_schema)
+            return _empty_frame(self.spark, out_schema)
 
         def page(pos_terms: list[str]) -> DataFrame:
             if source_cap is None:
@@ -1948,16 +1926,16 @@ class SearchEngine:
         )
         schema = "doc_id long, score double, matched int"
         if not rows or not rows[0]["text"]:
-            return self.spark.createDataFrame([], schema)
+            return _empty_frame(self.spark, schema)
         toks = self.tokenize_query(rows[0]["text"])
         if not toks:
-            return self.spark.createDataFrame([], schema)
+            return _empty_frame(self.spark, schema)
         from collections import Counter
 
         tf = Counter(toks)
         plan = self.plan_terms(list(tf))  # (term, df, idf, ...) pandas
         if plan.empty:
-            return self.spark.createDataFrame([], schema)
+            return _empty_frame(self.spark, schema)
         plan = plan.assign(
             kscore=[
                 tf[t] * i for t, i in zip(plan["term"], plan["idf"])
@@ -2025,8 +2003,8 @@ class SearchEngine:
         q = sorted(set(query_terms))
         plan = self.plan_terms(sorted(set(q) | set(exp)))
         if plan.empty:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, matched int"
+            return _empty_frame(
+                self.spark, "doc_id long, score double, matched int"
             )
         contrib = self._contributions(plan).withColumn(
             "contrib",
@@ -2071,7 +2049,7 @@ class SearchEngine:
             "dl int, dl_norm double"
         )
         if plan.empty:
-            return self.spark.createDataFrame([], schema)
+            return _empty_frame(self.spark, schema)
         decoded = self.decoded_postings([int(t) for t in plan["term_id"]])
         meta = self.spark.createDataFrame(plan[["term_id", "term", "idf"]])
         k1, b = self.params.k1, self.params.b
@@ -2430,8 +2408,8 @@ class SearchEngine:
                 "term_id",
             ).select("doc_id", "term", F.col("tf").alias("_tfb"))
         else:
-            body = self.spark.createDataFrame(
-                [], "doc_id long, term string, _tfb int"
+            body = _empty_frame(
+                self.spark, "doc_id long, term string, _tfb int"
             )
         # field side: broadcast (value, term, tf) map into the doc store
         if tmap:
@@ -2444,8 +2422,8 @@ class SearchEngine:
                 "_fv",
             ).select("doc_id", "term", "_tft")
         else:
-            fside = self.spark.createDataFrame(
-                [], "doc_id long, term string, _tft int"
+            fside = _empty_frame(
+                self.spark, "doc_id long, term string, _tft int"
             )
         comb = (
             body.join(fside, ["doc_id", "term"], "full_outer")
@@ -2738,7 +2716,7 @@ class SearchEngine:
         out_schema = "completion string, n_docs long, df long"
         words = self.tokenize_query(partial)
         if not words:
-            return self.spark.createDataFrame([], out_schema)
+            return _empty_frame(self.spark, out_schema)
         prefix, context = words[-1], sorted(set(words[:-1]))
         cand = (
             self._term_stats.filter(
@@ -2752,7 +2730,7 @@ class SearchEngine:
         )
         cand = [r for r in cand if r["term"] not in context]
         if not cand:
-            return self.spark.createDataFrame([], out_schema)
+            return _empty_frame(self.spark, out_schema)
         if not context:
             # no typed context: rank by dictionary df (n_docs == df)
             rows = [(r["term"], int(r["df"]), int(r["df"])) for r in cand]
@@ -2765,7 +2743,7 @@ class SearchEngine:
             )
         ctx_plan = self.plan_terms(context)
         if len(ctx_plan) < len(context):
-            return self.spark.createDataFrame([], out_schema)
+            return _empty_frame(self.spark, out_schema)
         ctx_ids = [int(t) for t in ctx_plan["term_id"]]
         cand_ids = [int(r["term_id"]) for r in cand]
         decoded = self.decoded_postings(sorted(set(ctx_ids + cand_ids)))
@@ -2820,7 +2798,7 @@ class SearchEngine:
         out_schema = "doc_id long, score double, matched int, min_gap int"
         plan = self.plan_terms([w1, w2])
         if len(plan) < len({w1, w2}):
-            return self.spark.createDataFrame([], out_schema)
+            return _empty_frame(self.spark, out_schema)
         tid = dict(zip(plan["term"], plan["term_id"]))
         decoded = self.decoded_postings(
             [int(t) for t in plan["term_id"]], include_positions=True
@@ -2891,8 +2869,8 @@ class SearchEngine:
         phrases, and fields always survive, and an all-stopword clause is
         answered as-is. ``stop_words`` overrides the default English set."""
         el, terms = self.query_eligibility(query, drop_stopwords, stop_words)
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, score double, matched int"
+        empty = _empty_frame(
+            self.spark, "doc_id long, score double, matched int"
         )
         if el is None:
             return empty
@@ -3033,8 +3011,8 @@ class SearchEngine:
         then one map-side-combined aggregation per facet; output cardinality
         is #distinct facet values, so the per-field top-n window is tiny."""
         el, _ = self.query_eligibility(query, drop_stopwords)
-        empty = self.spark.createDataFrame(
-            [], "facet_field string, facet_value string, n_docs long"
+        empty = _empty_frame(
+            self.spark, "facet_field string, facet_value string, n_docs long"
         )
         if el is None or (not facet_fields and not facet_ranges):
             return empty
@@ -3226,10 +3204,10 @@ class SearchEngine:
         """
         n = len(phrase_terms)
         if n == 0:
-            return self.spark.createDataFrame([], "doc_id long")
+            return _empty_frame(self.spark, "doc_id long")
         plan = self.plan_terms(phrase_terms)
         if len(plan) < len(set(phrase_terms)):
-            return self.spark.createDataFrame([], "doc_id long")
+            return _empty_frame(self.spark, "doc_id long")
         tid_of = dict(zip(plan["term"], plan["term_id"]))
         decoded = self.decoded_postings(
             [int(t) for t in plan["term_id"]], include_positions=True
@@ -3291,8 +3269,8 @@ class SearchEngine:
         terms = sorted(set(phrase_terms))
         plan = self.plan_terms(terms)
         if plan.empty or len(plan) < len(terms):
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, matched int"
+            return _empty_frame(
+                self.spark, "doc_id long, score double, matched int"
             )
         scored = self._aggregate_scores(
             self._contributions(plan), list(plan["term"])
@@ -3310,7 +3288,7 @@ class SearchEngine:
         """Distinct doc_ids containing ``term`` (one termlist scan)."""
         plan = self.plan_terms([term])
         if plan.empty:
-            return self.spark.createDataFrame([], "doc_id long")
+            return _empty_frame(self.spark, "doc_id long")
         return (
             self.decoded_postings([int(plan["term_id"].iloc[0])])
             .select("doc_id")
@@ -3339,7 +3317,7 @@ class SearchEngine:
                 frame = frame.join(self.term_docs(t), "doc_id", "left_anti")
             clause_frames.append(frame)
         if not clause_frames:
-            return self.spark.createDataFrame([], "doc_id long")
+            return _empty_frame(self.spark, "doc_id long")
         out = clause_frames[0]
         for f in clause_frames[1:]:
             out = out.unionByName(f)

@@ -64,6 +64,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import _empty_frame
 from .query import _BATCH_SCHEMA, _rank_branch, boost_multiplier
 
 
@@ -220,7 +221,7 @@ def wand_rerank(
     from .wand import wand_search
 
     spark = engine.spark
-    empty = spark.createDataFrame([], "doc_id long, score double, matched int")
+    empty = _empty_frame(spark, "doc_id long, score double, matched int")
     plan = engine.plan_terms(terms)
     if plan.empty or (mode == "AND" and len(plan) < len(set(terms))):
         return empty

@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog
+from ..catalog import _PARQUET_WRITER, Catalog
 from ..functions.hashing import pick_block_bits
 from .index_build import (
     IndexConfig,
@@ -194,7 +194,9 @@ def resumable_build(
 
             skip_ids = [py_term_id(t) for t in config.skip_terms]
             postings = postings.filter(~F.col("term_id").isin(skip_ids))
-        postings.write.mode("overwrite").parquet(seg_dir)
+        postings.write.mode("overwrite").option(*_PARQUET_WRITER).parquet(
+            seg_dir
+        )
         elapsed = time.time() - tp
         seg_bytes = _dir_bytes(seg_dir)
         blocks = spark.read.parquet(seg_dir).count()
@@ -317,9 +319,14 @@ def merge_postings(
     nothing tombstone-sized ever reaches the driver. The only driver-side
     metadata is the distinct salt_bits set (one int per granularity level,
     ~40 values max by construction)."""
-    from .index_build import POSTINGS_SCHEMA, _merge_stream_factory
+    from .index_build import (
+        POSTINGS_SCHEMA,
+        _check_block_format,
+        _merge_stream_factory,
+    )
 
     postings = catalog.read_table("postings")
+    _check_block_format(postings)
     if "seg_seq" not in postings.columns:
         postings = postings.withColumn("seg_seq", F.lit(0).cast("long"))
     # honor the build's positions setting (stored in corpus_stats; older
@@ -349,7 +356,7 @@ def merge_postings(
             F.col("term_id"), F.col("salt_bits"), F.col("block_id")
         )
         .sortWithinPartitions("term_id", "salt_bits", "block_id", "seg_seq")
-        .mapInPandas(stream, schema=POSTINGS_SCHEMA)
+        .mapInArrow(stream, schema=POSTINGS_SCHEMA)
         .withColumn("seg_seq", F.lit(0).cast("long"))
     )
     catalog.write_table(merged, "postings")

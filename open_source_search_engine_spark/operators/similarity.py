@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import _empty_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -400,8 +402,8 @@ def pairwise_cosine_neardup(
 
     first = embeddings.limit(1).select(F.size(F.col(vec_col)).alias("d")).collect()
     if not first:
-        return embeddings.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine double"
+        return _empty_frame(
+            embeddings.sparkSession, "id_a long, id_b long, cosine double"
         )
     planes = hyperplanes(int(first[0]["d"]), n_planes, seed)
     e = embeddings.withColumn("_sig", lsh_signature_col(vec_col, planes))

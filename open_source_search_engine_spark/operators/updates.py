@@ -36,8 +36,10 @@ from pyspark.sql import functions as F
 import pandas as pd
 
 from ..catalog import Catalog
+from ..session import _empty_frame
 from .index_build import (
     IndexConfig,
+    _check_block_format,
     build_postings,
     doc_length_col,
     py_any_term_id,
@@ -62,7 +64,7 @@ TOMBSTONES_SCHEMA = "doc_id long, upto_seq long"
 def tombstones(spark: SparkSession, catalog: Catalog) -> DataFrame:
     if catalog.table_exists("tombstones"):
         return catalog.read_table("tombstones")
-    return spark.createDataFrame([], TOMBSTONES_SCHEMA)
+    return _empty_frame(spark, TOMBSTONES_SCHEMA)
 
 
 def max_seg_seq(catalog: Catalog) -> int:
@@ -80,7 +82,7 @@ def reset_update_state(spark: SparkSession, catalog: Catalog) -> None:
     tombstones whose (doc_id, upto_seq>=0) annihilate the rebuilt seg-0
     postings -- the doc exists in the new index but is unsearchable."""
     catalog.write_table(
-        spark.createDataFrame([], TOMBSTONES_SCHEMA), "tombstones"
+        _empty_frame(spark, TOMBSTONES_SCHEMA), "tombstones"
     )
     catalog.write_table(
         spark.createDataFrame([(0,)], "max_seg long"), "index_meta"
@@ -104,6 +106,7 @@ def apply_updates(
     unigram ones (gated: update-then-query rank identity on bigrams=True,
     tests/test_bigrams.py)."""
     config = config or IndexConfig()
+    _check_block_format(catalog.read_table("postings"))
     docs = catalog.read_table("documents")
     corpus = catalog.read_table("corpus_stats").collect()[0]
     block_bits = int(corpus["block_bits"])
@@ -111,10 +114,9 @@ def apply_updates(
     new_seq = cur_seq + 1
 
     if upserts is None:
-        upserts = spark.createDataFrame([], docs.schema)
-    delete_ids = (
-        delete_ids if delete_ids is not None else spark.createDataFrame([], "doc_id long")
-    )
+        upserts = _empty_frame(spark, docs.schema)
+    if delete_ids is None:
+        delete_ids = _empty_frame(spark, "doc_id long")
     up_ids = upserts.select("doc_id").distinct()
     del_ids = delete_ids.select("doc_id").distinct()
     gone_ids = up_ids.unionByName(del_ids).distinct()

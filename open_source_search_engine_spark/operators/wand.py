@@ -5,7 +5,8 @@ Reference: per-doc max-score prefilter vs the current kth TopTree score
 skip a doc when the sum of its terms' score upper bounds cannot beat the
 current threshold. The batch/distributed re-expression is *block*-max WAND
 over the posting-block skip metadata (`block_max_tf`, `block_min_dl` written
-at build time, codec.py doc):
+at build time). The scorer reads each block's ``doc_ids``/``tfs``/``dls``
+list columns directly as numpy arrays (block format: functions/codec.py):
 
 Every posting block covers an explicit hash-PREFIX range of the doc space:
 ``block_id`` = top ``salt_bits`` bits of the 63-bit doc hash, with
@@ -71,8 +72,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import codec
 from ..functions.hashing import py_block_ids
+from ..session import _empty_frame
 from . import rerank
 
 SCORED_SCHEMA = T.StructType(
@@ -147,11 +148,11 @@ def _make_scorer(
     g: int,
     n_query_terms: int | None = None,
 ):
-    """Cogrouped scorer for one block group: decode sub-lists, mask coarse
-    blocks' rows to the group's doc-hash range, annihilate the group's
-    tombstones, build the doc universe (intersection for AND, union for
-    OR), accumulate per-term contributions in term-string-ascending order
-    (same float64 add sequence as the exact path's array_sort fold)."""
+    """Cogrouped scorer for one block group: read the blocks' list columns,
+    mask coarse blocks' rows to the group's doc-hash range, annihilate the
+    group's tombstones, build the doc universe (intersection for AND, union
+    for OR), accumulate per-term contributions in term-string-ascending
+    order (same float64 add sequence as the exact path's array_sort fold)."""
 
     def score_group(
         key, pdf: pd.DataFrame, tomb_pdf: pd.DataFrame | None
@@ -172,31 +173,31 @@ def _make_scorer(
                     tomb_pdf["upto_seq"].astype(np.int64).tolist(),
                 )
             )
-        # bucket the group's rows per term WITHOUT decoding yet; terms then
-        # decode rarest-first (smallest encoded payload first) so an AND
-        # group bails out after decoding only the cheap term when a masked
-        # rare list turns out empty in this doc range -- never paying the
-        # stopword decode (the rarest-first candidate-intersection analog,
+        # bucket the group's rows per term WITHOUT masking yet; terms then
+        # run rarest-first (fewest docs first) so an AND group bails out
+        # after masking only the cheap term when a masked rare list turns
+        # out empty in this doc range -- never paying for the stopword
+        # list (the rarest-first candidate-intersection analog,
         # `PosdbTable.cpp:1935,1998`)
         rows_by_term: dict[str, list] = {}
-        bytes_by_term: dict[str, int] = {}
+        docs_by_term: dict[str, int] = {}
         idf_by_term: dict[str, float] = {}
         for row in pdf.itertuples(index=False):
             t = str(row.term)
             rows_by_term.setdefault(t, []).append(row)
-            bytes_by_term[t] = bytes_by_term.get(t, 0) + len(row.doc_ids)
+            docs_by_term[t] = docs_by_term.get(t, 0) + len(row.doc_ids)
             idf_by_term[t] = float(row.idf)
         if mode == "AND" and n_query_terms is not None:
             if len(rows_by_term) < n_query_terms:
                 return empty
         subs = []
         universe = None
-        for term in sorted(rows_by_term, key=lambda t: (bytes_by_term[t], t)):
+        for term in sorted(rows_by_term, key=lambda t: (docs_by_term[t], t)):
             idl, tfl, dll = [], [], []
             for row in rows_by_term[term]:
-                ids = codec.decode_doc_ids(bytes(row.doc_ids))
-                tfs = codec.decode_counts(bytes(row.tfs))
-                dls = codec.decode_counts(bytes(row.dls))
+                ids = np.asarray(row.doc_ids, dtype=np.int64)
+                tfs = np.asarray(row.tfs, dtype=np.int64)
+                dls = np.asarray(row.dls, dtype=np.int64)
                 if int(row.salt_bits) < g:
                     # replicated coarse block: keep this group's range only
                     keep = (py_block_ids(ids, 63 - g) == group_id)
@@ -320,7 +321,7 @@ def wand_search(
     plan = engine.plan_terms(query_terms)
     n_q = len(set(query_terms))
     if plan.empty or (mode == "AND" and len(plan) < n_q):
-        return spark.createDataFrame([], "doc_id long, score double, matched int")
+        return _empty_frame(spark, "doc_id long, score double, matched int")
     k1, b, avgdl = engine.params.k1, engine.params.b, engine.avgdl
     g = pick_granularity(
         plan["max_salt_bits"].fillna(0).tolist(),
@@ -468,7 +469,7 @@ def wand_search(
         for df in (gmeta, g_a, scored_a):
             df.unpersist()
         return spark.createDataFrame(rows, out.schema) if rows else (
-            spark.createDataFrame([], "doc_id long, score double, matched int")
+            _empty_frame(spark, "doc_id long, score double, matched int")
         )
     finally:
         q_blocks.unpersist()
@@ -533,8 +534,8 @@ def wand_phrase(
             "result or use search_query's grammar"
         )
     if not phrase_terms:
-        return engine.spark.createDataFrame(
-            [], "doc_id long, score double, matched int"
+        return _empty_frame(
+            engine.spark, "doc_id long, score double, matched int"
         )
     if len(phrase_terms) == 1:
         return wand_search(engine, phrase_terms, "AND", k, **wand_kwargs)

@@ -10,7 +10,7 @@ from __future__ import annotations
 import glob
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -73,9 +73,10 @@ def get_spark(
         # parquet scans: keep row-group pruning + pushdown on
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        # posting-block rows carry ~50 KB binary cells (doc_ids/tfs/dls/
-        # positions); the 4096-row default columnar batch then needs
-        # ~200 MB of contiguous heap PER reader and OOMs a 10M-turn scan.
+        # posting-block rows carry wide list cells (doc_ids/tfs/dls/
+        # positions, tens of KB each); the 4096-row default columnar
+        # batch then needs ~200 MB of contiguous heap PER reader and
+        # OOMs a 10M-turn scan.
         # 512 rows keeps a batch ~25 MB regardless of index size -- the
         # spill-aware sizing rule the 100 TB design depends on
         .config(
@@ -131,3 +132,11 @@ def _ship_package(spark: SparkSession) -> None:
     archive = shutil.make_archive(zip_base, "zip", os.path.join(tmp, "stage"))
     spark.sparkContext.addPyFile(archive)
     spark._osse_shipped = True
+
+
+def _empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty DataFrame with ZERO partitions: ordering, limiting or
+    collecting it launches no task. ``createDataFrame([], schema)`` would
+    be a Python RDD with one partition per core, paying a Python task per
+    core for the same empty answer."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Phase-level build profile in a FRESH JVM:
 python scripts/profile_build.py <cpus> [corpus]"""
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 cpus = int(sys.argv[1])

@@ -51,7 +51,7 @@ def tuned_session(app_name: str = "osse-submit-build") -> SparkSession:
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         "spark.sql.parquet.filterPushdown": "true",
-        # wide binary posting cells: see session.py's sizing note
+        # wide posting-block list cells: see session.py's sizing note
         "spark.sql.parquet.columnarReaderBatchSize": os.environ.get(
             "OSSE_PARQUET_BATCH_ROWS", "512"
         ),

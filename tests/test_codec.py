@@ -1,61 +1,75 @@
-"""Codec unit tests -- mirrors the reference's posdb list round-trip tests
-(`test/unit/PosdbTest.cpp`, `test/unit/RdbListTest.cpp`: add keys -> dump ->
-merge -> verify), re-expressed as encode/decode round-trips (SURVEY.md §5.3.3).
+"""Block-format unit tests -- mirrors the reference's posdb list round-trip
+tests (`test/unit/PosdbTest.cpp`, `test/unit/RdbListTest.cpp`: add keys ->
+dump -> merge -> verify), re-expressed as encode/decode round-trips of the
+posting-block list columns (functions/codec.py; SURVEY.md §5.3.3).
 """
 
+import os
+
 import numpy as np
-import pytest
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from open_source_search_engine_spark.functions import codec
 
 
-def test_varbyte_empty():
-    assert codec.varbyte_encode(np.array([], dtype=np.uint64)) == b""
-    assert codec.varbyte_decode(b"").size == 0
+def _batch(doc_lists, tf_lists=None, dl_lists=None, pos_lists=None):
+    """Encode per-block doc lists into one RecordBatch of block rows."""
+    sizes = np.array([len(d) for d in doc_lists], dtype=np.int64)
+    starts = np.cumsum(sizes) - sizes
 
+    def flat(lists):
+        return np.array([x for lst in lists for x in lst], dtype=np.int64)
 
-def test_varbyte_known_values():
-    # 0 -> single byte 0x00; 127 -> 0x7f; 128 -> 0x80 0x01 (LE 7-bit groups)
-    assert codec.varbyte_encode(np.array([0], dtype=np.uint64)) == b"\x00"
-    assert codec.varbyte_encode(np.array([127], dtype=np.uint64)) == b"\x7f"
-    assert codec.varbyte_encode(np.array([128], dtype=np.uint64)) == b"\x80\x01"
-    got = codec.varbyte_decode(b"\x80\x01\x7f\x00")
-    assert got.tolist() == [128, 127, 0]
-
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300)
-)
-@settings(max_examples=200, deadline=None)
-def test_varbyte_roundtrip(vals):
-    arr = np.array(vals, dtype=np.uint64)
-    assert codec.varbyte_decode(codec.varbyte_encode(arr)).tolist() == vals
-
-
-def test_varbyte_truncated_raises():
-    with pytest.raises(ValueError):
-        codec.varbyte_decode(b"\x80")  # continuation bit with no terminator
+    ids = flat(doc_lists)
+    tfs = np.ones(ids.size, np.int64) if tf_lists is None else flat(tf_lists)
+    dls = np.ones(ids.size, np.int64) if dl_lists is None else flat(dl_lists)
+    positions = None
+    if pos_lists is not None:
+        tfs = np.array([len(p) for p in pos_lists], dtype=np.int64)
+        positions = codec.doc_positions(tfs, flat(pos_lists))
+    cols = codec.encode_blocks(starts, ids, tfs, dls, positions)
+    return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
 
 @given(
     st.lists(
-        st.integers(min_value=0, max_value=2**62), min_size=1, max_size=200, unique=True
+        st.integers(min_value=0, max_value=2**63 - 1),
+        min_size=1, max_size=200, unique=True,
     )
 )
 @settings(max_examples=100, deadline=None)
 def test_doc_ids_roundtrip(ids):
-    arr = np.array(sorted(ids), dtype=np.int64)
-    buf = codec.encode_doc_ids(arr)
-    assert codec.decode_doc_ids(buf).tolist() == sorted(ids)
+    ids = sorted(ids)
+    doc_ids, _, _, _, counts = codec.decode_blocks(_batch([ids]), False)
+    assert doc_ids.tolist() == ids and counts.tolist() == [len(ids)]
 
 
-def test_doc_ids_compression_is_effective():
-    # dense sorted ids -> ~1 byte per gap; raw int64 would be 8 bytes each
-    ids = np.arange(10_000, dtype=np.int64) * 3 + 12345
-    buf = codec.encode_doc_ids(ids)
-    assert len(buf) < 10_000 * 2
+def test_doc_ids_compression_is_effective(spark, catalog):
+    # dense sorted ids -> delta-packed by the catalog's Parquet v2 writer;
+    # raw int64 would be 8 bytes each
+    ids = [int(x) for x in np.arange(10_000, dtype=np.int64) * 3 + 12345]
+    catalog.write_table(
+        spark.createDataFrame([(ids,)], "doc_ids array<bigint>"), "blocks"
+    )
+    (data_dir,) = catalog.data_dirs("blocks")
+    size = sum(
+        os.path.getsize(os.path.join(data_dir, f))
+        for f in os.listdir(data_dir)
+        if f.endswith(".parquet")
+    )
+    assert size < 10_000 * 2
+
+
+def test_counts_roundtrip():
+    tfs = [1, 2, 3, 127, 128, 300]
+    dls = [7, 1, 65_535, 128, 2, 9]
+    _, got_tfs, got_dls, _, _ = codec.decode_blocks(
+        _batch([[10, 11, 12], [1, 5, 9]], [tfs[:3], tfs[3:]], [dls[:3], dls[3:]]),
+        False,
+    )
+    assert got_tfs.tolist() == tfs and got_dls.tolist() == dls
 
 
 @given(
@@ -68,55 +82,21 @@ def test_doc_ids_compression_is_effective():
 @settings(max_examples=100, deadline=None)
 def test_positions_roundtrip(doc_positions):
     doc_positions = [sorted(set(p)) for p in doc_positions]
-    tfs = np.array([len(p) for p in doc_positions], dtype=np.int64)
-    flat = np.array([x for p in doc_positions for x in p], dtype=np.int64)
-    buf = codec.encode_positions(tfs, flat)
-    assert codec.decode_positions(tfs, buf).tolist() == flat.tolist()
+    batch = _batch([list(range(len(doc_positions)))], pos_lists=doc_positions)
+    _, tfs, _, positions, _ = codec.decode_blocks(batch, True)
+    assert positions.to_pylist() == doc_positions
+    assert tfs.tolist() == [len(p) for p in doc_positions]
 
 
 def test_positions_boundary_reset():
     # second doc starts at a position lower than the first doc's last
-    tfs = np.array([3, 2], dtype=np.int64)
-    flat = np.array([5, 9, 1000, 0, 2], dtype=np.int64)
-    buf = codec.encode_positions(tfs, flat)
-    assert codec.decode_positions(tfs, buf).tolist() == flat.tolist()
-
-
-def test_counts_roundtrip():
-    tfs = np.array([1, 2, 3, 127, 128, 300], dtype=np.int64)
-    assert codec.decode_counts(codec.encode_counts(tfs)).tolist() == tfs.tolist()
-
-
-def test_varbyte_decode_concat_rejects_truncated_buffer():
-    import numpy as np
-    import pytest
-
-    from open_source_search_engine_spark.functions.codec import (
-        varbyte_decode_concat,
-        varbyte_encode,
+    pos = [[5, 9, 1000], [0, 2]]
+    _, _, _, positions, _ = codec.decode_blocks(
+        _batch([[3, 8]], pos_lists=pos), True
     )
-
-    good = varbyte_encode(np.array([300, 7], dtype=np.uint64))
-    vals, counts = varbyte_decode_concat([good, b"", good])
-    assert list(vals) == [300, 7, 300, 7] and list(counts) == [2, 0, 2]
-    # a buffer ending on a continuation byte must raise, exactly like
-    # varbyte_decode -- not silently merge into the next buffer's value
-    with pytest.raises(ValueError):
-        varbyte_decode_concat([b"\x81", b"\x01"])
+    assert positions.to_pylist() == pos
 
 
-def test_delta_groups_accept_empty_group_sentinels():
-    import numpy as np
-
-    from open_source_search_engine_spark.functions.codec import (
-        delta_decode_groups,
-        delta_encode_groups,
-    )
-
-    v = np.array([5, 7, 9, 20], dtype=np.uint64)
-    # trailing empty group (start == size) and interior empty group
-    for gs in ([0, 2, 4], [0, 2, 2], [0, 4, 4]):
-        starts = np.array(gs, dtype=np.int64)
-        enc = delta_encode_groups(v, starts)
-        dec = delta_decode_groups(enc, starts)
-        assert list(dec) == list(v), (gs, list(dec))
+def test_no_positions_is_an_empty_outer_list():
+    batch = _batch([[1, 2], [3]])
+    assert batch.column("positions").to_pylist() == [[], []]

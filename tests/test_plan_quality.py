@@ -1,6 +1,6 @@
 """Physical-plan gates: the properties the 100TB design depends on must be
 visible in .explain() -- filter pushdown to the parquet scan, column pruning
-(never read binary position payloads the query doesn't need), broadcast for
+(never read position lists the query doesn't need), broadcast for
 the tiny side, and TakeOrderedAndProject for top-k (partial per-partition
 top-k + tiny final merge, the TopTree/Msg3a shape)."""
 
@@ -253,19 +253,25 @@ def test_phrase_postings_prunes_scan(eng):
 
 
 def test_search_many_pre_topk_below_window(eng):
-    # r4 batch-serving fix: a bounded per-partition top-k (MapInPandas)
-    # must sit BELOW the per-query rank window, so the window ranks at most
-    # n_batches*k rows per query instead of fully sorting every query's
-    # candidate set (the 10M-index 590s anti-pattern)
+    # r4 batch-serving fix: a bounded per-partition top-k (the partial
+    # WindowGroupLimit) must sit BELOW the per-query rank window and its
+    # shuffle, so the window ranks at most n_partitions*k rows per query
+    # instead of fully sorting every query's candidate set (the 10M-index
+    # 590s anti-pattern)
     batch = [
         {"query_id": "a", "terms": ["spark", "index"], "mode": "AND", "k": 5},
         {"query_id": "b", "terms": ["the"], "mode": "OR", "k": 5},
     ]
     p = _physical(eng.search_many(batch))
-    assert "Window" in p and "MapInPandas" in p
     # executedPlan prints root-first: the Window node appears above the
-    # pre-top-k MapInPandas it consumes
-    assert p.index("Window") < p.index("MapInPandas")
+    # shuffle, which appears above the partial pre-top-k it consumes
+    window = p.index("Window [")
+    partial = next(
+        i for i, ln in enumerate(p.splitlines())
+        if "WindowGroupLimit" in ln and ln.rstrip().endswith("Partial")
+    )
+    partial = sum(len(ln) + 1 for ln in p.splitlines()[:partial])
+    assert window < p.index("Exchange hashpartitioning(query_id", window) < partial
 
 
 def test_chunk_docs_is_pure_projection(spark):
@@ -461,3 +467,119 @@ def test_bm25f_field_side_broadcast_no_cartesian(eng):
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
     assert "TakeOrderedAndProject" in p
+
+
+# -- Parquet-native postings: no Python on the serving decode -------------
+
+_PYTHON_NODES = (
+    "PythonUDF", "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+    "PythonMapInArrow",
+)
+
+
+def _executed_python_nodes(df) -> list[str]:
+    df.collect()
+    p = _physical(df)
+    return [n for n in _PYTHON_NODES if n in p]
+
+
+@pytest.fixture(scope="module")
+def updated_eng(spark, tmp_path_factory):
+    from open_source_search_engine_spark.operators.updates import apply_updates
+
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("plan-upd-wh")))
+    build_index(spark, cat, transcripts_to_docs(synth_transcripts(spark, 200)))
+    victims = cat.read_table("documents").select("doc_id").limit(5)
+    apply_updates(spark, cat, delete_ids=victims)
+    eng = SearchEngine(spark, cat)
+    assert eng._tombstones is not None
+    return eng
+
+
+def test_exact_paths_have_no_python(eng, updated_eng):
+    for e in (eng, updated_eng):
+        for df in (
+            e.search_terms(["spark", "index"], "AND", 10),
+            e.search_terms(["spark", "index"], "OR", 10),
+            e.search_terms(["spark", "index"], "OR", 10, exclude_terms=["the"]),
+        ):
+            assert _executed_python_nodes(df) == []
+
+
+def test_batch_shared_scan_decode_has_no_python(eng):
+    queries = [
+        {"query_id": "a", "terms": ["spark", "index"], "mode": "AND", "k": 5},
+        {"query_id": "b", "terms": ["user", "the"], "mode": "OR", "k": 5},
+    ]
+    df = eng.search_many(queries, shared_scan_max_rows=10**9)
+    assert _executed_python_nodes(df) == []
+
+
+def test_stored_postings_blocks_are_list_columns(eng):
+    from pyspark.sql import types as T
+
+    schema = eng.catalog.read_table("postings").schema
+    for col in ("doc_ids", "tfs", "dls", "positions"):
+        assert isinstance(schema[col].dataType, T.ArrayType), col
+    assert isinstance(schema["positions"].dataType.elementType, T.ArrayType)
+
+
+def test_absent_and_term_launches_no_task(spark, eng):
+    sc = spark.sparkContext
+    q = ["spark", "zz_absent_term_qq"]
+    eng.search_auto(q, "AND", 10).collect()  # plans (and caches) the terms
+    sc.setJobGroup("absent-and", "absent-and")
+    try:
+        rows = eng.search_auto(q, "AND", 10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("absent-and")
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    )
+    assert rows == [] and tasks == 0
+
+
+def test_old_varbyte_catalog_fails_loudly(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from open_source_search_engine_spark.operators.resumable import (
+        merge_postings,
+    )
+    from open_source_search_engine_spark.operators.updates import apply_updates
+
+    cat = Catalog(spark, str(tmp_path / "old-wh"))
+    build_index(spark, cat, transcripts_to_docs(synth_transcripts(spark, 40)))
+    old = cat.read_table("postings")
+    for c in ("doc_ids", "tfs", "dls", "positions"):
+        old = old.withColumn(c, F.lit(b"\x01").cast("binary"))
+    cat.write_table(old.localCheckpoint(), "postings")
+    sc = spark.sparkContext
+
+    groups = iter(range(100))
+
+    def jobs(call) -> int:
+        group = f"old-catalog-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def raises(call):
+        with pytest.raises(ValueError, match="rebuild"):
+            call()
+
+    # a bare read of the table (Parquet footer/schema job) is the floor:
+    # each entry point must refuse right after it, before any work of its own
+    floor = jobs(lambda: cat.read_table("postings"))
+    for call in (
+        lambda: SearchEngine(spark, cat),
+        lambda: merge_postings(spark, cat),
+        lambda: apply_updates(spark, cat),
+    ):
+        assert jobs(lambda: raises(call)) <= floor

@@ -526,32 +526,32 @@ class TestSessionizeNoEventId:
 class TestCodecEmptyDocs:
     def test_positions_roundtrip_with_zero_tfs(self):
         import numpy as np
+        import pyarrow as pa
 
         from open_source_search_engine_spark.functions.codec import (
-            decode_positions,
-            encode_positions,
+            decode_blocks,
+            doc_positions,
+            encode_blocks,
         )
 
         for tfs in ([0, 2], [2, 0], [0, 2, 0, 1], [0, 0, 3]):
             tfs_a = np.asarray(tfs, dtype=np.int64)
             n = int(tfs_a.sum())
             flat = np.arange(3, 3 + n, dtype=np.int64)
-            buf = encode_positions(tfs_a, flat)
-            got = decode_positions(tfs_a, buf)
-            # leading-zero case used to decode [-2, 0] via flat[-1] wrap
-            assert got.tolist() == flat.tolist(), tfs
-
-    def test_varbyte_groups_trailing_empty_group(self):
-        import numpy as np
-
-        from open_source_search_engine_spark.functions.codec import (
-            varbyte_encode_groups,
-        )
-
-        out = varbyte_encode_groups(
-            np.array([1], dtype=np.uint64), np.array([0, 1])
-        )
-        assert len(out) == 2 and out[1] == b""  # used to IndexError
+            ids = np.arange(tfs_a.size, dtype=np.int64)
+            cols = encode_blocks(
+                np.array([0]), ids, tfs_a, tfs_a, doc_positions(tfs_a, flat)
+            )
+            batch = pa.RecordBatch.from_arrays(
+                list(cols.values()), names=list(cols)
+            )
+            _, _, _, got, _ = decode_blocks(batch, True)
+            # every doc keeps exactly its own positions, empty ones too
+            want, at = [], 0
+            for t in tfs:
+                want.append(flat[at: at + t].tolist())
+                at += t
+            assert got.to_pylist() == want, tfs
 
 
 class TestMultimodalEdges:
