@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import _local_frame
 from .dedup import shingles_expr, with_tokens
 
 
@@ -279,8 +280,8 @@ def pack_shards(
     for row in totals:
         offsets.append((int(row["bucket"]), running))
         running += int(row["bucket_tokens"])
-    off_df = docs.sparkSession.createDataFrame(
-        offsets, "bucket int, bucket_offset bigint"
+    off_df = _local_frame(
+        docs.sparkSession, "bucket int, bucket_offset bigint", offsets
     )
     w = (
         Window.partitionBy("bucket")

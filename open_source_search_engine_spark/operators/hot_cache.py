@@ -23,12 +23,14 @@ the cache until the next build/compaction rebuilds it.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..functions.bm25 import BM25Params
-from ..session import _empty_frame
+from ..session import _local_frame
 
 #: k1/b are part of the cache identity: the within-term ranking (tf_norm
 #: order) DEPENDS on them, so an engine may only serve from a cache built
@@ -39,18 +41,32 @@ HOT_META_SCHEMA = (
 )
 
 
-def tf_norm_col(tf, dl, k1: float, b: float, avgdl: float):
-    """The BM25 tf-normalization factor, same operation order as
-    query.py's contrib expression (score = idf * THIS)."""
+def _sql_double(x: float) -> str:
+    """A float64 as Spark SQL text that parses back to the same bits:
+    ``repr`` is the shortest decimal that round-trips, the ``D`` suffix
+    types it DOUBLE."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"no SQL literal for {x!r}")
+    return f"{x!r}D"
+
+
+def _tf_norm_sql(tf: str, dl: str, k1: float, b: float, avgdl: float) -> str:
+    """SQL text of the BM25 tf-normalization factor (score = idf * THIS)
+    over the integer columns ``tf`` and ``dl``. The one definition every
+    Spark path uses -- exact, batch, the WAND bounds and this cache -- so
+    they agree to the bit; only numbers go into the text."""
+    tfd = f"CAST({tf} AS DOUBLE)"
     return (
-        tf.cast("double")
-        * F.lit(k1 + 1.0)
-        / (
-            tf.cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * dl.cast("double") / F.lit(avgdl))
-        )
+        f"({tfd} * {_sql_double(k1 + 1.0)} / ({tfd} + {_sql_double(k1)}"
+        f" * ({_sql_double(1.0 - b)} + {_sql_double(b)}"
+        f" * CAST({dl} AS DOUBLE) / {_sql_double(avgdl)})))"
     )
+
+
+def tf_norm_col(tf: str, dl: str, k1: float, b: float, avgdl: float):
+    """``_tf_norm_sql`` as a Column, over the columns named ``tf``, ``dl``."""
+    return F.expr(_tf_norm_sql(tf, dl, k1, b, avgdl))
 
 
 def build_hot_term_cache(
@@ -74,42 +90,35 @@ def build_hot_term_cache(
     ]
     corpus = catalog.read_table("corpus_stats").collect()[0]
     avgdl = float(corpus["avgdl"])
-    if not hot:
-        catalog.write_table(
-            _empty_frame(
-                spark, "term_id long, doc_id long, tf int, dl int, rnk int"
-            ),
-            "hot_topk",
+    if hot:
+        eng = SearchEngine.__new__(SearchEngine)  # decode without full init
+        eng.spark = spark
+        eng._postings = catalog.read_table("postings")
+        if "seg_seq" not in eng._postings.columns:
+            eng._postings = eng._postings.withColumn(
+                "seg_seq", F.lit(0).cast("long")
+            )
+        eng._tombstones = None
+        w = Window.partitionBy("term_id").orderBy(
+            F.desc(tf_norm_col("tf", "dl", params.k1, params.b, avgdl)),
+            F.asc("doc_id"),
         )
-        catalog.write_table(
-            spark.createDataFrame(
-                [(max_seg, cache_k, min_df, avgdl, params.k1, params.b)],
-                HOT_META_SCHEMA,
-            ),
-            "hot_meta",
+        topk = (
+            SearchEngine.decoded_postings(eng, hot)
+            .withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= cache_k)
+            .select("term_id", "doc_id", "tf", "dl", "rnk")
         )
-        return 0
-    eng = SearchEngine.__new__(SearchEngine)  # decode without full init
-    eng.spark = spark
-    eng._postings = catalog.read_table("postings")
-    if "seg_seq" not in eng._postings.columns:
-        eng._postings = eng._postings.withColumn("seg_seq", F.lit(0).cast("long"))
-    eng._tombstones = None
-    decoded = SearchEngine.decoded_postings(eng, hot)
-    w = Window.partitionBy("term_id").orderBy(
-        F.desc(tf_norm_col(F.col("tf"), F.col("dl"), params.k1, params.b, avgdl)),
-        F.asc("doc_id"),
-    )
-    topk = (
-        decoded.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= cache_k)
-        .select("term_id", "doc_id", "tf", "dl", "rnk")
-    )
+    else:
+        topk = _local_frame(
+            spark, "term_id long, doc_id long, tf int, dl int, rnk int"
+        )
     catalog.write_table(topk, "hot_topk")
     catalog.write_table(
-        spark.createDataFrame(
-            [(max_seg, cache_k, min_df, avgdl, params.k1, params.b)],
+        _local_frame(
+            spark,
             HOT_META_SCHEMA,
+            [(max_seg, cache_k, min_df, avgdl, params.k1, params.b)],
         ),
         "hot_meta",
     )

@@ -65,6 +65,7 @@ from ..functions.tokenizer import (
     expand_cjk_in_lists,
     tokenize,
 )
+from ..session import _local_frame
 
 TOKENS_SCHEMA = T.StructType(
     [
@@ -947,11 +948,12 @@ def build_index(
 
     n_terms = catalog.read_table("term_stats").count()
     n_blocks = postings.count()
-    corpus = spark.createDataFrame(
-        [(n_docs, avgdl, block_bits, n_terms, n_blocks,
-          bool(config.store_positions))],
+    corpus = _local_frame(
+        spark,
         "n_docs long, avgdl double, block_bits int, n_terms long,"
         " n_blocks long, store_positions boolean",
+        [(n_docs, avgdl, block_bits, n_terms, n_blocks,
+          bool(config.store_positions))],
     )
     catalog.write_table(corpus, "corpus_stats")
     # a rebuild into a previously-updated catalog must not inherit stale

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import _empty_frame
+from ..session import _local_frame
 from .dedup import tokens_col
 
 __all__ = ["percolate"]
@@ -88,7 +88,7 @@ def percolate(
             )
         )
     if not structs:
-        return _empty_frame(
+        return _local_frame(
             docs.sparkSession,
             "doc_id long, query_id long, n_hit long, n_terms long",
         )

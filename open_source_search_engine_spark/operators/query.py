@@ -8,11 +8,13 @@ score-desc / docid-asc tie-break (`Msg3a.cpp:807-811`).
 
 Spark-first re-expression -- two code paths sharing one formula module:
 
-* ``exact`` path: decode the query terms' blocks (partition-pruned scan on
-  term_id), compute per-(term, doc) contributions JVM-side, aggregate with a
-  CANONICAL accumulation order (one conditional-sum column per term, folded
-  in term-string-ascending order -- float64 sums are bit-stable across
-  partitionings, SURVEY.md §7.4.1; see ``_aggregate_scores``), then
+* ``exact`` path: resolve the terms in the driver (plan_terms reads the
+  dictionary with Arrow), decode the query terms' blocks (partition-pruned
+  scan on term_id), compute per-(term, doc) contributions JVM-side,
+  aggregate with a CANONICAL accumulation order (one conditional-sum column
+  per term, folded in term-string-ascending order -- float64 sums are
+  bit-stable across partitionings, SURVEY.md §7.4.1; see
+  ``_aggregate_scores``), then
   ``ORDER BY score DESC, doc_id ASC LIMIT k`` which Spark executes as
   TakeOrderedAndProject = partial per-partition top-k + final merge, exactly
   the reference's TopTree -> Msg3a shape (SURVEY.md A9/T1/T2).
@@ -33,13 +35,16 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+from pyarrow.fs import FileSystem
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..functions.bm25 import BM25Params, idf as bm25_idf
 from ..functions.tokenizer import tokenize
-from ..session import _empty_frame
+from ..session import _local_frame
 from .index_build import _check_block_format
 
 
@@ -279,54 +284,28 @@ class SearchEngine:
 
         Lookups memoize per engine instance -- the reference caches term
         freqs for 500 s (`Posdb.cpp:306` g_termFreqCache); an engine is
-        bound to one index snapshot, so its cache never goes stale. Only
-        UNSEEN terms (including confirmed-absent ones, cached as misses)
-        cost a metadata job; an all-cached plan costs none.
+        bound to one index snapshot, so its cache never goes stale. UNSEEN
+        terms (confirmed-absent ones are cached as misses) are read in the
+        driver with Arrow from the snapshot's own term_stats files, with a
+        ``term in (...)`` filter: no plan costs a Spark job.
         """
         terms = sorted(set(query_terms))
-        cols_out = [
-            "term", "term_id", "df", "idf", "max_salt_bits", "min_salt_bits"
-        ]
-        if not terms:
-            return pd.DataFrame(columns=cols_out)
+        cols = ["term", "term_id", "df", "max_salt_bits", "min_salt_bits"]
         missing = [t for t in terms if t not in self._plan_cache]
         if missing:
-            has_sb = "max_salt_bits" in self._term_stats.columns
-            has_minsb = "min_salt_bits" in self._term_stats.columns
-            cols = (
-                ["term", "term_id", "df"]
-                + (["max_salt_bits"] if has_sb else [])
-                + (["min_salt_bits"] if has_minsb else [])
-            )
-            fetched = (
-                self._term_stats.filter(F.col("term").isin(missing))
-                .select(*cols)
-                .toPandas()
-            )
-            if not has_sb:
-                fetched["max_salt_bits"] = 0
-            if not has_minsb:
-                # pre-min_salt_bits snapshots: assume no coarse straggler
-                # blocks below the term's max (the old clamping behavior)
-                fetched["min_salt_bits"] = fetched["max_salt_bits"]
-            for r in fetched.itertuples(index=False):
-                self._plan_cache[r.term] = (
-                    int(r.term_id), int(r.df),
-                    int(r.max_salt_bits), int(r.min_salt_bits),
-                )
+            files = self._term_stats.inputFiles()
+            fs = FileSystem.from_uri(files[0])[0]
+            fetched = pads.dataset(
+                [FileSystem.from_uri(f)[1] for f in files], filesystem=fs
+            ).to_table(columns=cols, filter=pc.field("term").isin(missing))
+            for t, *row in zip(*fetched.to_pydict().values()):
+                self._plan_cache[t] = tuple(row)
             for t in missing:
                 self._plan_cache.setdefault(t, None)  # confirmed absent
-        hits = [
-            (t, *self._plan_cache[t])
-            for t in terms
-            if self._plan_cache[t] is not None
-        ]
         rows = pd.DataFrame(
-            hits,
-            columns=["term", "term_id", "df", "max_salt_bits", "min_salt_bits"],
+            [(t, *self._plan_cache[t]) for t in terms if self._plan_cache[t]],
+            columns=cols,
         )
-        if rows.empty:
-            return pd.DataFrame(columns=cols_out)
         rows["idf"] = bm25_idf(rows["df"].to_numpy(np.float64), self.n_docs)
         return rows.sort_values(["df", "term"]).reset_index(drop=True)
 
@@ -338,32 +317,25 @@ class SearchEngine:
         self, term_ids: list[int], include_positions: bool = False
     ) -> DataFrame:
         """Partition-pruned scan of the query terms' blocks, exploded back
-        to (term_id, doc_id, tf, dl, seg_seq[, positions]) rows in the JVM:
+        to (term_id, doc_id, tf, dl[, positions], seg_seq) rows in the JVM:
         the blocks are list columns (format: functions/codec.py), so one
         ``arrays_zip`` + ``inline`` replaces any Python decode hop."""
-        lists = ["doc_ids", "tfs", "dls"] + (
-            ["positions"] if include_positions else []
-        )
-        decoded = (
-            self._postings.filter(F.col("term_id").isin(term_ids))
-            .select("term_id", "seg_seq", F.inline(F.arrays_zip(*lists)))
-            .select(
-                "term_id",
-                F.col("doc_ids").alias("doc_id"),
-                F.col("tfs").alias("tf"),
-                F.col("dls").alias("dl"),
-                "seg_seq",
-                *(["positions"] if include_positions else []),
-            )
+        pos = ", positions" if include_positions else ""
+        ids = ", ".join(str(int(t)) for t in term_ids)
+        decoded = self._postings.where(
+            f"term_id IN ({ids})" if ids else "false"
+        ).selectExpr(
+            "term_id",
+            f"inline(arrays_zip(doc_ids, tfs, dls{pos}))"
+            f" AS (doc_id, tf, dl{pos})",
+            "seg_seq",
         )
         if self._tombstones is not None:
-            t = F.broadcast(self._tombstones)
             decoded = (
-                decoded.join(t, "doc_id", "left_outer")
-                .filter(
-                    F.col("upto_seq").isNull()
-                    | (F.col("seg_seq") > F.col("upto_seq"))
+                decoded.join(
+                    F.broadcast(self._tombstones), "doc_id", "left_outer"
                 )
+                .where("upto_seq IS NULL OR seg_seq > upto_seq")
                 .drop("upto_seq")
             )
         return decoded
@@ -386,12 +358,18 @@ class SearchEngine:
         keeping global statistics -- the reference's site-whitelist shape
         (`Msg2.h:13-14`, SURVEY.md F6/F7). The semi-join applies BEFORE
         scoring, so the plan never ranks unrestricted results.
+
+        Planning launches no Spark job: the dictionary is read in the
+        driver (plan_terms) and the per-term constants (idf, fold slot)
+        are literals in the plan's SQL expressions, not a broadcast frame.
+        The expressions are SQL text, so building the plan costs a JVM
+        call per operator, not per expression node.
         """
         plan = self.plan_terms(query_terms)
         n_q = len(set(query_terms))
         if plan.empty or (mode == "AND" and len(plan) < n_q):
             # a required term is absent from the corpus -> empty result
-            return _empty_frame(
+            return _local_frame(
                 self.spark, "doc_id long, score double, matched int"
             )
         contrib = self._contributions(plan)
@@ -399,9 +377,9 @@ class SearchEngine:
             contrib = contrib.join(
                 filter_docs.select("doc_id"), "doc_id", "left_semi"
             )
-        scored = self._aggregate_scores(contrib, list(plan["term"]))
+        scored = self._aggregate_scores(contrib, len(plan))
         if mode == "AND":
-            scored = scored.filter(F.col("matched") == len(plan))
+            scored = scored.where(f"matched = {len(plan)}")
         return self._exclude(scored, exclude_terms)
 
     def _exclude(
@@ -482,7 +460,7 @@ class SearchEngine:
         if hit is not None:
             self._serp_cache.move_to_end(key)
             rows, schema = hit
-            return self.spark.createDataFrame(rows, schema)
+            return _local_frame(self.spark, schema, rows)
         res = self.search_terms(
             query_terms, mode=mode, k=k, exclude_terms=exclude_terms
         )
@@ -490,7 +468,7 @@ class SearchEngine:
         self._serp_cache[key] = (rows, res.schema)
         if len(self._serp_cache) > self._serp_cache_max:
             self._serp_cache.popitem(last=False)
-        return self.spark.createDataFrame(rows, res.schema)
+        return _local_frame(self.spark, res.schema, rows)
 
     def search_auto(
         self,
@@ -508,10 +486,11 @@ class SearchEngine:
         per-term list sizes, `PosdbTable.cpp`; `Posdb.h` key layout).
 
         Routing is deterministic: the planned decode volume is sum(df)
-        over the query's terms (the plan dictionary is driver-cached — no
-        Spark job). At or below ``wand_df_cutoff`` the exact path wins
-        (TakeOrderedAndProject; unrestricted single hot terms answer from
-        the shortcut cache inside search_terms); above it, decode volume
+        over the query's terms (plan_terms reads the dictionary in the
+        driver -- no Spark job, cached or not). At or below
+        ``wand_df_cutoff`` the exact path wins (TakeOrderedAndProject;
+        unrestricted single hot terms answer from the shortcut cache
+        inside search_terms); above it, decode volume
         dominates and the two-phase pruned WAND path wins. Both paths are
         rank-identical to search_terms (the WAND side is gated bit-equal),
         so results do NOT depend on the cutoff — only the plan shape does.
@@ -520,7 +499,7 @@ class SearchEngine:
         """
         plan = self.plan_terms(query_terms)
         if plan.empty:
-            return _empty_frame(
+            return _local_frame(
                 self.spark, "doc_id long, score double, matched int"
             )
         if int(plan["df"].sum()) <= int(wand_df_cutoff):
@@ -558,21 +537,17 @@ class SearchEngine:
             self._hot_meta["cache_k"]
         ):
             return None  # cache not deep enough for this k
-        from .hot_cache import tf_norm_col
+        from .hot_cache import _sql_double, _tf_norm_sql
 
         tid = int(plan["term_id"].iloc[0])
-        idf_v = float(plan["idf"].iloc[0])
-        k1, b = self.params.k1, self.params.b
-        score = F.lit(idf_v) * tf_norm_col(
-            F.col("tf"), F.col("dl"), k1, b, self.avgdl
+        idf = _sql_double(plan["idf"].iloc[0])
+        tf_norm = _tf_norm_sql(
+            "tf", "dl", self.params.k1, self.params.b, self.avgdl
         )
         return (
-            self._hot_topk.filter(F.col("term_id") == tid)
-            .filter(F.col("rnk") <= k)
-            .select(
-                "doc_id",
-                score.alias("score"),
-                F.lit(1).cast("int").alias("matched"),
+            self._hot_topk.where(f"term_id = {tid} AND rnk <= {int(k)}")
+            .selectExpr(
+                "doc_id", f"{idf} * {tf_norm} AS score", "1 AS matched"
             )
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
@@ -674,7 +649,7 @@ class SearchEngine:
         plan = self.plan_terms(query_terms)
         n_q = len(set(query_terms))
         if plan.empty or (mode == "AND" and len(plan) < n_q):
-            return _empty_frame(
+            return _local_frame(
                 self.spark, "doc_id long, score double, matched int"
             )
         scored = self.score_terms(
@@ -748,13 +723,14 @@ class SearchEngine:
             decoded = decoded.withColumn("slot", slot_of[F.col("term_id")])
         else:
             keys = ["query_id", "doc_id"]
-            qterms = self.spark.createDataFrame(
+            qterms = _local_frame(
+                self.spark,
+                "query_id string, term_id long, slot int",
                 [
                     (qid, int(tid_of[t]), i)
                     for qid, ts in terms_of.items()
                     for i, t in enumerate(ts)
                 ],
-                "query_id string, term_id long, slot int",
             )
             decoded = decoded.join(F.broadcast(qterms), "term_id")
         if restrict is not None:
@@ -840,7 +816,7 @@ class SearchEngine:
         phrase absent from the corpus drops out of its group exactly like
         an absent term."""
         bases = sorted(groups)
-        empty = _empty_frame(
+        empty = _local_frame(
             self.spark, "doc_id long, score double, matched int"
         )
         if not bases:
@@ -852,7 +828,9 @@ class SearchEngine:
             {m for g in groups.values() for m, _w in g if " " in m}
         )
         plan = self.plan_terms(members)
-        present = set(plan["term"])
+        # pivot slots: the plan's terms in _contributions' order, then the
+        # phrase members present in the corpus
+        slot_of = {t: i for i, t in enumerate(sorted(plan["term"]))}
         # phrase members: hits frame + exact df (from term_stats when the
         # bigram termlist is indexed -- no job; one count job otherwise)
         phrase_frames: dict[str, DataFrame] = {}
@@ -879,25 +857,23 @@ class SearchEngine:
                 k1, b = self.params.k1, self.params.b
                 phrase_frames[ph] = hits.select(
                     "doc_id",
-                    F.lit(ph).alias("term"),
+                    F.lit(len(slot_of)).alias("slot"),
                     (
                         F.lit(idf_ph)
-                        * tf_norm_col(
-                            F.col("tf"), F.col("dl"), k1, b, self.avgdl
-                        )
+                        * tf_norm_col("tf", "dl", k1, b, self.avgdl)
                     ).alias("contrib"),
                 )
-                present.add(ph)
+                slot_of[ph] = len(slot_of)
         viable = {
-            t: [(m, w) for m, w in groups[t] if m in present] for t in bases
+            t: [(m, w) for m, w in groups[t] if m in slot_of] for t in bases
         }
         if not any(viable.values()):
             return empty
         if mode == "AND" and not all(viable.values()):
             return empty
         if plan.empty:
-            contrib = _empty_frame(
-                self.spark, "doc_id long, term string, contrib double"
+            contrib = _local_frame(
+                self.spark, "doc_id long, slot int, contrib double"
             )
         else:
             contrib = self._contributions(plan)
@@ -908,7 +884,9 @@ class SearchEngine:
             (t, m, float(w)) for t in bases for m, w in viable[t]
         )
         aggs = [
-            F.sum(F.when(F.col("term") == m, F.col("contrib"))).alias(f"_c{i}")
+            F.sum(
+                F.when(F.col("slot") == slot_of[m], F.col("contrib"))
+            ).alias(f"_c{i}")
             for i, (_t, m, _w) in enumerate(entries)
         ]
         g = contrib.groupBy("doc_id").agg(*aggs)
@@ -955,7 +933,7 @@ class SearchEngine:
         (positions_a + 1) with positions_b -- positions are unique per
         (term, doc), so the intersection size is the exact adjacency count.
         Both paths produce identical rows (gated)."""
-        empty = _empty_frame(self.spark, "doc_id long, tf int, dl int")
+        empty = _local_frame(self.spark, "doc_id long, tf int, dl int")
         bplan = self.plan_terms([f"{a} {b}"])
         if not bplan.empty:
             return (
@@ -1023,7 +1001,7 @@ class SearchEngine:
         positional intersection: per doc, slot i's positions shifted by -i,
         tf = |∩_i (positions_i - i)|. Repeated words are handled (the same
         term's array shifts differently per slot)."""
-        empty = _empty_frame(self.spark, "doc_id long, tf int, dl int")
+        empty = _local_frame(self.spark, "doc_id long, tf int, dl int")
         n = len(words)
         if n == 0:
             return empty
@@ -1130,7 +1108,7 @@ class SearchEngine:
 
         words = query.split() if isinstance(query, str) else list(query)
         words = [w for w in words if w]
-        empty = _empty_frame(
+        empty = _local_frame(
             self.spark, "doc_id long, score double, matched int"
         )
         if not words:
@@ -1194,7 +1172,7 @@ class SearchEngine:
                 "doc_id",
                 (
                     F.lit(idf_bi)
-                    * tf_norm_col(F.col("tf"), F.col("dl"), k1, b, self.avgdl)
+                    * tf_norm_col("tf", "dl", k1, b, self.avgdl)
                 ).alias(f"_bg{i}"),
             )
             out = out.join(pair, "doc_id", "left_outer")
@@ -1363,23 +1341,16 @@ class SearchEngine:
         ]
         if not qmeta_rows:
             if not heavy_frames:
-                return _empty_frame(self.spark, _BATCH_SCHEMA)
+                return _local_frame(self.spark, _BATCH_SCHEMA)
             out = heavy_frames[0]
             for f in heavy_frames[1:]:
                 out = out.unionByName(f)
             return out.orderBy("query_id", "rank")
-        # from pandas, so the Arrow path ships it to the JVM: a list of
-        # tuples would be a Python RDD, costing Python tasks per batch
-        qmeta = self.spark.createDataFrame(
-            pd.DataFrame(
-                qmeta_rows,
-                columns=[
-                    "query_id", "term", "pos", "term_id", "idf",
-                    "n_required", "k",
-                ],
-            ),
+        qmeta = _local_frame(
+            self.spark,
             "query_id string, term string, pos int, term_id long, idf double, "
             "n_required int, k int",
+            qmeta_rows,
         )
         term_ids = sorted({r[3] for r in qmeta_rows})
         decoded = self.decoded_postings(term_ids)
@@ -1391,7 +1362,7 @@ class SearchEngine:
             .withColumn(
                 "contrib",
                 F.col("idf")
-                * tf_norm_col(F.col("tf"), F.col("dl"), k1, b, self.avgdl),
+                * tf_norm_col("tf", "dl", k1, b, self.avgdl),
             )
             .select("query_id", "doc_id", "pos", "contrib", "n_required", "k")
         )
@@ -1693,7 +1664,7 @@ class SearchEngine:
         )
         terms, exclude = self._parse_signs(query)
         if not terms:
-            return _empty_frame(self.spark, out_schema)
+            return _local_frame(self.spark, out_schema)
 
         def page(pos_terms: list[str]) -> DataFrame:
             if source_cap is None:
@@ -1926,16 +1897,16 @@ class SearchEngine:
         )
         schema = "doc_id long, score double, matched int"
         if not rows or not rows[0]["text"]:
-            return _empty_frame(self.spark, schema)
+            return _local_frame(self.spark, schema)
         toks = self.tokenize_query(rows[0]["text"])
         if not toks:
-            return _empty_frame(self.spark, schema)
+            return _local_frame(self.spark, schema)
         from collections import Counter
 
         tf = Counter(toks)
         plan = self.plan_terms(list(tf))  # (term, df, idf, ...) pandas
         if plan.empty:
-            return _empty_frame(self.spark, schema)
+            return _local_frame(self.spark, schema)
         plan = plan.assign(
             kscore=[
                 tf[t] * i for t, i in zip(plan["term"], plan["idf"])
@@ -2003,18 +1974,19 @@ class SearchEngine:
         q = sorted(set(query_terms))
         plan = self.plan_terms(sorted(set(q) | set(exp)))
         if plan.empty:
-            return _empty_frame(
+            return _local_frame(
                 self.spark, "doc_id long, score double, matched int"
             )
+        q_slots = [i for i, t in enumerate(sorted(plan["term"])) if t in q]
         contrib = self._contributions(plan).withColumn(
             "contrib",
             F.col("contrib")
-            * F.when(F.col("term").isin(q), F.lit(1.0)).otherwise(
+            * F.when(F.col("slot").isin(q_slots), F.lit(1.0)).otherwise(
                 F.lit(float(beta))
             ),
         )
         return (
-            self._aggregate_scores(contrib, list(plan["term"]))
+            self._aggregate_scores(contrib, len(plan))
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(int(k))
         )
@@ -2049,7 +2021,7 @@ class SearchEngine:
             "dl int, dl_norm double"
         )
         if plan.empty:
-            return _empty_frame(self.spark, schema)
+            return _local_frame(self.spark, schema)
         decoded = self.decoded_postings([int(t) for t in plan["term_id"]])
         meta = self.spark.createDataFrame(plan[["term_id", "term", "idf"]])
         k1, b = self.params.k1, self.params.b
@@ -2058,7 +2030,7 @@ class SearchEngine:
         rows = decoded.join(F.broadcast(meta), "term_id").withColumn(
             "contrib",
             F.col("idf")
-            * tf_norm_col(F.col("tf"), F.col("dl"), k1, b, self.avgdl),
+            * tf_norm_col("tf", "dl", k1, b, self.avgdl),
         )
         ts = sorted(set(plan["term"]))
         aggs = [
@@ -2371,8 +2343,10 @@ class SearchEngine:
             ),
         )
         dlt_df = F.broadcast(
-            self.spark.createDataFrame(
-                [(v, int(n)) for v, n in dlt.items()], "_fv string, _dlt int"
+            _local_frame(
+                self.spark,
+                "_fv string, _dlt int",
+                [(v, int(n)) for v, n in dlt.items()],
             )
         )
         # null-safe: a doc whose field is NULL keeps dl_field = 0 (the
@@ -2397,32 +2371,33 @@ class SearchEngine:
                 [int(t) for t in plan["term_id"]]
             ).join(
                 F.broadcast(
-                    self.spark.createDataFrame(
+                    _local_frame(
+                        self.spark,
+                        "term_id long, term string",
                         [
                             (int(r.term_id), r.term)
                             for r in plan.itertuples(index=False)
                         ],
-                        "term_id long, term string",
                     )
                 ),
                 "term_id",
             ).select("doc_id", "term", F.col("tf").alias("_tfb"))
         else:
-            body = _empty_frame(
+            body = _local_frame(
                 self.spark, "doc_id long, term string, _tfb int"
             )
         # field side: broadcast (value, term, tf) map into the doc store
         if tmap:
             fside = docs_aux.join(
                 F.broadcast(
-                    self.spark.createDataFrame(
-                        tmap, "_fv string, term string, _tft int"
+                    _local_frame(
+                        self.spark, "_fv string, term string, _tft int", tmap
                     )
                 ),
                 "_fv",
             ).select("doc_id", "term", "_tft")
         else:
-            fside = _empty_frame(
+            fside = _local_frame(
                 self.spark, "doc_id long, term string, _tft int"
             )
         comb = (
@@ -2510,10 +2485,10 @@ class SearchEngine:
         (``route`` exact|wand by search_auto's sum(df) ≤ cutoff rule and
         the ``sum_df`` that drove it).
 
-        Costs ZERO Spark jobs when the terms are plan-cached (plan_terms
-        memoizes dictionary rows, including confirmed misses) — the frame
-        is built from driver-held plan metadata, so SERP handlers can
-        attach it to every response for free. Absent terms appear with
+        Costs ZERO Spark jobs (plan_terms reads the dictionary in the
+        driver and memoizes its rows, including confirmed misses) — the
+        frame is built from driver-held plan metadata, so SERP handlers
+        can attach it to every response for free. Absent terms appear with
         df=0 / idf NULL / present=false; sum_df counts present terms only
         (an absent term decodes nothing — same contract as routing).
         """
@@ -2532,10 +2507,11 @@ class SearchEngine:
         for t in sorted(set(query_terms)):
             df_i, idf = by_term.get(t, (0, None))
             rows.append((t, t in by_term, df_i, idf, route, sum_df))
-        return self.spark.createDataFrame(
-            rows,
+        return _local_frame(
+            self.spark,
             "term string, present boolean, df long, idf double, "
             "route string, sum_df long",
+            rows,
         )
 
     def search_after(
@@ -2716,7 +2692,7 @@ class SearchEngine:
         out_schema = "completion string, n_docs long, df long"
         words = self.tokenize_query(partial)
         if not words:
-            return _empty_frame(self.spark, out_schema)
+            return _local_frame(self.spark, out_schema)
         prefix, context = words[-1], sorted(set(words[:-1]))
         cand = (
             self._term_stats.filter(
@@ -2730,12 +2706,12 @@ class SearchEngine:
         )
         cand = [r for r in cand if r["term"] not in context]
         if not cand:
-            return _empty_frame(self.spark, out_schema)
+            return _local_frame(self.spark, out_schema)
         if not context:
             # no typed context: rank by dictionary df (n_docs == df)
             rows = [(r["term"], int(r["df"]), int(r["df"])) for r in cand]
             return (
-                self.spark.createDataFrame(rows, out_schema)
+                _local_frame(self.spark, out_schema, rows)
                 .orderBy(
                     F.desc("n_docs"), F.desc("df"), F.asc("completion")
                 )
@@ -2743,7 +2719,7 @@ class SearchEngine:
             )
         ctx_plan = self.plan_terms(context)
         if len(ctx_plan) < len(context):
-            return _empty_frame(self.spark, out_schema)
+            return _local_frame(self.spark, out_schema)
         ctx_ids = [int(t) for t in ctx_plan["term_id"]]
         cand_ids = [int(r["term_id"]) for r in cand]
         decoded = self.decoded_postings(sorted(set(ctx_ids + cand_ids)))
@@ -2760,9 +2736,10 @@ class SearchEngine:
             .groupBy("term_id")
             .agg(F.count(F.lit(1)).alias("n_docs"))
         )
-        meta = self.spark.createDataFrame(
-            [(int(r["term_id"]), r["term"], int(r["df"])) for r in cand],
+        meta = _local_frame(
+            self.spark,
             "term_id long, completion string, df long",
+            [(int(r["term_id"]), r["term"], int(r["df"])) for r in cand],
         )
         return (
             counts.join(F.broadcast(meta), "term_id")
@@ -2798,7 +2775,7 @@ class SearchEngine:
         out_schema = "doc_id long, score double, matched int, min_gap int"
         plan = self.plan_terms([w1, w2])
         if len(plan) < len({w1, w2}):
-            return _empty_frame(self.spark, out_schema)
+            return _local_frame(self.spark, out_schema)
         tid = dict(zip(plan["term"], plan["term_id"]))
         decoded = self.decoded_postings(
             [int(t) for t in plan["term_id"]], include_positions=True
@@ -2869,7 +2846,7 @@ class SearchEngine:
         phrases, and fields always survive, and an all-stopword clause is
         answered as-is. ``stop_words`` overrides the default English set."""
         el, terms = self.query_eligibility(query, drop_stopwords, stop_words)
-        empty = _empty_frame(
+        empty = _local_frame(
             self.spark, "doc_id long, score double, matched int"
         )
         if el is None:
@@ -3011,7 +2988,7 @@ class SearchEngine:
         then one map-side-combined aggregation per facet; output cardinality
         is #distinct facet values, so the per-field top-n window is tiny."""
         el, _ = self.query_eligibility(query, drop_stopwords)
-        empty = _empty_frame(
+        empty = _local_frame(
             self.spark, "facet_field string, facet_value string, n_docs long"
         )
         if el is None or (not facet_fields and not facet_ranges):
@@ -3162,23 +3139,29 @@ class SearchEngine:
 
     # ------------------------------------------------------------------
     def _contributions(self, plan: pd.DataFrame) -> DataFrame:
-        """(term, doc_id, contrib) with contrib = idf * tf_norm, JVM-side."""
-        term_ids = [int(t) for t in plan["term_id"]]
-        decoded = self.decoded_postings(term_ids)
-        meta = self.spark.createDataFrame(
-            plan[["term_id", "term", "idf"]]
-        )
-        k1, b = self.params.k1, self.params.b
-        from .hot_cache import tf_norm_col
+        """(doc_id, slot, contrib), contrib = idf * tf_norm, JVM-side. A
+        term's slot is its index in term-string order, the canonical fold's
+        (_aggregate_scores). Idf and slot are CASE expressions over term_id,
+        so the plan's constants need no frame of their own; only numbers go
+        into the SQL text."""
+        from .hot_cache import _sql_double, _tf_norm_sql
 
-        return (
-            decoded.join(F.broadcast(meta), "term_id")
-            .withColumn(
-                "contrib",
-                F.col("idf")
-                * tf_norm_col(F.col("tf"), F.col("dl"), k1, b, self.avgdl),
-            )
-            .select("doc_id", "term", "contrib")
+        by_term = sorted(zip(plan["term"], plan["term_id"], plan["idf"]))
+        idf = " ".join(
+            f"WHEN {int(t)} THEN {_sql_double(v)}" for _, t, v in by_term
+        )
+        slot = " ".join(
+            f"WHEN {int(t)} THEN {i}" for i, (_, t, _) in enumerate(by_term)
+        )
+        tf_norm = _tf_norm_sql(
+            "tf", "dl", self.params.k1, self.params.b, self.avgdl
+        )
+        return self.decoded_postings(
+            [int(t) for t in plan["term_id"]]
+        ).selectExpr(
+            "doc_id",
+            f"CASE term_id {slot} END AS slot",
+            f"CASE term_id {idf} END * {tf_norm} AS contrib",
         )
 
     # ------------------------------------------------------------------
@@ -3204,10 +3187,10 @@ class SearchEngine:
         """
         n = len(phrase_terms)
         if n == 0:
-            return _empty_frame(self.spark, "doc_id long")
+            return _local_frame(self.spark, "doc_id long")
         plan = self.plan_terms(phrase_terms)
         if len(plan) < len(set(phrase_terms)):
-            return _empty_frame(self.spark, "doc_id long")
+            return _local_frame(self.spark, "doc_id long")
         tid_of = dict(zip(plan["term"], plan["term_id"]))
         decoded = self.decoded_postings(
             [int(t) for t in plan["term_id"]], include_positions=True
@@ -3269,14 +3252,12 @@ class SearchEngine:
         terms = sorted(set(phrase_terms))
         plan = self.plan_terms(terms)
         if plan.empty or len(plan) < len(terms):
-            return _empty_frame(
+            return _local_frame(
                 self.spark, "doc_id long, score double, matched int"
             )
         scored = self._aggregate_scores(
-            self._contributions(plan), list(plan["term"])
-        ).filter(
-            F.col("matched") == len(plan)
-        )
+            self._contributions(plan), len(plan)
+        ).where(f"matched = {len(plan)}")
         hits = self._phrase_hits(phrase_terms, use_bigrams)
         return (
             scored.join(hits, "doc_id", "left_semi")
@@ -3288,7 +3269,7 @@ class SearchEngine:
         """Distinct doc_ids containing ``term`` (one termlist scan)."""
         plan = self.plan_terms([term])
         if plan.empty:
-            return _empty_frame(self.spark, "doc_id long")
+            return _local_frame(self.spark, "doc_id long")
         return (
             self.decoded_postings([int(plan["term_id"].iloc[0])])
             .select("doc_id")
@@ -3317,33 +3298,30 @@ class SearchEngine:
                 frame = frame.join(self.term_docs(t), "doc_id", "left_anti")
             clause_frames.append(frame)
         if not clause_frames:
-            return _empty_frame(self.spark, "doc_id long")
+            return _local_frame(self.spark, "doc_id long")
         out = clause_frames[0]
         for f in clause_frames[1:]:
             out = out.unionByName(f)
         return out.distinct()
 
-    def _aggregate_scores(
-        self, contrib: DataFrame, terms: list[str]
-    ) -> DataFrame:
+    def _aggregate_scores(self, contrib: DataFrame, n_slots: int) -> DataFrame:
         """Canonical-order float64 sum per doc: contributions added in term-
         string-ascending order (bit-stable across partitionings).
 
-        A PIVOTED hash aggregation over the query's ``terms`` -- one
-        conditional-sum column per term, then a fixed-order fold -- which
-        map-side partial-aggregates. The add sequence is 0.0 + c_t1 + c_t2
-        ... skipping absent terms, terms sorted ascending."""
-        ts = sorted(set(terms))
-        aggs = [
-            F.sum(F.when(F.col("term") == t, F.col("contrib"))).alias(f"_c{i}")
-            for i, t in enumerate(ts)
-        ]
+        A PIVOTED hash aggregation over the ``n_slots`` term slots of
+        ``contrib`` (_contributions: slot i is the i-th term in string
+        order) -- one conditional-sum column per slot, then a fixed-order
+        fold -- which map-side partial-aggregates. The add sequence is
+        0.0 + c_t1 + c_t2 ... skipping absent terms (coalesce-to-0.0 is
+        bit-identical to skipping for positive contributions)."""
         g = contrib.groupBy("doc_id").agg(
-            *aggs, F.count(F.lit(1)).cast("int").alias("matched")
+            *[
+                F.expr(f"sum(CASE WHEN slot = {i} THEN contrib END) AS _c{i}")
+                for i in range(n_slots)
+            ],
+            F.expr("CAST(count(1) AS INT) AS matched"),
         )
-        # linear fold (see _vote_group_scores): when/otherwise doubles the
-        # tree per term
-        score = F.lit(0.0)
-        for i in range(len(ts)):
-            score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-        return g.select("doc_id", score.alias("score"), "matched")
+        fold = " + ".join(
+            ["0.0D"] + [f"coalesce(_c{i}, 0.0D)" for i in range(n_slots)]
+        )
+        return g.selectExpr("doc_id", f"{fold} AS score", "matched")

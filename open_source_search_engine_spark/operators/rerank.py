@@ -64,7 +64,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import _empty_frame
+from ..session import _local_frame
 from .query import _BATCH_SCHEMA, _rank_branch, boost_multiplier
 
 
@@ -221,7 +221,7 @@ def wand_rerank(
     from .wand import wand_search
 
     spark = engine.spark
-    empty = _empty_frame(spark, "doc_id long, score double, matched int")
+    empty = _local_frame(spark, "doc_id long, score double, matched int")
     plan = engine.plan_terms(terms)
     if plan.empty or (mode == "AND" and len(plan) < len(set(terms))):
         return empty
@@ -240,7 +240,7 @@ def wand_rerank(
         cand_rows = cands.collect()  # <= m rows (wand's own contract)
         if not cand_rows:
             return empty
-        cand_df = spark.createDataFrame(cand_rows, cands.schema)
+        cand_df = _local_frame(spark, cands.schema, cand_rows)
         top = (
             mod.rescore(cand_df, terms_of)
             .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -256,7 +256,7 @@ def wand_rerank(
         m = _next_m(m, kth, bm25, cert, max_candidates)
         if m is None:
             return mod.exact(terms, mode, k, excl)
-    return spark.createDataFrame(rows, top.schema) if rows else empty
+    return _local_frame(spark, top.schema, rows)
 
 
 def batch_rerank(
@@ -315,13 +315,14 @@ def batch_rerank(
         if meta[r["query_id"]].m is not None:
             bm25_of.setdefault(r["query_id"], []).append(r["score"])
     if bm25_of:
-        cand_df = spark.createDataFrame(
+        cand_df = _local_frame(
+            spark,
+            "query_id string, doc_id long, score double, matched int",
             [
                 (r["query_id"], r["doc_id"], r["score"], r["matched"])
                 for r in cand_rows
                 if r["query_id"] in bm25_of
             ],
-            "query_id string, doc_id long, score double, matched int",
         )
         terms_of = {qid: meta[qid].present for qid in bm25_of}
         rows_of: dict[str, list] = {}
@@ -340,7 +341,7 @@ def batch_rerank(
                 )
             else:
                 fallback.append(qid)
-    out = spark.createDataFrame(final_rows, _BATCH_SCHEMA)
+    out = _local_frame(spark, _BATCH_SCHEMA, final_rows)
     for qid in sorted(fallback):
         q = meta[qid]
         out = out.unionByName(

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import _PARQUET_WRITER, Catalog
 from ..functions.hashing import pick_block_bits
+from ..session import _local_frame
 from .index_build import (
     IndexConfig,
     build_postings,
@@ -207,7 +208,9 @@ def resumable_build(
                 (n_p / elapsed) if elapsed > 0 else 0.0, time.time(),
             )
         ]
-        catalog.append_table(spark.createDataFrame(row, MANIFEST_SCHEMA), "build_manifest")
+        catalog.append_table(
+            _local_frame(spark, MANIFEST_SCHEMA, row), "build_manifest"
+        )
         segments.append(seg_dir)
         run += 1
         if fail_after_partition is not None and p >= fail_after_partition:
@@ -219,11 +222,12 @@ def resumable_build(
     catalog.write_table(term_stats_from_postings(postings), "term_stats")
     n_terms = catalog.read_table("term_stats").count()
     n_blocks = postings.count()
-    corpus = spark.createDataFrame(
-        [(n_docs, avgdl, block_bits, n_terms, n_blocks,
-          bool(config.store_positions))],
+    corpus = _local_frame(
+        spark,
         "n_docs long, avgdl double, block_bits int, n_terms long,"
         " n_blocks long, store_positions boolean",
+        [(n_docs, avgdl, block_bits, n_terms, n_blocks,
+          bool(config.store_positions))],
     )
     catalog.write_table(corpus, "corpus_stats")
     # rebuild parity with build_index: clear stale tombstones / seg
@@ -245,7 +249,9 @@ def resumable_build(
         )
     elapsed = time.time() - t0
     catalog.append_table(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
+            METRICS_SCHEMA,
             [
                 (
                     build_id, n_partitions, len(segments), n_docs, n_blocks,
@@ -253,7 +259,6 @@ def resumable_build(
                     (n_docs / elapsed) if elapsed > 0 else 0.0, time.time(),
                 )
             ],
-            METRICS_SCHEMA,
         ),
         "build_metrics",
     )

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..session import _empty_frame
+from ..session import _local_frame
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -352,13 +352,14 @@ def build_ann_index(
     )
     cent_rows = [(c, [float(x) for x in cents[c]]) for c in range(len(cents))]
     catalog.write_table(
-        spark.createDataFrame(cent_rows, "c int, centroid array<double>"),
+        _local_frame(spark, "c int, centroid array<double>", cent_rows),
         "ann_centroids",
     )
     catalog.write_table(
-        spark.createDataFrame(
-            [(n_planes, len(cents), seed, dim, bucket_bits)],
+        _local_frame(
+            spark,
             "n_planes int, n_centroids int, seed int, dim int, bucket_bits int",
+            [(n_planes, len(cents), seed, dim, bucket_bits)],
         ),
         "ann_meta",
     )
@@ -402,7 +403,7 @@ def pairwise_cosine_neardup(
 
     first = embeddings.limit(1).select(F.size(F.col(vec_col)).alias("d")).collect()
     if not first:
-        return _empty_frame(
+        return _local_frame(
             embeddings.sparkSession, "id_a long, id_b long, cosine double"
         )
     planes = hyperplanes(int(first[0]["d"]), n_planes, seed)
@@ -494,8 +495,10 @@ def ann_recall(
         .groupBy("query_vec_id")
         .agg(F.count(F.lit(1)).alias("hits"))
     )
-    ids_df = embeddings.sparkSession.createDataFrame(
-        [(int(r[id_col]),) for r in probes], "query_vec_id long"
+    ids_df = _local_frame(
+        embeddings.sparkSession,
+        "query_vec_id long",
+        [(int(r[id_col]),) for r in probes],
     )
     return (
         ids_df.join(hits, "query_vec_id", "left")

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import _local_frame
+
 
 def vocab_from_term_stats(term_stats: DataFrame, min_df: int = 1) -> DataFrame:
     """Unigram vocabulary (term, df) from the index's term_stats table.
@@ -58,9 +60,7 @@ def vocab_from_term_stats(term_stats: DataFrame, min_df: int = 1) -> DataFrame:
 def _query_frame(spark: SparkSession, query_terms: list[str]) -> DataFrame:
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    return spark.createDataFrame(
-        [(t,) for t in query_terms], "qterm string"
-    )
+    return _local_frame(spark, "qterm string", [(t,) for t in query_terms])
 
 
 def phrase_popularity(

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 import pandas as pd
 
 from ..catalog import Catalog
-from ..session import _empty_frame
+from ..session import _local_frame
 from .index_build import (
     IndexConfig,
     _check_block_format,
@@ -64,7 +64,7 @@ TOMBSTONES_SCHEMA = "doc_id long, upto_seq long"
 def tombstones(spark: SparkSession, catalog: Catalog) -> DataFrame:
     if catalog.table_exists("tombstones"):
         return catalog.read_table("tombstones")
-    return _empty_frame(spark, TOMBSTONES_SCHEMA)
+    return _local_frame(spark, TOMBSTONES_SCHEMA)
 
 
 def max_seg_seq(catalog: Catalog) -> int:
@@ -82,10 +82,10 @@ def reset_update_state(spark: SparkSession, catalog: Catalog) -> None:
     tombstones whose (doc_id, upto_seq>=0) annihilate the rebuilt seg-0
     postings -- the doc exists in the new index but is unsearchable."""
     catalog.write_table(
-        _empty_frame(spark, TOMBSTONES_SCHEMA), "tombstones"
+        _local_frame(spark, TOMBSTONES_SCHEMA), "tombstones"
     )
     catalog.write_table(
-        spark.createDataFrame([(0,)], "max_seg long"), "index_meta"
+        _local_frame(spark, "max_seg long", [(0,)]), "index_meta"
     )
 
 
@@ -114,9 +114,9 @@ def apply_updates(
     new_seq = cur_seq + 1
 
     if upserts is None:
-        upserts = _empty_frame(spark, docs.schema)
+        upserts = _local_frame(spark, docs.schema)
     if delete_ids is None:
-        delete_ids = _empty_frame(spark, "doc_id long")
+        delete_ids = _local_frame(spark, "doc_id long")
     up_ids = upserts.select("doc_id").distinct()
     del_ids = delete_ids.select("doc_id").distinct()
     gone_ids = up_ids.unionByName(del_ids).distinct()
@@ -229,7 +229,7 @@ def apply_updates(
         delta_postings = delta_postings.filter(~F.col("term_id").isin(skip_ids))
     catalog.append_table(delta_postings, "postings")
     catalog.write_table(
-        spark.createDataFrame([(new_seq,)], "max_seg long"), "index_meta"
+        _local_frame(spark, "max_seg long", [(new_seq,)]), "index_meta"
     )
 
     # ---- corpus stats -----------------------------------------------------
@@ -243,11 +243,12 @@ def apply_updates(
     n_docs = int(stats["n"])
     avgdl = (int(stats["s"] or 0) / n_docs) if n_docs else 0.0
     catalog.write_table(
-        spark.createDataFrame(
-            [(n_docs, avgdl, block_bits, n_terms, n_blocks,
-              bool(config.store_positions))],
+        _local_frame(
+            spark,
             "n_docs long, avgdl double, block_bits int, n_terms long,"
             " n_blocks long, store_positions boolean",
+            [(n_docs, avgdl, block_bits, n_terms, n_blocks,
+              bool(config.store_positions))],
         ),
         "corpus_stats",
     )

@@ -73,7 +73,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import py_block_ids
-from ..session import _empty_frame
+from ..session import _local_frame
 from . import rerank
 
 SCORED_SCHEMA = T.StructType(
@@ -100,7 +100,7 @@ def _ub_col(k1: float, b: float, avgdl: float):
     from .hot_cache import tf_norm_col
 
     return F.col("idf") * tf_norm_col(
-        F.col("block_max_tf"), F.col("block_min_dl"), k1, b, avgdl
+        "block_max_tf", "block_min_dl", k1, b, avgdl
     )
 
 
@@ -321,7 +321,7 @@ def wand_search(
     plan = engine.plan_terms(query_terms)
     n_q = len(set(query_terms))
     if plan.empty or (mode == "AND" and len(plan) < n_q):
-        return _empty_frame(spark, "doc_id long, score double, matched int")
+        return _local_frame(spark, "doc_id long, score double, matched int")
     k1, b, avgdl = engine.params.k1, engine.params.b, engine.avgdl
     g = pick_granularity(
         plan["max_salt_bits"].fillna(0).tolist(),
@@ -468,9 +468,7 @@ def wand_search(
         rows = out.collect()
         for df in (gmeta, g_a, scored_a):
             df.unpersist()
-        return spark.createDataFrame(rows, out.schema) if rows else (
-            _empty_frame(spark, "doc_id long, score double, matched int")
-        )
+        return _local_frame(spark, out.schema, rows)
     finally:
         q_blocks.unpersist()
 
@@ -534,7 +532,7 @@ def wand_phrase(
             "result or use search_query's grammar"
         )
     if not phrase_terms:
-        return _empty_frame(
+        return _local_frame(
             engine.spark, "doc_id long, score double, matched int"
         )
     if len(phrase_terms) == 1:

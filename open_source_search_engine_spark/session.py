@@ -10,7 +10,10 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -134,9 +137,19 @@ def _ship_package(spark: SparkSession) -> None:
     spark._osse_shipped = True
 
 
-def _empty_frame(spark: SparkSession, schema) -> DataFrame:
-    """An empty DataFrame with ZERO partitions: ordering, limiting or
-    collecting it launches no task. ``createDataFrame([], schema)`` would
-    be a Python RDD with one partition per core, paying a Python task per
-    core for the same empty answer."""
-    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+def _local_frame(spark: SparkSession, schema, rows=()) -> DataFrame:
+    """Driver-held ``rows`` (a collected page, a cache hit, a few plan
+    constants; none for an empty answer) as a frame that plans as a
+    LocalTableScan. The rows ship as an Arrow table built against the
+    Spark ``schema`` (a DDL string or StructType), so nulls and int widths
+    survive and no Python task runs: ``createDataFrame(<list of rows>)``
+    would be a Python RDD, paying a Python task per partition. An empty
+    frame launches no task at all, even under a join."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

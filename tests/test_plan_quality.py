@@ -528,19 +528,116 @@ def test_absent_and_term_launches_no_task(spark, eng):
     sc = spark.sparkContext
     q = ["spark", "zz_absent_term_qq"]
     eng.search_auto(q, "AND", 10).collect()  # plans (and caches) the terms
-    sc.setJobGroup("absent-and", "absent-and")
+    cold = SearchEngine(spark, eng.catalog)  # plans them inside the query
+    for group, e in (("absent-and", eng), ("absent-and-cold", cold)):
+        sc.setJobGroup(group, group)
+        try:
+            rows = e.search_auto(q, "AND", 10).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        tasks = sum(
+            tracker.getStageInfo(s).numTasks
+            for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+            if tracker.getStageInfo(s) is not None
+        )
+        assert rows == [] and tasks == 0, group
+
+
+# -- planning floor: the dictionary is read in the driver, query constants
+# -- are SQL literals, collected rows ship through Arrow --------------------
+
+
+def _jobs_of(sc, group: str, call):
+    """(call's result, Spark jobs it launched), counted in a job group."""
+    import time
+
+    sc.setJobGroup(group, group)
     try:
-        rows = eng.search_auto(q, "AND", 10).collect()
+        out = call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    tasks = sum(
-        tracker.getStageInfo(s).numTasks
-        for j in tracker.getJobIdsForGroup("absent-and")
-        for s in tracker.getJobInfo(j).stageIds
-        if tracker.getStageInfo(s) is not None
+    # the status store is fed by the async listener bus: poll until the
+    # group's job count has held still for half a second
+    seen, stable, deadline = -1, 0, time.time() + 10
+    while stable < 5 and time.time() < deadline:
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        stable, seen = (stable + 1, n) if n == seen else (0, n)
+        time.sleep(0.1)
+    return out, seen
+
+
+def test_plan_terms_on_unseen_terms_launches_no_job(spark, eng):
+    from pyspark.sql import functions as F
+
+    cold = SearchEngine(spark, eng.catalog)
+    terms = ["spark", "index", "zz_absent_term_qq"]
+    plan, jobs = _jobs_of(
+        spark.sparkContext, "plan-cold", lambda: cold.plan_terms(terms)
     )
-    assert rows == [] and tasks == 0
+    assert jobs == 0
+    want = {
+        r["term"]: (r["term_id"], r["df"], r["max_salt_bits"], r["min_salt_bits"])
+        for r in eng.catalog.read_table("term_stats")
+        .where(F.col("term").isin(terms))
+        .collect()
+    }
+    got = {
+        r.term: (r.term_id, r.df, r.max_salt_bits, r.min_salt_bits)
+        for r in plan.itertuples()
+    }
+    assert got == want and len(got) == 2
+    assert list(plan["df"]) == sorted(plan["df"])  # rarest first
+    assert cold._plan_cache["zz_absent_term_qq"] is None  # cached miss
+
+
+def test_exact_and_query_over_unplanned_terms_launches_two_jobs(spark, eng):
+    warm = SearchEngine(spark, eng.catalog)
+    warm.search_auto(["merge", "shard"], "AND", 10).collect()
+    q = ["vector", "stream"]
+    assert q[0] not in warm._plan_cache and q[1] not in warm._plan_cache
+    rows, jobs = _jobs_of(
+        spark.sparkContext,
+        "exact-and-unplanned",
+        lambda: warm.search_auto(q, "AND", 10).collect(),
+    )
+    assert jobs == 2
+    assert rows == eng.search_terms(q, "AND", 10).collect()
+
+
+def test_collected_pages_plan_as_local_table_scan(spark, eng):
+    from open_source_search_engine_spark.operators.query import _BATCH_SCHEMA
+    from open_source_search_engine_spark.operators.wand import wand_search
+    from open_source_search_engine_spark.session import _local_frame
+
+    q = ["spark", "index"]
+    want = eng.search_terms(q, "OR", 10)
+    eng.search_cached(q, "OR", 10).collect()
+    hit = eng.search_cached(q, "OR", 10)
+    page = wand_search(eng, q, "OR", 10)
+    info = eng.explain_terms(["spark", "zz_absent_term_qq"])
+    rows = [("q1", 1, 7, None, 2), ("q1", 2, None, 1.5, None)]
+    local = _local_frame(spark, _BATCH_SCHEMA, rows)
+    for df in (hit, page, info, local):
+        p = _physical(df)
+        assert "LocalTableScan" in p and "ExistingRDD" not in p, p
+
+    def types(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    assert types(hit) == types(want) == types(page)
+    assert hit.collect() == want.collect() == page.collect()
+    assert [r["idf"] is None for r in info.collect()] == [False, True]
+    assert info.schema.simpleString() == (
+        "struct<term:string,present:boolean,df:bigint,idf:double,"
+        "route:string,sum_df:bigint>"
+    )
+    assert [tuple(r) for r in local.collect()] == rows
+    assert local.schema.simpleString() == (
+        "struct<query_id:string,rank:bigint,doc_id:bigint,score:double,"
+        "matched:int>"
+    )
 
 
 def test_old_varbyte_catalog_fails_loudly(spark, tmp_path):
