@@ -217,6 +217,10 @@ class SearchEngine:
                 "seg_seq", F.lit(0).cast("long")
             )
         self._term_stats = catalog.read_table("term_stats")
+        #: the snapshot's term_stats files, which plan_terms reads with
+        #: Arrow; empty where the catalog serves a table that is not a file
+        #: scan (Iceberg's DSv2 table lists none), and then read by Spark
+        self._term_stats_files = self._term_stats.inputFiles()
         #: term -> (term_id, df, max_salt_bits) | None for confirmed-absent
         #: (the g_termFreqCache analog, `Posdb.cpp:306`; snapshot-bound)
         self._plan_cache: dict[str, tuple | None] = {}
@@ -287,18 +291,28 @@ class SearchEngine:
         bound to one index snapshot, so its cache never goes stale. UNSEEN
         terms (confirmed-absent ones are cached as misses) are read in the
         driver with Arrow from the snapshot's own term_stats files, with a
-        ``term in (...)`` filter: no plan costs a Spark job.
+        ``term in (...)`` filter: no plan costs a Spark job. A catalog whose
+        term_stats lists no files (Iceberg) is read with a filtered Spark
+        scan instead.
         """
         terms = sorted(set(query_terms))
         cols = ["term", "term_id", "df", "max_salt_bits", "min_salt_bits"]
         missing = [t for t in terms if t not in self._plan_cache]
         if missing:
-            files = self._term_stats.inputFiles()
-            fs = FileSystem.from_uri(files[0])[0]
-            fetched = pads.dataset(
-                [FileSystem.from_uri(f)[1] for f in files], filesystem=fs
-            ).to_table(columns=cols, filter=pc.field("term").isin(missing))
-            for t, *row in zip(*fetched.to_pydict().values()):
+            files = self._term_stats_files
+            if files:
+                fs = FileSystem.from_uri(files[0])[0]
+                fetched = pads.dataset(
+                    [FileSystem.from_uri(f)[1] for f in files], filesystem=fs
+                ).to_table(columns=cols, filter=pc.field("term").isin(missing))
+                found = zip(*fetched.to_pydict().values())
+            else:
+                found = (
+                    self._term_stats.where(F.col("term").isin(missing))
+                    .select(*cols)
+                    .collect()
+                )
+            for t, *row in found:
                 self._plan_cache[t] = tuple(row)
             for t in missing:
                 self._plan_cache.setdefault(t, None)  # confirmed absent
@@ -876,7 +890,9 @@ class SearchEngine:
                 self.spark, "doc_id long, slot int, contrib double"
             )
         else:
-            contrib = self._contributions(plan)
+            contrib = self._contributions(plan).select(
+                "doc_id", "slot", "contrib"
+            )
         for ph in sorted(phrase_frames):
             contrib = contrib.unionByName(phrase_frames[ph])
         # fixed (group, member) accumulation schedule
@@ -2003,18 +2019,17 @@ class SearchEngine:
         lets the model learn the mix.
 
         Features (all from the ONE postings scan the ordinary query path
-        does): ``bm25`` (bit-identical to search_terms — same canonical-
-        order conditional-sum fold), ``matched`` / ``coverage`` (hit count
+        does): ``bm25`` (bit-identical to search_terms — the same
+        _contributions and _aggregate_scores), ``matched`` / ``coverage`` (hit count
         over the query's distinct terms), ``tf_sum/tf_min/tf_max``,
         ``idf_sum`` (of matched terms), ``dl`` and ``dl_norm`` (=dl/avgdl).
 
         Scale shape: partition-pruned decode of the query terms' blocks,
         ONE map-side-combined groupBy(doc_id) carrying every feature agg,
-        top-k via TakeOrderedAndProject. No extra shuffle vs a plain
-        query; no Python beyond the shared Arrow decode.
+        top-k via TakeOrderedAndProject. No extra shuffle or join vs a
+        plain query, and no Python.
         """
         plan = self.plan_terms(query_terms)
-        n_q = len(set(query_terms))
         schema = (
             "doc_id long, bm25 double, matched int, coverage double, "
             "tf_sum long, tf_min int, tf_max int, idf_sum double, "
@@ -2022,49 +2037,30 @@ class SearchEngine:
         )
         if plan.empty:
             return _local_frame(self.spark, schema)
-        decoded = self.decoded_postings([int(t) for t in plan["term_id"]])
-        meta = self.spark.createDataFrame(plan[["term_id", "term", "idf"]])
-        k1, b = self.params.k1, self.params.b
-        from .hot_cache import tf_norm_col
+        from .hot_cache import _sql_double
 
-        rows = decoded.join(F.broadcast(meta), "term_id").withColumn(
-            "contrib",
-            F.col("idf")
-            * tf_norm_col("tf", "dl", k1, b, self.avgdl),
+        g = self._aggregate_scores(
+            self._contributions(plan),
+            len(plan),
+            tf_sum="CAST(sum(tf) AS BIGINT)",
+            tf_min="CAST(min(tf) AS INT)",
+            tf_max="CAST(max(tf) AS INT)",
+            idf_sum="sum(idf)",
+            dl="CAST(first(dl) AS INT)",
         )
-        ts = sorted(set(plan["term"]))
-        aggs = [
-            F.sum(F.when(F.col("term") == t, F.col("contrib"))).alias(
-                f"_c{i}"
-            )
-            for i, t in enumerate(ts)
-        ]
-        g = rows.groupBy("doc_id").agg(
-            *aggs,
-            F.count(F.lit(1)).cast("int").alias("matched"),
-            F.sum("tf").cast("long").alias("tf_sum"),
-            F.min("tf").cast("int").alias("tf_min"),
-            F.max("tf").cast("int").alias("tf_max"),
-            F.sum("idf").alias("idf_sum"),
-            F.first("dl").cast("int").alias("dl"),
-        )
-        # linear fold (see _vote_group_scores): when/otherwise doubles
-        # the tree per term
-        score = F.lit(0.0)
-        for i in range(len(ts)):
-            score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
+        n_q = _sql_double(float(len(set(query_terms))))
         return (
-            g.select(
+            g.selectExpr(
                 "doc_id",
-                score.alias("bm25"),
+                "score AS bm25",
                 "matched",
-                (F.col("matched") / F.lit(float(n_q))).alias("coverage"),
+                f"matched / {n_q} AS coverage",
                 "tf_sum",
                 "tf_min",
                 "tf_max",
                 "idf_sum",
                 "dl",
-                (F.col("dl") / F.lit(float(self.avgdl))).alias("dl_norm"),
+                f"dl / {_sql_double(self.avgdl)} AS dl_norm",
             )
             .orderBy(F.desc("bm25"), F.asc("doc_id"))
             .limit(int(k))
@@ -3139,11 +3135,12 @@ class SearchEngine:
 
     # ------------------------------------------------------------------
     def _contributions(self, plan: pd.DataFrame) -> DataFrame:
-        """(doc_id, slot, contrib), contrib = idf * tf_norm, JVM-side. A
-        term's slot is its index in term-string order, the canonical fold's
-        (_aggregate_scores). Idf and slot are CASE expressions over term_id,
-        so the plan's constants need no frame of their own; only numbers go
-        into the SQL text."""
+        """(doc_id, tf, dl, slot, idf, contrib), contrib = idf * tf_norm,
+        JVM-side; callers that read only the contribution get tf, dl and idf
+        pruned. A term's slot is its index in term-string order, the
+        canonical fold's (_aggregate_scores). Idf and slot are CASE
+        expressions over term_id, so the plan's constants need no frame of
+        their own; only numbers go into the SQL text."""
         from .hot_cache import _sql_double, _tf_norm_sql
 
         by_term = sorted(zip(plan["term"], plan["term_id"], plan["idf"]))
@@ -3160,7 +3157,10 @@ class SearchEngine:
             [int(t) for t in plan["term_id"]]
         ).selectExpr(
             "doc_id",
+            "tf",
+            "dl",
             f"CASE term_id {slot} END AS slot",
+            f"CASE term_id {idf} END AS idf",
             f"CASE term_id {idf} END * {tf_norm} AS contrib",
         )
 
@@ -3304,9 +3304,14 @@ class SearchEngine:
             out = out.unionByName(f)
         return out.distinct()
 
-    def _aggregate_scores(self, contrib: DataFrame, n_slots: int) -> DataFrame:
+    def _aggregate_scores(
+        self, contrib: DataFrame, n_slots: int, **features: str
+    ) -> DataFrame:
         """Canonical-order float64 sum per doc: contributions added in term-
-        string-ascending order (bit-stable across partitionings).
+        string-ascending order (bit-stable across partitionings). Returns
+        (doc_id, score, matched), plus one column per ``features`` entry
+        (name -> SQL aggregate over ``contrib``'s columns) computed in the
+        same aggregation.
 
         A PIVOTED hash aggregation over the ``n_slots`` term slots of
         ``contrib`` (_contributions: slot i is the i-th term in string
@@ -3320,8 +3325,9 @@ class SearchEngine:
                 for i in range(n_slots)
             ],
             F.expr("CAST(count(1) AS INT) AS matched"),
+            *[F.expr(f"{e} AS {name}") for name, e in features.items()],
         )
         fold = " + ".join(
             ["0.0D"] + [f"coalesce(_c{i}, 0.0D)" for i in range(n_slots)]
         )
-        return g.selectExpr("doc_id", f"{fold} AS score", "matched")
+        return g.selectExpr("doc_id", f"{fold} AS score", "matched", *features)

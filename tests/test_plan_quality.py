@@ -367,15 +367,14 @@ def test_collocations_no_cartesian_or_sortmergejoin(spark):
 def test_ltr_features_single_agg_pruned_topk(eng):
     # the feature export must cost exactly a plain query: term_id pushdown
     # on the postings scan, ONE doc_id aggregate carrying every feature
-    # (no second shuffle, no window, no join beyond the broadcast meta),
+    # (no second shuffle, no window, no join: idf is a literal per term_id),
     # top-k via partial-top-k
     df = eng.ltr_features(["spark", "index"], k=10)
     p = _physical(df)
     assert "PushedFilters: [In(term_id" in p
     assert "TakeOrderedAndProject" in p
     assert "Window" not in p
-    assert "SortMergeJoin" not in p and "CartesianProduct" not in p
-    assert "BroadcastHashJoin" in p  # the per-term (term, idf) meta
+    assert "Join" not in p and "CartesianProduct" not in p
 
 
 def test_prf_requery_is_pruned_topk(eng):
@@ -590,6 +589,38 @@ def test_plan_terms_on_unseen_terms_launches_no_job(spark, eng):
     assert got == want and len(got) == 2
     assert list(plan["df"]) == sorted(plan["df"])  # rarest first
     assert cold._plan_cache["zz_absent_term_qq"] is None  # cached miss
+
+
+class _FilelessTermStats:
+    """A catalog that serves term_stats as a frame listing no files, the
+    way an Iceberg (DSv2) table does: ``inputFiles()`` is empty."""
+
+    def __init__(self, cat):
+        self._cat = cat
+
+    def __getattr__(self, name):
+        return getattr(self._cat, name)
+
+    def read_table(self, name):
+        df = self._cat.read_table(name)
+        if name == "term_stats":
+            df = df.sparkSession.createDataFrame(df.toPandas(), df.schema)
+        return df
+
+
+def test_plan_terms_reads_a_fileless_term_stats_through_spark(spark, eng):
+    fileless = SearchEngine(spark, _FilelessTermStats(eng.catalog))
+    assert fileless._term_stats.inputFiles() == []
+    terms = ["spark", "index", "zz_absent_term_qq"]
+    got = fileless.plan_terms(terms)
+    assert got.equals(SearchEngine(spark, eng.catalog).plan_terms(terms))
+    assert fileless._plan_cache["zz_absent_term_qq"] is None
+    q = ["spark", "index"]
+    for mode in ("AND", "OR"):
+        assert (
+            fileless.search_auto(q, mode, 10).collect()
+            == eng.search_terms(q, mode, 10).collect()
+        )
 
 
 def test_exact_and_query_over_unplanned_terms_launches_two_jobs(spark, eng):
