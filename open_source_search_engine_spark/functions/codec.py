@@ -15,10 +15,10 @@ the docs of one term inside one doc-hash prefix range, stored as
 The catalog writes every table with the Parquet v2 writer, which packs
 these integers itself (dictionary-encoded while the dictionary pays, else
 DELTA_BINARY_PACKED) -- no codec of our own and no binary cells. Readers
-never decode in Python: the exact and batch paths explode
+never decode in Python: every query path explodes
 ``arrays_zip(doc_ids, tfs, dls[, positions])`` in the JVM
-(query.SearchEngine.decoded_postings) and the WAND scorer reads the
-arrays as numpy (wand._make_scorer). The per-block
+(query.SearchEngine.decoded_postings); block-max WAND reads only the
+per-block metadata in the driver. The per-block
 ``first_doc_id/last_doc_id/block_max_tf/block_min_dl`` columns replace the
 reference's RdbMap page index + B-step skip bits (`Posdb.h:178-186`,
 `RdbMap.h:1-25`) as the skip/prune metadata for block-max WAND.

@@ -54,8 +54,8 @@ def _sql_double(x: float) -> str:
 def _tf_norm_sql(tf: str, dl: str, k1: float, b: float, avgdl: float) -> str:
     """SQL text of the BM25 tf-normalization factor (score = idf * THIS)
     over the integer columns ``tf`` and ``dl``. The one definition every
-    Spark path uses -- exact, batch, the WAND bounds and this cache -- so
-    they agree to the bit; only numbers go into the text."""
+    Spark path uses -- exact (which WAND scores through), batch and this
+    cache -- so they agree to the bit; only numbers go into the text."""
     tfd = f"CAST({tf} AS DOUBLE)"
     return (
         f"({tfd} * {_sql_double(k1 + 1.0)} / ({tfd} + {_sql_double(k1)}"

@@ -19,8 +19,9 @@ Spark-first re-expression -- two code paths sharing one formula module:
   TakeOrderedAndProject = partial per-partition top-k + final merge, exactly
   the reference's TopTree -> Msg3a shape (SURVEY.md A9/T1/T2).
 
-* ``wand`` path (block-max pruning): see wand.py. Selects with upper bounds,
-  scores with the same canonical formula, so results are identical.
+* ``wand`` path (block-max pruning): see wand.py. Chooses block groups in
+  the driver from their upper bounds and scores them with the exact path
+  (restricted runs of ``_score_plan``), so results are identical.
 
 Proximity, phrase and boost modifiers on the WAND and batch paths share one
 certified over-fetch re-rank (rerank.py).
@@ -35,6 +36,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyarrow.fs import FileSystem
@@ -171,6 +173,24 @@ _BATCH_SCHEMA = (
 )
 
 
+def _page(
+    scored: DataFrame, k: int, after: tuple[float, int] | None = None
+) -> DataFrame:
+    """The result page of a scored (doc_id, score, ...) frame: its top k by
+    score desc, doc_id asc, strictly after the cursor ``after`` = (score,
+    doc_id) of the previous page's last row when one is given (see
+    SearchEngine.search_after). The cursor filters before the top-k, so a
+    deep page costs what page 1 costs."""
+    if after is not None:
+        from .hot_cache import _sql_double
+
+        s0, d0 = _sql_double(after[0]), int(after[1])
+        scored = scored.where(
+            f"score < {s0} OR (score = {s0} AND doc_id > {d0})"
+        )
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
+
+
 def _rank_branch(query_id: str, top_k: DataFrame) -> DataFrame:
     """Tag one query's page with (query_id, rank) as a batch union branch.
 
@@ -217,10 +237,16 @@ class SearchEngine:
                 "seg_seq", F.lit(0).cast("long")
             )
         self._term_stats = catalog.read_table("term_stats")
-        #: the snapshot's term_stats files, which plan_terms reads with
-        #: Arrow; empty where the catalog serves a table that is not a file
-        #: scan (Iceberg's DSv2 table lists none), and then read by Spark
-        self._term_stats_files = self._term_stats.inputFiles()
+        #: table -> (frame, its snapshot files) for _snapshot_rows, which
+        #: reads the files with Arrow; a table that is not a file scan
+        #: (Iceberg's DSv2 tables) lists none and is read by Spark
+        self._snapshots = {
+            name: (frame, frame.inputFiles())
+            for name, frame in (
+                ("term_stats", self._term_stats),
+                ("postings", self._postings),
+            )
+        }
         #: term -> (term_id, df, max_salt_bits) | None for confirmed-absent
         #: (the g_termFreqCache analog, `Posdb.cpp:306`; snapshot-bound)
         self._plan_cache: dict[str, tuple | None] = {}
@@ -290,29 +316,15 @@ class SearchEngine:
         freqs for 500 s (`Posdb.cpp:306` g_termFreqCache); an engine is
         bound to one index snapshot, so its cache never goes stale. UNSEEN
         terms (confirmed-absent ones are cached as misses) are read in the
-        driver with Arrow from the snapshot's own term_stats files, with a
-        ``term in (...)`` filter: no plan costs a Spark job. A catalog whose
-        term_stats lists no files (Iceberg) is read with a filtered Spark
-        scan instead.
+        driver by _snapshot_rows: no plan costs a Spark job on a catalog
+        whose tables are files.
         """
         terms = sorted(set(query_terms))
         cols = ["term", "term_id", "df", "max_salt_bits", "min_salt_bits"]
         missing = [t for t in terms if t not in self._plan_cache]
         if missing:
-            files = self._term_stats_files
-            if files:
-                fs = FileSystem.from_uri(files[0])[0]
-                fetched = pads.dataset(
-                    [FileSystem.from_uri(f)[1] for f in files], filesystem=fs
-                ).to_table(columns=cols, filter=pc.field("term").isin(missing))
-                found = zip(*fetched.to_pydict().values())
-            else:
-                found = (
-                    self._term_stats.where(F.col("term").isin(missing))
-                    .select(*cols)
-                    .collect()
-                )
-            for t, *row in found:
+            fetched = self._snapshot_rows("term_stats", cols, "term", missing)
+            for t, *row in zip(*fetched.to_pydict().values()):
                 self._plan_cache[t] = tuple(row)
             for t in missing:
                 self._plan_cache.setdefault(t, None)  # confirmed absent
@@ -322,6 +334,22 @@ class SearchEngine:
         )
         rows["idf"] = bm25_idf(rows["df"].to_numpy(np.float64), self.n_docs)
         return rows.sort_values(["df", "term"]).reset_index(drop=True)
+
+    def _snapshot_rows(
+        self, table: str, cols: list[str], key: str, values: list
+    ) -> pa.Table:
+        """``cols`` of the rows of this engine's ``table`` snapshot
+        ("term_stats" or "postings") whose ``key`` is in ``values``, read in
+        the driver with Arrow from the snapshot's own files: no Spark job.
+        A catalog whose table lists no files (Iceberg) is read with a
+        filtered Spark scan instead."""
+        frame, files = self._snapshots[table]
+        if not files:
+            return frame.where(F.col(key).isin(values)).select(*cols).toArrow()
+        fs = FileSystem.from_uri(files[0])[0]
+        return pads.dataset(
+            [FileSystem.from_uri(f)[1] for f in files], filesystem=fs
+        ).to_table(columns=cols, filter=pc.field(key).isin(values))
 
     def tokenize_query(self, query: str) -> list[str]:
         return tokenize(query, self.tokenizer_mode)
@@ -334,11 +362,23 @@ class SearchEngine:
         to (term_id, doc_id, tf, dl[, positions], seg_seq) rows in the JVM:
         the blocks are list columns (format: functions/codec.py), so one
         ``arrays_zip`` + ``inline`` replaces any Python decode hop."""
+        return self._decoded(term_ids, include_positions)
+
+    def _decoded(
+        self,
+        term_ids: list[int],
+        include_positions: bool = False,
+        blocks: str | None = None,
+    ) -> DataFrame:
+        """decoded_postings over only the blocks that match the SQL
+        predicate ``blocks`` (None: every block of the terms), applied
+        before ``inline``, so skipped blocks are never exploded."""
         pos = ", positions" if include_positions else ""
         ids = ", ".join(str(int(t)) for t in term_ids)
-        decoded = self._postings.where(
-            f"term_id IN ({ids})" if ids else "false"
-        ).selectExpr(
+        where = f"term_id IN ({ids})" if ids else "false"
+        if blocks is not None:
+            where = f"{where} AND ({blocks})"
+        decoded = self._postings.where(where).selectExpr(
             "term_id",
             f"inline(arrays_zip(doc_ids, tfs, dls{pos}))"
             f" AS (doc_id, tf, dl{pos})",
@@ -386,7 +426,19 @@ class SearchEngine:
             return _local_frame(
                 self.spark, "doc_id long, score double, matched int"
             )
-        contrib = self._contributions(plan)
+        return self._score_plan(plan, mode, exclude_terms, filter_docs)
+
+    def _score_plan(
+        self,
+        plan: pd.DataFrame,
+        mode: str,
+        exclude_terms: list[str] | None = None,
+        filter_docs: DataFrame | None = None,
+        blocks: str | None = None,
+    ) -> DataFrame:
+        """score_terms over a resolved, non-empty plan; ``blocks`` restricts
+        the decode (_decoded) -- block-max WAND's runs score through here."""
+        contrib = self._contributions(plan, blocks)
         if filter_docs is not None:
             contrib = contrib.join(
                 filter_docs.select("doc_id"), "doc_id", "left_semi"
@@ -432,10 +484,8 @@ class SearchEngine:
             fast = self._hot_single_term(uniq[0], k)
             if fast is not None:
                 return fast
-        return (
-            self.score_terms(query_terms, mode, exclude_terms, filter_docs)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return _page(
+            self.score_terms(query_terms, mode, exclude_terms, filter_docs), k
         )
 
     def search_cached(
@@ -2537,19 +2587,8 @@ class SearchEngine:
 
         ``after=None`` is page 1 (identical to search_terms).
         """
-        scored = self.score_terms(query_terms, mode, exclude_terms)
-        if after is not None:
-            s0, d0 = float(after[0]), int(after[1])
-            scored = scored.filter(
-                (F.col("score") < F.lit(s0))
-                | (
-                    (F.col("score") == F.lit(s0))
-                    & (F.col("doc_id") > F.lit(d0))
-                )
-            )
-        return (
-            scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
+        return _page(
+            self.score_terms(query_terms, mode, exclude_terms), k, after
         )
 
     def search_relaxed(
@@ -3134,13 +3173,16 @@ class SearchEngine:
         return self.phrase_docs(words, restrict=restrict)
 
     # ------------------------------------------------------------------
-    def _contributions(self, plan: pd.DataFrame) -> DataFrame:
+    def _contributions(
+        self, plan: pd.DataFrame, blocks: str | None = None
+    ) -> DataFrame:
         """(doc_id, tf, dl, slot, idf, contrib), contrib = idf * tf_norm,
         JVM-side; callers that read only the contribution get tf, dl and idf
         pruned. A term's slot is its index in term-string order, the
         canonical fold's (_aggregate_scores). Idf and slot are CASE
         expressions over term_id, so the plan's constants need no frame of
-        their own; only numbers go into the SQL text."""
+        their own; only numbers go into the SQL text. ``blocks`` restricts
+        the decode (_decoded)."""
         from .hot_cache import _sql_double, _tf_norm_sql
 
         by_term = sorted(zip(plan["term"], plan["term_id"], plan["idf"]))
@@ -3153,8 +3195,8 @@ class SearchEngine:
         tf_norm = _tf_norm_sql(
             "tf", "dl", self.params.k1, self.params.b, self.avgdl
         )
-        return self.decoded_postings(
-            [int(t) for t in plan["term_id"]]
+        return self._decoded(
+            [int(t) for t in plan["term_id"]], blocks=blocks
         ).selectExpr(
             "doc_id",
             "tf",

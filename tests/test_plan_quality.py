@@ -472,7 +472,7 @@ def test_bm25f_field_side_broadcast_no_cartesian(eng):
 
 _PYTHON_NODES = (
     "PythonUDF", "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-    "PythonMapInArrow",
+    "PythonMapInArrow", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
 )
 
 
@@ -503,6 +503,29 @@ def test_exact_paths_have_no_python(eng, updated_eng):
             e.search_terms(["spark", "index"], "OR", 10, exclude_terms=["the"]),
         ):
             assert _executed_python_nodes(df) == []
+
+
+def test_wand_runs_have_no_python(eng, updated_eng, monkeypatch):
+    """Both restricted exact runs of forced two-phase WAND: AND, and OR
+    with a cursor (whose run A keeps complete rows only, so run B always
+    runs), with and without tombstones."""
+    from open_source_search_engine_spark.operators.wand import wand_search
+
+    runs = []
+    score_plan = SearchEngine._score_plan
+
+    def recording(self, *args, **kwargs):
+        runs.append(score_plan(self, *args, **kwargs))
+        return runs[-1]
+
+    monkeypatch.setattr(SearchEngine, "_score_plan", recording)
+    for e in (eng, updated_eng):
+        q = ["spark", "index"]
+        wand_search(e, q, "AND", 10, small_df_cutoff=0).collect()
+        wand_search(e, q, "OR", 3, after=(1e9, 0)).collect()
+    assert len(runs) >= 6
+    for df in runs:
+        assert _executed_python_nodes(df) == []
 
 
 def test_batch_shared_scan_decode_has_no_python(eng):
@@ -591,25 +614,26 @@ def test_plan_terms_on_unseen_terms_launches_no_job(spark, eng):
     assert cold._plan_cache["zz_absent_term_qq"] is None  # cached miss
 
 
-class _FilelessTermStats:
-    """A catalog that serves term_stats as a frame listing no files, the
-    way an Iceberg (DSv2) table does: ``inputFiles()`` is empty."""
+class _Fileless:
+    """A catalog that serves ``tables`` as frames listing no files, the way
+    an Iceberg (DSv2) table does: ``inputFiles()`` is empty."""
 
-    def __init__(self, cat):
+    def __init__(self, cat, tables=("term_stats",)):
         self._cat = cat
+        self._tables = tables
 
     def __getattr__(self, name):
         return getattr(self._cat, name)
 
     def read_table(self, name):
         df = self._cat.read_table(name)
-        if name == "term_stats":
+        if name in self._tables:
             df = df.sparkSession.createDataFrame(df.toPandas(), df.schema)
         return df
 
 
 def test_plan_terms_reads_a_fileless_term_stats_through_spark(spark, eng):
-    fileless = SearchEngine(spark, _FilelessTermStats(eng.catalog))
+    fileless = SearchEngine(spark, _Fileless(eng.catalog))
     assert fileless._term_stats.inputFiles() == []
     terms = ["spark", "index", "zz_absent_term_qq"]
     got = fileless.plan_terms(terms)
@@ -620,6 +644,25 @@ def test_plan_terms_reads_a_fileless_term_stats_through_spark(spark, eng):
         assert (
             fileless.search_auto(q, mode, 10).collect()
             == eng.search_terms(q, mode, 10).collect()
+        )
+
+
+def test_wand_reads_a_fileless_postings_through_spark(spark, wand_eng):
+    from open_source_search_engine_spark.operators.wand import (
+        pruning_stats,
+        wand_search,
+    )
+
+    fileless = SearchEngine(
+        spark, _Fileless(wand_eng.catalog, ("term_stats", "postings"))
+    )
+    assert fileless._postings.inputFiles() == []
+    q = ["the", "to"]
+    for mode in ("AND", "OR"):
+        got = wand_search(fileless, q, mode, 10, small_df_cutoff=0)
+        assert got.collect() == wand_eng.search_terms(q, mode, 10).collect()
+        assert pruning_stats(fileless, q, mode) == pruning_stats(
+            wand_eng, q, mode
         )
 
 
@@ -711,3 +754,51 @@ def test_old_varbyte_catalog_fails_loudly(spark, tmp_path):
         lambda: apply_updates(spark, cat),
     ):
         assert jobs(lambda: raises(call)) <= floor
+
+
+# -- block-max WAND: groups chosen in the driver, scored by the exact path --
+
+
+@pytest.fixture(scope="module")
+def wand_eng(spark, tmp_path_factory):
+    """tests/test_wand.py's index: heavy terms split into many fine blocks,
+    rare terms stay whole-range (mixed salt_bits)."""
+    from open_source_search_engine_spark.operators.index_build import (
+        IndexConfig,
+    )
+
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("plan-wand-wh")))
+    build_index(
+        spark,
+        cat,
+        transcripts_to_docs(synth_transcripts(spark, 1200)),
+        IndexConfig(target_reduce_docs=64),
+    )
+    return SearchEngine(spark, cat)
+
+
+@pytest.mark.parametrize("mode", ["AND", "OR"])
+def test_two_phase_wand_launches_at_most_four_jobs(spark, wand_eng, mode):
+    from open_source_search_engine_spark.operators.wand import (
+        pruning_stats,
+        wand_search,
+    )
+
+    q = ["the", "to", "spark"]
+    want = wand_eng.search_terms(q, mode, 10).collect()
+    st = pruning_stats(wand_eng, q, mode)  # plans the terms
+    assert st["groups_surviving"] > 1  # run A cannot cover every group
+    sc = spark.sparkContext
+    rows, jobs = _jobs_of(
+        sc,
+        f"wand-two-phase-{mode}",
+        lambda: wand_search(
+            wand_eng, q, mode, 10, phase_a_groups=1, small_df_cutoff=0
+        ).collect(),
+    )
+    assert rows == want
+    assert jobs <= 4
+    stats, jobs = _jobs_of(
+        sc, f"wand-pruning-{mode}", lambda: pruning_stats(wand_eng, q, mode)
+    )
+    assert stats == st and jobs == 0

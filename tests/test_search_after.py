@@ -108,6 +108,62 @@ def test_wand_cursor_pages_tile_exact_ranking(eng):
         ], f"cutoff={cutoff}"
 
 
+@pytest.fixture(scope="module")
+def tight_eng(spark, tmp_path_factory):
+    """Equal-length docs with tf 1 or 2, so block bounds are nearly exact
+    scores: a rare ``aa`` (a few coarse blocks) over a common ``bb`` (fine
+    blocks). The top doc has both at tf 2; its ``aa``-only partial row
+    outscores every other doc, and groups under the other ``aa`` blocks
+    bound below it."""
+    import random
+
+    rng = random.Random(2)
+    rows = []
+    for i in range(80):
+        toks = (
+            ["aa", "aa", "bb", "bb"] if i == 0
+            else ["aa", "bb"] if i < 6
+            else ["aa"] if i < 10
+            else ["bb"] * rng.choice((1, 2)) if i < 60
+            else []
+        )
+        toks += [f"f{i}x{j}" for j in range(4 - len(toks))]
+        rows.append((rng.getrandbits(62), " ".join(toks)))
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("after-tight-wh")))
+    build_index(
+        spark,
+        cat,
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        IndexConfig(target_reduce_docs=2),
+    )
+    return SearchEngine(spark, cat)
+
+
+def test_wand_or_cursor_pages_tile_exact_or_ranking(tight_eng):
+    # forced two-phase OR + cursor: theta must count complete rows only. A
+    # partial row of a doc an earlier page returned passes the cursor and,
+    # counted, would prune the groups that hold the next page
+    from open_source_search_engine_spark.operators.wand import (
+        pruning_stats,
+        wand_search,
+    )
+
+    q = ["aa", "bb"]
+    assert pruning_stats(tight_eng, q, "OR")["groups_total"] > 8
+    full = tight_eng.search_terms(q, "OR", 10_000).collect()
+    paged, cur = [], None
+    while len(paged) <= len(full):
+        page = wand_search(
+            tight_eng, q, "OR", k=1, after=cur, phase_a_groups=1,
+            small_df_cutoff=0,
+        ).collect()
+        if not page:
+            break
+        paged.extend(page)
+        cur = (page[-1]["score"], page[-1]["doc_id"])
+    assert [tuple(r) for r in paged] == [tuple(r) for r in full]
+
+
 def test_wand_after_none_is_plain_wand(eng):
     from open_source_search_engine_spark.operators.wand import wand_search
 

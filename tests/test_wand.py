@@ -98,8 +98,8 @@ def test_wand_small_phase_a(eng):
 def test_pick_granularity_bounds_within_term_fanout():
     """The clamp must bound the COARSEST block of any query term, not just
     the per-term max: a term whose max is 20 but that carries one salt_bits
-    0 straggler block must not see g = 20 (the straggler would replicate
-    2^20 times through _group_expr)."""
+    0 straggler block must not see g = 20 (the straggler would overlap
+    2^20 groups)."""
     from open_source_search_engine_spark.operators.wand import (
         MAX_GROUP_SPLIT,
         pick_granularity,
@@ -111,9 +111,6 @@ def test_pick_granularity_bounds_within_term_fanout():
     # within-term straggler: clamped by the straggler, not the max
     assert pick_granularity([20], [0]) == MAX_GROUP_SPLIT
     assert pick_granularity([20, 12], [3, 12]) == 3 + MAX_GROUP_SPLIT
-    # legacy snapshots (no min column): old behavior
-    assert pick_granularity([20]) == 20
-    assert pick_granularity([20, 0]) == MAX_GROUP_SPLIT
 
 
 def test_and_presence_pruning_prunes(eng):
@@ -131,3 +128,12 @@ def test_and_presence_pruning_prunes(eng):
     # metadata-level presence cannot prune it (surviving <= total); the
     # rarest-first early exit inside the scorer does the per-group pruning
     assert st2["groups_surviving"] <= st2["groups_total"]
+
+
+@pytest.mark.parametrize("mode,cutoff", [("OR", 100_000), ("AND", 0)])
+def test_wand_k0_is_the_exact_empty_page(eng, mode, cutoff):
+    # k=0 on the two-phase path used to index an empty page's kth row
+    q = ["spark", "index"]
+    page = wand_search(eng, q, mode, k=0, small_df_cutoff=cutoff)
+    assert page.collect() == [] == eng.search_terms(q, mode, k=0).collect()
+    assert page.schema == eng.search_terms(q, mode, k=0).schema
