@@ -31,7 +31,7 @@ from .operators import (
     text_analysis,
 )
 from .operators.index_build import IndexConfig, build_index
-from .operators.query import SearchEngine
+from .operators.query import SearchEngine, _page
 from .operators.wand import (
     wand_boosted,
     wand_phrase,
@@ -209,7 +209,7 @@ def _ranked(df: DataFrame, k: int) -> DataFrame:
     just k rows -- the unpartitioned window never sees more than k rows,
     so an uncapped candidate set (e.g. the per-source-capped frame in
     q_bm25_source_cap) cannot become a one-task global sort."""
-    top = df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    top = _page(df, k)
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         top.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -581,7 +581,7 @@ def q_spell_fallback(spark, sf_dir):
     # annotates every row with the corrected query string.
     eng = engine_for(spark, sf_dir)
     out = eng.search_with_suggestion("mrege sort data", k=10)
-    top = out.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
+    top = _page(out, 10)
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         top.withColumn("rank", F.row_number().over(w).cast("long"))

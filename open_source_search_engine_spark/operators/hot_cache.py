@@ -64,11 +64,6 @@ def _tf_norm_sql(tf: str, dl: str, k1: float, b: float, avgdl: float) -> str:
     )
 
 
-def tf_norm_col(tf: str, dl: str, k1: float, b: float, avgdl: float):
-    """``_tf_norm_sql`` as a Column, over the columns named ``tf``, ``dl``."""
-    return F.expr(_tf_norm_sql(tf, dl, k1, b, avgdl))
-
-
 def build_hot_term_cache(
     spark: SparkSession,
     catalog: Catalog,
@@ -100,7 +95,9 @@ def build_hot_term_cache(
             )
         eng._tombstones = None
         w = Window.partitionBy("term_id").orderBy(
-            F.desc(tf_norm_col("tf", "dl", params.k1, params.b, avgdl)),
+            F.expr(
+                _tf_norm_sql("tf", "dl", params.k1, params.b, avgdl)
+            ).desc(),
             F.asc("doc_id"),
         )
         topk = (

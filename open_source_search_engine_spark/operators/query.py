@@ -6,21 +6,29 @@ intersection `PosdbTable.cpp:1935`, max-score pruning `:3910-3947`, TopTree
 bounded top-k `TopTree.cpp:185`) -> Msg3a::mergeLists k-way merge with
 score-desc / docid-asc tie-break (`Msg3a.cpp:807-811`).
 
-Spark-first re-expression -- two code paths sharing one formula module:
+Spark-first re-expression -- one scorer and one phrase matcher, sharing
+one formula module:
 
-* ``exact`` path: resolve the terms in the driver (plan_terms reads the
-  dictionary with Arrow), decode the query terms' blocks (partition-pruned
-  scan on term_id), compute per-(term, doc) contributions JVM-side,
-  aggregate with a CANONICAL accumulation order (one conditional-sum column
-  per term, folded in term-string-ascending order -- float64 sums are
-  bit-stable across partitionings, SURVEY.md §7.4.1; see
-  ``_aggregate_scores``), then
-  ``ORDER BY score DESC, doc_id ASC LIMIT k`` which Spark executes as
-  TakeOrderedAndProject = partial per-partition top-k + final merge, exactly
-  the reference's TopTree -> Msg3a shape (SURVEY.md A9/T1/T2).
+* every BM25 sum -- exact, batch (search_many), vote groups (synonyms,
+  expansion, wildcards, fuzzy, UOR), the bigram boost and PRF's weighted
+  requery -- is ONE pivoted aggregation, ``_aggregate_scores``: per-(term,
+  doc) contributions idf * tf-norm (the plan's terms resolved in the
+  driver, their blocks decoded by a partition-pruned scan; see
+  ``_contributions``) pivot into one conditional-sum column per term
+  slot, folded as a fixed list of
+  (slot, weight) entries in a CANONICAL order -- float64 sums are
+  bit-stable across partitionings (SURVEY.md §7.4.1), which search_after's
+  cursor relies on. The page is ``_page``: ``ORDER BY score DESC, doc_id
+  ASC LIMIT k``, which Spark executes as TakeOrderedAndProject = partial
+  per-partition top-k + final merge, exactly the reference's TopTree ->
+  Msg3a shape (SURVEY.md A9/T1/T2).
 
-* ``wand`` path (block-max pruning): see wand.py. Chooses block groups in
-  the driver from their upper bounds and scores them with the exact path
+* every quoted phrase, phrase member and bigram is ONE positional kernel,
+  ``_phrase_postings``: per doc, the intersection of each slot's positions
+  shifted by its slot index.
+
+* ``wand`` (block-max pruning, wand.py) chooses block groups in the
+  driver from their upper bounds and scores them with the exact path
   (restricted runs of ``_score_plan``), so results are identical.
 
 Proximity, phrase and boost modifiers on the WAND and batch paths share one
@@ -171,6 +179,25 @@ def boost_multiplier(
 _BATCH_SCHEMA = (
     "query_id string, rank long, doc_id long, score double, matched int"
 )
+_SCORED = "doc_id long, score double, matched int"
+_POSTINGS = "doc_id long, tf int, dl int"
+
+
+def _unanswerable(present, query_terms: list[str], mode: str) -> bool:
+    """A query that can match nothing: none of its terms is in the corpus,
+    or it is an AND with an absent term. ``present`` is its plan (or the
+    list of its terms the dictionary holds)."""
+    return len(present) == 0 or (
+        mode == "AND" and len(present) < len(set(query_terms))
+    )
+
+
+def _route(plan: pd.DataFrame, wand_df_cutoff: int) -> tuple[str, int]:
+    """search_auto's routing rule, from the plan alone: (route, sum_df),
+    route "exact" when the planned decode volume sum(df) is at or below
+    ``wand_df_cutoff``, else "wand"."""
+    sum_df = int(plan["df"].sum())
+    return ("exact" if sum_df <= int(wand_df_cutoff) else "wand"), sum_df
 
 
 def _page(
@@ -420,12 +447,8 @@ class SearchEngine:
         call per operator, not per expression node.
         """
         plan = self.plan_terms(query_terms)
-        n_q = len(set(query_terms))
-        if plan.empty or (mode == "AND" and len(plan) < n_q):
-            # a required term is absent from the corpus -> empty result
-            return _local_frame(
-                self.spark, "doc_id long, score double, matched int"
-            )
+        if _unanswerable(plan, query_terms, mode):
+            return _local_frame(self.spark, _SCORED)
         return self._score_plan(plan, mode, exclude_terms, filter_docs)
 
     def _score_plan(
@@ -563,10 +586,8 @@ class SearchEngine:
         """
         plan = self.plan_terms(query_terms)
         if plan.empty:
-            return _local_frame(
-                self.spark, "doc_id long, score double, matched int"
-            )
-        if int(plan["df"].sum()) <= int(wand_df_cutoff):
+            return _local_frame(self.spark, _SCORED)
+        if _route(plan, wand_df_cutoff)[0] == "exact":
             return self.search_terms(
                 query_terms, mode=mode, k=k, exclude_terms=exclude_terms
             )
@@ -608,13 +629,12 @@ class SearchEngine:
         tf_norm = _tf_norm_sql(
             "tf", "dl", self.params.k1, self.params.b, self.avgdl
         )
-        return (
+        return _page(
             self._hot_topk.where(f"term_id = {tid} AND rnk <= {int(k)}")
             .selectExpr(
                 "doc_id", f"{idf} * {tf_norm} AS score", "1 AS matched"
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+            ),
+            k,
         )
 
     def search_boosted(
@@ -670,11 +690,11 @@ class SearchEngine:
         )
         scored = self.score_terms(query_terms, mode, exclude_terms)
         joined = scored.join(pruned_docs, "doc_id")
-        return (
-            joined.withColumn("score", F.col("score") * mult)
-            .select("doc_id", "score", "matched")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return _page(
+            joined.withColumn("score", F.col("score") * mult).select(
+                "doc_id", "score", "matched"
+            ),
+            k,
         )
 
     def search_proximity(
@@ -711,17 +731,14 @@ class SearchEngine:
         materialized the O(tf_a * tf_b) cross-product of positions per doc,
         which is 10^4-10^6 array cells per doc for a stopword pair."""
         plan = self.plan_terms(query_terms)
-        n_q = len(set(query_terms))
-        if plan.empty or (mode == "AND" and len(plan) < n_q):
-            return _local_frame(
-                self.spark, "doc_id long, score double, matched int"
-            )
+        if _unanswerable(plan, query_terms, mode):
+            return _local_frame(self.spark, _SCORED)
         scored = self.score_terms(
             query_terms, mode=mode, exclude_terms=exclude_terms
         )
         terms = sorted(plan["term"])
         if prox_weight == 0.0 or len(terms) < 2:
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return _page(scored, k)
         self._require_positions("the proximity boost")
         tid_of = dict(zip(plan["term"], plan["term_id"]))
         bonus = self.position_bonus(terms, tid_of)
@@ -730,11 +747,7 @@ class SearchEngine:
             F.col("_bonus").isNotNull() & (F.col("_bonus") > 0.0),
             F.col("score") + F.lit(float(prox_weight)) * F.col("_bonus"),
         ).otherwise(F.col("score"))
-        return (
-            out.select("doc_id", score.alias("score"), "matched")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _page(out.select("doc_id", score.alias("score"), "matched"), k)
 
     def position_bonus(
         self,
@@ -857,19 +870,24 @@ class SearchEngine:
             ]
             for t in bases
         }
-        scored = self._vote_group_scores(groups, mode)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _page(self._vote_group_scores(groups, mode), k)
 
     def _vote_group_scores(
-        self, groups: dict[str, list[tuple[str, float]]], mode: str = "AND"
+        self,
+        groups: dict[str, list[tuple[str, float]]],
+        mode: str = "AND",
+        boosts: list[tuple[str, float]] = (),
     ) -> DataFrame:
-        """The J2 vote-group scorer shared by search_synonyms and
-        search_expanded: ``groups`` maps group_key -> [(member term,
-        weight)] (`PosdbTable.cpp:1426` setQueryTermInfo listGroupNum).
-        Returns (doc_id, score, matched) UNORDERED; matched counts groups
-        with any member present; AND filters to every viable group. Score
+        """The J2 vote-group scorer shared by search_synonyms,
+        search_expanded, the wildcard/fuzzy expansions and UOR: ``groups``
+        maps group_key -> [(member term, weight)] (`PosdbTable.cpp:1426`
+        setQueryTermInfo listGroupNum). Returns (doc_id, score, matched)
+        UNORDERED; matched counts groups with any member present; AND
+        filters to every viable group, OR to at least one. Score
         accumulates weight * BM25-contrib in fixed sorted (group, member,
-        weight) order (float64-stable).
+        weight) order, then each ``boosts`` entry (phrase, weight) in the
+        given order -- additive components that are not votes (the
+        bigram boost) -- all in one _aggregate_scores fold.
 
         A member containing a space is a MULTI-WORD PHRASE member (the
         `html` -> "hypertext markup language" abbreviation golden,
@@ -879,171 +897,81 @@ class SearchEngine:
         phrase occurrence count, weighted like any other alternative. A
         phrase absent from the corpus drops out of its group exactly like
         an absent term."""
-        bases = sorted(groups)
-        empty = _local_frame(
-            self.spark, "doc_id long, score double, matched int"
-        )
-        if not bases:
-            return empty
-        members = sorted(
-            {m for g in groups.values() for m, _w in g if " " not in m}
-        )
-        phrase_strs = sorted(
-            {m for g in groups.values() for m, _w in g if " " in m}
-        )
-        plan = self.plan_terms(members)
-        # pivot slots: the plan's terms in _contributions' order, then the
-        # phrase members present in the corpus
-        slot_of = {t: i for i, t in enumerate(sorted(plan["term"]))}
-        # phrase members: hits frame + exact df (from term_stats when the
-        # bigram termlist is indexed -- no job; one count job otherwise)
-        phrase_frames: dict[str, DataFrame] = {}
-        for ph in phrase_strs:
-            words = ph.split()
-            hits = self.phrase_postings(words)
-            pplan = self.plan_terms([ph]) if len(words) == 2 else None
-            if pplan is not None and not pplan.empty:
-                df_ph = int(pplan["df"].iloc[0])
-            elif ph in self._phrase_hits_cache:
-                hits, df_ph = self._phrase_hits_cache[ph]
-            else:
-                hits = hits.persist()
-                df_ph = hits.count()
-                while len(self._phrase_hits_cache) >= self._phrase_hits_cache_max:
-                    old, (old_hits, _) = next(iter(self._phrase_hits_cache.items()))
-                    del self._phrase_hits_cache[old]
-                    old_hits.unpersist()
-                self._phrase_hits_cache[ph] = (hits, df_ph)
-            if df_ph > 0:
-                idf_ph = float(bm25_idf(float(df_ph), self.n_docs))
-                from .hot_cache import tf_norm_col
+        from .hot_cache import _sql_double, _tf_norm_sql
 
-                k1, b = self.params.k1, self.params.b
-                phrase_frames[ph] = hits.select(
-                    "doc_id",
-                    F.lit(len(slot_of)).alias("slot"),
-                    (
-                        F.lit(idf_ph)
-                        * tf_norm_col("tf", "dl", k1, b, self.avgdl)
-                    ).alias("contrib"),
-                )
-                slot_of[ph] = len(slot_of)
-        viable = {
-            t: [(m, w) for m, w in groups[t] if m in slot_of] for t in bases
-        }
-        if not any(viable.values()):
-            return empty
-        if mode == "AND" and not all(viable.values()):
-            return empty
-        if plan.empty:
-            contrib = _local_frame(
-                self.spark, "doc_id long, slot int, contrib double"
-            )
-        else:
-            contrib = self._contributions(plan).select(
-                "doc_id", "slot", "contrib"
-            )
-        for ph in sorted(phrase_frames):
-            contrib = contrib.unionByName(phrase_frames[ph])
-        # fixed (group, member) accumulation schedule
-        entries = sorted(
-            (t, m, float(w)) for t in bases for m, w in viable[t]
-        )
-        aggs = [
-            F.sum(
-                F.when(F.col("slot") == slot_of[m], F.col("contrib"))
-            ).alias(f"_c{i}")
-            for i, (_t, m, _w) in enumerate(entries)
+        bases = sorted(groups)
+        members = {m for g in groups.values() for m, _w in g}
+        plan = self.plan_terms(sorted(m for m in members if " " not in m))
+        # pivot slots: the plan's terms in _contributions' order, then the
+        # phrases present in the corpus
+        slot_of = {t: i for i, t in enumerate(sorted(plan["term"]))}
+        contribs = [] if plan.empty else [
+            self._contributions(plan).select("doc_id", "slot", "contrib")
         ]
-        g = contrib.groupBy("doc_id").agg(*aggs)
-        # linear-size canonical fold: coalesce-to-0.0 is bit-identical to
-        # skip-absent for strictly-positive contributions (x + 0.0 == x),
-        # while the when/otherwise form DUPLICATES the accumulated tree in
-        # both branches -- O(2^n) expression nodes, which detonates codegen
-        # subexpression elimination for wide vote groups (found via a
-        # 2x16-member wildcard query; same fix at every slot-fold site)
-        score = F.lit(0.0)
-        for i, (_t, _m, w) in enumerate(entries):
-            c = F.col(f"_c{i}")
-            score = score + F.lit(w) * F.coalesce(c, F.lit(0.0))
-        col_of = {(t, m): f"_c{i}" for i, (t, m, _w) in enumerate(entries)}
-        matched = F.lit(0)
-        for t in sorted(viable):
-            if not viable[t]:
-                continue
-            inds = [
-                F.when(F.col(col_of[(t, m)]).isNotNull(), F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-                for m, _w in viable[t]
-            ]
-            matched = matched + (F.greatest(*inds) if len(inds) > 1 else inds[0])
-        scored = g.select(
-            "doc_id", score.alias("score"), matched.cast("int").alias("matched")
+        tf_norm = _tf_norm_sql(
+            "tf", "dl", self.params.k1, self.params.b, self.avgdl
         )
-        if mode == "AND":
-            scored = scored.filter(
-                F.col("matched") == len([t for t in bases if viable[t]])
+        phrases = {m for m in members if " " in m} | {p for p, _ in boosts}
+        for ph in sorted(phrases):
+            hits, df_ph = self._phrase_stats(ph)
+            if df_ph > 0:
+                idf = _sql_double(bm25_idf(float(df_ph), self.n_docs))
+                contribs.append(hits.selectExpr(
+                    "doc_id", f"{len(slot_of)} AS slot",
+                    f"{idf} * {tf_norm} AS contrib",
+                ))
+                slot_of[ph] = len(slot_of)
+        viable = [
+            [(m, float(w)) for m, w in groups[t] if m in slot_of]
+            for t in bases
+        ]
+        if not any(viable) or (mode == "AND" and not all(viable)):
+            return _local_frame(self.spark, _SCORED)
+        contrib = contribs[0]
+        for c in contribs[1:]:
+            contrib = contrib.unionByName(c)
+        entries = [
+            (slot_of[m], w)
+            for _t, m, w in sorted(
+                (t, m, w) for t, g in zip(bases, viable) for m, w in g
             )
-        else:
-            scored = scored.filter(F.col("matched") > 0)
-        return scored
+        ] + [(slot_of[p], float(w)) for p, w in boosts if p in slot_of]
+        votes = [[slot_of[m] for m, _w in g] for g in viable if g]
+        scored = self._aggregate_scores(contrib, entries, votes)
+        return scored.where(
+            f"matched = {len(votes)}" if mode == "AND" else "matched > 0"
+        )
+
+    def _phrase_stats(self, phrase: str) -> tuple[DataFrame, int]:
+        """(hits, df) of a space-joined phrase: hits = phrase_postings of
+        its words; df from term_stats when the index carries it as a
+        bigram term (no job), else counted once, with the hits persisted
+        in the bounded phrase-hits cache (evictions unpersist)."""
+        words = phrase.split()
+        hits = self.phrase_postings(words)
+        if len(words) == 2:
+            pplan = self.plan_terms([phrase])
+            if not pplan.empty:
+                return hits, int(pplan["df"].iloc[0])
+        cache = self._phrase_hits_cache
+        if phrase not in cache:
+            hits = hits.persist()
+            while len(cache) >= self._phrase_hits_cache_max:
+                cache.pop(next(iter(cache)))[0].unpersist()
+            cache[phrase] = (hits, hits.count())
+        return cache[phrase]
 
     def bigram_postings(self, a: str, b: str) -> DataFrame:
         """(doc_id, tf, dl) of the adjacency "a b": tf = number of positions
         p with a@p and b@p+1 (the bigram termlist payload, SURVEY.md X3).
 
         Served from the indexed bigram termlist when the index carries one
-        (partition-pruned scan, no position decode); otherwise derived from
-        the two unigram termlists' positions via array_intersect of
-        (positions_a + 1) with positions_b -- positions are unique per
-        (term, doc), so the intersection size is the exact adjacency count.
-        Both paths produce identical rows (gated)."""
-        empty = _local_frame(self.spark, "doc_id long, tf int, dl int")
-        bplan = self.plan_terms([f"{a} {b}"])
-        if not bplan.empty:
-            return (
-                self.decoded_postings([int(bplan["term_id"].iloc[0])])
-                .groupBy("doc_id")
-                .agg(
-                    F.sum("tf").cast("int").alias("tf"),
-                    F.max("dl").cast("int").alias("dl"),
-                )
-            )
-        self._require_positions("bigram adjacency without an indexed bigram termlist")
-        plan = self.plan_terms([a, b])
-        if len(plan) < len({a, b}):
-            return empty
-        tid_of = dict(zip(plan["term"], plan["term_id"]))
-        decoded = self.decoded_postings(
-            [int(t) for t in plan["term_id"]], include_positions=True
-        )
-        pa = (
-            decoded.filter(F.col("term_id") == int(tid_of[a]))
-            .groupBy("doc_id")
-            .agg(
-                F.flatten(F.collect_list("positions")).alias("_pa"),
-                F.max("dl").alias("dl"),
-            )
-        )
-        pb = (
-            decoded.filter(F.col("term_id") == int(tid_of[b]))
-            .groupBy("doc_id")
-            .agg(F.flatten(F.collect_list("positions")).alias("_pb"))
-        )
-        return (
-            pa.join(pb, "doc_id")
-            .select(
-                "doc_id",
-                F.size(
-                    F.array_intersect(
-                        F.transform(F.col("_pa"), lambda x: x + F.lit(1)),
-                        F.col("_pb"),
-                    )
-                ).cast("int").alias("tf"),
-                F.col("dl").cast("int").alias("dl"),
-            )
-            .filter(F.col("tf") > 0)
+        (partition-pruned scan, no position decode); otherwise matched over
+        the two unigram termlists' positions (_phrase_postings). Both paths
+        produce identical rows (gated)."""
+        bi = f"{a} {b}"
+        return self._phrase_postings(
+            [bi] if len(self.plan_terms([bi])) else [a, b]
         )
 
     def _require_positions(self, what: str) -> None:
@@ -1062,82 +990,67 @@ class SearchEngine:
         start positions p with word_i at p+i for all i (the bigram-termlist
         payload generalized to n words, SURVEY.md X3/O5).
 
-        n=1 falls back to the unigram termlist; n=2 to bigram_postings
-        (served from an indexed bigram termlist when present); n>=3 uses
-        positional intersection: per doc, slot i's positions shifted by -i,
-        tf = |∩_i (positions_i - i)|. Repeated words are handled (the same
-        term's array shifts differently per slot)."""
-        empty = _local_frame(self.spark, "doc_id long, tf int, dl int")
-        n = len(words)
-        if n == 0:
-            return empty
-        if n == 1:
-            plan = self.plan_terms(words)
-            if plan.empty:
-                return empty
-            return (
-                self.decoded_postings([int(plan["term_id"].iloc[0])])
-                .groupBy("doc_id")
-                .agg(
-                    F.sum("tf").cast("int").alias("tf"),
-                    F.max("dl").cast("int").alias("dl"),
-                )
+        n=1 reads the unigram termlist; n=2 is bigram_postings (served from
+        an indexed bigram termlist when present); n>=3 matches the unigram
+        termlists' positions (_phrase_postings). Repeated words are
+        handled (the same term's positions shift differently per slot)."""
+        if len(words) == 2:
+            return self.bigram_postings(*words)
+        return self._phrase_postings(words)
+
+    def _phrase_postings(
+        self, slots: list[str], restrict: DataFrame | None = None
+    ) -> DataFrame:
+        """THE positional phrase matcher: (doc_id, tf, dl) of the docs
+        holding termlist ``slots[i]`` at position p + i for every i, with
+        tf = the number of such start positions p -- per doc, the size of
+        the intersection of each slot's positions shifted by -i -- and dl
+        the doc's length. A slot is a unigram or an indexed bigram term
+        (bigram positions are first-word positions, so the same shifts
+        apply); slots may repeat.
+
+        A single slot needs no positions: its rows are its termlist's.
+        Every multi-slot match needs them and raises ValueError on an
+        index built with store_positions=False. ``restrict`` (a small
+        (doc_id, ...) frame, e.g. a WAND candidate page) is broadcast
+        semi-joined onto the decoded postings BEFORE the per-doc pivot, so
+        the pivot shuffles candidate positions only."""
+        if len(slots) > 1:
+            self._require_positions("positional phrase matching")
+        plan = self.plan_terms(slots)
+        if _unanswerable(plan, slots, "AND"):
+            return _local_frame(self.spark, _POSTINGS)
+        decoded = self._decoded(
+            [int(t) for t in plan["term_id"]], len(slots) > 1
+        )
+        if restrict is not None:
+            decoded = decoded.join(
+                F.broadcast(restrict.select("doc_id")), "doc_id", "left_semi"
             )
-        if n == 2:
-            return self.bigram_postings(words[0], words[1])
-        self._require_positions(f"the {n}-word phrase path")
-        uniq = sorted(set(words))
-        plan = self.plan_terms(uniq)
-        if len(plan) < len(uniq):
-            return empty
+        if len(slots) == 1:
+            return decoded.groupBy("doc_id").agg(
+                F.expr("CAST(sum(tf) AS INT) AS tf"),
+                F.expr("CAST(max(dl) AS INT) AS dl"),
+            )
+        col = {t: f"_p{i}" for i, t in enumerate(sorted(set(slots)))}
         tid_of = dict(zip(plan["term"], plan["term_id"]))
-        decoded = self.decoded_postings(
-            [int(t) for t in plan["term_id"]], include_positions=True
-        )
-        per_term = [
-            F.flatten(
-                F.collect_list(
-                    F.when(
-                        F.col("term_id") == int(tid_of[t]), F.col("positions")
-                    )
-                )
-            ).alias(f"_p_{i}")
-            for i, t in enumerate(uniq)
-        ]
-        pivoted = decoded.groupBy("doc_id").agg(
-            *per_term, F.max("dl").alias("dl")
-        )
-        slot_of = {t: i for i, t in enumerate(uniq)}
-        # shift each slot's positions by -slot_index in a SEPARATE
-        # projection, one single-arg closure per slot: a two-arg lambda
-        # (`lambda x, i=i`) is treated by F.transform as an
-        # (element, array_index) function, silently replacing the captured
-        # shift with the element's index
-
-        def _shift(offset: int):
-            return lambda x: x - F.lit(offset)
-
-        shifted = pivoted.select(
-            "doc_id",
-            "dl",
+        inter = col[slots[0]]
+        for i, t in enumerate(slots[1:], 1):
+            shifted = f"transform({col[t]}, x -> x - {i})"
+            inter = f"array_intersect({inter}, {shifted})"
+        return decoded.groupBy("doc_id").agg(
             *[
-                F.transform(F.col(f"_p_{slot_of[w]}"), _shift(i)).alias(
-                    f"_s_{i}"
+                F.expr(
+                    f"flatten(collect_list(CASE WHEN term_id = "
+                    f"{int(tid_of[t])} THEN positions END)) AS {c}"
                 )
-                for i, w in enumerate(words)
+                for t, c in col.items()
             ],
-        )
-        inter = F.col("_s_0")
-        for i in range(1, n):
-            inter = F.array_intersect(inter, F.col(f"_s_{i}"))
-        return (
-            shifted.select(
-                "doc_id",
-                F.size(inter).cast("int").alias("tf"),
-                F.col("dl").cast("int").alias("dl"),
-            )
-            .filter(F.col("tf") > 0)
-        )
+            F.expr("max(dl) AS dl"),
+        ).selectExpr(
+            "doc_id", f"CAST(size({inter}) AS INT) AS tf",
+            "CAST(dl AS INT) AS dl",
+        ).where("tf > 0")
 
     def search_expanded(
         self,
@@ -1174,11 +1087,6 @@ class SearchEngine:
 
         words = query.split() if isinstance(query, str) else list(query)
         words = [w for w in words if w]
-        empty = _local_frame(
-            self.spark, "doc_id long, score double, matched int"
-        )
-        if not words:
-            return empty
         groups: dict[str, list[tuple[str, float]]] = {}
         bases: list[str] = []  # per-word primary term, for bigram pairs
         for w in words:
@@ -1206,53 +1114,12 @@ class SearchEngine:
             if members and key not in groups:
                 groups[key] = members
             bases.append(members[0][0] if members else "")
-        if not groups:
-            return empty
-        scored = self._vote_group_scores(groups, mode)
         pairs = sorted(
-            {
-                (x, y)
-                for x, y in zip(bases, bases[1:])
-                if x and y
-            }
+            {(x, y) for x, y in zip(bases, bases[1:]) if x and y}
+            if use_bigrams else ()
         )
-        if not use_bigrams or not pairs:
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        from .hot_cache import tf_norm_col
-
-        out = scored
-        score = F.col("score")
-        k1, b = self.params.k1, self.params.b
-        for i, (x, y) in enumerate(pairs):
-            bi = f"{x} {y}"
-            bplan = self.plan_terms([bi])
-            hits = self.bigram_postings(x, y)
-            if not bplan.empty:
-                df_bi = int(bplan["df"].iloc[0])
-            else:
-                df_bi = hits.count()  # one pruned-scan job (fallback path)
-            if df_bi <= 0:
-                continue
-            idf_bi = float(bm25_idf(float(df_bi), self.n_docs))
-            pair = hits.select(
-                "doc_id",
-                (
-                    F.lit(idf_bi)
-                    * tf_norm_col("tf", "dl", k1, b, self.avgdl)
-                ).alias(f"_bg{i}"),
-            )
-            out = out.join(pair, "doc_id", "left_outer")
-            c = F.col(f"_bg{i}")
-            # linear fold (see _vote_group_scores): when/otherwise doubles
-            # the tree per bigram
-            score = score + F.lit(float(bigram_weight)) * F.coalesce(
-                c, F.lit(0.0)
-            )
-        return (
-            out.select("doc_id", score.alias("score"), "matched")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        boosts = [(f"{x} {y}", float(bigram_weight)) for x, y in pairs]
+        return _page(self._vote_group_scores(groups, mode, boosts), k)
 
     def search_deduped(
         self,
@@ -1301,13 +1168,12 @@ class SearchEngine:
 
             w_rank = Window.orderBy(F.desc("score"), F.asc("doc_id"))
             w_grp = Window.partitionBy("simhash").orderBy("rnk")
-            return (
+            return _page(
                 page.withColumn("rnk", F.row_number().over(w_rank))
                 .withColumn("grnk", F.row_number().over(w_grp))
                 .filter(F.col("grnk") == 1)
-                .select("doc_id", "score", "matched")
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
+                .select("doc_id", "score", "matched"),
+                k,
             )
 
         kk, ham = k, int(sim_ham)
@@ -1333,15 +1199,13 @@ class SearchEngine:
             out = pdf.iloc[keep_idx]
             return out[["doc_id", "score", "matched"]]
 
-        return (
+        return _page(
             page.withColumn("_g", F.lit(1))
             .groupBy("_g")
             .applyInPandas(
-                lambda pdf: greedy(pdf.drop(columns=["_g"])),
-                schema="doc_id long, score double, matched int",
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+                lambda pdf: greedy(pdf.drop(columns=["_g"])), schema=_SCORED
+            ),
+            k,
         )
 
     def search_many(
@@ -1375,122 +1239,88 @@ class SearchEngine:
         """
         from pyspark.sql import Window
 
-        qmeta_rows = []  # (query_id, term, pos, idf, n_required, k)
-        heavy: list[tuple[str, list[str], str, int]] = []
-        all_terms: set[str] = set()
-        for q in queries:
-            terms = sorted(set(q["terms"]))
-            all_terms.update(terms)
-        plan = self.plan_terms(sorted(all_terms))
-        idf_of = dict(zip(plan["term"], plan["idf"]))
-        tid_of = dict(zip(plan["term"], plan["term_id"]))
+        plan = self.plan_terms(
+            sorted({t for q in queries for t in q["terms"]})
+        )
         df_of = dict(zip(plan["term"], plan["df"]))
+        shared, frames = [], []
         for q in queries:
             qid = str(q["query_id"])
             mode = q.get("mode", "AND")
             k = int(q.get("k", default_k))
             terms = sorted(set(q["terms"]))
-            present = [t for t in terms if t in idf_of]
-            if not present or (mode == "AND" and len(present) < len(terms)):
-                continue  # unanswerable -> no rows (same as search_terms)
+            present = [t for t in terms if t in df_of]
+            if _unanswerable(present, terms, mode):
+                continue  # no rows (same as search_terms)
             if sum(int(df_of[t]) for t in present) > shared_scan_max_rows:
-                heavy.append((qid, present, mode, k))
-                continue
-            required = len(present) if mode == "AND" else 1
-            for pos, t in enumerate(present):
-                qmeta_rows.append(
-                    (qid, t, pos, int(tid_of[t]), float(idf_of[t]), required, k)
+                frames.append(
+                    _rank_branch(qid, self.search_terms(present, mode, k))
                 )
-        heavy_frames = [
-            _rank_branch(qid, self.search_terms(present, mode=mode, k=k))
-            for qid, present, mode, k in heavy
-        ]
-        if not qmeta_rows:
-            if not heavy_frames:
-                return _local_frame(self.spark, _BATCH_SCHEMA)
-            out = heavy_frames[0]
-            for f in heavy_frames[1:]:
-                out = out.unionByName(f)
-            return out.orderBy("query_id", "rank")
-        qmeta = _local_frame(
-            self.spark,
-            "query_id string, term string, pos int, term_id long, idf double, "
-            "n_required int, k int",
-            qmeta_rows,
-        )
-        term_ids = sorted({r[3] for r in qmeta_rows})
-        decoded = self.decoded_postings(term_ids)
-        k1, b = self.params.k1, self.params.b
-        from .hot_cache import tf_norm_col
+            else:
+                n_required = len(present) if mode == "AND" else 1
+                shared.append((qid, present, n_required, k))
+        if shared:
+            from .hot_cache import _tf_norm_sql
 
-        contrib = (
-            decoded.join(F.broadcast(qmeta), "term_id")
-            .withColumn(
-                "contrib",
-                F.col("idf")
-                * tf_norm_col("tf", "dl", k1, b, self.avgdl),
+            tid_of = dict(zip(plan["term"], plan["term_id"]))
+            idf_of = dict(zip(plan["term"], plan["idf"]))
+            # each query's term at its own slot `pos` (the index in its
+            # ascending term list), so the batch folds exactly search_terms'
+            # 0.0 + c_t1 + c_t2 ... per (query, doc). The per-term constants
+            # ride a broadcast table, not CASE literals: one batch's plan
+            # then compiles to the same code as the last one's
+            qmeta = _local_frame(
+                self.spark,
+                "query_id string, term_id long, pos int, idf double, "
+                "n_required int, k int",
+                [
+                    (qid, int(tid_of[t]), pos, float(idf_of[t]), n_req, k)
+                    for qid, present, n_req, k in shared
+                    for pos, t in enumerate(present)
+                ],
             )
-            .select("query_id", "doc_id", "pos", "contrib", "n_required", "k")
-        )
-        # Canonical-order float64 sum via per-query term SLOTS: qmeta's
-        # `pos` is the term's index in that query's ascending term list, and
-        # each (query_id, doc_id, pos) has at most one row, so every slot
-        # sum is a single-element sum (bit-exact) and the fixed-order fold
-        # below reproduces search_terms' 0.0 + c_t1 + c_t2 ... exactly.
-        # Unlike the previous collect_list(struct)+array_sort fold this is a
-        # plain codegen HashAggregate with map-side partial aggregation --
-        # at 10M docs the object agg spilled and cost ~4x the sequential
-        # path; slots make batch amortization hold at scale.
-        nslots = max(r[2] for r in qmeta_rows) + 1
-        slot_aggs = [
-            F.sum(F.when(F.col("pos") == i, F.col("contrib"))).alias(f"_c{i}")
-            for i in range(nslots)
-        ]
-        g = contrib.groupBy("query_id", "doc_id").agg(
-            *slot_aggs,
-            F.count(F.lit(1)).cast("int").alias("matched"),
-            F.first("n_required").alias("n_required"),
-            F.first("k").alias("k"),
-        )
-        # linear fold (see _vote_group_scores): when/otherwise doubles
-        # the tree per slot
-        score = F.lit(0.0)
-        for i in range(nslots):
-            score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-        scored = g.select(
-            "query_id",
-            "doc_id",
-            score.alias("score"),
-            "matched",
-            "n_required",
-            "k",
-        ).filter(F.col("matched") >= F.col("n_required"))
-        # per-partition bounded pre-top-k BEFORE the rank window -- the
-        # reference's per-shard TopTree -> Msg3a merge shape
-        # (`TopTree.cpp:185`, `Msg3a.cpp:807-811`). A window alone is a
-        # FULL SORT of every query's candidate set (at 10M docs: 64 sorts
-        # of ~7M rows each -- measured 590 s). The literal ``rank <= max_k``
-        # bound lets Spark plan a partial WindowGroupLimit below the
-        # shuffle (any global top-k row is in its partition's per-query
-        # top-k), so the window ranks at most n_partitions * max_k rows
-        # per query, all in the JVM (up to the optimizer's
-        # windowGroupLimitThreshold, 1000 by default).
-        max_k = max(int(q.get("k", default_k)) for q in queries)
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        out = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter((F.col("rank") <= max_k) & (F.col("rank") <= F.col("k")))
-            .select(
-                "query_id",
-                F.col("rank").cast("long").alias("rank"),
-                "doc_id",
-                "score",
-                "matched",
+            tf_norm = _tf_norm_sql(
+                "tf", "dl", self.params.k1, self.params.b, self.avgdl
             )
-        )
-        for f in heavy_frames:
+            contrib = self._decoded(
+                sorted({int(tid_of[t]) for q in shared for t in q[1]})
+            ).join(F.broadcast(qmeta), "term_id").selectExpr(
+                "query_id", "doc_id", "pos AS slot",
+                f"idf * {tf_norm} AS contrib", "n_required", "k",
+            )
+            scored = self._aggregate_scores(
+                contrib,
+                max(len(q[1]) for q in shared),
+                keys=("query_id", "doc_id"),
+                n_required="first(n_required)",
+                k="first(k)",
+            ).where("matched >= n_required")
+            # per-partition bounded pre-top-k BEFORE the rank window -- the
+            # reference's per-shard TopTree -> Msg3a merge shape
+            # (`TopTree.cpp:185`, `Msg3a.cpp:807-811`). A window alone is a
+            # FULL SORT of every query's candidate set (at 10M docs: 64
+            # sorts of ~7M rows each -- measured 590 s). The literal
+            # ``rank <= max_k`` bound lets Spark plan a partial
+            # WindowGroupLimit below the shuffle (any global top-k row is in
+            # its partition's per-query top-k), so the window ranks at most
+            # n_partitions * max_k rows per query, all in the JVM (up to
+            # the optimizer's windowGroupLimitThreshold, 1000 by default).
+            max_k = max(int(q.get("k", default_k)) for q in queries)
+            w = Window.partitionBy("query_id").orderBy(
+                F.desc("score"), F.asc("doc_id")
+            )
+            frames.insert(0, (
+                scored.withColumn("rank", F.row_number().over(w))
+                .where(f"rank <= {max_k} AND rank <= k")
+                .selectExpr(
+                    "query_id", "CAST(rank AS BIGINT) AS rank", "doc_id",
+                    "score", "matched",
+                )
+            ))
+        if not frames:
+            return _local_frame(self.spark, _BATCH_SCHEMA)
+        out = frames[0]
+        for f in frames[1:]:
             out = out.unionByName(f)
         return out.orderBy("query_id", "rank")
 
@@ -1660,8 +1490,6 @@ class SearchEngine:
         (<= k rows), so the trigger check AND the returned frame share ONE
         search job; the correction collects <= n_terms suggestion rows.
         """
-        from . import speller
-
         terms, exclude = self._parse_signs(query)
         base = self.search_terms(terms, mode=mode, k=k, exclude_terms=exclude)
         no_sugg = F.lit(None).cast("string")
@@ -1673,19 +1501,31 @@ class SearchEngine:
         got = base.limit(int(min_results)).collect()
         if len(got) >= int(min_results):
             return base.withColumn("suggested_query", no_sugg)
-        vocab = speller.vocab_from_term_stats(self._term_stats)
-        sugg = speller.suggest(
-            self.spark, vocab, terms, max_dist=max_dist, per_term=1
-        )
-        best = {r["qterm"]: r["suggestion"] for r in sugg.collect()}
-        corrected = [best.get(t, t) for t in terms]
-        sugg_str = " ".join(corrected + [f"-{t}" for t in exclude])
+        corrected, sugg_str = self._spell_corrected(terms, exclude, max_dist)
         if corrected == terms or not auto_requery:
             sq = F.lit(sugg_str) if corrected != terms else no_sugg
             return base.withColumn("suggested_query", sq)
         return self.search_terms(
             corrected, mode=mode, k=k, exclude_terms=exclude
         ).withColumn("suggested_query", F.lit(sugg_str))
+
+    def _spell_corrected(
+        self, terms: list[str], exclude: list[str], max_dist: int
+    ) -> tuple[list[str], str]:
+        """The did-you-mean requery shared by search_with_suggestion and
+        serve: each positive term corrected to its best dictionary word
+        within ``max_dist`` edits (speller.suggest over this index's own
+        term_stats; a term with no candidate stays verbatim), and the
+        suggestion string with the exclusions rendered back as '-term'."""
+        from . import speller
+
+        vocab = speller.vocab_from_term_stats(self._term_stats)
+        sugg = speller.suggest(
+            self.spark, vocab, terms, max_dist=max_dist, per_term=1
+        )
+        best = {r["qterm"]: r["suggestion"] for r in sugg.collect()}
+        corrected = [best.get(t, t) for t in terms]
+        return corrected, " ".join(corrected + [f"-{t}" for t in exclude])
 
     def serve(
         self,
@@ -1721,7 +1561,6 @@ class SearchEngine:
         Output: (rank, doc_id, score, matched, snippet, highlighted,
         suggested_query), rank 1..n by (score DESC, doc_id ASC).
         """
-        from . import speller
         from .snippets import best_window_snippets
 
         out_schema = (
@@ -1750,13 +1589,12 @@ class SearchEngine:
             w_src = Window.partitionBy(source_col).orderBy(
                 F.desc("score"), F.asc("doc_id")
             )
-            return (
+            return _page(
                 scored.join(src, "doc_id")
                 .withColumn("_rn", F.row_number().over(w_src))
                 .filter(F.col("_rn") <= int(source_cap))
-                .select("doc_id", "score", "matched")
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
+                .select("doc_id", "score", "matched"),
+                k,
             )
 
         # materialize the (<= k row) page once: the thinness check, the
@@ -1764,17 +1602,9 @@ class SearchEngine:
         base = page(terms).localCheckpoint()
         served_terms, sugg_str = terms, None
         if base.limit(int(min_results)).count() < int(min_results):
-            vocab = speller.vocab_from_term_stats(self._term_stats)
-            sugg = speller.suggest(
-                self.spark, vocab, terms, max_dist=max_dist, per_term=1
-            )
-            best = {r["qterm"]: r["suggestion"] for r in sugg.collect()}
-            corrected = [best.get(t, t) for t in terms]
+            corrected, sugg = self._spell_corrected(terms, exclude, max_dist)
             if corrected != terms:
-                sugg_str = " ".join(
-                    corrected + [f"-{t}" for t in exclude]
-                )
-                served_terms = corrected
+                sugg_str, served_terms = sugg, corrected
                 base = page(corrected).localCheckpoint()
         docs_page = self.catalog.read_table("documents").join(
             F.broadcast(base.select("doc_id")), "doc_id", "left_semi"
@@ -1961,18 +1791,17 @@ class SearchEngine:
             .select("text")
             .collect()
         )
-        schema = "doc_id long, score double, matched int"
         if not rows or not rows[0]["text"]:
-            return _local_frame(self.spark, schema)
+            return _local_frame(self.spark, _SCORED)
         toks = self.tokenize_query(rows[0]["text"])
         if not toks:
-            return _local_frame(self.spark, schema)
+            return _local_frame(self.spark, _SCORED)
         from collections import Counter
 
         tf = Counter(toks)
         plan = self.plan_terms(list(tf))  # (term, df, idf, ...) pandas
         if plan.empty:
-            return _local_frame(self.spark, schema)
+            return _local_frame(self.spark, _SCORED)
         plan = plan.assign(
             kscore=[
                 tf[t] * i for t, i in zip(plan["term"], plan["idf"])
@@ -1981,11 +1810,9 @@ class SearchEngine:
             ["kscore", "term"], ascending=[False, True], kind="mergesort"
         )
         sel = list(plan["term"].head(int(top_terms)))
-        return (
-            self.score_terms(sel, "OR")
-            .filter(F.col("doc_id") != int(doc_id))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
+        return _page(
+            self.score_terms(sel, "OR").filter(F.col("doc_id") != int(doc_id)),
+            k,
         )
 
     def search_prf(
@@ -2037,24 +1864,16 @@ class SearchEngine:
             .select("term")
             .collect()
         ]
-        q = sorted(set(query_terms))
-        plan = self.plan_terms(sorted(set(q) | set(exp)))
+        q = set(query_terms)
+        plan = self.plan_terms(sorted(q | set(exp)))
         if plan.empty:
-            return _local_frame(
-                self.spark, "doc_id long, score double, matched int"
-            )
-        q_slots = [i for i, t in enumerate(sorted(plan["term"])) if t in q]
-        contrib = self._contributions(plan).withColumn(
-            "contrib",
-            F.col("contrib")
-            * F.when(F.col("slot").isin(q_slots), F.lit(1.0)).otherwise(
-                F.lit(float(beta))
-            ),
-        )
-        return (
-            self._aggregate_scores(contrib, len(plan))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
+            return _local_frame(self.spark, _SCORED)
+        weights = [
+            (i, 1.0 if t in q else float(beta))
+            for i, t in enumerate(sorted(plan["term"]))
+        ]
+        return _page(
+            self._aggregate_scores(self._contributions(plan), weights), k
         )
 
     def ltr_features(
@@ -2308,11 +2127,9 @@ class SearchEngine:
         whenever the query string contains a wildcard, so signs and
         wildcards compose in the user-facing grammar."""
         groups = self._wildcard_groups(patterns, max_expansions)
-        scored = self._exclude(
-            self._vote_group_scores(groups, mode), exclude_terms
-        )
-        return (
-            scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
+        return _page(
+            self._exclude(self._vote_group_scores(groups, mode), exclude_terms),
+            k,
         )
 
     def search_fielded(
@@ -2496,7 +2313,7 @@ class SearchEngine:
         )
         if mode == "AND":
             scored = scored.filter(F.col("matched") == len(uniq))
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
+        return _page(scored, k)
 
     def fetch_docs(self, doc_ids: list[int]) -> DataFrame:
         """Cached-copy serving — the reference's PageGet flow (serve the
@@ -2547,8 +2364,7 @@ class SearchEngine:
             if not plan.empty
             else {}
         )
-        sum_df = sum(df for df, _ in by_term.values())
-        route = "exact" if sum_df <= int(wand_df_cutoff) else "wand"
+        route, sum_df = _route(plan, wand_df_cutoff)
         rows = []
         for t in sorted(set(query_terms)):
             df_i, idf = by_term.get(t, (0, None))
@@ -2686,11 +2502,7 @@ class SearchEngine:
                 (r["term"], 1.0 if r["lev"] == 0 else float(fuzzy_weight))
                 for r in rows
             ]
-        return (
-            self._vote_group_scores(groups, mode)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
-        )
+        return _page(self._vote_group_scores(groups, mode), k)
 
     def complete_query(
         self, partial: str, k: int = 10, max_candidates: int = 32
@@ -2846,11 +2658,11 @@ class SearchEngine:
         scored = self.score_terms(
             [w1, w2], "AND", filter_docs=near.select("doc_id")
         )
-        return (
-            scored.join(near, "doc_id")
-            .select("doc_id", "score", "matched", "min_gap")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
+        return _page(
+            scored.join(near, "doc_id").select(
+                "doc_id", "score", "matched", "min_gap"
+            ),
+            k,
         )
 
     def search_query(
@@ -2881,11 +2693,8 @@ class SearchEngine:
         phrases, and fields always survive, and an all-stopword clause is
         answered as-is. ``stop_words`` overrides the default English set."""
         el, terms = self.query_eligibility(query, drop_stopwords, stop_words)
-        empty = _local_frame(
-            self.spark, "doc_id long, score double, matched int"
-        )
         if el is None:
-            return empty
+            return _local_frame(self.spark, _SCORED)
         # UOR rank-blend (`Query.h:146-152` OP_UOR): a UOR's terms score as
         # ONE vote group (matched counts the group once), other scoring
         # terms stay singleton groups -- eligibility is unchanged (the DNF
@@ -2893,7 +2702,9 @@ class SearchEngine:
         from ..functions.query_parser import parse_query, uor_groups
 
         ugroups = uor_groups(parse_query(query))
-        if ugroups and terms:
+        if not terms:
+            scored = _local_frame(self.spark, _SCORED)
+        elif ugroups:
             grouped: set[str] = set()
             vote: dict[str, list[tuple[str, float]]] = {}
             # only tokens that survived query_eligibility's term selection
@@ -2919,45 +2730,20 @@ class SearchEngine:
                 if t not in grouped:
                     vote[t] = [(t, 1.0)]
             scored = self._vote_group_scores(vote, mode="OR")
-            return (
-                el.join(scored, "doc_id", "left_outer")
-                .select(
-                    "doc_id",
-                    F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
-                    F.coalesce(F.col("matched"), F.lit(0))
-                    .cast("int")
-                    .alias("matched"),
-                )
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
-        # eligibility without scoring terms still returns the doc at score
-        # 0.0 / matched 0 (left-outer, NOT semi-join): a field-only query
+        else:
+            scored = self.score_terms(terms, mode="OR")
+        # an eligible doc without scoring terms still returns at score 0.0
+        # / matched 0 (left-outer, NOT semi-join): a field-only query
         # ('lang:en') or a scoring-term-free clause ('... OR (lang:fr)')
         # must not silently drop its eligible docs (r2 ADVICE). Ties at
         # 0.0 break doc_id asc as everywhere else.
-        if not terms:
-            return (
-                el.select(
-                    "doc_id",
-                    F.lit(0.0).alias("score"),
-                    F.lit(0).cast("int").alias("matched"),
-                )
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
-        scored = self.score_terms(terms, mode="OR")
-        return (
-            el.join(scored, "doc_id", "left_outer")
-            .select(
+        return _page(
+            el.join(scored, "doc_id", "left_outer").selectExpr(
                 "doc_id",
-                F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
-                F.coalesce(F.col("matched"), F.lit(0)).cast("int").alias(
-                    "matched"
-                ),
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+                "coalesce(score, 0.0D) AS score",
+                "CAST(coalesce(matched, 0) AS INT) AS matched",
+            ),
+            k,
         )
 
     def query_eligibility(
@@ -3128,11 +2914,7 @@ class SearchEngine:
                 words = self.tokenize_query(atom[1])
                 if not words:
                     continue
-                f = (
-                    self.term_docs(words[0])
-                    if len(words) == 1
-                    else self._phrase_hits(words)
-                )
+                f = self._phrase_hits(words)
             else:  # field:value -> document-column equality (F5 analog)
                 name, value = atom[1], atom[2]
                 docs = self.catalog.read_table("documents")
@@ -3161,15 +2943,15 @@ class SearchEngine:
         restrict: DataFrame | None = None,
     ) -> DataFrame:
         """Docs containing the exact phrase; verified over the much-shorter
-        bigram termlists when the index carries them (SURVEY.md X3),
+        bigram termlists when the index carries them (SURVEY.md X3; a
+        2-word phrase is then one termlist and needs no positions),
         positional unigram intersection otherwise. Results identical.
         ``restrict`` narrows verification to a candidate doc set (see
-        phrase_docs)."""
+        _phrase_postings)."""
         if use_bigrams and len(words) >= 2:
             bi = [f"{a} {b}" for a, b in zip(words, words[1:])]
-            bplan = self.plan_terms(bi)
-            if len(bplan) == len(set(bi)):
-                return self.phrase_docs(bi, restrict=restrict)
+            if len(self.plan_terms(bi)) == len(set(bi)):
+                words = bi
         return self.phrase_docs(words, restrict=restrict)
 
     # ------------------------------------------------------------------
@@ -3210,71 +2992,18 @@ class SearchEngine:
     def phrase_docs(
         self, phrase_terms: list[str], restrict: DataFrame | None = None
     ) -> DataFrame:
-        """Docs containing the exact phrase (positional adjacency).
+        """(doc_id) of the docs containing the exact phrase (positional
+        adjacency): term i of ``phrase_terms`` at position p + i for some p.
 
         Reference: quoted phrases are verified by positional containment
-        (`Query.h:219-226`, `Matches.cpp:252`; SURVEY.md O5). Declarative
-        re-expression: for phrase slot i with term t_i, emit
-        (doc_id, slot=i, adj_pos = pos - i) from the positional postings;
-        a doc matches iff some adj_pos has ALL slots present --
-        ``groupBy(doc_id, adj_pos) having count(distinct slot) = n``.
-        Handles repeated terms in the phrase naturally (slots are distinct).
-        Returns a (doc_id) DataFrame.
-
-        ``restrict`` (a small (doc_id, ...) DataFrame, e.g. a WAND
-        candidate page) narrows verification to those docs via a broadcast
-        semi-join BEFORE position explode + adjacency grouping — at scale
-        the termlist of a common word is huge, but the candidate page is
-        O(k), so the verify shuffles candidate positions only.
-        """
-        n = len(phrase_terms)
-        if n == 0:
-            return _local_frame(self.spark, "doc_id long")
-        plan = self.plan_terms(phrase_terms)
-        if len(plan) < len(set(phrase_terms)):
-            return _local_frame(self.spark, "doc_id long")
-        tid_of = dict(zip(plan["term"], plan["term_id"]))
-        decoded = self.decoded_postings(
-            [int(t) for t in plan["term_id"]], include_positions=True
-        )
-        if restrict is not None:
-            decoded = decoded.join(
-                F.broadcast(restrict.select("doc_id")), "doc_id", "left_semi"
-            )
-        decoded = decoded.select(
-            "term_id", "doc_id", F.explode("positions").alias("pos")
-        )
-        slot_map = F.array(
-            *[
-                F.struct(
-                    F.lit(int(tid_of[t])).alias("tid"), F.lit(i).alias("slot")
-                )
-                for i, t in enumerate(phrase_terms)
-            ]
-        )
-        slotted = (
-            decoded.withColumn(
-                "slots",
-                F.filter(slot_map, lambda s: s["tid"] == F.col("term_id")),
-            )
-            .select(
-                "doc_id",
-                F.explode("slots").alias("s"),
-                F.col("pos"),
-            )
-            .select(
-                "doc_id",
-                F.col("s.slot").alias("slot"),
-                (F.col("pos") - F.col("s.slot")).alias("adj_pos"),
-            )
-        )
-        return (
-            slotted.groupBy("doc_id", "adj_pos")
-            .agg(F.countDistinct("slot").alias("n_slots"))
-            .filter(F.col("n_slots") == n)
-            .select("doc_id")
-            .distinct()
-        )
+        (`Query.h:219-226`, `Matches.cpp:252`; SURVEY.md O5). A term may be
+        a bigram term ("t_i t_{i+1}" at slot i: bigram positions are
+        first-word ordinals) and may repeat. ``restrict`` (a small
+        (doc_id, ...) DataFrame, e.g. a WAND candidate page) narrows
+        verification to those docs before the per-doc pivot -- at scale the
+        termlist of a common word is huge, but the candidate page is O(k).
+        The match is _phrase_postings'."""
+        return self._phrase_postings(phrase_terms, restrict).select("doc_id")
 
     def search_phrase(
         self, phrase_terms: list[str], k: int = 10, use_bigrams: bool = True
@@ -3291,20 +3020,12 @@ class SearchEngine:
         the same slot machinery applies); otherwise it falls back to
         positional intersection of the unigram lists. Results identical.
         """
-        terms = sorted(set(phrase_terms))
-        plan = self.plan_terms(terms)
-        if plan.empty or len(plan) < len(terms):
-            return _local_frame(
-                self.spark, "doc_id long, score double, matched int"
-            )
-        scored = self._aggregate_scores(
-            self._contributions(plan), len(plan)
-        ).where(f"matched = {len(plan)}")
+        plan = self.plan_terms(phrase_terms)
+        if _unanswerable(plan, phrase_terms, "AND"):
+            return _local_frame(self.spark, _SCORED)
         hits = self._phrase_hits(phrase_terms, use_bigrams)
-        return (
-            scored.join(hits, "doc_id", "left_semi")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return _page(
+            self._score_plan(plan, "AND").join(hits, "doc_id", "left_semi"), k
         )
 
     def term_docs(self, term: str) -> DataFrame:
@@ -3347,29 +3068,59 @@ class SearchEngine:
         return out.distinct()
 
     def _aggregate_scores(
-        self, contrib: DataFrame, n_slots: int, **features: str
+        self,
+        contrib: DataFrame,
+        entries: int | list[tuple[int, float]],
+        groups: list[list[int]] | None = None,
+        keys: tuple[str, ...] = ("doc_id",),
+        **features: str,
     ) -> DataFrame:
-        """Canonical-order float64 sum per doc: contributions added in term-
-        string-ascending order (bit-stable across partitionings). Returns
-        (doc_id, score, matched), plus one column per ``features`` entry
-        (name -> SQL aggregate over ``contrib``'s columns) computed in the
-        same aggregation.
+        """THE canonical-order float64 fold: every BM25 sum in the package
+        is computed here. Returns (*keys, score, matched), plus one column
+        per ``features`` entry (name -> SQL aggregate over ``contrib``'s
+        columns) computed in the same aggregation.
 
-        A PIVOTED hash aggregation over the ``n_slots`` term slots of
-        ``contrib`` (_contributions: slot i is the i-th term in string
-        order) -- one conditional-sum column per slot, then a fixed-order
-        fold -- which map-side partial-aggregates. The add sequence is
-        0.0 + c_t1 + c_t2 ... skipping absent terms (coalesce-to-0.0 is
-        bit-identical to skipping for positive contributions)."""
-        g = contrib.groupBy("doc_id").agg(
-            *[
-                F.expr(f"sum(CASE WHEN slot = {i} THEN contrib END) AS _c{i}")
-                for i in range(n_slots)
-            ],
-            F.expr("CAST(count(1) AS INT) AS matched"),
+        A PIVOTED hash aggregation of ``contrib`` (slot, contrib) rows per
+        ``keys`` (doc_id; (query_id, doc_id) for a batch) -- one
+        conditional-sum column per slot, then a fixed-order fold -- which
+        map-side partial-aggregates. ``entries`` is the fold: (slot,
+        weight) pairs added in list order, 0.0 + w_0 * c_0 + w_1 * c_1 ...;
+        an int n means slots 0..n-1 at weight 1.0, the plain query's
+        term-string order (_contributions). A slot may repeat (a term in
+        two vote groups); weight 1.0 multiplies nothing. An absent slot
+        adds w * 0.0 (coalesce-to-0.0 is bit-identical to skipping for
+        positive contributions), so the fold is linear in the entries --
+        a skip written as when/otherwise would copy the accumulated tree
+        into both branches, O(2^n) expression nodes for a wide group.
+
+        ``groups``: vote groups as lists of slots; matched counts the
+        groups with any slot present. None: every contribution row is its
+        own vote (count(1)), the plain-term case."""
+        from .hot_cache import _sql_double
+
+        if isinstance(entries, int):
+            entries = [(i, 1.0) for i in range(entries)]
+        matched = "matched"
+        aggs = [
+            f"sum(CASE WHEN slot = {i} THEN contrib END) AS _c{i}"
+            for i in sorted({s for s, _ in entries})
+        ]
+        if groups is None:
+            aggs.append("CAST(count(1) AS INT) AS matched")
+        else:
+            matched = " + ".join(
+                "CAST(({}) AS INT)".format(
+                    " OR ".join(f"_c{s} IS NOT NULL" for s in grp)
+                )
+                for grp in groups
+            ) + " AS matched"
+        g = contrib.groupBy(*keys).agg(
+            *[F.expr(e) for e in aggs],
             *[F.expr(f"{e} AS {name}") for name, e in features.items()],
         )
-        fold = " + ".join(
-            ["0.0D"] + [f"coalesce(_c{i}, 0.0D)" for i in range(n_slots)]
-        )
-        return g.selectExpr("doc_id", f"{fold} AS score", "matched", *features)
+        fold = " + ".join(["0.0D"] + [
+            f"coalesce(_c{s}, 0.0D)" if w == 1.0
+            else f"{_sql_double(w)} * coalesce(_c{s}, 0.0D)"
+            for s, w in entries
+        ])
+        return g.selectExpr(*keys, f"{fold} AS score", matched, *features)

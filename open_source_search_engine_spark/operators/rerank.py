@@ -65,7 +65,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import _local_frame
-from .query import _BATCH_SCHEMA, _rank_branch, boost_multiplier
+from .query import (
+    _BATCH_SCHEMA, _SCORED, _page, _rank_branch, _unanswerable,
+    boost_multiplier,
+)
 
 
 @dataclass(frozen=True)
@@ -221,9 +224,9 @@ def wand_rerank(
     from .wand import wand_search
 
     spark = engine.spark
-    empty = _local_frame(spark, "doc_id long, score double, matched int")
+    empty = _local_frame(spark, _SCORED)
     plan = engine.plan_terms(terms)
-    if plan.empty or (mode == "AND" and len(plan) < len(set(terms))):
+    if _unanswerable(plan, terms, mode):
         return empty
     if mod.single_term_final and len(plan) < 2:
         return wand_search(engine, terms, mode, k, **wand_kwargs)
@@ -241,11 +244,7 @@ def wand_rerank(
         if not cand_rows:
             return empty
         cand_df = _local_frame(spark, cands.schema, cand_rows)
-        top = (
-            mod.rescore(cand_df, terms_of)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        top = _page(mod.rescore(cand_df, terms_of), k)
         rows = top.collect()
         if len(cand_rows) < m:
             break  # the candidate set is the whole match set
@@ -286,7 +285,7 @@ def batch_rerank(
         k = int(q.get("k", default_k))
         terms = sorted(set(q["terms"]))
         present = [t for t in terms if t in df_of]
-        if not present or (mode == "AND" and len(present) < len(terms)):
+        if _unanswerable(present, terms, mode):
             continue  # unanswerable -> no rows (search_terms contract)
         m = None  # None: the BM25 page is final (no rescoring)
         if not (mod.single_term_final and len(present) < 2):

@@ -67,15 +67,13 @@ from pyspark.sql import DataFrame
 from ..functions.bm25 import tf_norm
 from ..session import _local_frame
 from . import rerank
-from .query import _page
+from .query import _SCORED, _page, _unanswerable
 
 EPS = 1e-9
 
 #: replication budget: a coarse block overlaps at most ~2^this many groups
 #: (plus one doubling headroom for per-partition granularity drift)
 MAX_GROUP_SPLIT = 6
-
-_SCHEMA = "doc_id long, score double, matched int"
 
 
 def pick_granularity(
@@ -177,8 +175,8 @@ def wand_search(
     exact runs (module doc) give the page, collected: the run frames are
     not returned, so the page plans as a LocalTableScan."""
     plan = engine.plan_terms(query_terms)
-    if plan.empty or (mode == "AND" and len(plan) < len(set(query_terms))):
-        return _local_frame(engine.spark, _SCHEMA)
+    if _unanswerable(plan, query_terms, mode):
+        return _local_frame(engine.spark, _SCORED)
     if k <= 0 or (mode == "AND" and int(plan["df"].min()) <= small_df_cutoff):
         return engine.search_after(query_terms, mode, k, after, exclude_terms)
     g, per, levels = _groups(engine, plan, max_group_split)
@@ -190,7 +188,7 @@ def wand_search(
     groups = ranked["group"].to_numpy(np.int64)
     bounds = ranked["bound"].to_numpy()
     if not len(groups):
-        return _local_frame(engine.spark, _SCHEMA)
+        return _local_frame(engine.spark, _SCORED)
 
     def run(m: int, complete_only: bool) -> list:
         """The page of the exact path over the top ``m`` groups' blocks."""
@@ -207,7 +205,7 @@ def wand_search(
     m_b = max(m_a, int(np.count_nonzero(bounds >= theta - EPS)))
     if partial or m_b > m_a:
         rows = run(m_b, False)
-    return _local_frame(engine.spark, _SCHEMA, rows)
+    return _local_frame(engine.spark, _SCORED, rows)
 
 
 def wand_proximity(
@@ -269,9 +267,7 @@ def wand_phrase(
             "result or use search_query's grammar"
         )
     if not phrase_terms:
-        return _local_frame(
-            engine.spark, "doc_id long, score double, matched int"
-        )
+        return _local_frame(engine.spark, _SCORED)
     if len(phrase_terms) == 1:
         return wand_search(engine, phrase_terms, "AND", k, **wand_kwargs)
     return rerank.wand_rerank(

@@ -5,6 +5,9 @@ terms (df of unigrams unchanged)."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,6 +94,16 @@ def test_bigram_postings_termlist_equals_positional(spark, engines):
     assert sorted(
         int(r["tf"]) for r in big.bigram_postings("to", "be").collect()
     )  # non-empty for the planted phrase
+
+
+def test_expanded_bigram_boost_needs_no_join(engines):
+    """search_expanded's bigram boost is extra weighted entries in the one
+    vote-group aggregation, not a left join per word pair."""
+    big, _ = engines
+    for words in (["spark", "index"], ["to", "be"]):
+        assert len(big.plan_terms([" ".join(words)])) == 1  # indexed bigram
+        df = big.search_expanded(words, "AND", 10)
+        assert "Join" not in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_unigram_rankings_unaffected(spark, engines):
@@ -207,3 +220,117 @@ def test_unicode_mode_bigrams_with_non_ascii(spark, tmp_path_factory):
             for r in eng.search_phrase(phrase, 10, use_bigrams=False).collect()
         }
         assert via_bigram == via_positional == expect
+
+
+# -- page pins: every vote-group, batch and phrase entry point, bit for bit --
+
+PINNED_PAGES = Path(__file__).with_name("pinned_pages.json")
+SYN = {"spark": ["shard", "to be"], "index": ["query", "repeat repeat repeat"]}
+BATCH = [
+    {"query_id": "a", "terms": ["spark", "index"], "mode": "AND", "k": 7},
+    {"query_id": "b", "terms": ["the", "merge", "shard"], "mode": "OR"},
+    {"query_id": "c", "terms": ["zz_absent", "spark"], "mode": "AND"},
+    {"query_id": "d", "terms": ["zz_absent", "query"], "mode": "OR", "k": 5},
+    {"query_id": "e", "terms": ["rareterm_xyzzy"], "mode": "OR"},
+    {"query_id": "f", "terms": ["to", "be", "not"], "mode": "AND", "k": 3},
+]
+PHRASE_WORDS = [
+    ["repeat", "repeat"],
+    ["repeat", "repeat", "repeat"],
+    ["to", "be", "or", "not"],
+    ["to", "be", "or", "not", "to", "be"],
+    ["spark", "index"],
+    ["rareterm_xyzzy"],
+]
+
+
+def _rows(df):
+    """A frame's rows with every double as its exact hex bits."""
+    return [
+        [v.hex() if isinstance(v, float) else v for v in r]
+        for r in df.collect()
+    ]
+
+
+def pinned_pages(big, plain) -> dict:
+    """name -> rows of each entry point whose scoring or phrase matching
+    shares the canonical fold or the positional kernel; postings rows are
+    sorted, pages keep their order."""
+    out = {
+        "search_many": _rows(plain.search_many(BATCH)),
+        "search_many_heavy": _rows(
+            plain.search_many(BATCH, shared_scan_max_rows=300)
+        ),
+        "search_wildcard": _rows(
+            plain.search_wildcard(["sp*", "*dex", "merge"], "OR", 10)
+        ),
+        "search_wildcard_and": _rows(
+            plain.search_wildcard(
+                ["s*", "index"], "AND", 10, exclude_terms=["merge"]
+            )
+        ),
+        "search_fuzzy": _rows(plain.search_fuzzy(["spork", "index"], "AND", 10)),
+        "search_fuzzy_or": _rows(plain.search_fuzzy(["spork", "tabel"], "OR", 10)),
+        "search_prf": _rows(plain.search_prf(["spark", "index"], k=10)),
+        "search_prf_or": _rows(
+            plain.search_prf(["merge", "shard"], k=10, mode="OR", beta=0.25)
+        ),
+        "search_query_uor": _rows(plain.search_query("spark UOR shard index")),
+        "search_query_uor_not": _rows(
+            plain.search_query("(spark UOR shard) -merge", k=10)
+        ),
+    }
+    for name, e in (("big", big), ("plain", plain)):
+        for mode in ("AND", "OR"):
+            out[f"search_synonyms_{mode}_{name}"] = _rows(
+                e.search_synonyms(["spark", "index"], SYN, mode, 10)
+            )
+            for q in ("spark index", "to be or not", "the spark index"):
+                out[f"search_expanded_{mode}_{q}_{name}"] = _rows(
+                    e.search_expanded(q, mode, 10)
+                )
+        for words in PHRASE_WORDS:
+            key = " ".join(words)
+            out[f"phrase_postings_{key}_{name}"] = sorted(
+                _rows(e.phrase_postings(words))
+            )
+            out[f"phrase_docs_{key}_{name}"] = sorted(
+                _rows(e.phrase_docs(words))
+            )
+            out[f"search_phrase_{key}_{name}"] = _rows(e.search_phrase(words))
+        restrict = e.search_terms(["repeat"], "OR", 1)
+        out[f"phrase_docs_restrict_{name}"] = sorted(
+            _rows(e.phrase_docs(["repeat", "repeat"], restrict=restrict))
+        )
+        restrict = e.search_terms(["spark", "index"], "AND", 5)
+        out[f"phrase_docs_restrict_spark index_{name}"] = sorted(
+            _rows(e.phrase_docs(["spark", "index"], restrict=restrict))
+        )
+        for a, b in (("to", "be"), ("repeat", "repeat"), ("spark", "index")):
+            out[f"bigram_postings_{a} {b}_{name}"] = sorted(
+                _rows(e.bigram_postings(a, b))
+            )
+    out["phrase_docs_bigram_terms"] = sorted(
+        _rows(big.phrase_docs(["to be", "be or", "or not"]))
+    )
+    out["phrase_docs_bigram_terms_restrict"] = sorted(
+        _rows(
+            big.phrase_docs(
+                ["repeat repeat", "repeat repeat"],
+                restrict=big.search_terms(["repeat"], "OR", 1),
+            )
+        )
+    )
+    return out
+
+
+def test_pages_are_pinned_bit_for_bit(engines):
+    """Pages and postings rows (doc_id, score bits, matched / tf, dl) equal
+    the ones recorded in pinned_pages.json: folding every weighted BM25
+    sum in one place and matching every phrase with one kernel moved no
+    bit."""
+    got = json.loads(json.dumps(pinned_pages(*engines)))
+    want = json.loads(PINNED_PAGES.read_text())
+    assert sorted(got) == sorted(want)
+    for name in sorted(want):
+        assert got[name] == want[name], name

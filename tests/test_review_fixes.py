@@ -483,6 +483,32 @@ class TestPositionsGuard:
         hits = eng.bigram_postings("one", "two").collect()
         assert [r.doc_id for r in hits] == [1]
 
+    @pytest.mark.parametrize("bigrams", [False, True])
+    def test_phrase_matching_without_positions(self, spark, catalog, bigrams):
+        # a phrase over ONE termlist (an indexed 2-word bigram) answers
+        # without positions; every multi-slot match raises -- these all
+        # used to read the empty positions lists and match nothing
+        eng = _engine(
+            spark,
+            catalog,
+            [(1, "one two"), (2, "three four")],
+            store_positions=False,
+            bigrams=bigrams,
+        )
+        multi_slot = [
+            lambda: eng.phrase_docs(["one", "two"]),
+            lambda: eng.search_phrase(["one", "two", "three"]),
+        ]
+        two_words = [
+            lambda: eng.search_phrase(["one", "two"]),
+            lambda: eng.search_query('"one two"'),
+        ]
+        for call in multi_slot + ([] if bigrams else two_words):
+            with pytest.raises(ValueError, match="store_positions"):
+                call()
+        for call in two_words if bigrams else []:
+            assert [r.doc_id for r in call().collect()] == [1]
+
 
 # ---------------------------------------------------------------------------
 # pass 4: events/codec/multimodal/catalog edges

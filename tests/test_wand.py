@@ -125,8 +125,9 @@ def test_and_presence_pruning_prunes(eng):
     assert st2["granularity"] > 0  # heavy term keeps grouping fine
     assert st2["groups_total"] > 1  # no single-group collapse
     # the replicated rare block counts as "maybe present" everywhere, so
-    # metadata-level presence cannot prune it (surviving <= total); the
-    # rarest-first early exit inside the scorer does the per-group pruning
+    # metadata-level presence cannot prune it (surviving <= total); groups
+    # are pruned by their bounds against run A's theta, and the exact
+    # path's matched filter drops the docs that miss a term
     assert st2["groups_surviving"] <= st2["groups_total"]
 
 

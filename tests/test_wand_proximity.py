@@ -236,7 +236,7 @@ RERANK_JOB_PINS = {
     "wand_proximity": (
         lambda e: wand_proximity(e, ["spark", "index", "query"], k=10), 6
     ),
-    "wand_phrase": (lambda e: wand_phrase(e, ["to", "be"], k=10), 8),
+    "wand_phrase": (lambda e: wand_phrase(e, ["to", "be"], k=10), 6),
     "wand_boosted": (
         lambda e: wand_boosted(
             e, ["spark", "index"], "AND", 10, field_weights=ROLE_W
