@@ -982,7 +982,7 @@ def q_wand_proximity(spark, sf_dir):
     # r4-VERDICT task 1: proximity rescoring on the WAND scale path
     # (reference applies the sliding-window pair score to EVERY candidate,
     # PosdbTable.cpp:3404-3620; ours over-fetches c*k BM25 candidates via
-    # block-max WAND, rescores only those with the one-pass pair kernel
+    # block-max WAND, rescores only those with the shared pair bonus
     # under a bounded-bonus exactness guarantee, re-ranks). Three terms ->
     # three pair bonuses; formula identical to bm25_proximity's.
     eng = engine_for(spark, sf_dir)

@@ -3,7 +3,8 @@
 The north rule pins scoring to BM25 (the reference's own scorer is
 proximity-based and explicitly not TF/IDF, `html/faq.html:337`; its full
 formula is documented in SURVEY.md §4.5). One formula module guarantees the
-engine and the brute-force oracle cannot diverge:
+engine and the brute-force oracle cannot diverge: numpy for the driver and
+the oracle, SQL text (``idf_sql``, ``tf_norm_sql``) for every Spark plan:
 
     idf(df)     = ln((N - df + 0.5) / (df + 0.5) + 1)        (Lucene-style, >0)
     tf_norm     = tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
@@ -19,6 +20,7 @@ Tie-break contract (reference `TopTree.cpp:185-260` addNode and
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -55,53 +57,31 @@ def tf_norm(
     return tf * (params.k1 + 1.0) / denom
 
 
-def term_score(
-    tf: np.ndarray,
-    dl: np.ndarray,
-    df: float,
-    n_docs: int,
-    avgdl: float,
-    params: BM25Params = BM25Params(),
-) -> np.ndarray:
-    """Per-doc contribution of one term: idf * tf_norm."""
-    return float(idf(df, n_docs)) * tf_norm(tf, dl, avgdl, params)
+def sql_double(x: float) -> str:
+    """A float64 as Spark SQL text that parses back to the same bits:
+    ``repr`` is the shortest decimal that round-trips, the ``D`` suffix
+    types it DOUBLE."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"no SQL literal for {x!r}")
+    return f"{x!r}D"
 
 
-def max_term_score(
-    max_tf: int,
-    min_dl: int,
-    df: float,
-    n_docs: int,
-    avgdl: float,
-    params: BM25Params = BM25Params(),
-) -> float:
-    """Upper bound of a term's contribution over a posting block.
+def idf_sql(df: str, n_docs: int) -> str:
+    """SQL text of ``idf`` over the column ``df``."""
+    n, d = sql_double(n_docs), f"CAST({df} AS DOUBLE)"
+    return f"ln(({n} - {d} + 0.5D) / ({d} + 0.5D) + 1.0D)"
 
-    tf_norm is increasing in tf and decreasing in dl, so (block_max_tf,
-    block_min_dl) bounds every doc in the block. This is the block-max
-    metadata for WAND pruning -- the analog of the reference's
-    getMaxPossibleScore prefilter (`PosdbTable.cpp:3910-3947, 4351-4516`).
-    """
-    return float(
-        term_score(
-            np.asarray([max_tf]), np.asarray([min_dl]), df, n_docs, avgdl, params
-        )[0]
+
+def tf_norm_sql(tf: str, dl: str, avgdl: float, params: BM25Params) -> str:
+    """SQL text of ``tf_norm`` over the columns ``tf`` and ``dl``. The one
+    definition every Spark path uses -- exact (which WAND scores through),
+    batch, BM25F and the hot-term cache -- so they agree to the bit; only
+    numbers go into the text."""
+    k1, b = params.k1, params.b
+    tfd = f"CAST({tf} AS DOUBLE)"
+    return (
+        f"({tfd} * {sql_double(k1 + 1.0)} / ({tfd} + {sql_double(k1)}"
+        f" * ({sql_double(1.0 - b)} + {sql_double(b)}"
+        f" * CAST({dl} AS DOUBLE) / {sql_double(avgdl)})))"
     )
-
-
-def sql_score_expr(
-    tf_col: str,
-    dl_col: str,
-    df_col: str,
-    n_docs: str,
-    avgdl: str,
-    params: BM25Params = BM25Params(),
-) -> str:
-    """ANSI-SQL text of the same formula (used for Spark SQL and the DuckDB
-    oracle, so both gates compute from one string template)."""
-    i = f"ln(({n_docs} - {df_col} + 0.5) / ({df_col} + 0.5) + 1.0)"
-    t = (
-        f"({tf_col} * ({params.k1} + 1.0) / "
-        f"({tf_col} + {params.k1} * (1.0 - {params.b} + {params.b} * {dl_col} / {avgdl})))"
-    )
-    return f"({i} * {t})"

@@ -23,13 +23,11 @@ the cache until the next build/compaction rebuilds it.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from ..functions.bm25 import BM25Params
+from ..functions.bm25 import BM25Params, tf_norm_sql
 from ..session import _local_frame
 
 #: k1/b are part of the cache identity: the within-term ranking (tf_norm
@@ -39,29 +37,6 @@ from ..session import _local_frame
 HOT_META_SCHEMA = (
     "max_seg long, cache_k int, min_df long, avgdl double, k1 double, b double"
 )
-
-
-def _sql_double(x: float) -> str:
-    """A float64 as Spark SQL text that parses back to the same bits:
-    ``repr`` is the shortest decimal that round-trips, the ``D`` suffix
-    types it DOUBLE."""
-    x = float(x)
-    if not math.isfinite(x):
-        raise ValueError(f"no SQL literal for {x!r}")
-    return f"{x!r}D"
-
-
-def _tf_norm_sql(tf: str, dl: str, k1: float, b: float, avgdl: float) -> str:
-    """SQL text of the BM25 tf-normalization factor (score = idf * THIS)
-    over the integer columns ``tf`` and ``dl``. The one definition every
-    Spark path uses -- exact (which WAND scores through), batch and this
-    cache -- so they agree to the bit; only numbers go into the text."""
-    tfd = f"CAST({tf} AS DOUBLE)"
-    return (
-        f"({tfd} * {_sql_double(k1 + 1.0)} / ({tfd} + {_sql_double(k1)}"
-        f" * ({_sql_double(1.0 - b)} + {_sql_double(b)}"
-        f" * CAST({dl} AS DOUBLE) / {_sql_double(avgdl)})))"
-    )
 
 
 def build_hot_term_cache(
@@ -95,9 +70,7 @@ def build_hot_term_cache(
             )
         eng._tombstones = None
         w = Window.partitionBy("term_id").orderBy(
-            F.expr(
-                _tf_norm_sql("tf", "dl", params.k1, params.b, avgdl)
-            ).desc(),
+            F.expr(tf_norm_sql("tf", "dl", avgdl, params)).desc(),
             F.asc("doc_id"),
         )
         topk = (

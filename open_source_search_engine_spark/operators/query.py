@@ -6,16 +6,16 @@ intersection `PosdbTable.cpp:1935`, max-score pruning `:3910-3947`, TopTree
 bounded top-k `TopTree.cpp:185`) -> Msg3a::mergeLists k-way merge with
 score-desc / docid-asc tie-break (`Msg3a.cpp:807-811`).
 
-Spark-first re-expression -- one scorer and one phrase matcher, sharing
-one formula module:
+Spark-first re-expression -- one scorer, one positional pivot and one
+definition of each modifier, sharing one formula module (functions/bm25.py):
 
 * every BM25 sum -- exact, batch (search_many), vote groups (synonyms,
-  expansion, wildcards, fuzzy, UOR), the bigram boost and PRF's weighted
-  requery -- is ONE pivoted aggregation, ``_aggregate_scores``: per-(term,
-  doc) contributions idf * tf-norm (the plan's terms resolved in the
-  driver, their blocks decoded by a partition-pruned scan; see
-  ``_contributions``) pivot into one conditional-sum column per term
-  slot, folded as a fixed list of
+  expansion, wildcards, fuzzy, UOR), the bigram boost, PRF's weighted
+  requery and BM25F (search_fielded) -- is ONE pivoted aggregation,
+  ``_aggregate_scores``: per-(term, doc) contributions idf * tf-norm (the
+  plan's terms resolved in the driver, their blocks decoded by a
+  partition-pruned scan; see ``_contributions``) pivot into one
+  conditional-sum column per term slot, folded as a fixed list of
   (slot, weight) entries in a CANONICAL order -- float64 sums are
   bit-stable across partitionings (SURVEY.md §7.4.1), which search_after's
   cursor relies on. The page is ``_page``: ``ORDER BY score DESC, doc_id
@@ -23,16 +23,21 @@ one formula module:
   per-partition top-k + final merge, exactly the reference's TopTree ->
   Msg3a shape (SURVEY.md A9/T1/T2).
 
-* every quoted phrase, phrase member and bigram is ONE positional kernel,
-  ``_phrase_postings``: per doc, the intersection of each slot's positions
-  shifted by its slot index.
+* every positional read is ONE JVM pivot, ``_positions``: per doc (or
+  per (query, doc) for a batch), one positions array per term slot. Phrase
+  matching (``_phrase_postings``: the intersection of each slot's
+  positions shifted by its slot index, behind every quoted phrase, phrase
+  member and bigram), NEAR (the in-order gap) and the proximity bonus
+  (pair min-distances) are SQL array lambdas over it.
 
 * ``wand`` (block-max pruning, wand.py) chooses block groups in the
   driver from their upper bounds and scores them with the exact path
   (restricted runs of ``_score_plan``), so results are identical.
 
-Proximity, phrase and boost modifiers on the WAND and batch paths share one
-certified over-fetch re-rank (rerank.py).
+Proximity, phrase and boosts are each defined once, in rerank.py, as a
+``Modifier``: the exact path (search_proximity, search_phrase,
+search_boosted) is its no-over-fetch driver, and the WAND and batch paths
+share one certified over-fetch re-rank.
 
 AND semantics = doc must match every term group (`PosdbTable.cpp:2049`);
 OR = any term; NOT (-term) = anti-join (`Query.h:191-193`).
@@ -52,7 +57,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from ..functions.bm25 import BM25Params, idf as bm25_idf
+from ..functions.bm25 import (
+    BM25Params, idf as bm25_idf, idf_sql, sql_double, tf_norm_sql,
+)
 from ..functions.tokenizer import tokenize
 from ..session import _local_frame
 from .index_build import _check_block_format
@@ -61,119 +68,6 @@ from .index_build import _check_block_format
 @dataclass
 class QueryResult:
     df: DataFrame  # (doc_id, score, matched)
-
-
-def _pair_min_dist_bonus_udf():
-    """Arrow-vectorized proximity kernel: input is one array-of-arrays cell
-    per doc (slot i = the i-th query term's position list, lexicographic
-    term order); output is sum over slot pairs (i < j) of
-    ``1 / (min |p_i - p_j| + 1)``, accumulated in fixed pair order.
-
-    Per pair the min distance is the classic sorted two-pointer merge,
-    vectorized as searchsorted + neighbor compare -- O((tf_a + tf_b) log)
-    per doc instead of the O(tf_a * tf_b) position cross-product
-    (reference shape: `PosdbTable.cpp:3404-3620` sliding-window pair
-    scoring walks both lists linearly too). Built lazily: pandas_udf
-    resolution needs an active SparkSession."""
-
-    @F.pandas_udf("double")
-    def bonus(cells: pd.Series) -> pd.Series:
-        out = np.zeros(len(cells), dtype=np.float64)
-        for row_i, lists in enumerate(cells):
-            arrs = [
-                np.sort(np.asarray(ps, dtype=np.int64))
-                for ps in lists
-            ]
-            out[row_i] = _pairwise_bonus(arrs)
-        return pd.Series(out)
-
-    return bonus
-
-
-def _pairwise_bonus(arrs: list) -> float:
-    """sum over slot pairs (i < j) of 1/(min |p_i - p_j| + 1) for SORTED
-    int64 position arrays, fixed pair order (the proximity kernel's inner
-    loop). An empty array -- a term absent from the doc, or a batch slot
-    the query does not use -- adds nothing, so padding never moves a bit."""
-    total = 0.0
-    for i in range(len(arrs)):
-        a = arrs[i]
-        if a.size == 0:
-            continue
-        for j in range(i + 1, len(arrs)):
-            b = arrs[j]
-            if b.size == 0:
-                continue
-            # min |a - b|: for each a, nearest b is one of the two
-            # neighbors around its insertion point
-            idx = np.searchsorted(b, a)
-            best = np.iinfo(np.int64).max
-            left = idx > 0
-            if left.any():
-                best = min(
-                    best,
-                    int(np.min(a[left] - b[idx[left] - 1])),
-                )
-            right = idx < b.size
-            if right.any():
-                best = min(
-                    best,
-                    int(np.min(b[idx[right]] - a[right])),
-                )
-            total += 1.0 / (float(abs(best)) + 1.0)
-    return total
-
-
-def boost_multiplier(
-    docs: DataFrame,
-    field_weights: dict[str, tuple[dict[str, float], float]],
-    recency: tuple[str, float, float] | None,
-):
-    """Build the doc-level score multiplier shared by search_boosted (exact
-    path) and the boost re-rank (rerank.boosts): a pure JVM CASE/pow
-    projection over the documents table ``docs``.
-
-    Returns ``(mult_column, pruned_docs, max_multiplier)``: ``pruned_docs``
-    is ``docs`` pruned to doc_id + the boost columns; an unknown boost
-    column raises ValueError before any job runs. ``max_multiplier`` is
-    the provable upper bound on the multiplier any doc can receive — per
-    field column the max over the weight map plus the default, multiplied
-    across columns; the recency factor is 0.5^(max(age,0)/halflife) <= 1.0
-    (age clamps at 0), so it never raises the bound. The boost re-rank's
-    certificate rests on this bound."""
-    mult = F.lit(1.0)
-    max_mult = 1.0
-    need = sorted(field_weights)
-    for col in need:
-        wmap, default = field_weights[col]
-        case = F.lit(float(default))
-        # reversed when-chain so the FIRST sorted key is the OUTERMOST
-        # condition: evaluation order is deterministic regardless of
-        # dict insertion order
-        for val in sorted(wmap, reverse=True):
-            case = F.when(
-                F.col(col) == F.lit(val), F.lit(float(wmap[val]))
-            ).otherwise(case)
-        mult = mult * case
-        max_mult *= max([float(default)] + [float(w) for w in wmap.values()])
-    if recency is not None:
-        ts_col, now_epoch, halflife_days = recency
-        need = need + [ts_col]
-        age_days = F.greatest(
-            (F.lit(float(now_epoch)) - F.unix_timestamp(F.col(ts_col)))
-            / F.lit(86400.0),
-            F.lit(0.0),
-        )
-        mult = mult * F.pow(
-            F.lit(0.5), age_days / F.lit(float(halflife_days))
-        )
-    for col in need:
-        if col not in docs.columns:
-            raise ValueError(
-                f"unknown boost column '{col}' -- boostable columns "
-                f"are the documents columns {sorted(docs.columns)}"
-            )
-    return mult, docs.select("doc_id", *need), max_mult
 
 
 _BATCH_SCHEMA = (
@@ -209,9 +103,7 @@ def _page(
     SearchEngine.search_after). The cursor filters before the top-k, so a
     deep page costs what page 1 costs."""
     if after is not None:
-        from .hot_cache import _sql_double
-
-        s0, d0 = _sql_double(after[0]), int(after[1])
+        s0, d0 = sql_double(after[0]), int(after[1])
         scored = scored.where(
             f"score < {s0} OR (score = {s0} AND doc_id > {d0})"
         )
@@ -622,13 +514,10 @@ class SearchEngine:
             self._hot_meta["cache_k"]
         ):
             return None  # cache not deep enough for this k
-        from .hot_cache import _sql_double, _tf_norm_sql
 
         tid = int(plan["term_id"].iloc[0])
-        idf = _sql_double(plan["idf"].iloc[0])
-        tf_norm = _tf_norm_sql(
-            "tf", "dl", self.params.k1, self.params.b, self.avgdl
-        )
+        idf = sql_double(plan["idf"].iloc[0])
+        tf_norm = tf_norm_sql("tf", "dl", self.avgdl, self.params)
         return _page(
             self._hot_topk.where(f"term_id = {tid} AND rnk <= {int(k)}")
             .selectExpr(
@@ -668,10 +557,12 @@ class SearchEngine:
         never boosted above 1. ``now`` is an explicit parameter (not the
         wall clock) so results are deterministic and testable.
 
-        Plan shape: candidate set (score_terms, no top-k yet) hash-joined
-        to the doc store pruned to doc_id + the boost columns only, the
-        multiplier a pure JVM CASE/pow projection (whole-stage codegen,
-        no Python), then orderBy+limit → TakeOrderedAndProject. The join
+        Plan shape (rerank.exact over rerank.boosts, the multiplier the
+        WAND and batch paths share): candidate set (score_terms, no top-k
+        yet) hash-joined to the doc store pruned to doc_id + the boost
+        columns only, the multiplier a pure JVM CASE/pow projection
+        (whole-stage codegen, no Python), then orderBy+limit →
+        TakeOrderedAndProject. The join
         is the search_sorted/facets shape (J4 family): at 100 TB it is a
         shuffle hash join on doc_id of candidates × pruned doc columns —
         never the full doc rows, never a global sort.
@@ -680,21 +571,11 @@ class SearchEngine:
         limited to k. With no boosts configured this is exactly
         search_terms (identity gate in tests/test_boosted_search.py).
         """
-        field_weights = field_weights or {}
-        if not field_weights and recency is None:
-            return self.search_terms(
-                query_terms, mode=mode, k=k, exclude_terms=exclude_terms
-            )
-        mult, pruned_docs, _ = boost_multiplier(
-            self.catalog.read_table("documents"), field_weights, recency
-        )
-        scored = self.score_terms(query_terms, mode, exclude_terms)
-        joined = scored.join(pruned_docs, "doc_id")
-        return _page(
-            joined.withColumn("score", F.col("score") * mult).select(
-                "doc_id", "score", "matched"
-            ),
-            k,
+        from . import rerank
+
+        return rerank.exact(
+            self, query_terms, mode, k, exclude_terms,
+            rerank.boosts(self, field_weights, recency),
         )
 
     def search_proximity(
@@ -723,113 +604,16 @@ class SearchEngine:
         for the query's terms -- the scan prunes on term_id and reads the
         positions column only here.
 
-        ONE-PASS kernel (r2 VERDICT fix): the per-term position arrays
-        pivot into a single row per doc (one shuffle on doc_id), then one
-        Arrow-vectorized UDF computes every pair's min distance with the
-        classic O(tf_a + tf_b) sorted merge (searchsorted two-pointer) --
-        the previous plan paid one JOIN per term pair (O(p^2) joins) and
-        materialized the O(tf_a * tf_b) cross-product of positions per doc,
-        which is 10^4-10^6 array cells per doc for a stopword pair."""
-        plan = self.plan_terms(query_terms)
-        if _unanswerable(plan, query_terms, mode):
-            return _local_frame(self.spark, _SCORED)
-        scored = self.score_terms(
-            query_terms, mode=mode, exclude_terms=exclude_terms
-        )
-        terms = sorted(plan["term"])
-        if prox_weight == 0.0 or len(terms) < 2:
-            return _page(scored, k)
-        self._require_positions("the proximity boost")
-        tid_of = dict(zip(plan["term"], plan["term_id"]))
-        bonus = self.position_bonus(terms, tid_of)
-        out = scored.join(bonus, "doc_id", "left_outer")
-        score = F.when(
-            F.col("_bonus").isNotNull() & (F.col("_bonus") > 0.0),
-            F.col("score") + F.lit(float(prox_weight)) * F.col("_bonus"),
-        ).otherwise(F.col("score"))
-        return _page(out.select("doc_id", score.alias("score"), "matched"), k)
+        The bonus is SQL over the one positional pivot (_positions): no
+        Python worker. A query with fewer than two present terms has no
+        pair and gets search_terms' page; so does prox_weight=0 (gated).
+        The rescoring is rerank.proximity, shared with the WAND and batch
+        paths."""
+        from . import rerank
 
-    def position_bonus(
-        self,
-        terms: list[str],
-        tid_of: dict,
-        restrict: DataFrame | None = None,
-    ) -> DataFrame:
-        """(doc_id, _bonus): the term-pair min-distance proximity bonus for
-        the given (lexicographically sorted) query terms — the rescoring
-        stage of the exact path (search_proximity); the proximity re-rank
-        (rerank.proximity) goes through the same keyed core.
-
-        Pivot: one row per doc, one position array per query term (slot
-        order = lexicographic term order; segments' sub-arrays flatten
-        unsorted — min-dist is order-invariant, the kernel sorts), then the
-        one-pass Arrow kernel sums 1/(min|p_a-p_b|+1) over pairs.
-
-        ``restrict``: optional SMALL (doc_id, ...) frame — the over-fetched
-        candidate set. Broadcast semi-joined onto the decoded postings
-        BEFORE the pivot so the groupBy shuffles only candidate docs'
-        positions, not every posting of a common term."""
-        return self._keyed_position_bonus({None: terms}, tid_of, restrict)
-
-    def _keyed_position_bonus(
-        self,
-        terms_of: dict,
-        tid_of: dict,
-        restrict: DataFrame | None = None,
-    ) -> DataFrame:
-        """position_bonus keyed by doc_id (``terms_of == {None: terms}``)
-        or, for a batch, by (query_id, doc_id) with ``terms_of`` mapping
-        each query_id to its sorted terms (``restrict`` then carries both
-        keys). A batch pivots to the widest query's slot count; a narrower
-        query's extra slots stay empty and _pairwise_bonus skips empty
-        slots, so each (query, doc) bonus is bit-equal to the single-query
-        bonus of the same doc."""
-        decoded = self.decoded_postings(
-            sorted({int(tid_of[t]) for ts in terms_of.values() for t in ts}),
-            include_positions=True,
-        )
-        if None in terms_of:
-            keys = ["doc_id"]
-            slot_of = F.create_map(
-                *[
-                    lit
-                    for i, t in enumerate(terms_of[None])
-                    for lit in (F.lit(int(tid_of[t])), F.lit(i))
-                ]
-            )
-            decoded = decoded.withColumn("slot", slot_of[F.col("term_id")])
-        else:
-            keys = ["query_id", "doc_id"]
-            qterms = _local_frame(
-                self.spark,
-                "query_id string, term_id long, slot int",
-                [
-                    (qid, int(tid_of[t]), i)
-                    for qid, ts in terms_of.items()
-                    for i, t in enumerate(ts)
-                ],
-            )
-            decoded = decoded.join(F.broadcast(qterms), "term_id")
-        if restrict is not None:
-            decoded = decoded.join(
-                F.broadcast(restrict.select(*keys)), keys, "left_semi"
-            )
-        nslots = max(len(ts) for ts in terms_of.values())
-        posd = decoded.groupBy(*keys).agg(
-            *[
-                F.flatten(
-                    F.collect_list(
-                        F.when(F.col("slot") == i, F.col("positions"))
-                    )
-                ).alias(f"_p{i}")
-                for i in range(nslots)
-            ]
-        )
-        return posd.select(
-            *keys,
-            _pair_min_dist_bonus_udf()(
-                F.array(*[F.col(f"_p{i}") for i in range(nslots)])
-            ).alias("_bonus"),
+        return rerank.exact(
+            self, query_terms, mode, k, exclude_terms,
+            rerank.proximity(self, prox_weight),
         )
 
     def search_synonyms(
@@ -897,8 +681,6 @@ class SearchEngine:
         phrase occurrence count, weighted like any other alternative. A
         phrase absent from the corpus drops out of its group exactly like
         an absent term."""
-        from .hot_cache import _sql_double, _tf_norm_sql
-
         bases = sorted(groups)
         members = {m for g in groups.values() for m, _w in g}
         plan = self.plan_terms(sorted(m for m in members if " " not in m))
@@ -908,14 +690,12 @@ class SearchEngine:
         contribs = [] if plan.empty else [
             self._contributions(plan).select("doc_id", "slot", "contrib")
         ]
-        tf_norm = _tf_norm_sql(
-            "tf", "dl", self.params.k1, self.params.b, self.avgdl
-        )
+        tf_norm = tf_norm_sql("tf", "dl", self.avgdl, self.params)
         phrases = {m for m in members if " " in m} | {p for p, _ in boosts}
         for ph in sorted(phrases):
             hits, df_ph = self._phrase_stats(ph)
             if df_ph > 0:
-                idf = _sql_double(bm25_idf(float(df_ph), self.n_docs))
+                idf = sql_double(bm25_idf(float(df_ph), self.n_docs))
                 contribs.append(hits.selectExpr(
                     "doc_id", f"{len(slot_of)} AS slot",
                     f"{idf} * {tf_norm} AS contrib",
@@ -974,17 +754,6 @@ class SearchEngine:
             [bi] if len(self.plan_terms([bi])) else [a, b]
         )
 
-    def _require_positions(self, what: str) -> None:
-        """Fail loudly instead of silently returning empty/unboosted
-        results: store_positions=False blocks carry an empty positions
-        list, which positional intersection would read as no positions for
-        every doc."""
-        if not self.store_positions:
-            raise ValueError(
-                f"{what} needs word positions, but this index was built "
-                "with store_positions=False"
-            )
-
     def phrase_postings(self, words: list[str]) -> DataFrame:
         """(doc_id, tf, dl) of the exact n-word phrase: tf = number of
         start positions p with word_i at p+i for all i (the bigram-termlist
@@ -1015,42 +784,92 @@ class SearchEngine:
         (doc_id, ...) frame, e.g. a WAND candidate page) is broadcast
         semi-joined onto the decoded postings BEFORE the per-doc pivot, so
         the pivot shuffles candidate positions only."""
-        if len(slots) > 1:
-            self._require_positions("positional phrase matching")
         plan = self.plan_terms(slots)
         if _unanswerable(plan, slots, "AND"):
             return _local_frame(self.spark, _POSTINGS)
-        decoded = self._decoded(
-            [int(t) for t in plan["term_id"]], len(slots) > 1
-        )
-        if restrict is not None:
-            decoded = decoded.join(
-                F.broadcast(restrict.select("doc_id")), "doc_id", "left_semi"
-            )
         if len(slots) == 1:
+            decoded = self._decoded([int(plan["term_id"].iloc[0])])
+            if restrict is not None:
+                decoded = decoded.join(
+                    F.broadcast(restrict.select("doc_id")), "doc_id",
+                    "left_semi",
+                )
             return decoded.groupBy("doc_id").agg(
                 F.expr("CAST(sum(tf) AS INT) AS tf"),
                 F.expr("CAST(max(dl) AS INT) AS dl"),
             )
-        col = {t: f"_p{i}" for i, t in enumerate(sorted(set(slots)))}
-        tid_of = dict(zip(plan["term"], plan["term_id"]))
-        inter = col[slots[0]]
+        terms = sorted(set(slots))
+        inter = f"_p{terms.index(slots[0])}"
         for i, t in enumerate(slots[1:], 1):
-            shifted = f"transform({col[t]}, x -> x - {i})"
+            shifted = f"transform(_p{terms.index(t)}, x -> x - {i})"
             inter = f"array_intersect({inter}, {shifted})"
-        return decoded.groupBy("doc_id").agg(
-            *[
-                F.expr(
-                    f"flatten(collect_list(CASE WHEN term_id = "
-                    f"{int(tid_of[t])} THEN positions END)) AS {c}"
-                )
-                for t, c in col.items()
-            ],
-            F.expr("max(dl) AS dl"),
+        return self._positions(
+            {None: terms}, "positional phrase matching", restrict
         ).selectExpr(
             "doc_id", f"CAST(size({inter}) AS INT) AS tf",
             "CAST(dl AS INT) AS dl",
         ).where("tf > 0")
+
+    def _positions(
+        self, terms_of: dict, what: str, restrict: DataFrame | None = None
+    ) -> DataFrame:
+        """THE positional pivot, shared by phrase matching
+        (_phrase_postings), NEAR (search_near) and the proximity bonus
+        (rerank.proximity): per key, one positions array ``_p{i}`` per
+        slot i and the doc's length ``dl``, all in the JVM.
+
+        ``terms_of`` is ``{None: terms}`` (key doc_id, slot i =
+        ``terms[i]``) or, for a batch, query_id -> that query's terms (key
+        (query_id, doc_id); a slot beyond a query's terms stays empty). A
+        slot's array is its term's positions in the doc, flattened across
+        segments (unsorted), empty when the doc lacks the term.
+        ``restrict`` (a small frame carrying the keys, e.g. a re-rank's
+        candidates) is broadcast semi-joined onto the decoded postings
+        BEFORE the pivot, so the pivot shuffles candidate positions only.
+        Raises ValueError, naming ``what``, on an index built with
+        store_positions=False: its blocks carry empty positions lists,
+        which would read as no match for every doc."""
+        if not self.store_positions:
+            raise ValueError(
+                f"{what} needs word positions, but this index was built "
+                "with store_positions=False"
+            )
+        plan = self.plan_terms([t for ts in terms_of.values() for t in ts])
+        tid_of = {t: int(i) for t, i in zip(plan["term"], plan["term_id"])}
+        decoded = self._decoded(
+            sorted(tid_of.values()), include_positions=True
+        )
+        if None in terms_of:
+            keys = ["doc_id"]
+            slots = [f"term_id = {tid_of[t]}" for t in terms_of[None]]
+        else:
+            keys = ["query_id", "doc_id"]
+            qterms = _local_frame(
+                self.spark,
+                "query_id string, term_id long, slot int",
+                [
+                    (qid, tid_of[t], i)
+                    for qid, ts in terms_of.items()
+                    for i, t in enumerate(ts)
+                ],
+            )
+            decoded = decoded.join(F.broadcast(qterms), "term_id")
+            n = max(len(ts) for ts in terms_of.values())
+            slots = [f"slot = {i}" for i in range(n)]
+        if restrict is not None:
+            decoded = decoded.join(
+                F.broadcast(restrict.select(*keys)), keys, "left_semi"
+            )
+        return decoded.groupBy(*keys).agg(
+            *[
+                F.expr(
+                    f"flatten(collect_list(CASE WHEN {c} THEN positions END))"
+                    f" AS _p{i}"
+                )
+                for i, c in enumerate(slots)
+            ],
+            F.expr("max(dl) AS dl"),
+        )
 
     def search_expanded(
         self,
@@ -1260,8 +1079,6 @@ class SearchEngine:
                 n_required = len(present) if mode == "AND" else 1
                 shared.append((qid, present, n_required, k))
         if shared:
-            from .hot_cache import _tf_norm_sql
-
             tid_of = dict(zip(plan["term"], plan["term_id"]))
             idf_of = dict(zip(plan["term"], plan["idf"]))
             # each query's term at its own slot `pos` (the index in its
@@ -1279,9 +1096,7 @@ class SearchEngine:
                     for pos, t in enumerate(present)
                 ],
             )
-            tf_norm = _tf_norm_sql(
-                "tf", "dl", self.params.k1, self.params.b, self.avgdl
-            )
+            tf_norm = tf_norm_sql("tf", "dl", self.avgdl, self.params)
             contrib = self._decoded(
                 sorted({int(tid_of[t]) for q in shared for t in q[1]})
             ).join(F.broadcast(qmeta), "term_id").selectExpr(
@@ -1339,7 +1154,7 @@ class SearchEngine:
         mode) tagged with (query_id, rank).
 
         ONE search_many pass over-fetches BM25 candidates, ONE pass
-        rescores them with the shared pair kernel (rerank.batch_rerank;
+        rescores them with the shared pair bonus (rerank.batch_rerank;
         the certificate is explained in rerank.py); single-term queries
         have no pair and are final after the BM25 pass, and a query that
         fails its certificate takes its exact search_proximity page as a
@@ -1347,12 +1162,6 @@ class SearchEngine:
         bound is below it over-fetch their whole match set (default: a
         200k-row collect budget split across the batch). prox_weight=0
         delegates to search_many verbatim."""
-        if prox_weight == 0.0:
-            return self.search_many(
-                queries,
-                default_k=default_k,
-                shared_scan_max_rows=shared_scan_max_rows,
-            )
         from . import rerank
 
         return rerank.batch_rerank(
@@ -1385,13 +1194,6 @@ class SearchEngine:
         a union branch. ``exhaustive_df_cutoff`` as in
         search_many_proximity. No boosts configured -> search_many
         verbatim."""
-        field_weights = field_weights or {}
-        if not field_weights and recency is None:
-            return self.search_many(
-                queries,
-                default_k=default_k,
-                shared_scan_max_rows=shared_scan_max_rows,
-            )
         from . import rerank
 
         return rerank.batch_rerank(
@@ -1739,21 +1541,14 @@ class SearchEngine:
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("tf_page"))
         )
-        ts = self._term_stats.select("term", "df")
-        n = float(self.n_docs)
-        idf = F.log(
-            (F.lit(n) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-            + F.lit(1.0)
-        )
         return (
-            cand.join(ts, "term")
-            .filter(F.col("df") >= int(min_df))
-            .select(
+            cand.join(self._term_stats.select("term", "df"), "term")
+            .where(f"df >= {int(min_df)}")
+            .selectExpr(
                 "term",
-                (F.col("tf_page") * idf).alias("score"),
-                F.col("tf_page").cast("long").alias("tf_page"),
-                F.col("df").cast("long").alias("df"),
+                f"tf_page * {idf_sql('df', self.n_docs)} AS score",
+                "CAST(tf_page AS BIGINT) AS tf_page",
+                "CAST(df AS BIGINT) AS df",
             )
             .orderBy(F.desc("score"), F.asc("term"))
             .limit(int(top_terms))
@@ -1906,7 +1701,6 @@ class SearchEngine:
         )
         if plan.empty:
             return _local_frame(self.spark, schema)
-        from .hot_cache import _sql_double
 
         g = self._aggregate_scores(
             self._contributions(plan),
@@ -1917,7 +1711,7 @@ class SearchEngine:
             idf_sum="sum(idf)",
             dl="CAST(first(dl) AS INT)",
         )
-        n_q = _sql_double(float(len(set(query_terms))))
+        n_q = sql_double(float(len(set(query_terms))))
         return (
             g.selectExpr(
                 "doc_id",
@@ -1929,7 +1723,7 @@ class SearchEngine:
                 "tf_max",
                 "idf_sum",
                 "dl",
-                f"dl / {_sql_double(self.avgdl)} AS dl_norm",
+                f"dl / {sql_double(self.avgdl)} AS dl_norm",
             )
             .orderBy(F.desc("bm25"), F.asc("doc_id"))
             .limit(int(k))
@@ -2155,19 +1949,20 @@ class SearchEngine:
         is collected once — bounded by field cardinality, the analog of
         the term dictionary; a deployment materializes it at build time.
         Field-side candidates come from a BROADCAST join of that tiny
-        (value, term, tf) map against a column-pruned doc-store scan;
-        body-side candidates are the usual partition-pruned postings
-        decode. The two sides full-outer-join on (doc_id, term) — a
+        (value, term slot, tf) map against a column-pruned doc-store
+        scan; body-side candidates are the usual partition-pruned postings
+        decode. The two sides full-outer-join on (doc_id, slot) — a
         shuffle bounded by candidate count, not corpus size — and per-doc
         dl̃ joins in from the same pruned doc-store scan. (A production
         build stores w·dl_field next to dl in the postings rows — the
         build already stores dl — which collapses that join; here it is
-        derived so BM25F works on every existing index unchanged.)
+        derived so BM25F works on every existing index unchanged.) The
+        per-term contributions use bm25's SQL idf and tf-norm and fold in
+        _aggregate_scores in term-string order, like every BM25 sum.
         """
         from .index_build import doc_length_col
 
         w = float(field_weight)
-        k1, b = self.params.k1, self.params.b
         uniq = sorted(set(query_terms))
         plan = self.plan_terms(uniq)
         docs = self.catalog.read_table("documents")
@@ -2191,10 +1986,10 @@ class SearchEngine:
         for v in fvals:
             toks = self.tokenize_query(v or "")
             dlt[v] = len(toks)
-            for t in uniq:
+            for slot, t in enumerate(uniq):
                 c = toks.count(t)
                 if c:
-                    tmap.append((v, t, c))
+                    tmap.append((v, slot, c))
         # per-doc dl-tilde: dl_body (from text, == the indexed dl) plus
         # w * dl_field; ONE column-pruned doc-store projection reused by
         # both the field-candidate join and the dl join
@@ -2236,38 +2031,34 @@ class SearchEngine:
                 F.broadcast(
                     _local_frame(
                         self.spark,
-                        "term_id long, term string",
+                        "term_id long, slot int",
                         [
-                            (int(r.term_id), r.term)
+                            (int(r.term_id), uniq.index(r.term))
                             for r in plan.itertuples(index=False)
                         ],
                     )
                 ),
                 "term_id",
-            ).select("doc_id", "term", F.col("tf").alias("_tfb"))
+            ).select("doc_id", "slot", F.col("tf").alias("_tfb"))
         else:
-            body = _local_frame(
-                self.spark, "doc_id long, term string, _tfb int"
-            )
+            body = _local_frame(self.spark, "doc_id long, slot int, _tfb int")
         # field side: broadcast (value, term, tf) map into the doc store
         if tmap:
             fside = docs_aux.join(
                 F.broadcast(
                     _local_frame(
-                        self.spark, "_fv string, term string, _tft int", tmap
+                        self.spark, "_fv string, slot int, _tft int", tmap
                     )
                 ),
                 "_fv",
-            ).select("doc_id", "term", "_tft")
+            ).select("doc_id", "slot", "_tft")
         else:
-            fside = _local_frame(
-                self.spark, "doc_id long, term string, _tft int"
-            )
+            fside = _local_frame(self.spark, "doc_id long, slot int, _tft int")
         comb = (
-            body.join(fside, ["doc_id", "term"], "full_outer")
+            body.join(fside, ["doc_id", "slot"], "full_outer")
             .select(
                 "doc_id",
-                "term",
+                "slot",
                 (
                     F.coalesce(F.col("_tfb"), F.lit(0)).cast("double")
                     + F.lit(w) * F.coalesce(F.col("_tft"), F.lit(0))
@@ -2278,41 +2069,21 @@ class SearchEngine:
             # degenerates EXACTLY to plain BM25 (gated)
             .filter(F.col("_tfc") > 0)
         )
-        # union df per term -> idf-tilde (n_terms rows, broadcast back)
-        fdf = comb.groupBy("term").agg(
-            F.countDistinct("doc_id").alias("_df")
-        )
-        idf = F.log(
-            (F.lit(float(self.n_docs)) - F.col("_df") + 0.5)
-            / (F.col("_df") + 0.5)
-            + 1.0
-        )
-        scored = (
-            comb.join(F.broadcast(fdf), "term")
+        # union df per term -> idf-tilde (n_terms rows, broadcast back);
+        # the contributions fold in term-string slot order
+        fdf = comb.groupBy("slot").agg(F.countDistinct("doc_id").alias("_df"))
+        tf_norm = tf_norm_sql("_tfc", "_dlf", avgdlf, self.params)
+        contrib = (
+            comb.join(F.broadcast(fdf), "slot")
             .join(dl_side, "doc_id")
-            .select(
-                "doc_id",
-                (
-                    idf
-                    * (
-                        F.col("_tfc")
-                        * (k1 + 1.0)
-                        / (
-                            F.col("_tfc")
-                            + k1
-                            * (1.0 - b + b * F.col("_dlf") / F.lit(avgdlf))
-                        )
-                    )
-                ).alias("_c"),
-            )
-            .groupBy("doc_id")
-            .agg(
-                F.sum("_c").alias("score"),
-                F.count(F.lit(1)).cast("int").alias("matched"),
+            .selectExpr(
+                "doc_id", "slot",
+                f"{idf_sql('_df', self.n_docs)} * {tf_norm} AS contrib",
             )
         )
+        scored = self._aggregate_scores(contrib, len(uniq))
         if mode == "AND":
-            scored = scored.filter(F.col("matched") == len(uniq))
+            scored = scored.where(f"matched = {len(uniq)}")
         return _page(scored, k)
 
     def fetch_docs(self, doc_ids: list[int]) -> DataFrame:
@@ -2611,50 +2382,26 @@ class SearchEngine:
         instead of a rank bonus — the complement of search_proximity.
 
         Scale shape: same as phrase_docs — partition-pruned positional
-        postings for the two terms only, ONE groupBy(doc_id) pivot, the
-        gap scan as a JVM array lambda over the per-doc position arrays
-        (O(tf1·tf2) per doc on in-memory ints; per-doc tfs are tiny), then
-        the standard restricted scoring job. No corpus scan, no Python.
+        postings for the two terms only, the one per-doc positional pivot
+        (_positions), the gap scan as a JVM array lambda over the per-doc
+        position arrays (O(tf1·tf2) per doc on in-memory ints; per-doc tfs
+        are tiny), then the standard restricted scoring job. No corpus
+        scan, no Python.
         """
-        self._require_positions("search_near")
         if slop < 1:
             raise ValueError("slop must be >= 1")
-        out_schema = "doc_id long, score double, matched int, min_gap int"
-        plan = self.plan_terms([w1, w2])
-        if len(plan) < len({w1, w2}):
-            return _local_frame(self.spark, out_schema)
-        tid = dict(zip(plan["term"], plan["term_id"]))
-        decoded = self.decoded_postings(
-            [int(t) for t in plan["term_id"]], include_positions=True
-        )
-        pivot = (
-            decoded.groupBy("doc_id")
-            .agg(
-                F.max(
-                    F.when(
-                        F.col("term_id") == int(tid[w1]), F.col("positions")
-                    )
-                ).alias("p1"),
-                F.max(
-                    F.when(
-                        F.col("term_id") == int(tid[w2]), F.col("positions")
-                    )
-                ).alias("p2"),
+        if _unanswerable(self.plan_terms([w1, w2]), [w1, w2], "AND"):
+            return _local_frame(
+                self.spark,
+                "doc_id long, score double, matched int, min_gap int",
             )
-            .filter(F.col("p1").isNotNull() & F.col("p2").isNotNull())
-        )
-        gaps = F.flatten(
-            F.transform(
-                F.col("p1"),
-                lambda a: F.filter(
-                    F.transform(F.col("p2"), lambda b: b - a),
-                    lambda g: (g >= F.lit(1)) & (g <= F.lit(int(slop))),
-                ),
-            )
-        )
-        near = pivot.select(
-            "doc_id", F.array_min(gaps).alias("min_gap")
-        ).filter(F.col("min_gap").isNotNull())
+        terms = sorted({w1, w2})
+        p1, p2 = (f"_p{terms.index(w)}" for w in (w1, w2))
+        near = self._positions({None: terms}, "search_near").selectExpr(
+            "doc_id",
+            f"array_min(flatten(transform({p1}, a -> filter(transform({p2},"
+            f" b -> b - a), g -> g >= 1 AND g <= {int(slop)})))) AS min_gap",
+        ).where("min_gap IS NOT NULL")
         scored = self.score_terms(
             [w1, w2], "AND", filter_docs=near.select("doc_id")
         )
@@ -2965,18 +2712,14 @@ class SearchEngine:
         expressions over term_id, so the plan's constants need no frame of
         their own; only numbers go into the SQL text. ``blocks`` restricts
         the decode (_decoded)."""
-        from .hot_cache import _sql_double, _tf_norm_sql
-
         by_term = sorted(zip(plan["term"], plan["term_id"], plan["idf"]))
         idf = " ".join(
-            f"WHEN {int(t)} THEN {_sql_double(v)}" for _, t, v in by_term
+            f"WHEN {int(t)} THEN {sql_double(v)}" for _, t, v in by_term
         )
         slot = " ".join(
             f"WHEN {int(t)} THEN {i}" for i, (_, t, _) in enumerate(by_term)
         )
-        tf_norm = _tf_norm_sql(
-            "tf", "dl", self.params.k1, self.params.b, self.avgdl
-        )
+        tf_norm = tf_norm_sql("tf", "dl", self.avgdl, self.params)
         return self._decoded(
             [int(t) for t in plan["term_id"]], blocks=blocks
         ).selectExpr(
@@ -3020,12 +2763,11 @@ class SearchEngine:
         the same slot machinery applies); otherwise it falls back to
         positional intersection of the unigram lists. Results identical.
         """
-        plan = self.plan_terms(phrase_terms)
-        if _unanswerable(plan, phrase_terms, "AND"):
-            return _local_frame(self.spark, _SCORED)
-        hits = self._phrase_hits(phrase_terms, use_bigrams)
-        return _page(
-            self._score_plan(plan, "AND").join(hits, "doc_id", "left_semi"), k
+        from . import rerank
+
+        return rerank.exact(
+            self, sorted(set(phrase_terms)), "AND", k, None,
+            rerank.phrase(self, phrase_terms, use_bigrams),
         )
 
     def term_docs(self, term: str) -> DataFrame:
@@ -3096,8 +2838,6 @@ class SearchEngine:
         ``groups``: vote groups as lists of slots; matched counts the
         groups with any slot present. None: every contribution row is its
         own vote (count(1)), the plain-term case."""
-        from .hot_cache import _sql_double
-
         if isinstance(entries, int):
             entries = [(i, 1.0) for i in range(entries)]
         matched = "matched"
@@ -3120,7 +2860,7 @@ class SearchEngine:
         )
         fold = " + ".join(["0.0D"] + [
             f"coalesce(_c{s}, 0.0D)" if w == 1.0
-            else f"{_sql_double(w)} * coalesce(_c{s}, 0.0D)"
+            else f"{sql_double(w)} * coalesce(_c{s}, 0.0D)"
             for s, w in entries
         ])
         return g.selectExpr(*keys, f"{fold} AS score", matched, *features)

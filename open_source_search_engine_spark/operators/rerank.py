@@ -1,12 +1,14 @@
-"""Certified over-fetch re-rank: ONE algorithm behind proximity, quoted
-phrases and doc-level boosts on the WAND and batch serving paths.
+"""The score modifiers -- proximity, quoted phrases and doc-level boosts
+-- each written once, and the three drivers that apply them.
 
-The exact paths (SearchEngine.search_proximity / search_phrase /
-search_boosted) apply their modifier to the FULL BM25 match set, which at
-10^12-turn scale means pivoting every posting of a common term or joining
-billions of candidates to the doc store. The scale shape is the
-threshold-filtered top-k of the reference's PosdbTable pipeline
-(`PosdbTable.cpp:3910-3947` max-score prefilter, TopTree bounded top-k):
+``exact`` is the modifier's no-over-fetch driver (behind
+SearchEngine.search_proximity / search_phrase / search_boosted): it
+rescores the FULL BM25 match set, which at 10^12-turn scale means pivoting
+every posting of a common term or joining billions of candidates to the
+doc store. The WAND and batch serving paths instead share ONE certified
+over-fetch re-rank, the threshold-filtered top-k of the reference's
+PosdbTable pipeline (`PosdbTable.cpp:3910-3947` max-score prefilter,
+TopTree bounded top-k):
 
   1. over-fetch the true BM25 top-m candidates (m = overfetch * k, or the
      whole match set when its plan-time bound -- rarest df under AND,
@@ -26,8 +28,8 @@ affine ceiling on that BM25, ``scale * bm25 + shift``:
     candidates and leaves scores alone): ceiling = weakest, certified by
     >= (a survivor tied with an outside doc precedes it: survivors are
     candidates, which win the doc_id tie-break);
-  * boosts multiply by at most M (query.boost_multiplier's provable max
-    multiplier; BM25 is nonnegative, so the bound multiplies through):
+  * boosts multiply by at most M (``boosts``' provable max multiplier;
+    BM25 is nonnegative, so the bound multiplies through):
     ceiling = weakest * M, certified STRICTLY by > (an outside doc tied on
     BM25 and granted exactly M must not leapfrog on the doc_id tie-break).
 
@@ -49,9 +51,12 @@ Two drivers share the certificate:
     ONE over-fetch pass and ONE rescore pass; each query that fails its
     certificate becomes an exact union branch of the returned plan.
 
-A modifier supplies only its rescoring, its ceiling, its exact path and
-whether single-term queries skip rescoring (``Modifier``). Rank/score
-identity against the exact paths is gated in tests/test_wand_proximity.py,
+A modifier supplies only its rescoring, its ceiling and whether
+single-term queries skip rescoring (``Modifier``). Its factory returns
+None for an identity config (prox_weight 0, no boosts, a one-word
+phrase), and every driver then answers with its plain BM25 path
+(search_terms, wand_search, search_many). Rank/score identity of the
+re-rank drivers with ``exact`` is gated in tests/test_wand_proximity.py,
 tests/test_wand_phrase.py and tests/test_wand_boosted.py.
 """
 
@@ -64,32 +69,30 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.bm25 import sql_double
 from ..session import _local_frame
-from .query import (
-    _BATCH_SCHEMA, _SCORED, _page, _rank_branch, _unanswerable,
-    boost_multiplier,
-)
+from .query import _BATCH_SCHEMA, _SCORED, _page, _rank_branch, _unanswerable
 
 
 @dataclass(frozen=True)
 class Modifier:
-    """One re-rank modifier, as the shared drivers see it.
+    """One re-rank modifier, as the drivers see it.
 
-    ``rescore(cands, terms_of)``: ``cands`` is keyed by ``doc_id`` (single
-    query) or ``(query_id, doc_id)`` (batch) with BM25 ``score`` and
-    ``matched``; ``terms_of`` maps each query key (None for a single
-    query) to its sorted present terms. Returns the same columns with the
-    rescored ``score``; rows may be dropped, never added.
+    ``rescore(cands, terms_of, restrict)``: ``cands`` is keyed by
+    ``doc_id`` (single query) or ``(query_id, doc_id)`` (batch) with BM25
+    ``score`` and ``matched``; ``terms_of`` maps each query key (None for a
+    single query) to its sorted present terms. Returns the same columns
+    with the rescored ``score``; rows may be dropped, never added.
+    ``restrict``: ``cands`` is a small driver-built frame (the re-rank
+    drivers), broadcast into the rescoring; False on the exact path,
+    where ``cands`` is the whole match set.
     ``ceiling(n_terms)``: the certificate's ``(scale, shift)``.
-    ``exact(terms, mode, k, exclude_terms)``: the exact fallback page.
     """
 
-    rescore: Callable[[DataFrame, dict], DataFrame]
+    rescore: Callable[[DataFrame, dict, bool], DataFrame]
     ceiling: Callable[[int], tuple[float, float]]
     strict: bool
-    exact: Callable[..., DataFrame]
     single_term_final: bool = False
-    needs_positions: str | None = None
 
 
 class _Query(NamedTuple):
@@ -106,72 +109,153 @@ def _keys(cands: DataFrame) -> list[str]:
     return [c for c in ("query_id", "doc_id") if c in cands.columns]
 
 
-def proximity(engine, prox_weight: float) -> Modifier:
-    w = float(prox_weight)
+def _pair_bonus_sql(n: int) -> str:
+    """SQL text of the proximity bonus over the pivot's position slots
+    ``_p0 .. _p{n-1}`` (SearchEngine._positions): the sum over slot pairs
+    i < j, in that fixed order, of 1 / (min |p_i - p_j| + 1). A pair with
+    an empty slot -- a term the doc lacks, or a batch slot the query does
+    not use -- adds 0.0, so padding never moves a bit."""
+    bonus = ["0.0D"]
+    for i in range(n):
+        for j in range(i + 1, n):
+            d = (f"array_min(transform(_p{i}, x -> "
+                 f"array_min(transform(_p{j}, y -> abs(x - y)))))")
+            bonus.append(
+                f"CASE WHEN size(_p{i}) > 0 AND size(_p{j}) > 0"
+                f" THEN 1.0D / (CAST({d} AS DOUBLE) + 1.0D) ELSE 0.0D END"
+            )
+    return " + ".join(bonus)
 
-    def rescore(cands, terms_of):
-        # every term is already in the engine's plan cache: no job
-        plan = engine.plan_terms([t for ts in terms_of.values() for t in ts])
-        tid_of = dict(zip(plan["term"], plan["term_id"]))
-        bonus = engine._keyed_position_bonus(terms_of, tid_of, cands)
+
+def proximity(engine, prox_weight: float) -> Modifier | None:
+    """score + prox_weight * the term-pair min-distance bonus (reference:
+    the sliding-window pair score, `PosdbTable.cpp:3404-3620`; pair
+    formula ~ 1/(dist+1), `:744-810`). None at prox_weight 0."""
+    if prox_weight == 0.0:
+        return None
+    w = sql_double(prox_weight)
+
+    def rescore(cands, terms_of, restrict):
         keys = _keys(cands)
-        return cands.join(bonus, keys, "left_outer").select(
-            *keys,
-            (
-                F.col("score")
-                + F.lit(w) * F.coalesce(F.col("_bonus"), F.lit(0.0))
-            ).alias("score"),
-            "matched",
+        n = max(len(ts) for ts in terms_of.values())
+        bonus = engine._positions(
+            terms_of, "the proximity boost", cands if restrict else None
+        ).selectExpr(*keys, f"{_pair_bonus_sql(n)} AS _bonus")
+        return cands.join(bonus, keys, "left_outer").selectExpr(
+            *keys, f"score + {w} * coalesce(_bonus, 0.0D) AS score", "matched"
         )
 
     return Modifier(
         rescore=rescore,
-        ceiling=lambda n: (1.0, w * (n * (n - 1) // 2)),
+        ceiling=lambda n: (1.0, float(prox_weight) * (n * (n - 1) // 2)),
         strict=False,
-        exact=lambda terms, mode, k, excl: engine.search_proximity(
-            terms, k=k, prox_weight=w, mode=mode, exclude_terms=excl
-        ),
         single_term_final=True,
-        needs_positions="the proximity boost",
     )
 
 
-def phrase(engine, phrase_terms: list[str], use_bigrams: bool) -> Modifier:
-    # single-query only (keyed by doc_id): no batch phrase entry point exists
-    def rescore(cands, terms_of):
-        hits = engine._phrase_hits(phrase_terms, use_bigrams, restrict=cands)
+def phrase(engine, words: list[str], use_bigrams: bool) -> Modifier | None:
+    """Keep the docs holding the exact phrase (reference: quoted phrases
+    are position-verified, `Query.h:219-226`, `Matches.cpp:252`); scores
+    are unchanged. None for a phrase of fewer than two words. Single
+    query only (keyed by doc_id): no batch phrase entry point exists."""
+    if len(words) < 2:
+        return None
+
+    def rescore(cands, terms_of, restrict):
+        hits = engine._phrase_hits(
+            words, use_bigrams, restrict=cands if restrict else None
+        )
         return cands.join(hits, "doc_id", "left_semi")
 
     return Modifier(
-        rescore=rescore,
-        ceiling=lambda n: (1.0, 0.0),
-        strict=False,
-        exact=lambda terms, mode, k, excl: engine.search_phrase(
-            phrase_terms, k=k, use_bigrams=use_bigrams
-        ),
-        needs_positions="the phrase path",
+        rescore=rescore, ceiling=lambda n: (1.0, 0.0), strict=False
     )
 
 
-def boosts(engine, field_weights, recency) -> Modifier:
-    mult, pruned_docs, max_mult = boost_multiplier(
-        engine.catalog.read_table("documents"), field_weights, recency
-    )
+def boosts(
+    engine,
+    field_weights: dict[str, tuple[dict[str, float], float]] | None,
+    recency: tuple[str, float, float] | None,
+) -> Modifier | None:
+    """Doc-level score multipliers from document attributes, a pure JVM
+    CASE/pow projection over the documents table pruned to doc_id + the
+    boost columns (SearchEngine.search_boosted documents the config). None
+    when no boost is configured; an unknown boost column raises ValueError
+    before any job runs.
 
-    def rescore(cands, terms_of):
-        return F.broadcast(cands).join(pruned_docs, "doc_id").select(
+    The ceiling's scale is the provable max multiplier: per field column
+    the max over the weight map plus the default, multiplied across
+    columns; the recency factor 0.5^(max(age,0)/halflife) is <= 1.0 (age
+    clamps at 0), so it never raises the bound."""
+    field_weights = field_weights or {}
+    if not field_weights and recency is None:
+        return None
+    docs = engine.catalog.read_table("documents")
+    mult = F.lit(1.0)
+    max_mult = 1.0
+    need = sorted(field_weights)
+    for col in need:
+        wmap, default = field_weights[col]
+        case = F.lit(float(default))
+        # reversed when-chain so the FIRST sorted key is the OUTERMOST
+        # condition: evaluation order is deterministic regardless of
+        # dict insertion order
+        for val in sorted(wmap, reverse=True):
+            case = F.when(
+                F.col(col) == F.lit(val), F.lit(float(wmap[val]))
+            ).otherwise(case)
+        mult = mult * case
+        max_mult *= max([float(default)] + [float(w) for w in wmap.values()])
+    if recency is not None:
+        ts_col, now_epoch, halflife_days = recency
+        need = need + [ts_col]
+        age_days = F.greatest(
+            (F.lit(float(now_epoch)) - F.unix_timestamp(F.col(ts_col)))
+            / F.lit(86400.0),
+            F.lit(0.0),
+        )
+        mult = mult * F.pow(
+            F.lit(0.5), age_days / F.lit(float(halflife_days))
+        )
+    for col in need:
+        if col not in docs.columns:
+            raise ValueError(
+                f"unknown boost column '{col}' -- boostable columns "
+                f"are the documents columns {sorted(docs.columns)}"
+            )
+    pruned_docs = docs.select("doc_id", *need)
+
+    def rescore(cands, terms_of, restrict):
+        return (F.broadcast(cands) if restrict else cands).join(
+            pruned_docs, "doc_id"
+        ).select(
             *_keys(cands), (F.col("score") * mult).alias("score"), "matched"
         )
 
     return Modifier(
-        rescore=rescore,
-        ceiling=lambda n: (max_mult, 0.0),
-        strict=True,
-        exact=lambda terms, mode, k, excl: engine.search_boosted(
-            terms, mode=mode, k=k, field_weights=field_weights,
-            recency=recency, exclude_terms=excl,
-        ),
+        rescore=rescore, ceiling=lambda n: (max_mult, 0.0), strict=True
     )
+
+
+def exact(
+    engine,
+    terms: list[str],
+    mode: str,
+    k: int,
+    exclude_terms: list[str] | None,
+    mod: Modifier | None,
+) -> DataFrame:
+    """The modifier's exact page, with no over-fetch: the whole BM25 match
+    set rescored, then the top k. No modifier (an identity config), or a
+    single present term under a modifier that leaves those final, is
+    search_terms' page."""
+    plan = engine.plan_terms(terms)
+    if _unanswerable(plan, terms, mode):
+        return _local_frame(engine.spark, _SCORED)
+    if mod is None or (mod.single_term_final and len(plan) < 2):
+        return engine.search_terms(terms, mode, k, exclude_terms)
+    scored = engine._score_plan(plan, mode, exclude_terms)
+    return _page(mod.rescore(scored, {None: sorted(plan["term"])}, False), k)
 
 
 def _initial_m(k: int, overfetch: int, dfs, mode: str, cutoff: int) -> int:
@@ -214,13 +298,14 @@ def wand_rerank(
     terms: list[str],
     mode: str,
     k: int,
-    mod: Modifier,
+    mod: Modifier | None,
     overfetch: int,
     max_candidates: int,
     wand_kwargs: dict,
 ) -> DataFrame:
     """Single-query driver over wand_search (module doc: certificate and
-    escalation). Returns (doc_id, score, matched), top k."""
+    escalation). Returns (doc_id, score, matched), top k; no modifier is
+    wand_search's page."""
     from .wand import wand_search
 
     spark = engine.spark
@@ -228,14 +313,12 @@ def wand_rerank(
     plan = engine.plan_terms(terms)
     if _unanswerable(plan, terms, mode):
         return empty
-    if mod.single_term_final and len(plan) < 2:
+    if mod is None or (mod.single_term_final and len(plan) < 2):
         return wand_search(engine, terms, mode, k, **wand_kwargs)
-    if mod.needs_positions:
-        engine._require_positions(mod.needs_positions)
     excl = wand_kwargs.get("exclude_terms")
     cert = mod.ceiling(len(plan))
     if cert[0] <= 0.0:
-        return mod.exact(terms, mode, k, excl)
+        return exact(engine, terms, mode, k, excl, mod)
     m = _initial_m(k, overfetch, plan["df"], mode, max_candidates)
     terms_of = {None: sorted(plan["term"])}
     while True:
@@ -244,7 +327,7 @@ def wand_rerank(
         if not cand_rows:
             return empty
         cand_df = _local_frame(spark, cands.schema, cand_rows)
-        top = _page(mod.rescore(cand_df, terms_of), k)
+        top = _page(mod.rescore(cand_df, terms_of, True), k)
         rows = top.collect()
         if len(cand_rows) < m:
             break  # the candidate set is the whole match set
@@ -254,14 +337,14 @@ def wand_rerank(
             break
         m = _next_m(m, kth, bm25, cert, max_candidates)
         if m is None:
-            return mod.exact(terms, mode, k, excl)
+            return exact(engine, terms, mode, k, excl, mod)
     return _local_frame(spark, top.schema, rows)
 
 
 def batch_rerank(
     engine,
     queries: list[dict],
-    mod: Modifier,
+    mod: Modifier | None,
     default_k: int,
     overfetch: int,
     shared_scan_max_rows: int,
@@ -271,10 +354,14 @@ def batch_rerank(
     (query_id, rank, doc_id, score, matched); per query the modifier's
     exact page. Driver materialization is bounded by sum_q m_q rows;
     ``exhaustive_df_cutoff`` defaults to a 200k-row collect budget split
-    evenly across the batch, so the bound holds at any batch size."""
+    evenly across the batch, so the bound holds at any batch size. No
+    modifier is search_many's answer."""
     spark = engine.spark
-    if mod.needs_positions:
-        engine._require_positions(mod.needs_positions)
+    if mod is None:
+        return engine.search_many(
+            queries, default_k=default_k,
+            shared_scan_max_rows=shared_scan_max_rows,
+        )
     plan = engine.plan_terms(sorted({t for q in queries for t in q["terms"]}))
     df_of = dict(zip(plan["term"], plan["df"]))
     if exhaustive_df_cutoff is None:
@@ -325,7 +412,7 @@ def batch_rerank(
         )
         terms_of = {qid: meta[qid].present for qid in bm25_of}
         rows_of: dict[str, list] = {}
-        for r in mod.rescore(cand_df, terms_of).collect():
+        for r in mod.rescore(cand_df, terms_of, True).collect():
             rows_of.setdefault(r["query_id"], []).append(r)
         for qid, bm25 in sorted(bm25_of.items()):
             q = meta[qid]
@@ -344,6 +431,6 @@ def batch_rerank(
     for qid in sorted(fallback):
         q = meta[qid]
         out = out.unionByName(
-            _rank_branch(qid, mod.exact(q.present, q.mode, q.k, None))
+            _rank_branch(qid, exact(engine, q.present, q.mode, q.k, None, mod))
         )
     return out.orderBy("query_id", "rank")

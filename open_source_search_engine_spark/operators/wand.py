@@ -223,14 +223,12 @@ def wand_proximity(
     every candidate gets, `PosdbTable.cpp:3404-3620`).
 
     Over-fetches BM25 candidates with wand_search, rescores only those
-    with the shared pair kernel and certifies the page; the certificate,
+    with the shared pair bonus and certifies the page; the certificate,
     the tail-slope escalation up to ``max_candidates`` and the exact
     fallback are rerank.wand_rerank's (see rerank.py). ``wand_kwargs``
     go to wand_search; ``exclude_terms`` also reaches the exact fallback.
     prox_weight=0 (or a <2-term query) is wand_search verbatim —
     rank-identity gated in tests/test_wand_proximity.py."""
-    if prox_weight == 0.0:
-        return wand_search(engine, query_terms, "AND", k, **wand_kwargs)
     return rerank.wand_rerank(
         engine, query_terms, "AND", k, rerank.proximity(engine, prox_weight),
         overfetch, max_candidates, wand_kwargs,
@@ -266,10 +264,6 @@ def wand_phrase(
             "wand_phrase does not support exclude_terms; filter the "
             "result or use search_query's grammar"
         )
-    if not phrase_terms:
-        return _local_frame(engine.spark, _SCORED)
-    if len(phrase_terms) == 1:
-        return wand_search(engine, phrase_terms, "AND", k, **wand_kwargs)
     return rerank.wand_rerank(
         engine, sorted(set(phrase_terms)), "AND", k,
         rerank.phrase(engine, phrase_terms, use_bigrams),
@@ -294,13 +288,10 @@ def wand_boosted(
 
     Over-fetches BM25 candidates with wand_search, joins only those to
     the doc store pruned to the boost columns, applies the shared
-    multiplier (query.boost_multiplier) and certifies the page against
+    multiplier (rerank.boosts) and certifies the page against
     the max multiplier (rerank.wand_rerank; see rerank.py). No boosts
     configured -> wand_search verbatim; an unknown boost column raises
     ValueError. Gated in tests/test_wand_boosted.py."""
-    field_weights = field_weights or {}
-    if not field_weights and recency is None:
-        return wand_search(engine, query_terms, mode, k, **wand_kwargs)
     return rerank.wand_rerank(
         engine, query_terms, mode, k,
         rerank.boosts(engine, field_weights, recency),

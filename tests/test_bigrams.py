@@ -38,6 +38,30 @@ def engines(spark, tmp_path_factory):
     )
 
 
+@pytest.fixture(scope="module")
+def tombstoned(spark, tmp_path_factory):
+    """The plain engine's corpus after one update round: 40 turns
+    rewritten (a new segment) and 40 deleted, so reads go through the
+    tombstone filter."""
+    from open_source_search_engine_spark.operators.updates import apply_updates
+
+    docs = transcripts_to_docs(synth_transcripts(spark, N_TURNS))
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("tomb-wh")))
+    cfg = IndexConfig(tokenizer_mode="ascii")
+    build_index(spark, cat, docs, cfg)
+    ids = [r.doc_id for r in docs.select("doc_id").orderBy("doc_id").collect()]
+    rewritten = docs.where(F.col("doc_id").isin(ids[:40])).withColumn(
+        "text", F.lit("spark index query merge the spark to be index spark")
+    )
+    deleted = docs.where(F.col("doc_id").isin(ids[40:80])).select("doc_id")
+    apply_updates(
+        spark, cat, upserts=rewritten, delete_ids=deleted, config=cfg
+    )
+    eng = SearchEngine(spark, cat, tokenizer_mode="ascii")
+    assert eng._tombstones is not None
+    return eng
+
+
 def test_bigram_terms_in_stats(engines):
     big, _ = engines
     ts = big.catalog.read_table("term_stats")
@@ -252,7 +276,68 @@ def _rows(df):
     ]
 
 
-def pinned_pages(big, plain) -> dict:
+#: the modifier pages: proximity, boosts, phrase and NEAR on every path
+PROX_QUERIES = [
+    (["spark", "index"], "AND", None),
+    (["spark", "index"], "OR", None),
+    (["spark", "index", "query"], "AND", None),
+    (["spark", "index", "query"], "OR", None),
+    (["spark", "index", "query", "merge"], "AND", None),
+    (["spark", "index", "query", "merge"], "OR", None),
+    (["the", "to"], "AND", ["merge"]),
+    (["spark", "query", "the"], "OR", ["index"]),
+]
+ROLE_W = {"role": ({"user": 2.0, "assistant": 0.5}, 1.0)}
+RECENCY = ("ts", 1780272000.0, 30.0)  # now = 2026-06-01T00:00:00Z
+BOOSTS = [("role", ROLE_W, None), ("recency", None, RECENCY),
+          ("both", ROLE_W, RECENCY)]
+
+
+def modifier_pages(big, plain, tomb) -> dict:
+    """name -> rows of the exact, WAND and batch modifier entry points."""
+    from open_source_search_engine_spark.operators.wand import wand_proximity
+
+    out = {}
+    for name, e in (("plain", plain), ("tombstoned", tomb)):
+        for terms, mode, excl in PROX_QUERIES:
+            key = f"search_proximity_{' '.join(terms)}_{mode}_{excl}_{name}"
+            out[key] = _rows(e.search_proximity(
+                terms, k=10, prox_weight=1.5, mode=mode, exclude_terms=excl
+            ))
+    for bname, fw, rec in BOOSTS:
+        for mode, excl in (("AND", None), ("OR", ["merge"])):
+            out[f"search_boosted_{bname}_{mode}"] = _rows(plain.search_boosted(
+                ["spark", "index", "the"], mode, 10, field_weights=fw,
+                recency=rec, exclude_terms=excl,
+            ))
+        out[f"search_many_boosted_{bname}"] = _rows(plain.search_many_boosted(
+            BATCH, field_weights=fw, recency=rec
+        ))
+    for words in PHRASE_WORDS[:5]:
+        out[f"search_phrase_unigram_lists_{' '.join(words)}_big"] = _rows(
+            big.search_phrase(words, use_bigrams=False)
+        )
+    for terms in (["spark", "index"], ["spark", "index", "query"],
+                  ["the", "to"]):
+        for forced in (False, True):
+            kw = {"small_df_cutoff": 0} if forced else {}
+            out[f"wand_proximity_{' '.join(terms)}_{forced}"] = _rows(
+                wand_proximity(plain, terms, k=10, prox_weight=1.5, **kw)
+            )
+    out["search_many_proximity"] = _rows(
+        plain.search_many_proximity(BATCH, prox_weight=1.5)
+    )
+    for slop in (1, 3):
+        for name, e in (("plain", plain), ("tombstoned", tomb)):
+            for w1, w2 in (("spark", "index"), ("to", "be"), ("the", "to")):
+                out[f"search_near_{w1} {w2}_{slop}_{name}"] = [
+                    [r["doc_id"], r["min_gap"]]
+                    for r in e.search_near(w1, w2, slop=slop, k=10).collect()
+                ]
+    return out
+
+
+def pinned_pages(big, plain, tomb) -> dict:
     """name -> rows of each entry point whose scoring or phrase matching
     shares the canonical fold or the positional kernel; postings rows are
     sorted, pages keep their order."""
@@ -321,15 +406,17 @@ def pinned_pages(big, plain) -> dict:
             )
         )
     )
+    out.update(modifier_pages(big, plain, tomb))
     return out
 
 
-def test_pages_are_pinned_bit_for_bit(engines):
+def test_pages_are_pinned_bit_for_bit(engines, tombstoned):
     """Pages and postings rows (doc_id, score bits, matched / tf, dl) equal
     the ones recorded in pinned_pages.json: folding every weighted BM25
-    sum in one place and matching every phrase with one kernel moved no
+    sum in one place, matching every phrase with one kernel, writing each
+    modifier once and reading every position through one pivot moved no
     bit."""
-    got = json.loads(json.dumps(pinned_pages(*engines)))
+    got = json.loads(json.dumps(pinned_pages(*engines, tombstoned)))
     want = json.loads(PINNED_PAGES.read_text())
     assert sorted(got) == sorted(want)
     for name in sorted(want):

@@ -537,6 +537,42 @@ def test_batch_shared_scan_decode_has_no_python(eng):
     assert _executed_python_nodes(df) == []
 
 
+def test_proximity_has_no_python(eng, updated_eng, monkeypatch):
+    """The proximity bonus runs in the JVM on every strategy: the exact
+    page, the rescoring of forced two-phase WAND's candidates, and the
+    batch path's rescoring, with and without tombstones."""
+    import dataclasses
+
+    from open_source_search_engine_spark.operators import rerank
+    from open_source_search_engine_spark.operators.wand import wand_proximity
+
+    rescored = []
+    proximity = rerank.proximity
+
+    def recording(engine, prox_weight):
+        mod = proximity(engine, prox_weight)
+
+        def rescore(*args, **kwargs):
+            rescored.append(mod.rescore(*args, **kwargs))
+            return rescored[-1]
+
+        return dataclasses.replace(mod, rescore=rescore)
+
+    monkeypatch.setattr(rerank, "proximity", recording)
+    q = ["spark", "index", "query"]
+    batch = [
+        {"query_id": "a", "terms": q, "mode": "AND", "k": 5},
+        {"query_id": "b", "terms": ["user", "the"], "mode": "OR", "k": 5},
+    ]
+    for e in (eng, updated_eng):
+        assert _executed_python_nodes(e.search_proximity(q, k=10)) == []
+        wand_proximity(e, q, k=3, small_df_cutoff=0).collect()
+        e.search_many_proximity(batch).collect()
+    assert len(rescored) >= 4
+    for df in rescored:
+        assert _executed_python_nodes(df) == []
+
+
 def test_stored_postings_blocks_are_list_columns(eng):
     from pyspark.sql import types as T
 

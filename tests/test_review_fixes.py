@@ -509,6 +509,39 @@ class TestPositionsGuard:
         for call in two_words if bigrams else []:
             assert [r.doc_id for r in call().collect()] == [1]
 
+    def test_wand_phrase_over_one_bigram_termlist(self, spark, catalog):
+        # the re-rank answers a phrase that reads no positions instead of
+        # refusing it up front
+        from open_source_search_engine_spark.operators.wand import wand_phrase
+
+        eng = _engine(
+            spark,
+            catalog,
+            [(1, "one two"), (2, "three four")],
+            store_positions=False,
+            bigrams=True,
+        )
+        for page in (
+            eng.search_phrase(["one", "two"]),
+            wand_phrase(eng, ["one", "two"]),
+        ):
+            assert [r.doc_id for r in page.collect()] == [1]
+
+    def test_single_term_proximity_needs_no_positions(self, spark, catalog):
+        # a one-term query has no pair to score: exact and batch answer
+        eng = _engine(
+            spark,
+            catalog,
+            [(1, "one two"), (2, "three four")],
+            store_positions=False,
+        )
+        page = eng.search_proximity(["one"]).collect()
+        assert [r.doc_id for r in page] == [1]
+        rows = eng.search_many_proximity(
+            [{"query_id": "a", "terms": ["one"]}]
+        ).collect()
+        assert [(r.query_id, r.doc_id) for r in rows] == [("a", 1)]
+
 
 # ---------------------------------------------------------------------------
 # pass 4: events/codec/multimodal/catalog edges

@@ -456,6 +456,26 @@ def test_bm25f_matches_bruteforce_recompute(eng):
     assert got, "field-side hits must satisfy AND"
 
 
+def test_bm25f_page_is_bit_stable_across_partitionings(spark, eng):
+    # the per-doc sum folds in term-string order (_aggregate_scores), so
+    # the shuffle layout cannot move a bit of a score
+    pages = []
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            pages.append([
+                (r["doc_id"], r["score"].hex(), r["matched"])
+                for r in eng.search_fielded(
+                    ["spark", "user", "index"], "OR", 20, field_col="role",
+                    field_weight=2.0,
+                ).collect()
+            ])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert pages[0] and pages[0] == pages[1]
+
+
 def test_bm25f_field_hit_outranks_body_hit(spark, tmp_path_factory):
     # two docs, same body length: one has the query term ONLY in the
     # field (weighted 3x), one has it once in the body -- the field doc
