@@ -52,8 +52,10 @@ def py_term_ids(uniques) -> np.ndarray:
     return np.fromiter((py_term_id(t) for t in uniques), np.int64, len(uniques))
 
 
-def py_block_ids(doc_ids: np.ndarray, block_bits: int) -> np.ndarray:
-    """Block routing hash: splitmix64(doc_id) >> bits, sign bit masked.
+def py_block_ids(doc_ids: np.ndarray) -> np.ndarray:
+    """Block routing hash: splitmix64(doc_id), sign bit masked -- a 63-bit
+    hash whose top ``salt_bits`` bits are a doc's block_id at that
+    granularity (index_build._partial_encoder, resumable.route_tombstones).
     Hashing first keeps block populations uniform for ANY doc_id
     distribution; the same doc lands in the same block for every term.
     Vectorized uint64 arithmetic with intentional wraparound."""
@@ -62,12 +64,7 @@ def py_block_ids(doc_ids: np.ndarray, block_bits: int) -> np.ndarray:
         z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
         z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
         z = z ^ (z >> np.uint64(31))
-    return ((z & np.uint64(SIGN_MASK)) >> np.uint64(block_bits)).astype(np.int64)
-
-#: docs per posting block = 2**BLOCK_BITS of docid space. Because doc_ids are
-#: xxhash64 outputs (uniform), a block holds ~N / 2**(63-BLOCK_BITS) docs.
-#: pick_block_bits() sizes this from the corpus count.
-DEFAULT_TARGET_BLOCK_DOCS = 128
+    return (z & np.uint64(SIGN_MASK)).astype(np.int64)
 
 
 def doc_id_col(conv_id: Column, turn_idx: Column) -> Column:
@@ -82,16 +79,3 @@ def doc_id_col(conv_id: Column, turn_idx: Column) -> Column:
         F.concat(conv_id.cast("string"), F.lit(":"), turn_idx.cast("string"))
     ).bitwiseAND(F.lit(SIGN_MASK))
 
-
-def pick_block_bits(n_docs: int, target_block_docs: int = DEFAULT_TARGET_BLOCK_DOCS) -> int:
-    """Shift amount s.t. block_id = doc_id >> bits gives ~target docs/block.
-
-    doc_ids are uniform in [0, 2^63), so the expected docs per block of width
-    2^bits is n_docs * 2^bits / 2^63. Solve for bits; clamp to [20, 62].
-    """
-    import math
-
-    if n_docs <= 0:
-        return 62
-    bits = 63 - max(0, math.ceil(math.log2(max(1.0, n_docs / target_block_docs))))
-    return int(min(62, max(20, bits)))

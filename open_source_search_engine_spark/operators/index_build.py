@@ -32,6 +32,23 @@ salt (north rule's salted repartitioning); AQE splits residual imbalance.
 All ids are computed in Python (functions/hashing.py py_*) because the
 combiner never round-trips rows through the JVM; ids only need internal
 consistency, not parity with any JVM hash.
+
+One index writer -- every write path (build_index here,
+resumable.resumable_build, updates.apply_updates / compact_updates) is the
+same three steps, the analog of the reference's one Rdb dump/merge
+lifecycle (`RdbDump.cpp:251`, `RdbMerge.cpp:53`):
+
+  load_documents  dl column, documents write, ONE job for the doc_id
+                  collision audit + n_docs/avgdl
+  segment         build_postings, skip-terms filter, seg_seq
+  finish_index    term_stats, corpus_stats, update-state reset, hot cache
+                  (apply_updates keeps its delta term_stats and writes
+                  corpus_stats alone: write_corpus_stats)
+
+The tokenizer behind the combiner and tokenize_docs is ONE per-batch
+dispatch (_tokenize): the byte path for ASCII text, the regex path
+(_tokenize_batch, also the byte path's reference in the tests) for the
+rest, both ending in the same grouping (_group_terms).
 """
 
 from __future__ import annotations
@@ -53,7 +70,6 @@ from ..functions import codec
 from ..functions.bm25 import BM25Params
 from ..functions.hashing import (
     doc_id_col,
-    pick_block_bits,
     py_block_ids,
     py_term_id,
     py_term_ids,
@@ -123,7 +139,6 @@ def _check_block_format(postings: DataFrame) -> None:
 @dataclass
 class IndexConfig:
     tokenizer_mode: str = "unicode"
-    target_block_docs: int = 128
     target_reduce_docs: int = 8192
     bm25: BM25Params = field(default_factory=BM25Params)
     store_positions: bool = True
@@ -158,7 +173,6 @@ class BuildResult:
     avgdl: float
     n_terms: int
     n_blocks: int
-    block_bits: int
     elapsed_sec: float
 
 
@@ -221,6 +235,63 @@ def _bigram_ids(h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
     return (z & np.uint64((1 << 63) - 1)).astype(np.int64)
 
 
+def _group_terms(
+    b: pd.DataFrame,
+    tok_doc: np.ndarray,
+    tids: np.ndarray,
+    pos: np.ndarray,
+    dl: np.ndarray,
+    text_of,
+    term_strings: dict[int, str],
+    bigrams: bool,
+) -> dict[str, np.ndarray]:
+    """The tail both tokenizer paths share, over the batch's tokens in
+    document order (token i: doc row ``tok_doc[i]``, term id ``tids[i]``,
+    position ``pos[i]``, text ``text_of(i)``; ``dl`` per doc row).
+
+    Registers each new term id's string in ``term_strings``. With
+    ``bigrams``, adds one bigram entry per consecutive token pair of a doc
+    (SURVEY.md X3): positioned at the first word, term string "t1 t2", id
+    mixed from the member ids (_bigram_ids); the entries join the unigram
+    stream before grouping, so tf/positions aggregate the same way and dl
+    stays the unigram count. Then groups by (doc, term) in position order.
+
+    Returns doc_id/tid/tf/dl arrays, one entry per (doc, term) group, and
+    the sorted flat positions ``pos_flat`` (group i owns the next tf[i])."""
+    uniq, first_idx = np.unique(tids, return_index=True)
+    for u, fi in zip(uniq.tolist(), first_idx.tolist()):
+        if u not in term_strings:
+            term_strings[u] = text_of(fi)
+    g_doc, g_tid, g_pos = tok_doc, tids, pos
+    bi_idx = (
+        np.flatnonzero(tok_doc[1:] == tok_doc[:-1])
+        if bigrams else np.empty(0, np.int64)
+    )
+    if bi_idx.size:
+        bh = _bigram_ids(tids[bi_idx], tids[bi_idx + 1])
+        ub, fb = np.unique(bh, return_index=True)
+        for u, fi in zip(ub.tolist(), fb.tolist()):
+            if u not in term_strings:
+                i = bi_idx[fi]
+                term_strings[u] = f"{text_of(i)} {text_of(i + 1)}"
+        g_doc = np.concatenate([tok_doc, tok_doc[bi_idx]])
+        g_tid = np.concatenate([tids, bh])
+        g_pos = np.concatenate([pos, pos[bi_idx]])
+    order = np.lexsort((g_pos, g_tid, g_doc))
+    d_s, t_s, p_s = g_doc[order], g_tid[order], g_pos[order]
+    new_group = np.empty(d_s.size, dtype=bool)
+    new_group[0] = True
+    new_group[1:] = (d_s[1:] != d_s[:-1]) | (t_s[1:] != t_s[:-1])
+    g_starts = np.flatnonzero(new_group)
+    return {
+        "doc_id": b["doc_id"].to_numpy(dtype=np.int64)[d_s[g_starts]],
+        "tid": t_s[g_starts],
+        "tf": np.diff(np.append(g_starts, d_s.size)).astype(np.int64),
+        "dl": dl[d_s[g_starts]].astype(np.int64),
+        "pos_flat": p_s,
+    }
+
+
 def _tokenize_batch_fast(
     b: pd.DataFrame, term_strings: dict[int, str], bigrams: bool = False
 ):
@@ -234,12 +305,10 @@ def _tokenize_batch_fast(
     characters encode to bytes >= 0x80, which are non-token bytes, just as
     the characters themselves are outside [a-z0-9_].
 
-    Returns (doc_id, tid, tf, dl, pos_flat) per (doc, term) group and
-    updates ``term_strings`` (term_id -> term) with this batch's uniques.
+    Returns _group_terms' arrays, or None for a batch without tokens.
     """
     if len(b) == 0:
         return None
-    doc_ids_in = b["doc_id"].to_numpy(dtype=np.int64)
     enc = b["text"].fillna("").str.lower().str.encode("utf-8")
     byte_list = enc.tolist()
     doc_blens = np.fromiter((len(x) for x in byte_list), np.int64, len(b))
@@ -265,55 +334,74 @@ def _tokenize_batch_fast(
     # token ordinal within doc
     first_tok_of_doc = np.searchsorted(tok_doc, np.arange(len(b)), side="left")
     pos = np.arange(tok_doc.size, dtype=np.int64) - first_tok_of_doc[tok_doc]
-    dl = np.bincount(tok_doc, minlength=len(b)).astype(np.int64)
-    tids_tok = _fnv_hash_tokens(arr, tok_starts, tok_lens)
-    # register unique term strings (few per batch) for the output dictionary
-    uniq, first_idx = np.unique(tids_tok, return_index=True)
-    for u, fi in zip(uniq.tolist(), first_idx.tolist()):
-        if u not in term_strings:
-            term_strings[u] = (
-                arr[tok_starts[fi]: tok_ends[fi]].tobytes().decode("utf-8")
-            )
-    g_doc, g_tid, g_pos = tok_doc, tids_tok, pos
-    if bigrams and tok_doc.size > 1:
-        # bigram "terms" (SURVEY.md X3): one entry per consecutive token
-        # pair within a doc, positioned at the FIRST word; term string
-        # "t1 t2" registered for the dictionary. The bigram entries join the
-        # unigram stream before grouping, so tf/positions aggregate the
-        # same way; dl stays the unigram count.
-        adj = tok_doc[1:] == tok_doc[:-1]
-        bi_idx = np.flatnonzero(adj)
-        if bi_idx.size:
-            bh = _bigram_ids(tids_tok[bi_idx], tids_tok[bi_idx + 1])
-            ub, fb = np.unique(bh, return_index=True)
-            for u, fi in zip(ub.tolist(), fb.tolist()):
-                if u not in term_strings:
-                    i = bi_idx[fi]
-                    term_strings[u] = (
-                        arr[tok_starts[i]: tok_ends[i]].tobytes().decode("utf-8")
-                        + " "
-                        + arr[tok_starts[i + 1]: tok_ends[i + 1]]
-                        .tobytes()
-                        .decode("utf-8")
-                    )
-            g_doc = np.concatenate([tok_doc, tok_doc[bi_idx]])
-            g_tid = np.concatenate([tids_tok, bh])
-            g_pos = np.concatenate([pos, pos[bi_idx]])
-    # group by (doc, term_id); stable in position order
-    order = np.lexsort((g_pos, g_tid, g_doc))
-    d_s, t_s, p_s = g_doc[order], g_tid[order], g_pos[order]
-    new_group = np.empty(d_s.size, dtype=bool)
-    new_group[0] = True
-    new_group[1:] = (d_s[1:] != d_s[:-1]) | (t_s[1:] != t_s[:-1])
-    g_starts = np.flatnonzero(new_group)
-    tf = np.diff(np.append(g_starts, d_s.size)).astype(np.int64)
-    return {
-        "doc_id": doc_ids_in[d_s[g_starts]],
-        "tid": t_s[g_starts],
-        "tf": tf,
-        "dl": dl[d_s[g_starts]],
-        "pos_flat": p_s,
-    }
+    dl = np.bincount(tok_doc, minlength=len(b))
+    return _group_terms(
+        b, tok_doc, _fnv_hash_tokens(arr, tok_starts, tok_lens), pos, dl,
+        lambda i: arr[tok_starts[i]: tok_ends[i]].tobytes().decode("utf-8"),
+        term_strings, bigrams,
+    )
+
+
+def _tokenize_batch(
+    b: pd.DataFrame,
+    pattern,
+    term_strings: dict[int, str],
+    bigrams: bool = False,
+):
+    """Regex-path tokenizer (``pattern`` from tokenizer._pattern): the
+    reference the byte path is checked against, and the path of the rows
+    holding a non-ASCII character in unicode mode. Term ids come from
+    py_term_ids (value-identical to the byte path's vectorized FNV).
+    Returns _group_terms' arrays, or None for a batch without tokens."""
+    if len(b) == 0:
+        return None
+    lowered = b["text"].fillna("").str.lower()
+    token_lists = lowered.str.findall(pattern).to_numpy()
+    # value-compare, NOT `is`: the compiled pattern crosses the
+    # driver->executor pickle boundary and only aliases the module-level
+    # object while re's pattern cache happens to hold it
+    if pattern.pattern == _UNICODE_RE.pattern:
+        token_lists = expand_cjk_in_lists(lowered, token_lists)
+    lens = np.fromiter((len(t) for t in token_lists), np.int64, len(b))
+    if not (lens > 0).any():
+        return None
+    flat = np.concatenate([t for t in token_lists if t])
+    tok_doc = np.repeat(np.arange(len(b)), lens)
+    starts = np.cumsum(lens) - lens
+    pos = np.arange(flat.size, dtype=np.int64) - np.repeat(starts, lens)
+    codes, uniques = pd.factorize(pd.Series(flat), sort=False)
+    tids = py_term_ids(np.asarray(uniques, dtype=object))[codes]
+    return _group_terms(
+        b, tok_doc, tids, pos, lens, lambda i: str(flat[i]), term_strings,
+        bigrams,
+    )
+
+
+def _tokenize(
+    b: pd.DataFrame, mode: str, term_strings: dict[int, str], bigrams: bool
+):
+    """One batch -> _group_terms' arrays, or None: the build tokenizer of
+    the combiner and of tokenize_docs. ascii mode takes the byte path.
+    unicode mode takes it for the PURE-ASCII rows too (pure-ASCII lowered
+    text tokenizes identically under \\w+ and [a-z0-9_]+); only rows
+    holding a non-ASCII character take the regex path. Real transcript
+    corpora are mostly ASCII, so the default mode keeps most of the
+    byte-level speed."""
+    if mode == "ascii":
+        return _tokenize_batch_fast(b, term_strings, bigrams)
+    is_ascii = b["text"].fillna("").map(str.isascii).to_numpy()
+    parts = [
+        tk
+        for tk in (
+            _tokenize_batch_fast(b[is_ascii], term_strings, bigrams),
+            _tokenize_batch(b[~is_ascii], _pattern(mode), term_strings, bigrams),
+        )
+        if tk is not None
+    ]
+    if not parts:
+        return None
+    return {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
+
 
 def py_any_term_id(term: str) -> int:
     """Term id for unigram OR bigram term strings. A bigram term is the
@@ -329,106 +417,6 @@ def py_any_term_id(term: str) -> int:
     return py_term_id(term)
 
 
-def _tokenize_batch_with_bigrams(
-    b: pd.DataFrame, pattern, term_strings: dict[int, str]
-):
-    """Regex-path tokenizer emitting unigram AND bigram entries (SURVEY.md
-    X3) -- the unicode-mode counterpart of _tokenize_batch_fast(bigrams=
-    True). Term ids come from py_term_ids (value-identical to the byte
-    path's vectorized FNV), and bigram ids from the same member-id mix
-    (_bigram_ids), so a bigram indexed through either path gets one id.
-    Returns (doc_id, tid, tf, dl, pos_flat) arrays or None."""
-    if len(b) == 0:
-        return None
-    doc_ids_in = b["doc_id"].to_numpy(dtype=np.int64)
-    lowered = b["text"].fillna("").str.lower()
-    token_lists = lowered.str.findall(pattern).to_numpy()
-    # value-compare, NOT `is`: the compiled pattern crosses the
-    # driver->executor pickle boundary and only aliases the module-level
-    # object while re's pattern cache happens to hold it
-    if pattern.pattern == _UNICODE_RE.pattern:
-        token_lists = expand_cjk_in_lists(lowered, token_lists)
-    lens = np.fromiter((len(t) for t in token_lists), np.int64, len(b))
-    if not (lens > 0).any():
-        return None
-    flat = np.concatenate([t for t in token_lists if t])
-    doc_rep = np.repeat(np.arange(len(b)), lens)
-    starts = np.cumsum(lens) - lens
-    pos = np.arange(flat.size, dtype=np.int64) - np.repeat(starts, lens)
-    codes, uniques = pd.factorize(pd.Series(flat), sort=False)
-    tids_u = py_term_ids(np.asarray(uniques, dtype=object))
-    for u, t in zip(tids_u.tolist(), uniques):
-        if u not in term_strings:
-            term_strings[u] = t
-    tid = tids_u[codes]
-    g_doc, g_tid, g_pos = doc_rep, tid, pos
-    adj = doc_rep[1:] == doc_rep[:-1]
-    bi_idx = np.flatnonzero(adj)
-    if bi_idx.size:
-        bh = _bigram_ids(tid[bi_idx], tid[bi_idx + 1])
-        ub, fb = np.unique(bh, return_index=True)
-        for u, fi in zip(ub.tolist(), fb.tolist()):
-            if u not in term_strings:
-                i = bi_idx[fi]
-                term_strings[u] = f"{flat[i]} {flat[i + 1]}"
-        g_doc = np.concatenate([doc_rep, doc_rep[bi_idx]])
-        g_tid = np.concatenate([tid, bh])
-        g_pos = np.concatenate([pos, pos[bi_idx]])
-    order = np.lexsort((g_pos, g_tid, g_doc))
-    d_s, t_s, p_s = g_doc[order], g_tid[order], g_pos[order]
-    new_group = np.empty(d_s.size, dtype=bool)
-    new_group[0] = True
-    new_group[1:] = (d_s[1:] != d_s[:-1]) | (t_s[1:] != t_s[:-1])
-    g_starts = np.flatnonzero(new_group)
-    tf = np.diff(np.append(g_starts, d_s.size)).astype(np.int64)
-    return (
-        doc_ids_in[d_s[g_starts]],
-        t_s[g_starts],
-        tf,
-        lens[d_s[g_starts]].astype(np.int64),
-        p_s,
-    )
-
-
-def _tokenize_batch(b: pd.DataFrame, pattern):
-    """One Arrow batch -> per-(doc, term) numpy arrays.
-
-    Returns None for empty batches, else a dict with doc_id/term(object)/
-    tf/dl int arrays plus sorted flat positions (absolute token ordinals,
-    group-aligned with tf)."""
-    if len(b) == 0:
-        return None
-    doc_ids = b["doc_id"].to_numpy(dtype=np.int64)
-    lowered = b["text"].fillna("").str.lower()
-    token_lists = lowered.str.findall(pattern).to_numpy()
-    # value-compare, NOT `is` (see _tokenize_batch_with_bigrams)
-    if pattern.pattern == _UNICODE_RE.pattern:
-        token_lists = expand_cjk_in_lists(lowered, token_lists)
-    lens = np.fromiter((len(t) for t in token_lists), np.int64, len(b))
-    if not (lens > 0).any():
-        return None
-    flat = np.concatenate([t for t in token_lists if t])
-    doc_rep_idx = np.repeat(np.arange(len(b)), lens)
-    starts = np.cumsum(lens) - lens
-    pos = np.arange(flat.size, dtype=np.int64) - np.repeat(starts, lens)
-    codes, uniques = pd.factorize(pd.Series(flat), sort=False)
-    order = np.lexsort((pos, codes, doc_rep_idx))
-    d_s, c_s, p_s = doc_rep_idx[order], codes[order], pos[order]
-    new_group = np.empty(d_s.size, dtype=bool)
-    new_group[0] = True
-    new_group[1:] = (d_s[1:] != d_s[:-1]) | (c_s[1:] != c_s[:-1])
-    g_starts = np.flatnonzero(new_group)
-    tf = np.diff(np.append(g_starts, d_s.size)).astype(np.int64)
-    return {
-        "doc_id": doc_ids[d_s[g_starts]],
-        "terms": np.asarray(uniques, dtype=object),
-        "codes": c_s[g_starts],
-        "tf": tf,
-        "dl": lens[d_s[g_starts]].astype(np.int64),
-        "pos_flat": p_s,  # aligned: group i owns pos_flat[cum tf]
-    }
-
-
 def tokenize_docs(
     docs: DataFrame, mode: str = "unicode", bigrams: bool = False
 ) -> DataFrame:
@@ -442,47 +430,24 @@ def tokenize_docs(
     positioned at the first word; SURVEY.md X3) so stats deltas on a
     bigram-enabled index stay exact (operators/updates.py).
     """
-    pattern = _pattern(mode)
     src = docs.select("doc_id", "text")
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        term_strings: dict[int, str] = {}
         for rb in batches:
-            b = rb.to_pandas()
-            if bigrams:
-                term_strings: dict[int, str] = {}
-                if mode == "ascii":
-                    tk = _tokenize_batch_fast(b, term_strings, bigrams=True)
-                    out = (
-                        None
-                        if tk is None
-                        else (
-                            tk["doc_id"], tk["tid"], tk["tf"], tk["dl"],
-                            tk["pos_flat"],
-                        )
-                    )
-                else:
-                    out = _tokenize_batch_with_bigrams(
-                        b, pattern, term_strings
-                    )
-                if out is None:
-                    continue
-                doc_id, tid, tf, dl, pos_flat = out
-                terms = [term_strings[t] for t in tid.tolist()]
-            else:
-                tk = _tokenize_batch(b, pattern)
-                if tk is None:
-                    continue
-                doc_id, tf, dl, pos_flat = (
-                    tk["doc_id"], tk["tf"], tk["dl"], tk["pos_flat"]
-                )
-                terms = tk["terms"][tk["codes"]]
+            tk = _tokenize(rb.to_pandas(), mode, term_strings, bigrams)
+            if tk is None:
+                continue
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(doc_id, pa.int64()),
-                    pa.array(terms, pa.string()),
-                    pa.array(tf, pa.int32()),
-                    codec.doc_positions(tf, pos_flat),
-                    pa.array(dl, pa.int32()),
+                    pa.array(tk["doc_id"], pa.int64()),
+                    pa.array(
+                        [term_strings[t] for t in tk["tid"].tolist()],
+                        pa.string(),
+                    ),
+                    pa.array(tk["tf"], pa.int32()),
+                    codec.doc_positions(tk["tf"], tk["pos_flat"]),
+                    pa.array(tk["dl"], pa.int32()),
                 ],
                 names=TOKENS_SCHEMA.fieldNames(),
             )
@@ -593,82 +558,27 @@ def _partial_encoder(
     the same term; those rows stay separate blocks (ranges at different
     granularity must not merge), which the multi-row contract permits.
     """
-    pattern = _pattern(mode)
     max_kbits = 40
-
-    def tokenize_one(b: pd.DataFrame, term_strings: dict[int, str]):
-        """One batch -> (doc_id, tid, tf, dl, pos_flat) arrays or None.
-
-        unicode mode still fast-paths the PURE-ASCII rows of each batch
-        (pure-ASCII lowered text tokenizes identically under \\w+ and
-        [a-z0-9_]+); only rows containing non-ASCII characters take the
-        regex path. Real transcript corpora are mostly ASCII, so the
-        default mode keeps most of the byte-level speed."""
-        if mode == "ascii":
-            tk = _tokenize_batch_fast(b, term_strings, bigrams)
-            return (
-                None
-                if tk is None
-                else (tk["doc_id"], tk["tid"], tk["tf"], tk["dl"], tk["pos_flat"])
-            )
-        is_ascii = b["text"].fillna("").map(str.isascii).to_numpy()
-        parts = []
-        fa = b[is_ascii]
-        if len(fa):
-            tk = _tokenize_batch_fast(fa, term_strings, bigrams)
-            if tk is not None:
-                parts.append(
-                    (tk["doc_id"], tk["tid"], tk["tf"], tk["dl"], tk["pos_flat"])
-                )
-        fu = b[~is_ascii]
-        if len(fu):
-            if bigrams:
-                out = _tokenize_batch_with_bigrams(fu, pattern, term_strings)
-                if out is not None:
-                    parts.append(out)
-            else:
-                tk = _tokenize_batch(fu, pattern)
-                if tk is not None:
-                    tids_u = py_term_ids(tk["terms"])
-                    for u, t in zip(tids_u.tolist(), tk["terms"]):
-                        if u not in term_strings:
-                            term_strings[u] = t
-                    parts.append(
-                        (
-                            tk["doc_id"], tids_u[tk["codes"]], tk["tf"],
-                            tk["dl"], tk["pos_flat"],
-                        )
-                    )
-        if not parts:
-            return None
-        if len(parts) == 1:
-            return parts[0]
-        return tuple(
-            np.concatenate([p[i] for p in parts]) for i in range(5)
-        )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         term_strings: dict[int, str] = {}
-        doc_l, tid_l, tf_l, dl_l, pos_l = [], [], [], [], []
+        parts = []
         for rb in batches:
-            out = tokenize_one(rb.to_pandas(), term_strings)
-            if out is None:
-                continue
-            doc_b, tid_b, tf_b, dl_b, pos_b = out
-            doc_l.append(doc_b)
-            tid_l.append(tid_b)
-            tf_l.append(tf_b)
-            dl_l.append(dl_b)
-            if store_positions:
-                pos_l.append(pos_b)
-        if not doc_l:
+            tk = _tokenize(rb.to_pandas(), mode, term_strings, bigrams)
+            if tk is not None:
+                if not store_positions:
+                    del tk["pos_flat"]
+                parts.append(tk)
+        if not parts:
             return
-        doc_ids = np.concatenate(doc_l)
-        tid = np.concatenate(tid_l)
-        tfs = np.concatenate(tf_l)
-        dls = np.concatenate(dl_l)
+        doc_ids, tid, tfs, dls = (
+            np.concatenate([p[k] for p in parts])
+            for k in ("doc_id", "tid", "tf", "dl")
+        )
         positions = (
-            codec.doc_positions(tfs, np.concatenate(pos_l))
+            codec.doc_positions(
+                tfs, np.concatenate([p["pos_flat"] for p in parts])
+            )
             if store_positions
             else None
         )
@@ -682,7 +592,7 @@ def _partial_encoder(
             0,
             max_kbits,
         ).astype(np.int64)
-        h63 = py_block_ids(doc_ids, 0)  # full 63-bit doc hash
+        h63 = py_block_ids(doc_ids)
         sbits = kbits_u[inv]
         salt = h63 >> (np.int64(63) - sbits)
         perm = np.lexsort((doc_ids, salt, sbits, tid))
@@ -708,8 +618,7 @@ def _partial_encoder(
 # --------------------------------------------------------------------------
 
 def _tombstoned(
-    batch: pa.RecordBatch, row_idx: np.ndarray, doc_ids: np.ndarray,
-    has_seg: bool,
+    batch: pa.RecordBatch, row_idx: np.ndarray, doc_ids: np.ndarray
 ) -> np.ndarray:
     """Mask of the postings whose doc is in their row's ``tombs`` list with
     the row's seg_seq <= upto_seq (annihilation stays row-local)."""
@@ -723,21 +632,13 @@ def _tombstoned(
     t_doc = entries.field("doc_id").to_numpy(zero_copy_only=False)
     t_upto = entries.field("upto_seq").to_numpy(zero_copy_only=False)
     t_row = np.repeat(np.arange(batch.num_rows), n_t)
-    segs = (
-        batch.column("seg_seq").to_numpy(zero_copy_only=False)
-        if has_seg
-        else np.zeros(batch.num_rows, np.int64)
-    )
+    segs = batch.column("seg_seq").to_numpy(zero_copy_only=False)
     live = t_upto >= segs[t_row]
     dead = pd.MultiIndex.from_arrays([t_row[live], t_doc[live]])
     return pd.MultiIndex.from_arrays([row_idx, doc_ids]).isin(dead)
 
 
-def _merge_stream_factory(
-    store_positions: bool,
-    has_seg: bool = False,
-    packed_tombs: bool = False,
-):
+def _merge_stream_factory(store_positions: bool, packed_tombs: bool = False):
     """Streaming merge over rows sorted by (term_id, salt_bits, block_id
     [, seg_seq]): each group's partial rows (one per map partition /
     segment) merge into ONE posting block row. Partial and stored blocks
@@ -748,7 +649,7 @@ def _merge_stream_factory(
     (array<struct<doc_id, upto_seq>> | null) holding exactly THEIR block's
     tombstones, shipped by the distributed (salt_bits, block_id) join in
     resumable.route_tombstones -- a posting dies iff its doc is in the
-    row's tomb list with seg_seq <= upto_seq (needs has_seg). No global
+    row's tomb list with seg_seq <= upto_seq. No global
     tombstone state exists anywhere in the stream.
     """
 
@@ -765,7 +666,7 @@ def _merge_stream_factory(
         bid = per_posting("block_id")
         sbits = per_posting("salt_bits").astype(np.int64)
         if packed_tombs:
-            keep = ~_tombstoned(batch, row_idx, doc_ids, has_seg)
+            keep = ~_tombstoned(batch, row_idx, doc_ids)
             if not keep.all():
                 if positions is not None:
                     positions = positions.filter(pa.array(keep))
@@ -882,31 +783,43 @@ def term_stats_from_postings(postings: DataFrame) -> DataFrame:
     )
 
 
-def build_index(
+# --------------------------------------------------------------------------
+# the index writer: load documents -> segment(s) -> finish
+# --------------------------------------------------------------------------
+
+#: the one corpus_stats schema (write_corpus_stats); n_terms and n_blocks
+#: are the row counts of term_stats and postings when it was written
+CORPUS_STATS_SCHEMA = (
+    "n_docs long, avgdl double, n_terms long, n_blocks long,"
+    " store_positions boolean"
+)
+TOMBSTONES_SCHEMA = "doc_id long, upto_seq long"
+
+
+def load_documents(
     spark: SparkSession,
     catalog: Catalog,
     docs: DataFrame,
-    config: IndexConfig | None = None,
-) -> BuildResult:
-    """Full index build: documents + postings + term_stats + corpus_stats.
-
-    ``docs`` must have (doc_id long, text string, ...); use
-    transcripts_to_docs for the transcript input shape.
-    """
-    config = config or IndexConfig()
-    t0 = time.time()
-
+    mode: str,
+    kept: DataFrame | None = None,
+) -> tuple[DataFrame, int, float]:
+    """Write the documents table: ``docs`` (doc_id, text, ...) gain their
+    ``dl`` column and follow ``kept`` (rows that already carry dl: the
+    untouched docs of an update) when given. One job over the written
+    table then audits doc_id collisions (SURVEY.md §7.3) and sums the
+    corpus stats. Returns (the documents as written, n_docs, avgdl)."""
     # small inputs (few parquet splits) must not serialize the map stages:
-    # fan out to at least the cluster's parallelism before the heavy UDFs
+    # fan out to at least the cluster's parallelism before the heavy UDFs.
+    # An update's few new rows join the kept rows' partitions instead:
+    # fanning them out would only split the table into more files
     par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
+    if kept is None and docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par * 2)
-
-    docs = docs.withColumn("dl", doc_length_col(config.tokenizer_mode)(F.col("text")))
+    docs = docs.withColumn("dl", doc_length_col(mode)(F.col("text")))
+    if kept is not None:
+        docs = kept.unionByName(docs)
     catalog.write_table(docs, "documents")
     docs = catalog.read_table("documents")
-
-    # ONE job: doc_id collision audit (SURVEY.md §7.3) + corpus stats.
     # avgdl = exact integer sum / count, NOT F.avg: double summation order
     # varies with partitioning, and rank identity needs bit-stable avgdl
     stats_row = (
@@ -923,8 +836,24 @@ def build_index(
     if int(stats_row["n_rows"] or 0) != n_docs:
         raise ValueError("doc_id collision detected; rehash with a salt")
     avgdl = (int(stats_row["sum_dl"] or 0) / n_docs) if n_docs else 0.0
-    block_bits = pick_block_bits(n_docs, config.target_block_docs)
+    return docs, n_docs, avgdl
 
+
+def without_skip_terms(frame: DataFrame, skip_terms) -> DataFrame:
+    """X7 common-word skip (`XmlDoc_Indexing.cpp:1961-2022`): drop the rows
+    whose ``term`` is a skip word -- from a posting segment and from an
+    update's term_stats delta alike. dl already counts the skip words;
+    bigram terms containing one survive on purpose -- that is what phrase
+    search needs them for."""
+    if not skip_terms:
+        return frame
+    return frame.filter(~F.col("term").isin(list(skip_terms)))
+
+
+def segment(docs: DataFrame, config: IndexConfig, seg_seq: int) -> DataFrame:
+    """One posting segment of ``docs`` (build_postings under ``config``,
+    without the skip words' termlists), tagged ``seg_seq``: 0 for a full
+    build, the next sequence for an update's delta."""
     postings = build_postings(
         docs,
         config.target_reduce_docs,
@@ -932,54 +861,116 @@ def build_index(
         config.store_positions,
         config.bigrams,
     )
-    if config.skip_terms:
-        # X7: drop the skip words' unigram termlists AFTER encoding stats
-        # (dl already includes them); bigram terms containing a skip word
-        # survive on purpose -- that is what phrase search needs them for
-        skip_ids = [py_term_id(t) for t in config.skip_terms]
-        postings = postings.filter(~F.col("term_id").isin(skip_ids))
-    # seg_seq 0 = initial build; incremental updates append higher sequences
-    catalog.write_table(
-        postings.withColumn("seg_seq", F.lit(0).cast("long")), "postings"
+    return without_skip_terms(postings, config.skip_terms).withColumn(
+        "seg_seq", F.lit(seg_seq).cast("long")
     )
 
-    postings = catalog.read_table("postings")
-    catalog.write_table(term_stats_from_postings(postings), "term_stats")
 
+def write_corpus_stats(
+    spark: SparkSession,
+    catalog: Catalog,
+    n_docs: int,
+    avgdl: float,
+    store_positions: bool,
+) -> tuple[int, int]:
+    """Write corpus_stats over the current term_stats and postings tables.
+    Returns (n_terms, n_blocks)."""
     n_terms = catalog.read_table("term_stats").count()
-    n_blocks = postings.count()
-    corpus = _local_frame(
-        spark,
-        "n_docs long, avgdl double, block_bits int, n_terms long,"
-        " n_blocks long, store_positions boolean",
-        [(n_docs, avgdl, block_bits, n_terms, n_blocks,
-          bool(config.store_positions))],
+    n_blocks = catalog.read_table("postings").count()
+    catalog.write_table(
+        _local_frame(
+            spark,
+            CORPUS_STATS_SCHEMA,
+            [(n_docs, avgdl, n_terms, n_blocks, bool(store_positions))],
+        ),
+        "corpus_stats",
     )
-    catalog.write_table(corpus, "corpus_stats")
-    # a rebuild into a previously-updated catalog must not inherit stale
-    # tombstones / a nonzero segment sequence: doc_ids are deterministic,
-    # so an old tombstone would annihilate the rebuilt doc's seg-0
-    # postings (the doc would exist but be unsearchable)
-    if catalog.table_exists("tombstones") or catalog.table_exists("index_meta"):
-        from .updates import reset_update_state
+    return n_terms, n_blocks
 
+
+def stored_positions(catalog: Catalog) -> bool:
+    """The index's store_positions flag, as its build recorded it."""
+    return bool(catalog.read_table("corpus_stats").first()["store_positions"])
+
+
+def reset_update_state(spark: SparkSession, catalog: Catalog) -> None:
+    """Clear tombstones and reset the segment sequence to 0
+    (operators/updates.py): every prior version is physically gone."""
+    catalog.write_table(_local_frame(spark, TOMBSTONES_SCHEMA), "tombstones")
+    catalog.write_table(
+        _local_frame(spark, "max_seg long", [(0,)]), "index_meta"
+    )
+
+
+def finish_index(
+    spark: SparkSession,
+    catalog: Catalog,
+    corpus: tuple[int, float, bool] | None,
+    hot: tuple[int, int, BM25Params] | None,
+) -> tuple[int, int]:
+    """The last step of every full rewrite of the postings table
+    (build_index, resumable_build, compact_updates):
+
+    * term_stats from the postings (term_stats_from_postings);
+    * corpus_stats, when ``corpus`` = (n_docs, avgdl, store_positions) is
+      given (a compaction keeps the build's);
+    * the update state reset: doc_ids are deterministic, so a rebuild into
+      a previously-updated catalog would otherwise inherit tombstones that
+      annihilate the rebuilt docs' seg-0 postings;
+    * the hot-term cache (operators/hot_cache.py), when ``hot`` =
+      (min_df, cache_k, params) is given. A cache left by an earlier build
+      is never served: it names the postings snapshot it was built from.
+
+    Returns (n_terms, n_blocks), or (0, 0) without ``corpus``."""
+    catalog.write_table(
+        term_stats_from_postings(catalog.read_table("postings")), "term_stats"
+    )
+    counts = write_corpus_stats(spark, catalog, *corpus) if corpus else (0, 0)
+    if catalog.table_exists("tombstones") or catalog.table_exists("index_meta"):
         reset_update_state(spark, catalog)
-    if config.hot_cache_k:
+    if hot:
         from .hot_cache import build_hot_term_cache
 
-        build_hot_term_cache(
-            spark,
-            catalog,
-            min_df=max(2, int(n_docs * config.hot_cache_min_df_frac)),
-            cache_k=config.hot_cache_k,
-            params=config.bm25,
-            max_seg=0,
-        )
+        build_hot_term_cache(spark, catalog, *hot)
+    return counts
+
+
+def hot_cache_spec(
+    config: IndexConfig, n_docs: int
+) -> tuple[int, int, BM25Params] | None:
+    """finish_index's ``hot`` for a build under ``config``."""
+    if not config.hot_cache_k:
+        return None
+    min_df = max(2, int(n_docs * config.hot_cache_min_df_frac))
+    return min_df, config.hot_cache_k, config.bm25
+
+
+def build_index(
+    spark: SparkSession,
+    catalog: Catalog,
+    docs: DataFrame,
+    config: IndexConfig | None = None,
+) -> BuildResult:
+    """Full index build: documents + postings + term_stats + corpus_stats.
+
+    ``docs`` must have (doc_id long, text string, ...); use
+    transcripts_to_docs for the transcript input shape.
+    """
+    config = config or IndexConfig()
+    t0 = time.time()
+    docs, n_docs, avgdl = load_documents(
+        spark, catalog, docs, config.tokenizer_mode
+    )
+    catalog.write_table(segment(docs, config, 0), "postings")
+    n_terms, n_blocks = finish_index(
+        spark, catalog, (n_docs, avgdl, config.store_positions),
+        hot_cache_spec(config, n_docs),
+    )
     return BuildResult(
         n_docs=n_docs,
         avgdl=avgdl,
         n_terms=n_terms,
         n_blocks=n_blocks,
-        block_bits=block_bits,
         elapsed_sec=time.time() - t0,
     )
+

@@ -128,6 +128,30 @@ def _rank_branch(query_id: str, top_k: DataFrame) -> DataFrame:
     )
 
 
+def decode_postings(
+    postings: DataFrame,
+    term_ids: list[int],
+    include_positions: bool = False,
+    blocks: str | None = None,
+) -> DataFrame:
+    """The ``term_ids``' blocks of a postings table, exploded back to
+    (term_id, doc_id, tf, dl[, positions], seg_seq) rows in the JVM: the
+    blocks are list columns (format: functions/codec.py), so one
+    ``arrays_zip`` + ``inline`` replaces any Python decode hop. ``blocks``
+    (a SQL predicate over block columns) keeps only the matching blocks,
+    before ``inline``, so skipped blocks are never exploded."""
+    pos = ", positions" if include_positions else ""
+    ids = ", ".join(str(int(t)) for t in term_ids)
+    where = f"term_id IN ({ids})" if ids else "false"
+    if blocks is not None:
+        where = f"{where} AND ({blocks})"
+    return postings.where(where).selectExpr(
+        "term_id",
+        f"inline(arrays_zip(doc_ids, tfs, dls{pos})) AS (doc_id, tf, dl{pos})",
+        "seg_seq",
+    )
+
+
 class SearchEngine:
     """Serves BM25 queries against a built index (catalog tables)."""
 
@@ -147,14 +171,7 @@ class SearchEngine:
         row = catalog.read_table("corpus_stats").collect()[0]
         self.n_docs = int(row["n_docs"])
         self.avgdl = float(row["avgdl"])
-        self.block_bits = int(row["block_bits"])
-        # indexes written before the column existed always stored positions
-        sp = row.asDict().get("store_positions")
-        self.store_positions = True if sp is None else bool(sp)
-        if "seg_seq" not in self._postings.columns:
-            self._postings = self._postings.withColumn(
-                "seg_seq", F.lit(0).cast("long")
-            )
+        self.store_positions = bool(row["store_positions"])
         self._term_stats = catalog.read_table("term_stats")
         #: table -> (frame, its snapshot files) for _snapshot_rows, which
         #: reads the files with Arrow; a table that is not a file scan
@@ -191,32 +208,19 @@ class SearchEngine:
         else:
             self._tombstones = None
         # high-frequency-term shortcut cache (operators/hot_cache.py);
-        # consulted only while FRESH: any update bumps max_seg past the
-        # cached snapshot and the fast path falls back to the full scan.
-        # The cache's BM25 k1/b must ALSO match this engine's params: the
-        # cached within-term ranking is the tf_norm order, which depends on
-        # k1/b -- a cache built under different params would silently serve
-        # a wrongly-selected top-k (r2 ADVICE). Caches predating the k1/b
-        # columns are rejected the same way (missing -> mismatch).
+        # consulted only while FRESH: built from the current postings
+        # snapshot (any later update, merge or rebuild commits a new one),
+        # and under this engine's k1/b -- the cached within-term ranking is
+        # the tf_norm order, which depends on them, so a cache built under
+        # different params would silently serve a wrongly-selected top-k
         self._hot_topk = None
         self._hot_meta: dict | None = None
         if catalog.table_exists("hot_meta") and catalog.table_exists("hot_topk"):
             meta = catalog.read_table("hot_meta").collect()[0].asDict()
-            cur_seg = 0
-            if catalog.table_exists("index_meta"):
-                cur_seg = int(
-                    catalog.read_table("index_meta").collect()[0]["max_seg"]
-                )
-            params_ok = (
-                meta.get("k1") is not None
-                and meta.get("b") is not None
+            if (
+                meta.get("postings_snapshot") == catalog.snapshot_id("postings")
                 and float(meta["k1"]) == self.params.k1
                 and float(meta["b"]) == self.params.b
-            )
-            if (
-                int(meta["max_seg"]) == cur_seg
-                and float(meta["avgdl"]) == self.avgdl
-                and params_ok
             ):
                 self._hot_meta = meta
                 self._hot_topk = catalog.read_table("hot_topk")
@@ -278,9 +282,8 @@ class SearchEngine:
         self, term_ids: list[int], include_positions: bool = False
     ) -> DataFrame:
         """Partition-pruned scan of the query terms' blocks, exploded back
-        to (term_id, doc_id, tf, dl[, positions], seg_seq) rows in the JVM:
-        the blocks are list columns (format: functions/codec.py), so one
-        ``arrays_zip`` + ``inline`` replaces any Python decode hop."""
+        to postings (decode_postings), less the ones this engine's
+        tombstones annihilate."""
         return self._decoded(term_ids, include_positions)
 
     def _decoded(
@@ -290,18 +293,9 @@ class SearchEngine:
         blocks: str | None = None,
     ) -> DataFrame:
         """decoded_postings over only the blocks that match the SQL
-        predicate ``blocks`` (None: every block of the terms), applied
-        before ``inline``, so skipped blocks are never exploded."""
-        pos = ", positions" if include_positions else ""
-        ids = ", ".join(str(int(t)) for t in term_ids)
-        where = f"term_id IN ({ids})" if ids else "false"
-        if blocks is not None:
-            where = f"{where} AND ({blocks})"
-        decoded = self._postings.where(where).selectExpr(
-            "term_id",
-            f"inline(arrays_zip(doc_ids, tfs, dls{pos}))"
-            f" AS (doc_id, tf, dl{pos})",
-            "seg_seq",
+        predicate ``blocks`` (None: every block of the terms)."""
+        decoded = decode_postings(
+            self._postings, term_ids, include_positions, blocks
         )
         if self._tombstones is not None:
             decoded = (

@@ -22,7 +22,12 @@ recorded per partition"):
   AND whose input fingerprint still matches (stale partitions re-run).
 * Finalize: ALL committed segment dirs are registered into the ``postings``
   table in ONE atomic snapshot commit (merge fan-in = number of segments),
-  then term_stats / corpus_stats / build_metrics are derived.
+  then build_metrics is appended.
+
+The documents load, each partition's segment and the finish (term_stats,
+corpus_stats, update-state reset, hot cache) are the index writer's steps
+(index_build.load_documents, segment, finish_index), so a resumable build
+writes the index build_index writes, with per-partition blocks.
 
 At 10^12 turns each partition is a separate bounded Spark job; the driver
 loop is O(n_partitions), all data movement stays distributed.
@@ -40,13 +45,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import _PARQUET_WRITER, Catalog
-from ..functions.hashing import pick_block_bits
 from ..session import _local_frame
 from .index_build import (
+    POSTINGS_SCHEMA,
     IndexConfig,
-    build_postings,
-    doc_length_col,
-    term_stats_from_postings,
+    _check_block_format,
+    _merge_stream_factory,
+    finish_index,
+    hot_cache_spec,
+    load_documents,
+    segment,
+    stored_positions,
 )
 
 MANIFEST_SCHEMA = (
@@ -120,31 +129,9 @@ def resumable_build(
     """
     config = config or IndexConfig()
     t0 = time.time()
-
-    docs = docs.withColumn("dl", doc_length_col(config.tokenizer_mode)(F.col("text")))
-    catalog.write_table(docs, "documents")
-    docs = catalog.read_table("documents")
-
-    # same ONE-job doc_id collision audit as build_index: without it a
-    # duplicate doc_id corrupts n_docs/avgdl here and then surfaces as a
-    # misleading "duplicate posting survived merge" error deep in the
-    # partition build
-    stats_row = (
-        docs.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("c"), F.first("dl").alias("dl"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("c")).alias("n_rows"),
-            F.sum("dl").alias("sum_dl"),
-        )
-        .collect()[0]
+    docs, n_docs, avgdl = load_documents(
+        spark, catalog, docs, config.tokenizer_mode
     )
-    n_docs = int(stats_row["n_docs"])
-    if int(stats_row["n_rows"] or 0) != n_docs:
-        raise ValueError("doc_id collision detected; rehash with a salt")
-    avgdl = (int(stats_row["sum_dl"] or 0) / n_docs) if n_docs else 0.0
-    block_bits = pick_block_bits(n_docs, config.target_block_docs)
-
     fps = _fingerprints(docs, n_partitions)
     committed: dict[int, dict] = {}
     if catalog.table_exists("build_manifest"):
@@ -181,23 +168,9 @@ def resumable_build(
             continue
         tp = time.time()
         part_docs = docs.filter(F.pmod(F.col("doc_id"), F.lit(n_partitions)) == p)
-        postings = build_postings(
-            part_docs,
-            config.target_reduce_docs,
-            config.tokenizer_mode,
-            config.store_positions,
-            config.bigrams,
-        ).withColumn("seg_seq", F.lit(0).cast("long"))
-        if config.skip_terms:
-            # build_index parity (X7): skip words' unigram termlists are
-            # dropped; bigrams containing them survive for phrase search
-            from .index_build import py_term_id
-
-            skip_ids = [py_term_id(t) for t in config.skip_terms]
-            postings = postings.filter(~F.col("term_id").isin(skip_ids))
-        postings.write.mode("overwrite").option(*_PARQUET_WRITER).parquet(
-            seg_dir
-        )
+        segment(part_docs, config, 0).write.mode("overwrite").option(
+            *_PARQUET_WRITER
+        ).parquet(seg_dir)
         elapsed = time.time() - tp
         seg_bytes = _dir_bytes(seg_dir)
         blocks = spark.read.parquet(seg_dir).count()
@@ -218,35 +191,10 @@ def resumable_build(
 
     # finalize: one atomic commit registers every segment (merge fan-in)
     catalog.commit_data_dirs("postings", segments, mode="overwrite")
-    postings = catalog.read_table("postings")
-    catalog.write_table(term_stats_from_postings(postings), "term_stats")
-    n_terms = catalog.read_table("term_stats").count()
-    n_blocks = postings.count()
-    corpus = _local_frame(
-        spark,
-        "n_docs long, avgdl double, block_bits int, n_terms long,"
-        " n_blocks long, store_positions boolean",
-        [(n_docs, avgdl, block_bits, n_terms, n_blocks,
-          bool(config.store_positions))],
+    _n_terms, n_blocks = finish_index(
+        spark, catalog, (n_docs, avgdl, config.store_positions),
+        hot_cache_spec(config, n_docs),
     )
-    catalog.write_table(corpus, "corpus_stats")
-    # rebuild parity with build_index: clear stale tombstones / seg
-    # sequence from a previously-updated catalog (see build_index)
-    if catalog.table_exists("tombstones") or catalog.table_exists("index_meta"):
-        from .updates import reset_update_state
-
-        reset_update_state(spark, catalog)
-    if config.hot_cache_k:
-        from .hot_cache import build_hot_term_cache
-
-        build_hot_term_cache(
-            spark,
-            catalog,
-            min_df=max(2, int(n_docs * config.hot_cache_min_df_frac)),
-            cache_k=config.hot_cache_k,
-            params=config.bm25,
-            max_seg=0,
-        )
     elapsed = time.time() - t0
     catalog.append_table(
         _local_frame(
@@ -292,7 +240,7 @@ def route_tombstones(
 
     @F.pandas_udf("long")
     def blk(doc_ids: pd.Series, sbits: pd.Series) -> pd.Series:
-        h = py_block_ids(doc_ids.to_numpy("int64"), 0)  # full 63-bit hash
+        h = py_block_ids(doc_ids.to_numpy("int64"))
         s = sbits.to_numpy("int64")
         return pd.Series(h >> (np.int64(63) - s))
 
@@ -324,23 +272,8 @@ def merge_postings(
     nothing tombstone-sized ever reaches the driver. The only driver-side
     metadata is the distinct salt_bits set (one int per granularity level,
     ~40 values max by construction)."""
-    from .index_build import (
-        POSTINGS_SCHEMA,
-        _check_block_format,
-        _merge_stream_factory,
-    )
-
     postings = catalog.read_table("postings")
     _check_block_format(postings)
-    if "seg_seq" not in postings.columns:
-        postings = postings.withColumn("seg_seq", F.lit(0).cast("long"))
-    # honor the build's positions setting (stored in corpus_stats; older
-    # indexes predate the column and always stored positions)
-    store_positions = True
-    if catalog.table_exists("corpus_stats"):
-        cs = catalog.read_table("corpus_stats").collect()[0].asDict()
-        if cs.get("store_positions") is not None:
-            store_positions = bool(cs["store_positions"])
     fan_in = len(catalog.data_dirs("postings"))
     packed_tombs = False
     if tombstone_df is not None and tombstone_df.limit(1).count():
@@ -351,11 +284,7 @@ def merge_postings(
         routed = route_tombstones(tombstone_df, sbits_vals)
         postings = postings.join(routed, ["salt_bits", "block_id"], "left_outer")
         packed_tombs = True
-    stream = _merge_stream_factory(
-        store_positions=store_positions,
-        has_seg=True,
-        packed_tombs=packed_tombs,
-    )
+    stream = _merge_stream_factory(stored_positions(catalog), packed_tombs)
     merged = (
         postings.repartition(
             F.col("term_id"), F.col("salt_bits"), F.col("block_id")

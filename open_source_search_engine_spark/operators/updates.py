@@ -22,7 +22,11 @@ Spark-first re-expression -- sequence-versioned segments + ranged tombstones:
   without a full recount (the annihilation idea applied to statistics).
 * ``compact_updates`` = RdbMerge: drops tombstoned (doc, seq<=upto) postings
   physically, merges each (term_id, block_id) back to one row at seg_seq 0,
-  clears tombstones.
+  then finishes like a build (index_build.finish_index: term_stats
+  recount, tombstones cleared, hot cache rebuilt).
+* the documents write, the delta segment and corpus_stats go through the
+  index writer's steps (index_build.load_documents, segment,
+  write_corpus_stats), so an update writes what a build would.
 
 Identity gate (tests): after updates (both before AND after compaction),
 query results are rank-identical to a fresh build of the edited corpus.
@@ -36,14 +40,20 @@ from pyspark.sql import functions as F
 import pandas as pd
 
 from ..catalog import Catalog
+from ..functions.bm25 import BM25Params
 from ..session import _local_frame
 from .index_build import (
+    TOMBSTONES_SCHEMA,
     IndexConfig,
     _check_block_format,
-    build_postings,
-    doc_length_col,
+    finish_index,
+    load_documents,
     py_any_term_id,
+    segment,
+    stored_positions,
     tokenize_docs,
+    without_skip_terms,
+    write_corpus_stats,
 )
 
 
@@ -58,8 +68,6 @@ def _py_term_id_udf():
 
     return udf
 
-TOMBSTONES_SCHEMA = "doc_id long, upto_seq long"
-
 
 def tombstones(spark: SparkSession, catalog: Catalog) -> DataFrame:
     if catalog.table_exists("tombstones"):
@@ -73,22 +81,6 @@ def max_seg_seq(catalog: Catalog) -> int:
     return 0
 
 
-def reset_update_state(spark: SparkSession, catalog: Catalog) -> None:
-    """Clear tombstones and reset the segment sequence to 0.
-
-    Called by compaction (every prior version is physically gone) AND by
-    the full-build paths: doc_ids are deterministic, so a fresh rebuild
-    into a previously-updated catalog would otherwise inherit stale
-    tombstones whose (doc_id, upto_seq>=0) annihilate the rebuilt seg-0
-    postings -- the doc exists in the new index but is unsearchable."""
-    catalog.write_table(
-        _local_frame(spark, TOMBSTONES_SCHEMA), "tombstones"
-    )
-    catalog.write_table(
-        _local_frame(spark, "max_seg long", [(0,)]), "index_meta"
-    )
-
-
 def apply_updates(
     spark: SparkSession,
     catalog: Catalog,
@@ -100,16 +92,29 @@ def apply_updates(
     (doc_id column) to a built index. Visible to queries immediately --
     compaction is optional housekeeping.
 
-    ``config`` must match the BUILD config (tokenizer_mode, bigrams): with
-    bigrams=True the stats deltas and the delta segment both emit the
-    2-word phrase terms, so bigram-enabled indexes update exactly like
-    unigram ones (gated: update-then-query rank identity on bigrams=True,
-    tests/test_bigrams.py)."""
+    ``config`` must match the BUILD config (tokenizer_mode, bigrams,
+    skip_terms, store_positions; a store_positions mismatch raises
+    ValueError before anything is written): with bigrams=True the stats
+    deltas and the delta segment both emit the 2-word phrase terms, so
+    bigram-enabled indexes update exactly like unigram ones (gated:
+    update-then-query rank identity on bigrams=True, tests/test_bigrams.py).
+
+    The documents, the delta segment and corpus_stats are written by the
+    index writer's steps (index_build.load_documents, segment,
+    write_corpus_stats); term_stats is maintained by delta."""
     config = config or IndexConfig()
     _check_block_format(catalog.read_table("postings"))
+    built_with = stored_positions(catalog)
+    if config.store_positions != built_with:
+        # a delta segment must store what the index stores: accepting it
+        # would flip corpus_stats.store_positions and positional queries
+        # would silently miss every doc of the other segments
+        raise ValueError(
+            f"apply_updates: config.store_positions={config.store_positions}"
+            f" but the index was built with store_positions={built_with};"
+            " update with the build's config"
+        )
     docs = catalog.read_table("documents")
-    corpus = catalog.read_table("corpus_stats").collect()[0]
-    block_bits = int(corpus["block_bits"])
     cur_seq = max_seg_seq(catalog)
     new_seq = cur_seq + 1
 
@@ -123,9 +128,6 @@ def apply_updates(
 
     old_docs = docs.join(gone_ids, "doc_id", "left_semi")
     n_old = old_docs.count()
-    upserts = upserts.withColumn(
-        "dl", doc_length_col(config.tokenizer_mode)(F.col("text"))
-    )
     n_new = upserts.count()
 
     # ---- stats deltas: negative keys for old text, positive for new ------
@@ -140,12 +142,9 @@ def apply_updates(
         .groupBy("term")
         .agg(F.sum("ddf").alias("ddf"), F.sum("dcf").alias("dcf"))
     )
-    if config.skip_terms:
-        # X7 build parity: skip words have no termlists and no term_stats
-        # rows in the built index, so their deltas must not create them.
-        # Exact-match filter only -- bigram terms ("t1 t2") containing a
-        # skip word survive, same as build_index's term_id filter
-        delta = delta.filter(~F.col("term").isin(list(config.skip_terms)))
+    # skip words have no termlists and no term_stats rows in the built
+    # index, so their deltas must not create them
+    delta = without_skip_terms(delta, config.skip_terms)
     # eager materialization BEFORE the documents overwrite below: the
     # negative leg tokenizes the OLD doc versions, and in a
     # snapshot-resolved catalog (Iceberg) a lazy read evaluated after the
@@ -195,10 +194,13 @@ def apply_updates(
             if c in up_cols
             else F.lit(None).cast(docs.schema[c].dataType).alias(c)
             for c in docs.columns
+            if c != "dl"
         ]
     )
-    new_docs = docs.join(gone_ids, "doc_id", "left_anti").unionByName(aligned)
-    catalog.write_table(new_docs, "documents")
+    new_docs, n_docs, avgdl = load_documents(
+        spark, catalog, aligned, config.tokenizer_mode,
+        kept=docs.join(gone_ids, "doc_id", "left_anti"),
+    )
     catalog.write_table(new_ts, "term_stats")
 
     # ---- tombstones: annihilate every prior version ----------------------
@@ -212,46 +214,12 @@ def apply_updates(
     )
 
     # ---- delta posting segment at the new sequence -----------------------
-    fresh = catalog.read_table("documents").join(up_ids, "doc_id", "left_semi")
-    delta_postings = build_postings(
-        fresh,
-        config.target_reduce_docs,
-        config.tokenizer_mode,
-        config.store_positions,
-        config.bigrams,
-    ).withColumn("seg_seq", F.lit(new_seq).cast("long"))
-    if config.skip_terms:
-        # same unigram-id filter as build_index: a delta segment must not
-        # reintroduce termlists the build skipped (X7)
-        from .index_build import py_term_id
-
-        skip_ids = [py_term_id(t) for t in config.skip_terms]
-        delta_postings = delta_postings.filter(~F.col("term_id").isin(skip_ids))
-    catalog.append_table(delta_postings, "postings")
+    fresh = new_docs.join(up_ids, "doc_id", "left_semi")
+    catalog.append_table(segment(fresh, config, new_seq), "postings")
     catalog.write_table(
         _local_frame(spark, "max_seg long", [(new_seq,)]), "index_meta"
     )
-
-    # ---- corpus stats -----------------------------------------------------
-    stats = (
-        catalog.read_table("documents")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-        .collect()[0]
-    )
-    n_blocks = catalog.read_table("postings").count()
-    n_terms = catalog.read_table("term_stats").count()
-    n_docs = int(stats["n"])
-    avgdl = (int(stats["s"] or 0) / n_docs) if n_docs else 0.0
-    catalog.write_table(
-        _local_frame(
-            spark,
-            "n_docs long, avgdl double, block_bits int, n_terms long,"
-            " n_blocks long, store_positions boolean",
-            [(n_docs, avgdl, block_bits, n_terms, n_blocks,
-              bool(config.store_positions))],
-        ),
-        "corpus_stats",
-    )
+    write_corpus_stats(spark, catalog, n_docs, avgdl, config.store_positions)
     # ---- automatic compaction (Rdb.h:279 minToMerge) ----------------------
     auto_compacted = False
     if config.min_to_merge:
@@ -298,38 +266,21 @@ def compact_updates(spark: SparkSession, catalog: Catalog) -> int:
     # annihilation must look INSIDE blocks (a block's doc_ids are packed):
     # the decode-merge-encode pass applies the tombstone set row-locally
     merge_postings(spark, catalog, tombstone_df=tombs)
-    # recompute term_stats from the compacted postings: df/cf stay exact
-    # (tombstoned postings are physically gone) and the per-term salt-bits
-    # profile -- which updates conservatively zeroed -- recovers, restoring
-    # WAND's grouping granularity
-    from .index_build import term_stats_from_postings
-
-    catalog.write_table(
-        term_stats_from_postings(catalog.read_table("postings")), "term_stats"
-    )
-    reset_update_state(spark, catalog)
-    # compaction resets max_seg to 0, which would make a STALE hot-term
-    # shortcut cache (hot_cache.py) look fresh again -- rebuild it against
-    # the compacted postings so the freshness marker is truthful. The
-    # ORIGINAL build's k1/b are read back from hot_meta and passed through:
-    # rebuilding with defaults would silently change the cached tf_norm
-    # ranking for a non-default-params index (r2 ADVICE)
+    # term_stats recomputed from the compacted postings: df/cf stay exact
+    # and the per-term salt-bits profile -- which updates conservatively
+    # zeroed -- recovers, restoring WAND's grouping granularity. The hot
+    # cache is rebuilt against the compacted postings with the ORIGINAL
+    # build's k1/b: defaults would silently change the cached tf_norm
+    # ranking of a non-default-params index
+    hot = None
     if catalog.table_exists("hot_meta"):
-        from ..functions.bm25 import BM25Params
-        from .hot_cache import build_hot_term_cache
-
-        meta = catalog.read_table("hot_meta").collect()[0].asDict()
-        params = None
-        if meta.get("k1") is not None and meta.get("b") is not None:
-            params = BM25Params(k1=float(meta["k1"]), b=float(meta["b"]))
-        build_hot_term_cache(
-            spark,
-            catalog,
-            min_df=int(meta["min_df"]),
-            cache_k=int(meta["cache_k"]),
-            params=params,
-            max_seg=0,
+        meta = catalog.read_table("hot_meta").first()
+        hot = (
+            int(meta["min_df"]),
+            int(meta["cache_k"]),
+            BM25Params(k1=float(meta["k1"]), b=float(meta["b"])),
         )
+    finish_index(spark, catalog, None, hot)
     return n_tombs
 
 

@@ -174,3 +174,27 @@ def test_cache_invalidates_after_updates(spark, tmp_path_factory):
     assert _rows(eng2.search_terms(["the"], "AND", 10)) == _rows(
         eng_cold.search_terms(["the"], "AND", 10)
     )
+
+
+def test_rebuild_without_cache_drops_the_previous_cache(spark, tmp_path):
+    """A rebuild with hot_cache_k=0 into a catalog that held a cache must
+    not serve that cache: its entries are the previous build's docs. The
+    two corpora share their avgdl, so only the postings snapshot the cache
+    was built from tells them apart."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    first = spark.createDataFrame(
+        [(1, "beta alpha"), (2, "beta gamma"), (3, "beta delta")],
+        "doc_id long, text string",
+    )
+    build_index(
+        spark, cat, first, IndexConfig(tokenizer_mode="ascii", hot_cache_k=8)
+    )
+    second = spark.createDataFrame(
+        [(11, "beta omega"), (12, "beta sigma"), (13, "beta kappa")],
+        "doc_id long, text string",
+    )
+    build_index(spark, cat, second, IndexConfig(tokenizer_mode="ascii"))
+    eng = SearchEngine(spark, cat, tokenizer_mode="ascii")
+    got = [r.doc_id for r in eng.search_terms(["beta"], "AND", 3).collect()]
+    assert got == [11, 12, 13]
+    assert eng._hot_topk is None

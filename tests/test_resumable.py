@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.catalog import Catalog
 from open_source_search_engine_spark.operators.index_build import (
+    IndexConfig,
     build_index,
     transcripts_to_docs,
 )
@@ -106,3 +107,56 @@ def test_merge_postings_preserves_results(spark, tmp_path_factory, docs, referen
     after = _topk(spark, cat, ("the", "to", "spark"), "OR", 25)
     assert before == after
     assert after == _topk(spark, reference_catalog, ("the", "to", "spark"), "OR", 25)
+
+
+class TestResumableConfigParity:
+    def test_bigrams_built_by_resumable(self, spark, catalog):
+        from open_source_search_engine_spark.operators.resumable import (
+            resumable_build,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "quick brown fox jumps"), (2, "brown quick separated x")],
+            "doc_id long, text string",
+        )
+        resumable_build(
+            spark, catalog, docs, IndexConfig(bigrams=True), n_partitions=2
+        )
+        eng = SearchEngine(spark, catalog)
+        # the indexed bigram termlist must exist and serve the initial
+        # corpus (used to be silently skipped -> phrase missed doc 1)
+        assert not eng.plan_terms(["quick brown"]).empty
+        hits = eng.bigram_postings("quick", "brown").collect()
+        assert [r.doc_id for r in hits] == [1]
+
+    def test_skip_terms_honored_by_resumable(self, spark, catalog):
+        from open_source_search_engine_spark.operators.resumable import (
+            resumable_build,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "www example site"), (2, "plain doc words")],
+            "doc_id long, text string",
+        )
+        resumable_build(
+            spark,
+            catalog,
+            docs,
+            IndexConfig(skip_terms=("www",)),
+            n_partitions=2,
+        )
+        eng = SearchEngine(spark, catalog)
+        assert eng.search_terms(["www"], "AND", 5).count() == 0
+        assert eng.search_terms(["example"], "AND", 5).count() == 1
+
+    def test_duplicate_doc_id_raises(self, spark, catalog):
+        from open_source_search_engine_spark.operators.resumable import (
+            resumable_build,
+        )
+
+        docs = spark.createDataFrame(
+            [(7, "first version"), (7, "second version")],
+            "doc_id long, text string",
+        )
+        with pytest.raises(ValueError, match="collision"):
+            resumable_build(spark, catalog, docs, n_partitions=2)

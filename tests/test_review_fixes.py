@@ -1,7 +1,6 @@
 """Regression gates for the round-4 review findings (two passes).
 
-Pass 1 (query/build path): CJK expansion must not depend on regex object
-identity across the pickle boundary, UOR vote groups must honor
+Pass 1 (query/build path): UOR vote groups must honor
 query-side stopword dropping, morphology must not derive false friends
 ("news" -> "new"), the synonym loader must keep legacy space-separated
 lines that contain a comma parsing as before, and the phrase-member hits
@@ -15,9 +14,6 @@ must not let a stale redelivery overwrite a newer stored turn."""
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,7 +23,6 @@ from open_source_search_engine_spark.functions.synonyms import (
 )
 from open_source_search_engine_spark.operators.index_build import (
     IndexConfig,
-    _tokenize_batch,
     build_index,
 )
 from open_source_search_engine_spark.operators.query import SearchEngine
@@ -37,26 +32,6 @@ def _engine(spark, catalog, rows, mode="ascii", **cfg):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     build_index(spark, catalog, docs, IndexConfig(tokenizer_mode=mode, **cfg))
     return SearchEngine(spark, catalog, tokenizer_mode=mode)
-
-
-class TestCjkPatternIdentity:
-    def test_expansion_survives_fresh_compiled_pattern(self):
-        # the executor receives the pattern via pickle; after re's pattern
-        # cache churns, the unpickled object is EQUAL to the module-level
-        # _UNICODE_RE but not identical -- expansion must still fire
-        re.purge()
-        fresh = re.compile(r"\w+", re.UNICODE)
-        from open_source_search_engine_spark.functions.tokenizer import (
-            _UNICODE_RE,
-        )
-
-        assert fresh is not _UNICODE_RE  # precondition: distinct objects
-        b = pd.DataFrame({"doc_id": [1], "text": ["世界和平"]})
-        out = _tokenize_batch(b, fresh)
-        # with expansion: 3 overlapping char bigrams -> dl 3; without, the
-        # whole run is one giant token -> dl 1
-        assert out is not None
-        assert int(out["dl"][0]) == 3
 
 
 class TestUorStopwordDrop:
@@ -310,117 +285,6 @@ class TestStaleRedelivery:
 # ---------------------------------------------------------------------------
 # pass 3: build/update lifecycle parity
 # ---------------------------------------------------------------------------
-class TestRebuildClearsUpdateState:
-    def test_rebuilt_doc_searchable_after_prior_delete(self, spark, catalog):
-        from open_source_search_engine_spark.operators.updates import (
-            apply_updates,
-        )
-
-        rows = [(1, "alpha target words"), (2, "beta filler words")]
-        eng = _engine(spark, catalog, rows)
-        apply_updates(
-            spark,
-            catalog,
-            delete_ids=spark.createDataFrame([(1,)], "doc_id long"),
-        )
-        # doc 1 deleted: unsearchable
-        eng = SearchEngine(spark, catalog)
-        assert eng.search_terms(["target"], "AND", 5).count() == 0
-        # FULL REBUILD over a corpus containing doc 1 again: the stale
-        # tombstone (1, upto_seq>=0) used to annihilate its seg-0 postings
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        from open_source_search_engine_spark.operators.index_build import (
-            build_index as bi,
-        )
-
-        bi(spark, catalog, docs)
-        eng = SearchEngine(spark, catalog)
-        assert [r.doc_id for r in eng.search_terms(["target"], "AND", 5).collect()] == [1]
-
-
-class TestResumableConfigParity:
-    def test_bigrams_built_by_resumable(self, spark, catalog):
-        from open_source_search_engine_spark.operators.resumable import (
-            resumable_build,
-        )
-
-        docs = spark.createDataFrame(
-            [(1, "quick brown fox jumps"), (2, "brown quick separated x")],
-            "doc_id long, text string",
-        )
-        resumable_build(
-            spark, catalog, docs, IndexConfig(bigrams=True), n_partitions=2
-        )
-        eng = SearchEngine(spark, catalog)
-        # the indexed bigram termlist must exist and serve the initial
-        # corpus (used to be silently skipped -> phrase missed doc 1)
-        assert not eng.plan_terms(["quick brown"]).empty
-        hits = eng.bigram_postings("quick", "brown").collect()
-        assert [r.doc_id for r in hits] == [1]
-
-    def test_skip_terms_honored_by_resumable(self, spark, catalog):
-        from open_source_search_engine_spark.operators.resumable import (
-            resumable_build,
-        )
-
-        docs = spark.createDataFrame(
-            [(1, "www example site"), (2, "plain doc words")],
-            "doc_id long, text string",
-        )
-        resumable_build(
-            spark,
-            catalog,
-            docs,
-            IndexConfig(skip_terms=("www",)),
-            n_partitions=2,
-        )
-        eng = SearchEngine(spark, catalog)
-        assert eng.search_terms(["www"], "AND", 5).count() == 0
-        assert eng.search_terms(["example"], "AND", 5).count() == 1
-
-    def test_duplicate_doc_id_raises(self, spark, catalog):
-        from open_source_search_engine_spark.operators.resumable import (
-            resumable_build,
-        )
-
-        docs = spark.createDataFrame(
-            [(7, "first version"), (7, "second version")],
-            "doc_id long, text string",
-        )
-        with pytest.raises(ValueError, match="collision"):
-            resumable_build(spark, catalog, docs, n_partitions=2)
-
-
-class TestUpdateSkipTerms:
-    def test_delta_does_not_reintroduce_skip_word(self, spark, catalog):
-        from open_source_search_engine_spark.operators.updates import (
-            apply_updates,
-        )
-
-        cfg = IndexConfig(tokenizer_mode="ascii", skip_terms=("www",))
-        eng = _engine(
-            spark,
-            catalog,
-            [(1, "www alpha site"), (2, "beta words")],
-            skip_terms=("www",),
-        )
-        assert eng.search_terms(["www"], "AND", 5).count() == 0
-        up = spark.createDataFrame(
-            [(3, "www gamma fresh")], "doc_id long, text string"
-        )
-        apply_updates(spark, catalog, upserts=up, config=cfg)
-        eng = SearchEngine(spark, catalog)
-        # the skip word must stay unanswerable (used to return doc 3 only,
-        # a partial inconsistent result) and must not gain a stats row
-        assert eng.search_terms(["www"], "AND", 5).count() == 0
-        from pyspark.sql import functions as F
-
-        ts = catalog.read_table("term_stats").filter(F.col("term") == "www")
-        assert ts.count() == 0
-        # the new doc's other terms are searchable
-        assert eng.search_terms(["gamma"], "AND", 5).count() == 1
-
-
 class TestMinSaltBitsPreserved:
     def test_untouched_terms_keep_min(self, spark, catalog):
         from open_source_search_engine_spark.operators.updates import (

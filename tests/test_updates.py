@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.catalog import Catalog
 from open_source_search_engine_spark.operators.index_build import (
+    IndexConfig,
     build_index,
     transcripts_to_docs,
 )
@@ -139,7 +140,7 @@ def test_route_tombstones_routing_is_exact(spark):
             d = int(t["doc_id"])
             assert (d, s) not in seen
             seen[(d, s)] = bid
-            h = int(py_block_ids(np.array([d], dtype=np.int64), 0)[0])
+            h = int(py_block_ids(np.array([d], dtype=np.int64))[0])
             assert bid == (h >> (63 - s)) if s else bid == 0
     assert len(seen) == 3 * len(range(0, 5000, 7))
 
@@ -292,3 +293,96 @@ def _topk_of(spark, catalog, doc_id):
         for r in eng.search_terms(["revived_zz"], "AND", 5).collect()
         if int(r["doc_id"]) == doc_id
     ]
+
+
+def test_update_refuses_other_store_positions(spark, tmp_path):
+    """An update whose config stores positions differently from the built
+    index is refused before it writes anything: accepting it used to flip
+    corpus_stats.store_positions, after which phrase queries silently
+    missed every doc of the original build."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    docs = spark.createDataFrame(
+        [(1, "red apple pie"), (2, "green apple tart")],
+        "doc_id long, text string",
+    )
+    build_index(
+        spark, cat, docs,
+        IndexConfig(tokenizer_mode="ascii", store_positions=False),
+    )
+    up = spark.createDataFrame(
+        [(3, "red apple crumble")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="store_positions=True.*False"):
+        apply_updates(
+            spark, cat, upserts=up, config=IndexConfig(tokenizer_mode="ascii")
+        )
+    assert cat.read_table("corpus_stats").first()["store_positions"] is False
+    assert cat.read_table("documents").count() == 2
+    # the index still answers as built: positional queries raise
+    eng = SearchEngine(spark, cat, tokenizer_mode="ascii")
+    with pytest.raises(ValueError, match="store_positions"):
+        eng.search_phrase(["red", "apple"], use_bigrams=False)
+
+
+def _engine(spark, catalog, rows, mode="ascii", **cfg):
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    build_index(spark, catalog, docs, IndexConfig(tokenizer_mode=mode, **cfg))
+    return SearchEngine(spark, catalog, tokenizer_mode=mode)
+
+
+class TestRebuildClearsUpdateState:
+    def test_rebuilt_doc_searchable_after_prior_delete(self, spark, catalog):
+        from open_source_search_engine_spark.operators.updates import (
+            apply_updates,
+        )
+
+        rows = [(1, "alpha target words"), (2, "beta filler words")]
+        eng = _engine(spark, catalog, rows)
+        apply_updates(
+            spark,
+            catalog,
+            delete_ids=spark.createDataFrame([(1,)], "doc_id long"),
+        )
+        # doc 1 deleted: unsearchable
+        eng = SearchEngine(spark, catalog)
+        assert eng.search_terms(["target"], "AND", 5).count() == 0
+        # FULL REBUILD over a corpus containing doc 1 again: the stale
+        # tombstone (1, upto_seq>=0) used to annihilate its seg-0 postings
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        from open_source_search_engine_spark.operators.index_build import (
+            build_index as bi,
+        )
+
+        bi(spark, catalog, docs)
+        eng = SearchEngine(spark, catalog)
+        assert [r.doc_id for r in eng.search_terms(["target"], "AND", 5).collect()] == [1]
+
+
+class TestUpdateSkipTerms:
+    def test_delta_does_not_reintroduce_skip_word(self, spark, catalog):
+        from open_source_search_engine_spark.operators.updates import (
+            apply_updates,
+        )
+
+        cfg = IndexConfig(tokenizer_mode="ascii", skip_terms=("www",))
+        eng = _engine(
+            spark,
+            catalog,
+            [(1, "www alpha site"), (2, "beta words")],
+            skip_terms=("www",),
+        )
+        assert eng.search_terms(["www"], "AND", 5).count() == 0
+        up = spark.createDataFrame(
+            [(3, "www gamma fresh")], "doc_id long, text string"
+        )
+        apply_updates(spark, catalog, upserts=up, config=cfg)
+        eng = SearchEngine(spark, catalog)
+        # the skip word must stay unanswerable (used to return doc 3 only,
+        # a partial inconsistent result) and must not gain a stats row
+        assert eng.search_terms(["www"], "AND", 5).count() == 0
+        from pyspark.sql import functions as F
+
+        ts = catalog.read_table("term_stats").filter(F.col("term") == "www")
+        assert ts.count() == 0
+        # the new doc's other terms are searchable
+        assert eng.search_terms(["gamma"], "AND", 5).count() == 1
