@@ -777,7 +777,7 @@ def term_stats_from_postings(postings: DataFrame) -> DataFrame:
         # the WAND grouping granularity WITHOUT an extra metadata job.
         # min_salt_bits bounds the COARSEST block of the term: WAND clamps
         # its grouping granularity so no single block fans out more than
-        # 2^max_group_split groups (wand.pick_granularity)
+        # 2^MAX_GROUP_SPLIT groups (wand.pick_granularity)
         F.max("salt_bits").cast("int").alias("max_salt_bits"),
         F.min("salt_bits").cast("int").alias("min_salt_bits"),
     )
@@ -805,9 +805,12 @@ def load_documents(
 ) -> tuple[DataFrame, int, float]:
     """Write the documents table: ``docs`` (doc_id, text, ...) gain their
     ``dl`` column and follow ``kept`` (rows that already carry dl: the
-    untouched docs of an update) when given. One job over the written
-    table then audits doc_id collisions (SURVEY.md §7.3) and sums the
-    corpus stats. Returns (the documents as written, n_docs, avgdl)."""
+    untouched docs of an update, none of them with a doc_id of ``docs``)
+    when given. One collect then sums the corpus stats over the written
+    table and audits doc_id collisions (SURVEY.md §7.3) over the rows
+    that can collide: the whole table for a fresh load, only the new rows
+    for an update (the kept rows were audited when first written).
+    Returns (the documents as written, n_docs, avgdl)."""
     # small inputs (few parquet splits) must not serialize the map stages:
     # fan out to at least the cluster's parallelism before the heavy UDFs.
     # An update's few new rows join the kept rows' partitions instead:
@@ -815,26 +818,24 @@ def load_documents(
     par = spark.sparkContext.defaultParallelism
     if kept is None and docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par * 2)
-    docs = docs.withColumn("dl", doc_length_col(mode)(F.col("text")))
+    docs = new = docs.withColumn("dl", doc_length_col(mode)(F.col("text")))
     if kept is not None:
         docs = kept.unionByName(docs)
     catalog.write_table(docs, "documents")
     docs = catalog.read_table("documents")
+    audited = docs if kept is None else new
     # avgdl = exact integer sum / count, NOT F.avg: double summation order
     # varies with partitioning, and rank identity needs bit-stable avgdl
-    stats_row = (
-        docs.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("c"), F.first("dl").alias("dl"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("c")).alias("n_rows"),
-            F.sum("dl").alias("sum_dl"),
+    stats_row = docs.agg(
+        F.count(F.lit(1)).alias("n_rows"), F.sum("dl").alias("sum_dl")
+    ).crossJoin(
+        audited.agg(
+            (F.count(F.lit(1)) - F.countDistinct("doc_id")).alias("dups")
         )
-        .collect()[0]
-    )
-    n_docs = int(stats_row["n_docs"])
-    if int(stats_row["n_rows"] or 0) != n_docs:
+    ).collect()[0]
+    if stats_row["dups"]:
         raise ValueError("doc_id collision detected; rehash with a salt")
+    n_docs = int(stats_row["n_rows"])
     avgdl = (int(stats_row["sum_dl"] or 0) / n_docs) if n_docs else 0.0
     return docs, n_docs, avgdl
 
@@ -905,15 +906,15 @@ def reset_update_state(spark: SparkSession, catalog: Catalog) -> None:
 def finish_index(
     spark: SparkSession,
     catalog: Catalog,
-    corpus: tuple[int, float, bool] | None,
+    corpus: tuple[int, float, bool],
     hot: tuple[int, int, BM25Params] | None,
 ) -> tuple[int, int]:
     """The last step of every full rewrite of the postings table
     (build_index, resumable_build, compact_updates):
 
     * term_stats from the postings (term_stats_from_postings);
-    * corpus_stats, when ``corpus`` = (n_docs, avgdl, store_positions) is
-      given (a compaction keeps the build's);
+    * corpus_stats from ``corpus`` = (n_docs, avgdl, store_positions), with
+      n_terms and n_blocks recounted over the rewritten tables;
     * the update state reset: doc_ids are deterministic, so a rebuild into
       a previously-updated catalog would otherwise inherit tombstones that
       annihilate the rebuilt docs' seg-0 postings;
@@ -921,11 +922,11 @@ def finish_index(
       (min_df, cache_k, params) is given. A cache left by an earlier build
       is never served: it names the postings snapshot it was built from.
 
-    Returns (n_terms, n_blocks), or (0, 0) without ``corpus``."""
+    Returns (n_terms, n_blocks)."""
     catalog.write_table(
         term_stats_from_postings(catalog.read_table("postings")), "term_stats"
     )
-    counts = write_corpus_stats(spark, catalog, *corpus) if corpus else (0, 0)
+    counts = write_corpus_stats(spark, catalog, *corpus)
     if catalog.table_exists("tombstones") or catalog.table_exists("index_meta"):
         reset_update_state(spark, catalog)
     if hot:

@@ -33,6 +33,8 @@ definition of each modifier, sharing one formula module (functions/bm25.py):
 * ``wand`` (block-max pruning, wand.py) chooses block groups in the
   driver from their upper bounds and scores them with the exact path
   (restricted runs of ``_score_plan``), so results are identical.
+  ``route`` is the one function that picks exact or WAND for a query,
+  from its plan; every routing cutoff is a constant next to it.
 
 Proximity, phrase and boosts are each defined once, in rerank.py, as a
 ``Modifier``: the exact path (search_proximity, search_phrase,
@@ -46,6 +48,7 @@ OR = any term; NOT (-term) = anti-join (`Query.h:191-193`).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -86,12 +89,68 @@ def _unanswerable(present, query_terms: list[str], mode: str) -> bool:
     )
 
 
-def _route(plan: pd.DataFrame, wand_df_cutoff: int) -> tuple[str, int]:
-    """search_auto's routing rule, from the plan alone: (route, sum_df),
-    route "exact" when the planned decode volume sum(df) is at or below
-    ``wand_df_cutoff``, else "wand"."""
-    sum_df = int(plan["df"].sum())
-    return ("exact" if sum_df <= int(wand_df_cutoff) else "wand"), sum_df
+# -- routing: every single-query strategy is chosen by ``route``, and every
+#    cutoff it and the batch planner use is one of these constants. They are
+#    read at call time, so a test can monkeypatch them.
+
+#: a query whose planned decode volume sum(df) is at most this is exact
+WAND_DF_CUTOFF = 1_000_000
+#: an AND query whose rarest df is at most this is exact: its candidate
+#: set is that small, so pruning cannot save more than the run it costs
+RAREST_DF_CUTOFF = 100_000
+#: a batch query whose sum(df) exceeds this leaves search_many's shared
+#: scan for its own union branch
+SHARED_SCAN_MAX_ROWS = 3_000_000
+#: block-max WAND's run A scores this many highest-bound block groups
+PHASE_A_GROUPS = 8
+#: a coarse block overlaps at most ~2^this many WAND groups (plus one
+#: doubling headroom for per-partition granularity drift)
+MAX_GROUP_SPLIT = 6
+#: the batch re-rank over-fetches a query's whole match set when its match
+#: bound is below max(RERANK_MIN_EXHAUSTIVE, RERANK_COLLECT_BUDGET //
+#: n_queries), so a batch's whole-match-set fetches collect about
+#: RERANK_COLLECT_BUDGET rows in the driver
+RERANK_COLLECT_BUDGET = 200_000
+RERANK_MIN_EXHAUSTIVE = 2_000
+
+
+def match_bound(dfs, mode: str) -> int:
+    """The plan-time bound on a query's match set: its rarest df under
+    AND, sum(df) under OR."""
+    dfs = [int(d) for d in dfs]
+    return min(dfs) if mode == "AND" else sum(dfs)
+
+
+def route(
+    plan: pd.DataFrame, mode: str, wand_df_cutoff: int | None = None
+) -> tuple[str, str]:
+    """A single query's strategy, from its plan alone (no job): (route,
+    reason). "exact" (search_terms) with reason "sum_df" when sum(df) is
+    at most ``wand_df_cutoff`` (WAND_DF_CUTOFF by default), or with reason
+    "rarest_df" when an AND query's rarest df is at most RAREST_DF_CUTOFF;
+    otherwise "wand" (block-max pruning, wand.wand_search) with reason
+    "pruning". The reference sizes its intersection strategy the same
+    way, off per-term list sizes before any termlist is read
+    (rarest-first seeding, `PosdbTable.cpp:1998`)."""
+    cutoff = WAND_DF_CUTOFF if wand_df_cutoff is None else wand_df_cutoff
+    if int(plan["df"].sum()) <= cutoff:
+        return "exact", "sum_df"
+    if mode == "AND" and match_bound(plan["df"], mode) <= RAREST_DF_CUTOFF:
+        return "exact", "rarest_df"
+    return "wand", "pruning"
+
+
+class _BatchQuery(NamedTuple):
+    """One answerable batch query after planning (SearchEngine._plan_batch):
+    its present terms in ascending order and their dfs, its mode and k, and
+    whether it joins search_many's shared scan."""
+
+    qid: str
+    present: list[str]
+    dfs: list[int]
+    mode: str
+    k: int
+    shared: bool
 
 
 def _page(
@@ -449,43 +508,26 @@ class SearchEngine:
         mode: str = "AND",
         k: int = 10,
         exclude_terms: list[str] | None = None,
-        wand_df_cutoff: int = 1_000_000,
-        **wand_kwargs,
+        wand_df_cutoff: int | None = None,
     ) -> DataFrame:
-        """Adaptive single-query strategy choice: exact scan vs block-max
-        WAND, decided from the term dictionary BEFORE any termlist is
-        touched — the reference sizes its intersection strategy the same
-        way (rarest-first seeding and docid-range splits chosen off
-        per-term list sizes, `PosdbTable.cpp`; `Posdb.h` key layout).
-
-        Routing is deterministic: the planned decode volume is sum(df)
-        over the query's terms (plan_terms reads the dictionary in the
-        driver -- no Spark job, cached or not). At or below
-        ``wand_df_cutoff`` the exact path wins (TakeOrderedAndProject;
-        unrestricted single hot terms answer from the shortcut cache
-        inside search_terms); above it, decode volume
-        dominates and the two-phase pruned WAND path wins. Both paths are
-        rank-identical to search_terms (the WAND side is gated bit-equal),
-        so results do NOT depend on the cutoff — only the plan shape does.
-        This is the single-query analog of search_many's
-        ``shared_scan_max_rows`` routing, with the same contract.
-        """
+        """Adaptive single-query strategy choice: the exact scan
+        (search_terms) or block-max WAND (wand.wand_search), as ``route``
+        decides from the plan before any termlist is touched (plan_terms
+        reads the dictionary in the driver: no Spark job). ``wand_df_cutoff``
+        overrides route's WAND_DF_CUTOFF. Both paths are rank-identical to
+        search_terms (the WAND side is gated bit-equal), so results do NOT
+        depend on the route -- only the plan shape does."""
         plan = self.plan_terms(query_terms)
         if plan.empty:
             return _local_frame(self.spark, _SCORED)
-        if _route(plan, wand_df_cutoff)[0] == "exact":
+        if route(plan, mode, wand_df_cutoff)[0] == "exact":
             return self.search_terms(
                 query_terms, mode=mode, k=k, exclude_terms=exclude_terms
             )
         from .wand import wand_search
 
         return wand_search(
-            self,
-            query_terms,
-            mode,
-            k,
-            exclude_terms=exclude_terms,
-            **wand_kwargs,
+            self, query_terms, mode, k, exclude_terms=exclude_terms
         )
 
     def _hot_single_term(self, term: str, k: int) -> DataFrame | None:
@@ -1021,11 +1063,34 @@ class SearchEngine:
             k,
         )
 
+    def _plan_batch(
+        self, queries: list[dict], default_k: int
+    ) -> tuple[pd.DataFrame, list[_BatchQuery]]:
+        """The one batch planner (search_many, rerank.batch_rerank): the
+        plan of every batch term, and per answerable query its present
+        terms, dfs, mode, k and route -- the shared scan, or its own union
+        branch when its sum(df) exceeds SHARED_SCAN_MAX_ROWS. Unanswerable
+        queries are dropped: they have no rows (search_terms contract)."""
+        plan = self.plan_terms(
+            sorted({t for q in queries for t in q["terms"]})
+        )
+        df_of = dict(zip(plan["term"], plan["df"]))
+        planned = []
+        for q in queries:
+            mode = q.get("mode", "AND")
+            terms = sorted(set(q["terms"]))
+            present = [t for t in terms if t in df_of]
+            if _unanswerable(present, terms, mode):
+                continue
+            dfs = [int(df_of[t]) for t in present]
+            planned.append(_BatchQuery(
+                str(q["query_id"]), present, dfs, mode,
+                int(q.get("k", default_k)), sum(dfs) <= SHARED_SCAN_MAX_ROWS,
+            ))
+        return plan, planned
+
     def search_many(
-        self,
-        queries: list[dict],
-        default_k: int = 10,
-        shared_scan_max_rows: int = 3_000_000,
+        self, queries: list[dict], default_k: int = 10
     ) -> DataFrame:
         """Batch serving: MANY queries answered in ONE distributed job.
 
@@ -1038,40 +1103,27 @@ class SearchEngine:
         workload. Per-doc scores aggregate with the same canonical term
         order, so identity holds bit-exactly.
 
-        Adaptive routing: the shared scan replicates each term's postings
-        into every query using the term, so a query over all-common terms
-        contributes sum(df) rows to the scoring shuffle -- at 10M docs a
-        2-common-term query is ~10M shuffled rows for 10 result rows, and
-        the pruned per-query path (TakeOrderedAndProject, hot cache, term-
-        partition pruning) wins. Queries whose sum(df) exceeds
-        ``shared_scan_max_rows`` therefore become per-query UNION BRANCHES
-        of the same returned plan (still ONE job -- branch stages share the
-        scheduler wave) while the rest stay in the shared scan. Routing is
-        deterministic from the term-dictionary dfs; both paths are rank-
-        identical to search_terms, so results do not depend on the cutoff.
+        Adaptive routing (_plan_batch): the shared scan replicates each
+        term's postings into every query using the term, so a query over
+        all-common terms contributes sum(df) rows to the scoring shuffle --
+        at 10M docs a 2-common-term query is ~10M shuffled rows for 10
+        result rows, and the pruned per-query path (TakeOrderedAndProject,
+        hot cache, term-partition pruning) wins. Queries whose sum(df)
+        exceeds SHARED_SCAN_MAX_ROWS therefore become per-query UNION
+        BRANCHES of the same returned plan (still ONE job -- branch stages
+        share the scheduler wave) while the rest stay in the shared scan.
+        Both paths are rank-identical to search_terms, so results do not
+        depend on the cutoff.
         """
         from pyspark.sql import Window
 
-        plan = self.plan_terms(
-            sorted({t for q in queries for t in q["terms"]})
-        )
-        df_of = dict(zip(plan["term"], plan["df"]))
-        shared, frames = [], []
-        for q in queries:
-            qid = str(q["query_id"])
-            mode = q.get("mode", "AND")
-            k = int(q.get("k", default_k))
-            terms = sorted(set(q["terms"]))
-            present = [t for t in terms if t in df_of]
-            if _unanswerable(present, terms, mode):
-                continue  # no rows (same as search_terms)
-            if sum(int(df_of[t]) for t in present) > shared_scan_max_rows:
-                frames.append(
-                    _rank_branch(qid, self.search_terms(present, mode, k))
-                )
-            else:
-                n_required = len(present) if mode == "AND" else 1
-                shared.append((qid, present, n_required, k))
+        plan, planned = self._plan_batch(queries, default_k)
+        shared = [q for q in planned if q.shared]
+        frames = [
+            _rank_branch(q.qid, self.search_terms(q.present, q.mode, q.k))
+            for q in planned
+            if not q.shared
+        ]
         if shared:
             tid_of = dict(zip(plan["term"], plan["term_id"]))
             idf_of = dict(zip(plan["term"], plan["idf"]))
@@ -1085,21 +1137,24 @@ class SearchEngine:
                 "query_id string, term_id long, pos int, idf double, "
                 "n_required int, k int",
                 [
-                    (qid, int(tid_of[t]), pos, float(idf_of[t]), n_req, k)
-                    for qid, present, n_req, k in shared
-                    for pos, t in enumerate(present)
+                    (
+                        q.qid, int(tid_of[t]), pos, float(idf_of[t]),
+                        len(q.present) if q.mode == "AND" else 1, q.k,
+                    )
+                    for q in shared
+                    for pos, t in enumerate(q.present)
                 ],
             )
             tf_norm = tf_norm_sql("tf", "dl", self.avgdl, self.params)
             contrib = self._decoded(
-                sorted({int(tid_of[t]) for q in shared for t in q[1]})
+                sorted({int(tid_of[t]) for q in shared for t in q.present})
             ).join(F.broadcast(qmeta), "term_id").selectExpr(
                 "query_id", "doc_id", "pos AS slot",
                 f"idf * {tf_norm} AS contrib", "n_required", "k",
             )
             scored = self._aggregate_scores(
                 contrib,
-                max(len(q[1]) for q in shared),
+                max(len(q.present) for q in shared),
                 keys=("query_id", "doc_id"),
                 n_required="first(n_required)",
                 k="first(k)",
@@ -1114,7 +1169,7 @@ class SearchEngine:
             # its partition's per-query top-k), so the window ranks at most
             # n_partitions * max_k rows per query, all in the JVM (up to
             # the optimizer's windowGroupLimitThreshold, 1000 by default).
-            max_k = max(int(q.get("k", default_k)) for q in queries)
+            max_k = max(q.k for q in shared)
             w = Window.partitionBy("query_id").orderBy(
                 F.desc("score"), F.asc("doc_id")
             )
@@ -1139,8 +1194,6 @@ class SearchEngine:
         prox_weight: float = 1.0,
         default_k: int = 10,
         overfetch: int = 4,
-        shared_scan_max_rows: int = 3_000_000,
-        exhaustive_df_cutoff: int | None = None,
     ) -> DataFrame:
         """Batch serving WITH the term-pair proximity boost (exact:
         search_proximity; WAND scale: wand.wand_proximity; batch: here).
@@ -1152,15 +1205,14 @@ class SearchEngine:
         the certificate is explained in rerank.py); single-term queries
         have no pair and are final after the BM25 pass, and a query that
         fails its certificate takes its exact search_proximity page as a
-        union branch. ``exhaustive_df_cutoff``: queries whose match-set
-        bound is below it over-fetch their whole match set (default: a
-        200k-row collect budget split across the batch). prox_weight=0
+        union branch. Queries whose match-set bound is small over-fetch
+        their whole match set (RERANK_COLLECT_BUDGET). prox_weight=0
         delegates to search_many verbatim."""
         from . import rerank
 
         return rerank.batch_rerank(
-            self, queries, rerank.proximity(self, prox_weight), default_k,
-            overfetch, shared_scan_max_rows, exhaustive_df_cutoff,
+            self, queries, rerank.proximity(self, prox_weight),
+            default_k, overfetch,
         )
 
     def search_many_boosted(
@@ -1170,8 +1222,6 @@ class SearchEngine:
         recency: tuple[str, float, float] | None = None,
         default_k: int = 10,
         overfetch: int = 4,
-        shared_scan_max_rows: int = 3_000_000,
-        exhaustive_df_cutoff: int | None = None,
     ) -> DataFrame:
         """Batch serving WITH doc-level score boosts (exact:
         search_boosted; WAND scale: wand.wand_boosted; batch: here). Per
@@ -1185,14 +1235,12 @@ class SearchEngine:
         join to the pruned boost columns rescores them (rerank.batch_rerank;
         the max-multiplier certificate is explained in rerank.py); a query
         that fails its certificate takes its exact search_boosted page as
-        a union branch. ``exhaustive_df_cutoff`` as in
-        search_many_proximity. No boosts configured -> search_many
-        verbatim."""
+        a union branch. No boosts configured -> search_many verbatim."""
         from . import rerank
 
         return rerank.batch_rerank(
             self, queries, rerank.boosts(self, field_weights, recency),
-            default_k, overfetch, shared_scan_max_rows, exhaustive_df_cutoff,
+            default_k, overfetch,
         )
 
     def _parse_signs(self, query: str) -> tuple[list[str], list[str]]:
@@ -1333,7 +1381,6 @@ class SearchEngine:
         snippet_width: int = 11,
         min_results: int = 1,
         max_dist: int = 2,
-        wand_df_cutoff: int = 1_000_000,
     ) -> DataFrame:
         """Full SERP assembly — the reference's Msg40 result-page flow in
         one call (`Msg40.cpp:841` launchMsg20s fans per-result summary
@@ -1341,8 +1388,8 @@ class SearchEngine:
         did-you-mean alongside; site clustering caps per-site rows).
 
         1. rank: BM25 top-k with '-term' exclusions, routed through
-           search_auto (exact scan vs block-max WAND by planned decode
-           volume — rank-identical either way); with ``source_cap``, the
+           search_auto (exact scan vs block-max WAND as ``route``
+           decides from the plan — rank-identical either way); with ``source_cap``, the
            cap windows the FULL match set per source (score_terms —
            no global sort) before the top-k, exactly the A6 contract;
         2. did-you-mean: a page thinner than ``min_results`` rows
@@ -1370,11 +1417,7 @@ class SearchEngine:
         def page(pos_terms: list[str]) -> DataFrame:
             if source_cap is None:
                 return self.search_auto(
-                    pos_terms,
-                    mode=mode,
-                    k=k,
-                    exclude_terms=exclude,
-                    wand_df_cutoff=wand_df_cutoff,
+                    pos_terms, mode=mode, k=k, exclude_terms=exclude
                 )
             from pyspark.sql import Window
 
@@ -2103,15 +2146,16 @@ class SearchEngine:
     def explain_terms(
         self,
         query_terms: list[str],
-        wand_df_cutoff: int = 1_000_000,
+        mode: str = "AND",
+        wand_df_cutoff: int | None = None,
     ) -> DataFrame:
         """Query-plan introspection — the reference's `&debug=1` query-info
         surface (PageResults debug dump of per-term termlist sizes;
         `Msg3a.cpp:1011` setTermFreqWeights is exactly this table) as a
         DataFrame an operator can join/log: per query term its dictionary
-        row (present, df, idf) plus the query-level routing decision
-        (``route`` exact|wand by search_auto's sum(df) ≤ cutoff rule and
-        the ``sum_df`` that drove it).
+        row (present, df, idf) plus the query-level routing decision under
+        ``mode``: search_auto's ``route`` (exact|wand), its ``reason``
+        (sum_df|rarest_df|pruning) and the ``sum_df`` of the plan.
 
         Costs ZERO Spark jobs (plan_terms reads the dictionary in the
         driver and memoizes its rows, including confirmed misses) — the
@@ -2121,23 +2165,20 @@ class SearchEngine:
         (an absent term decodes nothing — same contract as routing).
         """
         plan = self.plan_terms(query_terms)
-        by_term = (
-            {
-                str(r["term"]): (int(r["df"]), float(r["idf"]))
-                for _, r in plan.iterrows()
-            }
-            if not plan.empty
-            else {}
-        )
-        route, sum_df = _route(plan, wand_df_cutoff)
+        by_term = {
+            str(t): (int(d), float(i))
+            for t, d, i in zip(plan["term"], plan["df"], plan["idf"])
+        }
+        chosen, reason = route(plan, mode, wand_df_cutoff)
+        sum_df = int(plan["df"].sum())
         rows = []
         for t in sorted(set(query_terms)):
             df_i, idf = by_term.get(t, (0, None))
-            rows.append((t, t in by_term, df_i, idf, route, sum_df))
+            rows.append((t, t in by_term, df_i, idf, chosen, reason, sum_df))
         return _local_frame(
             self.spark,
             "term string, present boolean, df long, idf double, "
-            "route string, sum_df long",
+            "route string, reason string, sum_df long",
             rows,
         )
 

@@ -71,7 +71,10 @@ from pyspark.sql import functions as F
 
 from ..functions.bm25 import sql_double
 from ..session import _local_frame
-from .query import _BATCH_SCHEMA, _SCORED, _page, _rank_branch, _unanswerable
+from . import query
+from .query import (
+    _BATCH_SCHEMA, _SCORED, _page, _rank_branch, _unanswerable, match_bound,
+)
 
 
 @dataclass(frozen=True)
@@ -260,11 +263,10 @@ def exact(
 
 def _initial_m(k: int, overfetch: int, dfs, mode: str, cutoff: int) -> int:
     """Over-fetch size: overfetch * k, or the WHOLE match set when its
-    plan-time bound (rarest df under AND, sum(df) under OR) is below
-    ``cutoff`` -- one pass is then trivially exact."""
+    plan-time bound (query.match_bound) is below ``cutoff`` -- one pass is
+    then trivially exact."""
     m = max(k * overfetch, k + 1)
-    dfs = [int(d) for d in dfs]
-    bound = min(dfs) if mode == "AND" else sum(dfs)
+    bound = match_bound(dfs, mode)
     return max(m, bound + 1) if bound < cutoff else m
 
 
@@ -301,7 +303,7 @@ def wand_rerank(
     mod: Modifier | None,
     overfetch: int,
     max_candidates: int,
-    wand_kwargs: dict,
+    exclude_terms: list[str] | None,
 ) -> DataFrame:
     """Single-query driver over wand_search (module doc: certificate and
     escalation). Returns (doc_id, score, matched), top k; no modifier is
@@ -314,15 +316,14 @@ def wand_rerank(
     if _unanswerable(plan, terms, mode):
         return empty
     if mod is None or (mod.single_term_final and len(plan) < 2):
-        return wand_search(engine, terms, mode, k, **wand_kwargs)
-    excl = wand_kwargs.get("exclude_terms")
+        return wand_search(engine, terms, mode, k, exclude_terms)
     cert = mod.ceiling(len(plan))
     if cert[0] <= 0.0:
-        return exact(engine, terms, mode, k, excl, mod)
+        return exact(engine, terms, mode, k, exclude_terms, mod)
     m = _initial_m(k, overfetch, plan["df"], mode, max_candidates)
     terms_of = {None: sorted(plan["term"])}
     while True:
-        cands = wand_search(engine, terms, mode, m, **wand_kwargs)
+        cands = wand_search(engine, terms, mode, m, exclude_terms)
         cand_rows = cands.collect()  # <= m rows (wand's own contract)
         if not cand_rows:
             return empty
@@ -337,7 +338,7 @@ def wand_rerank(
             break
         m = _next_m(m, kth, bm25, cert, max_candidates)
         if m is None:
-            return exact(engine, terms, mode, k, excl, mod)
+            return exact(engine, terms, mode, k, exclude_terms, mod)
     return _local_frame(spark, top.schema, rows)
 
 
@@ -347,41 +348,27 @@ def batch_rerank(
     mod: Modifier | None,
     default_k: int,
     overfetch: int,
-    shared_scan_max_rows: int,
-    exhaustive_df_cutoff: int | None,
 ) -> DataFrame:
     """Batch driver over search_many (module doc: certificate). Returns
     (query_id, rank, doc_id, score, matched); per query the modifier's
-    exact page. Driver materialization is bounded by sum_q m_q rows;
-    ``exhaustive_df_cutoff`` defaults to a 200k-row collect budget split
-    evenly across the batch, so the bound holds at any batch size. No
-    modifier is search_many's answer."""
+    exact page. Driver materialization is bounded by sum_q m_q rows: a
+    query over-fetches its whole match set only when its bound is below
+    query.RERANK_COLLECT_BUDGET split evenly across the batch, so the
+    bound holds at any batch size. No modifier is search_many's answer."""
     spark = engine.spark
     if mod is None:
-        return engine.search_many(
-            queries, default_k=default_k,
-            shared_scan_max_rows=shared_scan_max_rows,
-        )
-    plan = engine.plan_terms(sorted({t for q in queries for t in q["terms"]}))
-    df_of = dict(zip(plan["term"], plan["df"]))
-    if exhaustive_df_cutoff is None:
-        exhaustive_df_cutoff = max(2_000, 200_000 // max(1, len(queries)))
+        return engine.search_many(queries, default_k=default_k)
+    cutoff = max(
+        query.RERANK_MIN_EXHAUSTIVE,
+        query.RERANK_COLLECT_BUDGET // max(1, len(queries)),
+    )
     meta: dict[str, _Query] = {}
-    for q in queries:
-        mode = q.get("mode", "AND")
-        k = int(q.get("k", default_k))
-        terms = sorted(set(q["terms"]))
-        present = [t for t in terms if t in df_of]
-        if _unanswerable(present, terms, mode):
-            continue  # unanswerable -> no rows (search_terms contract)
+    for q in engine._plan_batch(queries, default_k)[1]:
         m = None  # None: the BM25 page is final (no rescoring)
-        if not (mod.single_term_final and len(present) < 2):
-            m = _initial_m(
-                k, overfetch, [df_of[t] for t in present], mode,
-                exhaustive_df_cutoff,
-            )
-        meta[str(q["query_id"])] = _Query(
-            present, mode, k, m, mod.ceiling(len(present))
+        if not (mod.single_term_final and len(q.present) < 2):
+            m = _initial_m(q.k, overfetch, q.dfs, q.mode, cutoff)
+        meta[q.qid] = _Query(
+            q.present, q.mode, q.k, m, mod.ceiling(len(q.present))
         )
     fallback = [
         qid for qid, q in meta.items() if q.m is not None and q.cert[0] <= 0.0
@@ -392,9 +379,9 @@ def batch_rerank(
         for qid, q in meta.items()
         if qid not in fallback
     ]
-    cand_rows = engine.search_many(
-        over, default_k=default_k, shared_scan_max_rows=shared_scan_max_rows
-    ).collect() if over else []  # bounded: sum_q m_q
+    cand_rows = (  # bounded: sum_q m_q
+        engine.search_many(over, default_k=default_k).collect() if over else []
+    )
     final_rows = [tuple(r) for r in cand_rows if meta[r["query_id"]].m is None]
     bm25_of: dict[str, list[float]] = {}
     for r in cand_rows:

@@ -22,8 +22,9 @@ Spark-first re-expression -- sequence-versioned segments + ranged tombstones:
   without a full recount (the annihilation idea applied to statistics).
 * ``compact_updates`` = RdbMerge: drops tombstoned (doc, seq<=upto) postings
   physically, merges each (term_id, block_id) back to one row at seg_seq 0,
-  then finishes like a build (index_build.finish_index: term_stats
-  recount, tombstones cleared, hot cache rebuilt).
+  then finishes like a build (index_build.finish_index: term_stats and
+  corpus_stats' n_terms/n_blocks recounted, tombstones cleared, hot cache
+  rebuilt).
 * the documents write, the delta segment and corpus_stats go through the
   index writer's steps (index_build.load_documents, segment,
   write_corpus_stats), so an update writes what a build would.
@@ -280,7 +281,14 @@ def compact_updates(spark: SparkSession, catalog: Catalog) -> int:
             int(meta["cache_k"]),
             BM25Params(k1=float(meta["k1"]), b=float(meta["b"])),
         )
-    finish_index(spark, catalog, None, hot)
+    # compaction leaves the live docs as they are: n_docs, avgdl and the
+    # positions flag carry over, n_terms and n_blocks are recounted
+    cs = catalog.read_table("corpus_stats").first()
+    finish_index(
+        spark, catalog,
+        (int(cs["n_docs"]), float(cs["avgdl"]), bool(cs["store_positions"])),
+        hot,
+    )
     return n_tombs
 
 

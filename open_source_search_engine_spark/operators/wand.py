@@ -21,8 +21,8 @@ groups at ANY granularity g:
 
 g is picked from the plan's per-term ``max_salt_bits`` / ``min_salt_bits``
 (term_stats): fine enough that heavy terms keep their native granularity,
-clamped so a term's coarsest block overlaps at most ~2^max_group_split
-groups.
+clamped so a term's coarsest block overlaps at most
+~2^query.MAX_GROUP_SPLIT groups.
 
 The driver reads the query terms' block metadata with Arrow from the
 engine's postings snapshot files (SearchEngine._snapshot_rows; no list
@@ -40,7 +40,7 @@ Then the exact path runs twice, its decode restricted (before ``inline``)
 to the blocks overlapping a chosen group set, written into the SQL text as
 integer literals:
 
-  Run A: the ``phase_a_groups`` groups with the highest bounds; theta is
+  Run A: the query.PHASE_A_GROUPS groups with the highest bounds; theta is
          the kth score of its page.
   Run B: every eligible group whose bound is >= theta - EPS, run A's
          included; its page is the answer. Skipped when it would repeat
@@ -66,24 +66,16 @@ from pyspark.sql import DataFrame
 
 from ..functions.bm25 import tf_norm
 from ..session import _local_frame
-from . import rerank
+from . import query, rerank
 from .query import _SCORED, _page, _unanswerable
 
 EPS = 1e-9
 
-#: replication budget: a coarse block overlaps at most ~2^this many groups
-#: (plus one doubling headroom for per-partition granularity drift)
-MAX_GROUP_SPLIT = 6
 
-
-def pick_granularity(
-    salt_bits_per_term,
-    min_salt_bits_per_term,
-    max_group_split: int = MAX_GROUP_SPLIT,
-) -> int:
+def pick_granularity(salt_bits_per_term, min_salt_bits_per_term) -> int:
     """Grouping granularity g for a query: the finest per-term granularity,
     clamped so the coarsest BLOCK of any query term overlaps
-    <= 2^max_group_split groups. Both inputs come from term_stats.
+    <= 2^query.MAX_GROUP_SPLIT groups. Both inputs come from term_stats.
 
     The clamp uses each term's min_salt_bits -- its coarsest block -- not
     just the per-term max: within one term, a straggler partial block
@@ -93,10 +85,10 @@ def pick_granularity(
     if not vals:
         return 0
     floor = min(int(v) for v in min_salt_bits_per_term)
-    return min(max(vals), floor + max_group_split)
+    return min(max(vals), floor + query.MAX_GROUP_SPLIT)
 
 
-def _groups(engine, plan: pd.DataFrame, max_group_split: int):
+def _groups(engine, plan: pd.DataFrame):
     """(g, per-group frame indexed by group id with the group's ``bound``
     and ``present`` term count, the coarse salt_bits levels), from the plan
     terms' block metadata read in the driver."""
@@ -106,9 +98,7 @@ def _groups(engine, plan: pd.DataFrame, max_group_split: int):
         "term_id",
         [int(t) for t in plan["term_id"]],
     ).to_pandas()
-    g = pick_granularity(
-        plan["max_salt_bits"], plan["min_salt_bits"], max_group_split
-    )
+    g = pick_granularity(plan["max_salt_bits"], plan["min_salt_bits"])
     idf = dict(zip(plan["term_id"].astype(np.int64), plan["idf"]))
     ub = meta["term_id"].map(idf).to_numpy() * tf_norm(
         meta["block_max_tf"], meta["block_min_dl"], engine.avgdl, engine.params
@@ -159,27 +149,24 @@ def wand_search(
     mode: str = "AND",
     k: int = 10,
     exclude_terms: list[str] | None = None,
-    phase_a_groups: int = 8,
-    max_group_split: int = MAX_GROUP_SPLIT,
-    small_df_cutoff: int = 100_000,
     after: tuple[float, int] | None = None,
 ) -> DataFrame:
     """Block-max WAND BM25 top-k. Same result contract as
     SearchEngine.search_terms (and search_after for ``after``): (doc_id,
     score, matched) ordered score desc / doc_id asc, limited to k.
 
-    Under AND the candidate set is bounded by the rarest term's df (from
-    the plan, no job). When that bound is <= ``small_df_cutoff`` pruning
-    cannot save more than the run it costs, so the query gets the exact
-    path's page (search_after); so does k <= 0. Otherwise two restricted
-    exact runs (module doc) give the page, collected: the run frames are
-    not returned, so the page plans as a LocalTableScan."""
+    A query that query.route sends to the exact path at any sum(df) (an
+    AND whose rarest df is at most RAREST_DF_CUTOFF: pruning cannot save
+    more than the run it costs) gets the exact path's page (search_after);
+    so does k <= 0. Otherwise two restricted exact runs (module doc) give
+    the page, collected: the run frames are not returned, so the page
+    plans as a LocalTableScan."""
     plan = engine.plan_terms(query_terms)
     if _unanswerable(plan, query_terms, mode):
         return _local_frame(engine.spark, _SCORED)
-    if k <= 0 or (mode == "AND" and int(plan["df"].min()) <= small_df_cutoff):
+    if k <= 0 or query.route(plan, mode, wand_df_cutoff=0)[0] == "exact":
         return engine.search_after(query_terms, mode, k, after, exclude_terms)
-    g, per, levels = _groups(engine, plan, max_group_split)
+    g, per, levels = _groups(engine, plan)
     n = len(plan)
     eligible = per[per["present"] == n] if mode == "AND" else per
     ranked = eligible.reset_index().sort_values(
@@ -199,7 +186,7 @@ def wand_search(
         return _page(scored, k, after).collect()
 
     partial = mode != "AND" and after is not None
-    m_a = min(max(phase_a_groups, 1), len(groups))
+    m_a = min(max(query.PHASE_A_GROUPS, 1), len(groups))
     rows = run(m_a, partial)
     theta = rows[-1]["score"] if len(rows) == k else -np.inf
     m_b = max(m_a, int(np.count_nonzero(bounds >= theta - EPS)))
@@ -215,7 +202,7 @@ def wand_proximity(
     prox_weight: float = 1.0,
     overfetch: int = 4,
     max_candidates: int = 10_000,
-    **wand_kwargs,
+    exclude_terms: list[str] | None = None,
 ) -> DataFrame:
     """Proximity rescoring on the WAND scale path: the exact answer of
     SearchEngine.search_proximity (AND), i.e. bm25 + prox_weight * the
@@ -225,13 +212,13 @@ def wand_proximity(
     Over-fetches BM25 candidates with wand_search, rescores only those
     with the shared pair bonus and certifies the page; the certificate,
     the tail-slope escalation up to ``max_candidates`` and the exact
-    fallback are rerank.wand_rerank's (see rerank.py). ``wand_kwargs``
-    go to wand_search; ``exclude_terms`` also reaches the exact fallback.
-    prox_weight=0 (or a <2-term query) is wand_search verbatim —
-    rank-identity gated in tests/test_wand_proximity.py."""
+    fallback are rerank.wand_rerank's (see rerank.py). ``exclude_terms``
+    reach wand_search and the exact fallback. prox_weight=0 (or a <2-term
+    query) is wand_search verbatim — rank-identity gated in
+    tests/test_wand_proximity.py."""
     return rerank.wand_rerank(
         engine, query_terms, "AND", k, rerank.proximity(engine, prox_weight),
-        overfetch, max_candidates, wand_kwargs,
+        overfetch, max_candidates, exclude_terms,
     )
 
 
@@ -242,7 +229,6 @@ def wand_phrase(
     overfetch: int = 4,
     max_candidates: int = 10_000,
     use_bigrams: bool = True,
-    **wand_kwargs,
 ) -> DataFrame:
     """Quoted-phrase top-k on the WAND scale path: the exact answer of
     SearchEngine.search_phrase (reference: quoted phrases go through the
@@ -254,20 +240,14 @@ def wand_phrase(
     candidates are position-verified (served from bigram termlists when
     present, restricted to the candidates) and certified by
     rerank.wand_rerank (see rerank.py). A single-word "phrase" is
-    wand_search verbatim. Rank/score identity with search_phrase is gated
-    in tests/test_wand_phrase.py."""
-    if wand_kwargs.get("exclude_terms"):
-        # the exact fallback (search_phrase) has no exclusion support, so
-        # accepting exclusions here would silently drop them whenever the
-        # fallback fires — fail loudly instead
-        raise ValueError(
-            "wand_phrase does not support exclude_terms; filter the "
-            "result or use search_query's grammar"
-        )
+    wand_search verbatim. No exclusions: the exact fallback
+    (search_phrase) has none; search_query's grammar combines the two.
+    Rank/score identity with search_phrase is gated in
+    tests/test_wand_phrase.py."""
     return rerank.wand_rerank(
         engine, sorted(set(phrase_terms)), "AND", k,
         rerank.phrase(engine, phrase_terms, use_bigrams),
-        overfetch, max_candidates, wand_kwargs,
+        overfetch, max_candidates, None,
     )
 
 
@@ -280,7 +260,7 @@ def wand_boosted(
     recency: tuple[str, float, float] | None = None,
     overfetch: int = 4,
     max_candidates: int = 10_000,
-    **wand_kwargs,
+    exclude_terms: list[str] | None = None,
 ) -> DataFrame:
     """Doc-level score boosts on the WAND scale path: the exact answer of
     SearchEngine.search_boosted, which joins the FULL candidate set to the
@@ -295,23 +275,18 @@ def wand_boosted(
     return rerank.wand_rerank(
         engine, query_terms, mode, k,
         rerank.boosts(engine, field_weights, recency),
-        overfetch, max_candidates, wand_kwargs,
+        overfetch, max_candidates, exclude_terms,
     )
 
 
-def pruning_stats(
-    engine,
-    query_terms: list[str],
-    mode: str = "AND",
-    max_group_split: int = MAX_GROUP_SPLIT,
-) -> dict:
+def pruning_stats(engine, query_terms: list[str], mode: str = "AND") -> dict:
     """Observability: how many groups the query's blocks fall into, and how
     many survive the AND-presence filter (the decode-avoidance win). A view
     over wand_search's driver-side block metadata: no Spark job."""
     plan = engine.plan_terms(query_terms)
     if plan.empty:
         return {"groups_total": 0, "groups_surviving": 0, "granularity": 0}
-    g, per, _ = _groups(engine, plan, max_group_split)
+    g, per, _ = _groups(engine, plan)
     total = len(per)
     surviving = int((per["present"] == len(plan)).sum())
     return {

@@ -48,7 +48,7 @@ def test_batch_matches_single_queries(spark, eng):
         assert got == single, q["query_id"]
 
 
-def test_batch_routing_invariant(eng):
+def test_batch_routing_invariant(eng, monkeypatch):
     """Results must not depend on the shared-scan/per-query routing cutoff:
     cutoff=0 routes EVERY answerable query through the pruned union-branch
     path, cutoff=huge keeps every one in the shared scan -- bit-identical."""
@@ -62,10 +62,12 @@ def test_batch_routing_invariant(eng):
             )
         return out
 
-    all_heavy = snap(eng.search_many(BATCH, shared_scan_max_rows=0).collect())
-    all_shared = snap(
-        eng.search_many(BATCH, shared_scan_max_rows=1 << 60).collect()
-    )
+    from open_source_search_engine_spark.operators import query
+
+    monkeypatch.setattr(query, "SHARED_SCAN_MAX_ROWS", 0)
+    all_heavy = snap(eng.search_many(BATCH).collect())
+    monkeypatch.setattr(query, "SHARED_SCAN_MAX_ROWS", 1 << 60)
+    all_shared = snap(eng.search_many(BATCH).collect())
     assert all_heavy == all_shared
     # q4 is unanswerable (term absent); q6 is answerable but no doc holds
     # all three AND terms in this corpus -> zero rows on both paths

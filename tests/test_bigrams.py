@@ -17,6 +17,7 @@ from open_source_search_engine_spark.operators.index_build import (
     build_index,
     transcripts_to_docs,
 )
+from open_source_search_engine_spark.operators import query
 from open_source_search_engine_spark.operators.query import SearchEngine
 from open_source_search_engine_spark.sources.transcripts import synth_transcripts
 
@@ -320,10 +321,12 @@ def modifier_pages(big, plain, tomb) -> dict:
     for terms in (["spark", "index"], ["spark", "index", "query"],
                   ["the", "to"]):
         for forced in (False, True):
-            kw = {"small_df_cutoff": 0} if forced else {}
-            out[f"wand_proximity_{' '.join(terms)}_{forced}"] = _rows(
-                wand_proximity(plain, terms, k=10, prox_weight=1.5, **kw)
-            )
+            with pytest.MonkeyPatch.context() as mp:
+                if forced:
+                    mp.setattr(query, "RAREST_DF_CUTOFF", 0)
+                out[f"wand_proximity_{' '.join(terms)}_{forced}"] = _rows(
+                    wand_proximity(plain, terms, k=10, prox_weight=1.5)
+                )
     out["search_many_proximity"] = _rows(
         plain.search_many_proximity(BATCH, prox_weight=1.5)
     )
@@ -341,11 +344,12 @@ def pinned_pages(big, plain, tomb) -> dict:
     """name -> rows of each entry point whose scoring or phrase matching
     shares the canonical fold or the positional kernel; postings rows are
     sorted, pages keep their order."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(query, "SHARED_SCAN_MAX_ROWS", 300)
+        heavy = _rows(plain.search_many(BATCH))
     out = {
         "search_many": _rows(plain.search_many(BATCH)),
-        "search_many_heavy": _rows(
-            plain.search_many(BATCH, shared_scan_max_rows=300)
-        ),
+        "search_many_heavy": heavy,
         "search_wildcard": _rows(
             plain.search_wildcard(["sp*", "*dex", "merge"], "OR", 10)
         ),

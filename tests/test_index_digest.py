@@ -193,7 +193,9 @@ PINNED = {
     },
     "compacted": {
         "blocks": "5b7325e7b65d682f",
-        "corpus_stats": "bc57eee37df09242",
+        # re-recorded when compaction began recounting n_blocks (the
+        # pre-compaction count, delta segment included, was kept before)
+        "corpus_stats": "eb79e1f711c7ab96",
         "hot_topk": "9b820add9ce64480",
         "postings": "25cbd6f85844aeef",
         "term_stats": "18449705b19f9dd5",
@@ -254,6 +256,10 @@ def test_update_digest(spark, tmp_path):
     got = update_digests(spark, str(tmp_path))
     for name, digest in got.items():
         assert digest == PINNED[name], name
+    # compaction recounts corpus_stats over the rewritten postings
+    catalog = Catalog(spark, f"{tmp_path}/updates")
+    n_blocks = catalog.read_table("corpus_stats").first()["n_blocks"]
+    assert n_blocks == catalog.read_table("postings").count()
 
 
 if __name__ == "__main__":

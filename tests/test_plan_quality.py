@@ -13,6 +13,7 @@ from open_source_search_engine_spark.operators.index_build import (
     build_index,
     transcripts_to_docs,
 )
+from open_source_search_engine_spark.operators import query
 from open_source_search_engine_spark.operators.query import SearchEngine
 from open_source_search_engine_spark.sources.transcripts import synth_transcripts
 
@@ -519,21 +520,23 @@ def test_wand_runs_have_no_python(eng, updated_eng, monkeypatch):
         return runs[-1]
 
     monkeypatch.setattr(SearchEngine, "_score_plan", recording)
+    monkeypatch.setattr(query, "RAREST_DF_CUTOFF", 0)
     for e in (eng, updated_eng):
         q = ["spark", "index"]
-        wand_search(e, q, "AND", 10, small_df_cutoff=0).collect()
+        wand_search(e, q, "AND", 10).collect()
         wand_search(e, q, "OR", 3, after=(1e9, 0)).collect()
     assert len(runs) >= 6
     for df in runs:
         assert _executed_python_nodes(df) == []
 
 
-def test_batch_shared_scan_decode_has_no_python(eng):
+def test_batch_shared_scan_decode_has_no_python(eng, monkeypatch):
+    monkeypatch.setattr(query, "SHARED_SCAN_MAX_ROWS", 10**9)
     queries = [
         {"query_id": "a", "terms": ["spark", "index"], "mode": "AND", "k": 5},
         {"query_id": "b", "terms": ["user", "the"], "mode": "OR", "k": 5},
     ]
-    df = eng.search_many(queries, shared_scan_max_rows=10**9)
+    df = eng.search_many(queries)
     assert _executed_python_nodes(df) == []
 
 
@@ -559,6 +562,7 @@ def test_proximity_has_no_python(eng, updated_eng, monkeypatch):
         return dataclasses.replace(mod, rescore=rescore)
 
     monkeypatch.setattr(rerank, "proximity", recording)
+    monkeypatch.setattr(query, "RAREST_DF_CUTOFF", 0)
     q = ["spark", "index", "query"]
     batch = [
         {"query_id": "a", "terms": q, "mode": "AND", "k": 5},
@@ -566,7 +570,7 @@ def test_proximity_has_no_python(eng, updated_eng, monkeypatch):
     ]
     for e in (eng, updated_eng):
         assert _executed_python_nodes(e.search_proximity(q, k=10)) == []
-        wand_proximity(e, q, k=3, small_df_cutoff=0).collect()
+        wand_proximity(e, q, k=3).collect()
         e.search_many_proximity(batch).collect()
     assert len(rescored) >= 4
     for df in rescored:
@@ -683,7 +687,9 @@ def test_plan_terms_reads_a_fileless_term_stats_through_spark(spark, eng):
         )
 
 
-def test_wand_reads_a_fileless_postings_through_spark(spark, wand_eng):
+def test_wand_reads_a_fileless_postings_through_spark(
+    spark, wand_eng, monkeypatch
+):
     from open_source_search_engine_spark.operators.wand import (
         pruning_stats,
         wand_search,
@@ -693,9 +699,10 @@ def test_wand_reads_a_fileless_postings_through_spark(spark, wand_eng):
         spark, _Fileless(wand_eng.catalog, ("term_stats", "postings"))
     )
     assert fileless._postings.inputFiles() == []
+    monkeypatch.setattr(query, "RAREST_DF_CUTOFF", 0)
     q = ["the", "to"]
     for mode in ("AND", "OR"):
-        got = wand_search(fileless, q, mode, 10, small_df_cutoff=0)
+        got = wand_search(fileless, q, mode, 10)
         assert got.collect() == wand_eng.search_terms(q, mode, 10).collect()
         assert pruning_stats(fileless, q, mode) == pruning_stats(
             wand_eng, q, mode
@@ -741,7 +748,7 @@ def test_collected_pages_plan_as_local_table_scan(spark, eng):
     assert [r["idf"] is None for r in info.collect()] == [False, True]
     assert info.schema.simpleString() == (
         "struct<term:string,present:boolean,df:bigint,idf:double,"
-        "route:string,sum_df:bigint>"
+        "route:string,reason:string,sum_df:bigint>"
     )
     assert [tuple(r) for r in local.collect()] == rows
     assert local.schema.simpleString() == (
@@ -814,12 +821,16 @@ def wand_eng(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("mode", ["AND", "OR"])
-def test_two_phase_wand_launches_at_most_four_jobs(spark, wand_eng, mode):
+def test_two_phase_wand_launches_at_most_four_jobs(
+    spark, wand_eng, mode, monkeypatch
+):
     from open_source_search_engine_spark.operators.wand import (
         pruning_stats,
         wand_search,
     )
 
+    monkeypatch.setattr(query, "PHASE_A_GROUPS", 1)
+    monkeypatch.setattr(query, "RAREST_DF_CUTOFF", 0)
     q = ["the", "to", "spark"]
     want = wand_eng.search_terms(q, mode, 10).collect()
     st = pruning_stats(wand_eng, q, mode)  # plans the terms
@@ -828,9 +839,7 @@ def test_two_phase_wand_launches_at_most_four_jobs(spark, wand_eng, mode):
     rows, jobs = _jobs_of(
         sc,
         f"wand-two-phase-{mode}",
-        lambda: wand_search(
-            wand_eng, q, mode, 10, phase_a_groups=1, small_df_cutoff=0
-        ).collect(),
+        lambda: wand_search(wand_eng, q, mode, 10).collect(),
     )
     assert rows == want
     assert jobs <= 4

@@ -216,50 +216,6 @@ def test_append_after_copy_rebases_onto_new_root(spark, tmp_path_factory):
     assert got == [0, 1, 2, 10, 11, 12]
 
 
-def test_search_auto_routes_by_planned_df(eng):
-    # adaptive strategy choice (single-query analog of search_many's
-    # shared_scan_max_rows routing): both routes must serve identical
-    # pages, and the route really is decided by the cutoff — a zero
-    # cutoff forces WAND, an enormous one forces the exact scan.
-    terms = ["spark", "index"]
-    exact = [
-        (r["doc_id"], round(r["score"], 12), r["matched"])
-        for r in eng.search_auto(
-            terms, "AND", 10, wand_df_cutoff=10**12
-        ).collect()
-    ]
-    via_wand = [
-        (r["doc_id"], round(r["score"], 12), r["matched"])
-        for r in eng.search_auto(terms, "AND", 10, wand_df_cutoff=0).collect()
-    ]
-    want = [
-        (r["doc_id"], round(r["score"], 12), r["matched"])
-        for r in eng.search_terms(terms, "AND", 10).collect()
-    ]
-    assert exact == want and via_wand == want and want
-
-
-def test_search_auto_exclusions_and_or_mode(eng):
-    for cutoff in (0, 10**12):
-        got = [
-            (r["doc_id"], round(r["score"], 12))
-            for r in eng.search_auto(
-                ["spark", "index"],
-                "OR",
-                10,
-                exclude_terms=["merge"],
-                wand_df_cutoff=cutoff,
-            ).collect()
-        ]
-        want = [
-            (r["doc_id"], round(r["score"], 12))
-            for r in eng.search_terms(
-                ["spark", "index"], "OR", 10, exclude_terms=["merge"]
-            ).collect()
-        ]
-        assert got == want and want
-
-
 def test_search_auto_missing_term_is_empty(eng):
     assert eng.search_auto(["zz_nope_xx"], "AND", 5).count() == 0
 

@@ -86,19 +86,19 @@ def test_deep_page_plan_is_single_topk(eng):
     assert "Window" not in p
 
 
-def test_wand_cursor_pages_tile_exact_ranking(eng):
+def test_wand_cursor_pages_tile_exact_ranking(eng, monkeypatch):
     # WAND + cursor on BOTH wand paths must reproduce the exact-path
     # global ranking bit-for-bit when chained
+    from open_source_search_engine_spark.operators import query
     from open_source_search_engine_spark.operators.wand import wand_search
 
     full = eng.search_terms(Q, "AND", 10_000).collect()
     assert len(full) > 15
     for cutoff in (100_000, 0):  # fast path, then forced two-phase theta
+        monkeypatch.setattr(query, "RAREST_DF_CUTOFF", cutoff)
         paged, cur = [], None
         while True:
-            page = wand_search(
-                eng, Q, "AND", k=6, after=cur, small_df_cutoff=cutoff
-            ).collect()
+            page = wand_search(eng, Q, "AND", k=6, after=cur).collect()
             if not page:
                 break
             paged.extend(page)
@@ -139,24 +139,24 @@ def tight_eng(spark, tmp_path_factory):
     return SearchEngine(spark, cat)
 
 
-def test_wand_or_cursor_pages_tile_exact_or_ranking(tight_eng):
+def test_wand_or_cursor_pages_tile_exact_or_ranking(tight_eng, monkeypatch):
     # forced two-phase OR + cursor: theta must count complete rows only. A
     # partial row of a doc an earlier page returned passes the cursor and,
     # counted, would prune the groups that hold the next page
+    from open_source_search_engine_spark.operators import query
     from open_source_search_engine_spark.operators.wand import (
         pruning_stats,
         wand_search,
     )
 
+    monkeypatch.setattr(query, "PHASE_A_GROUPS", 1)
+    monkeypatch.setattr(query, "RAREST_DF_CUTOFF", 0)
     q = ["aa", "bb"]
     assert pruning_stats(tight_eng, q, "OR")["groups_total"] > 8
     full = tight_eng.search_terms(q, "OR", 10_000).collect()
     paged, cur = [], None
     while len(paged) <= len(full):
-        page = wand_search(
-            tight_eng, q, "OR", k=1, after=cur, phase_a_groups=1,
-            small_df_cutoff=0,
-        ).collect()
+        page = wand_search(tight_eng, q, "OR", k=1, after=cur).collect()
         if not page:
             break
         paged.extend(page)

@@ -121,7 +121,11 @@ def test_serve_empty_query_is_empty_frame(eng):
     assert out.count() == 0
 
 
-def test_serve_wand_route_is_identical(eng):
+def test_serve_wand_route_is_identical(eng, monkeypatch):
+    from open_source_search_engine_spark.operators import query
+
     asked = eng.serve("spark index", k=5).collect()
-    routed = eng.serve("spark index", k=5, wand_df_cutoff=0).collect()
+    monkeypatch.setattr(query, "WAND_DF_CUTOFF", 0)
+    monkeypatch.setattr(query, "RAREST_DF_CUTOFF", 0)
+    routed = eng.serve("spark index", k=5).collect()
     assert [tuple(r) for r in routed] == [tuple(r) for r in asked]

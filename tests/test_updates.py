@@ -324,6 +324,25 @@ def test_update_refuses_other_store_positions(spark, tmp_path):
         eng.search_phrase(["red", "apple"], use_bigrams=False)
 
 
+def test_update_refuses_a_doc_id_twice_in_one_batch(spark, tmp_path):
+    """The collision audit covers an update's new rows: an upsert batch
+    holding one doc_id twice raises."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    docs = spark.createDataFrame(
+        [(1, "red apple pie"), (2, "green apple tart")],
+        "doc_id long, text string",
+    )
+    build_index(spark, cat, docs, IndexConfig(tokenizer_mode="ascii"))
+    up = spark.createDataFrame(
+        [(3, "red apple crumble"), (3, "blue plum jam")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError, match="collision"):
+        apply_updates(
+            spark, cat, upserts=up, config=IndexConfig(tokenizer_mode="ascii")
+        )
+
+
 def _engine(spark, catalog, rows, mode="ascii", **cfg):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     build_index(spark, catalog, docs, IndexConfig(tokenizer_mode=mode, **cfg))

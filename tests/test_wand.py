@@ -11,6 +11,7 @@ from open_source_search_engine_spark.operators.index_build import (
     build_index,
     transcripts_to_docs,
 )
+from open_source_search_engine_spark.operators import query
 from open_source_search_engine_spark.operators.query import SearchEngine
 from open_source_search_engine_spark.operators.wand import (
     pruning_stats,
@@ -57,19 +58,18 @@ def eng(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("cutoff", [100_000, 0])
 @pytest.mark.parametrize("terms,mode,k", QUERY_TIERS)
-def test_wand_matches_exact(eng, terms, mode, k, cutoff):
+def test_wand_matches_exact(eng, terms, mode, k, cutoff, monkeypatch):
     # cutoff=100_000: AND tiers take the one-job small-df fast path;
     # cutoff=0: every tier forced through two-phase theta pruning.
     # Both must be rank- AND score-identical to the exact path.
+    monkeypatch.setattr(query, "RAREST_DF_CUTOFF", cutoff)
     exact = [
         (int(r["doc_id"]), float(r["score"]), int(r["matched"]))
         for r in eng.search_terms(terms, mode=mode, k=k).collect()
     ]
     wand = [
         (int(r["doc_id"]), float(r["score"]), int(r["matched"]))
-        for r in wand_search(
-            eng, terms, mode=mode, k=k, small_df_cutoff=cutoff
-        ).collect()
+        for r in wand_search(eng, terms, mode=mode, k=k).collect()
     ]
     assert [w[0] for w in wand] == [e[0] for e in exact]
     for (wd, ws, wm), (ed, es, em) in zip(wand, exact):
@@ -85,13 +85,12 @@ def test_wand_with_exclusion(eng):
     assert [r["doc_id"] for r in wand] == [r["doc_id"] for r in exact]
 
 
-def test_wand_small_phase_a(eng):
+def test_wand_small_phase_a(eng, monkeypatch):
     """Tiny phase-A budget forces the theta-pruning path in phase B."""
+    monkeypatch.setattr(query, "PHASE_A_GROUPS", 1)
+    monkeypatch.setattr(query, "RAREST_DF_CUTOFF", 0)
     exact = eng.search_terms(["spark", "index"], "AND", 5).collect()
-    wand = wand_search(
-        eng, ["spark", "index"], "AND", 5, phase_a_groups=1,
-        small_df_cutoff=0,
-    ).collect()
+    wand = wand_search(eng, ["spark", "index"], "AND", 5).collect()
     assert [r["doc_id"] for r in wand] == [r["doc_id"] for r in exact]
 
 
@@ -100,10 +99,8 @@ def test_pick_granularity_bounds_within_term_fanout():
     the per-term max: a term whose max is 20 but that carries one salt_bits
     0 straggler block must not see g = 20 (the straggler would overlap
     2^20 groups)."""
-    from open_source_search_engine_spark.operators.wand import (
-        MAX_GROUP_SPLIT,
-        pick_granularity,
-    )
+    from open_source_search_engine_spark.operators.query import MAX_GROUP_SPLIT
+    from open_source_search_engine_spark.operators.wand import pick_granularity
 
     # homogeneous terms: behavior unchanged
     assert pick_granularity([12, 0], [12, 0]) == 0 + MAX_GROUP_SPLIT
@@ -132,9 +129,10 @@ def test_and_presence_pruning_prunes(eng):
 
 
 @pytest.mark.parametrize("mode,cutoff", [("OR", 100_000), ("AND", 0)])
-def test_wand_k0_is_the_exact_empty_page(eng, mode, cutoff):
+def test_wand_k0_is_the_exact_empty_page(eng, mode, cutoff, monkeypatch):
     # k=0 on the two-phase path used to index an empty page's kth row
+    monkeypatch.setattr(query, "RAREST_DF_CUTOFF", cutoff)
     q = ["spark", "index"]
-    page = wand_search(eng, q, mode, k=0, small_df_cutoff=cutoff)
+    page = wand_search(eng, q, mode, k=0)
     assert page.collect() == [] == eng.search_terms(q, mode, k=0).collect()
     assert page.schema == eng.search_terms(q, mode, k=0).schema

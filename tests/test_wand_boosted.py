@@ -25,6 +25,7 @@ from open_source_search_engine_spark.operators.index_build import (
     build_index,
     transcripts_to_docs,
 )
+from open_source_search_engine_spark.operators import query
 from open_source_search_engine_spark.operators.query import SearchEngine
 from open_source_search_engine_spark.operators.wand import (
     wand_boosted,
@@ -184,12 +185,15 @@ def _expected_batch(eng, fw=None, rec=None):
     [
         {},  # default routing (exhaustive bound usually applies)
         # certificate / per-query fallback path: tiny over-fetch, exhaustive
-        # bound disabled — at least the stopword query must fail the
-        # certificate and take its exact branch
-        {"overfetch": 1, "exhaustive_df_cutoff": 1},
+        # bound disabled (a 1-row cutoff) — at least the stopword query
+        # must fail the certificate and take its exact branch
+        {"overfetch": 1},
     ],
 )
-def test_batch_boosted_matches_exact_per_query(eng, kwargs):
+def test_batch_boosted_matches_exact_per_query(eng, kwargs, monkeypatch):
+    if kwargs:
+        monkeypatch.setattr(query, "RERANK_COLLECT_BUDGET", 0)
+        monkeypatch.setattr(query, "RERANK_MIN_EXHAUSTIVE", 1)
     got = _batch_rows(
         eng.search_many_boosted(BATCH, field_weights=ROLE_W, **kwargs)
     )

@@ -107,7 +107,7 @@ def test_restrict_narrows_but_never_alters(eng):
 
 def test_exclusions_rejected_loudly(eng):
     # the exact fallback (search_phrase) has no exclusion support, so the
-    # scale path must refuse rather than silently drop the filter when the
-    # terminal branch fires
-    with pytest.raises(ValueError, match="exclude_terms"):
+    # scale path takes no exclusions at all rather than silently dropping
+    # the filter when the terminal branch fires
+    with pytest.raises(TypeError, match="exclude_terms"):
         wand_phrase(eng, ["to", "be"], k=5, exclude_terms=["spark"])
