@@ -28,9 +28,14 @@ import time
 import uuid
 from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 CURRENT = "_current.json"
+#: the footer key under which Spark's Parquet writer records the Spark
+#: schema of the rows (the schema Spark's own inference reads back)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 #: every table is written with the Parquet v2 writer, whose integer
 #: encodings (dictionary while it pays, else DELTA_BINARY_PACKED) pack the
 #: postings' list columns (functions/codec.py) with no codec of our own
@@ -187,7 +192,28 @@ class Catalog:
             raise FileNotFoundError(f"table {name} has no committed snapshot")
         if not m["data_dirs"]:
             raise FileNotFoundError(f"table {name} is empty")
-        return self.spark.read.parquet(*self._resolve_dirs(name, m))
+        return self._read_dirs(self._resolve_dirs(name, m))
+
+    def _read_dirs(self, dirs: list[str]) -> DataFrame:
+        """The Parquet data dirs ``dirs`` as one frame. The schema comes
+        from the first data file's footer, where Spark's writer recorded
+        it, so the read launches no schema-inference job; a hive-partitioned
+        dir, or a footer without that record, leaves inference to Spark."""
+        schema = None
+        files = sorted(
+            f for f in (os.listdir(dirs[0]) if os.path.isdir(dirs[0]) else ())
+            if not f.startswith(("_", "."))
+        )
+        if files and all(f.endswith(".parquet") for f in files):
+            meta = pq.read_schema(os.path.join(dirs[0], files[0])).metadata
+            if meta and _SPARK_SCHEMA_KEY in meta:
+                schema = StructType.fromJson(
+                    json.loads(meta[_SPARK_SCHEMA_KEY])
+                )
+        reader = self.spark.read
+        return (reader if schema is None else reader.schema(schema)).parquet(
+            *dirs
+        )
 
     def write_table(
         self,
@@ -304,7 +330,7 @@ class Catalog:
             if snap["snapshot_id"] == snapshot_id:
                 if not snap["data_dirs"]:
                     raise FileNotFoundError(f"snapshot {snapshot_id} is empty")
-                return self.spark.read.parquet(*self._resolve_dirs(name, snap))
+                return self._read_dirs(self._resolve_dirs(name, snap))
         raise FileNotFoundError(f"table {name} has no snapshot {snapshot_id}")
 
     def data_dirs(self, name: str) -> list[str]:

@@ -4461,7 +4461,7 @@ j AS (
 ),
 tot AS (SELECT sum(df) AS sum_df FROM j)
 SELECT term, present, CAST(df AS BIGINT) AS df, round(idf, 4) AS idf,
-       CASE WHEN tot.sum_df <= 1000000 THEN 'exact' ELSE 'wand' END AS route,
+       CASE WHEN tot.sum_df <= 1000000 THEN 'driver' ELSE 'wand' END AS route,
        CAST(tot.sum_df AS BIGINT) AS sum_df
 FROM j CROSS JOIN tot ORDER BY term
 """,

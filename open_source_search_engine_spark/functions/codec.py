@@ -14,18 +14,19 @@ the docs of one term inside one doc-hash prefix range, stored as
 
 The catalog writes every table with the Parquet v2 writer, which packs
 these integers itself (dictionary-encoded while the dictionary pays, else
-DELTA_BINARY_PACKED) -- no codec of our own and no binary cells. Readers
-never decode in Python: every query path explodes
-``arrays_zip(doc_ids, tfs, dls[, positions])`` in the JVM
-(query.SearchEngine.decoded_postings); block-max WAND reads only the
-per-block metadata in the driver. The per-block
+DELTA_BINARY_PACKED) -- no codec of our own and no binary cells. The
+Spark query paths explode ``arrays_zip(doc_ids, tfs, dls[, positions])``
+in the JVM (query.SearchEngine.decoded_postings); the driver route reads
+a small plan's blocks with Arrow and flattens them with
+:func:`decode_blocks` (query.SearchEngine._live_postings); block-max WAND
+reads only the per-block metadata in the driver. The per-block
 ``first_doc_id/last_doc_id/block_max_tf/block_min_dl`` columns replace the
 reference's RdbMap page index + B-step skip bits (`Posdb.h:178-186`,
 `RdbMap.h:1-25`) as the skip/prune metadata for block-max WAND.
 
-The build and the merge move between these columns and flat numpy arrays
-with :func:`encode_blocks` / :func:`decode_blocks`: one vectorized pass per
-column, offsets instead of per-row Python objects.
+The build, the merge and the driver route move between these columns and
+flat numpy arrays with :func:`encode_blocks` / :func:`decode_blocks`: one
+vectorized pass per column, offsets instead of per-row Python objects.
 """
 
 from __future__ import annotations
@@ -78,8 +79,9 @@ def encode_blocks(
     }
 
 
-def decode_blocks(batch: pa.RecordBatch, with_positions: bool):
-    """Inverse of :func:`encode_blocks` over a batch of block rows.
+def decode_blocks(batch: pa.RecordBatch | pa.Table, with_positions: bool):
+    """Inverse of :func:`encode_blocks` over a batch (or table) of block
+    rows.
 
     Returns ``(doc_ids, tfs, dls, positions, counts)``: flat int64 arrays in
     row order, the per-doc position lists (None unless ``with_positions``)
@@ -88,11 +90,13 @@ def decode_blocks(batch: pa.RecordBatch, with_positions: bool):
 
     def flat(name: str) -> np.ndarray:
         return (
-            batch.column(name).flatten().to_numpy(zero_copy_only=False)
+            pc.list_flatten(batch.column(name)).to_numpy(zero_copy_only=False)
             .astype(np.int64)
         )
 
-    positions = batch.column("positions").flatten() if with_positions else None
+    positions = (
+        pc.list_flatten(batch.column("positions")) if with_positions else None
+    )
     return (
         flat("doc_ids"), flat("tfs"), flat("dls"), positions,
         counts.to_numpy(zero_copy_only=False).astype(np.int64),

@@ -922,9 +922,15 @@ def finish_index(
       (min_df, cache_k, params) is given. A cache left by an earlier build
       is never served: it names the postings snapshot it was built from.
 
+    term_stats is sorted by term within each file, so the row-group
+    statistics of a multi-row-group file bound the driver's dictionary
+    lookups (SearchEngine._snapshot_rows).
+
     Returns (n_terms, n_blocks)."""
     catalog.write_table(
-        term_stats_from_postings(catalog.read_table("postings")), "term_stats"
+        term_stats_from_postings(catalog.read_table("postings"))
+        .sortWithinPartitions("term"),
+        "term_stats",
     )
     counts = write_corpus_stats(spark, catalog, *corpus)
     if catalog.table_exists("tombstones") or catalog.table_exists("index_meta"):

@@ -33,8 +33,16 @@ definition of each modifier, sharing one formula module (functions/bm25.py):
 * ``wand`` (block-max pruning, wand.py) chooses block groups in the
   driver from their upper bounds and scores them with the exact path
   (restricted runs of ``_score_plan``), so results are identical.
-  ``route`` is the one function that picks exact or WAND for a query,
-  from its plan; every routing cutoff is a constant next to it.
+
+* a plan whose postings fit under WAND_DF_CUTOFF never reaches Spark:
+  ``_driver_pages`` reads its blocks with Arrow in the driver and folds
+  them with numpy in the same canonical order, bit-identical to
+  ``_aggregate_scores`` -- the reference answers a query in one process,
+  over termlists it reads itself (Msg39 -> PosdbTable, Msg3a merge).
+
+``route`` is the one function that picks the driver, the Spark exact path
+or WAND for a query, from its plan; every routing cutoff is a constant
+next to it.
 
 Proximity, phrase and boosts are each defined once, in rerank.py, as a
 ``Modifier``: the exact path (search_proximity, search_phrase,
@@ -61,8 +69,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..functions.bm25 import (
-    BM25Params, idf as bm25_idf, idf_sql, sql_double, tf_norm_sql,
+    BM25Params, idf as bm25_idf, idf_sql, sql_double, tf_norm, tf_norm_sql,
 )
+from ..functions.codec import decode_blocks
 from ..functions.tokenizer import tokenize
 from ..session import _local_frame
 from .index_build import _check_block_format
@@ -93,7 +102,8 @@ def _unanswerable(present, query_terms: list[str], mode: str) -> bool:
 #    cutoff it and the batch planner use is one of these constants. They are
 #    read at call time, so a test can monkeypatch them.
 
-#: a query whose planned decode volume sum(df) is at most this is exact
+#: a query whose planned decode volume sum(df) (its excluded terms' df
+#: included) is at most this runs in the driver (SearchEngine._driver_pages)
 WAND_DF_CUTOFF = 1_000_000
 #: an AND query whose rarest df is at most this is exact: its candidate
 #: set is that small, so pruning cannot save more than the run it costs
@@ -122,20 +132,30 @@ def match_bound(dfs, mode: str) -> int:
 
 
 def route(
-    plan: pd.DataFrame, mode: str, wand_df_cutoff: int | None = None
+    plan, mode: str, wand_df_cutoff: int | None = None, exclude_df: int = 0
 ) -> tuple[str, str]:
     """A single query's strategy, from its plan alone (no job): (route,
-    reason). "exact" (search_terms) with reason "sum_df" when sum(df) is
-    at most ``wand_df_cutoff`` (WAND_DF_CUTOFF by default), or with reason
-    "rarest_df" when an AND query's rarest df is at most RAREST_DF_CUTOFF;
-    otherwise "wand" (block-max pruning, wand.wand_search) with reason
-    "pruning". The reference sizes its intersection strategy the same
-    way, off per-term list sizes before any termlist is read
-    (rarest-first seeding, `PosdbTable.cpp:1998`)."""
+    reason).
+
+    * "driver" (SearchEngine._driver_pages: one Arrow read and a numpy
+      fold, no Spark job) with reason "sum_df" when the postings it reads,
+      sum(df) plus the excluded terms' ``exclude_df``, are at most
+      ``wand_df_cutoff`` (WAND_DF_CUTOFF by default);
+    * "exact" (the Spark exact path) with reason "rarest_df" when an AND
+      query's rarest df is at most RAREST_DF_CUTOFF;
+    * otherwise "wand" (block-max pruning, wand.wand_search) with reason
+      "pruning".
+
+    ``plan`` is the query's plan, or any mapping whose "df" holds its
+    present terms' dfs. The reference sizes its intersection strategy the
+    same way, off per-term list sizes before any termlist is read
+    (rarest-first seeding, `PosdbTable.cpp:1998`), and answers a query in
+    one process over termlists it reads itself (Msg39 -> PosdbTable)."""
+    dfs = [int(d) for d in plan["df"]]
     cutoff = WAND_DF_CUTOFF if wand_df_cutoff is None else wand_df_cutoff
-    if int(plan["df"].sum()) <= cutoff:
-        return "exact", "sum_df"
-    if mode == "AND" and match_bound(plan["df"], mode) <= RAREST_DF_CUTOFF:
+    if sum(dfs) + int(exclude_df) <= cutoff:
+        return "driver", "sum_df"
+    if mode == "AND" and match_bound(dfs, mode) <= RAREST_DF_CUTOFF:
         return "exact", "rarest_df"
     return "wand", "pruning"
 
@@ -143,14 +163,27 @@ def route(
 class _BatchQuery(NamedTuple):
     """One answerable batch query after planning (SearchEngine._plan_batch):
     its present terms in ascending order and their dfs, its mode and k, and
-    whether it joins search_many's shared scan."""
+    where search_many answers it: "driver" (route's driver route), "shared"
+    (the shared scan) or "branch" (its own union branch)."""
 
     qid: str
     present: list[str]
     dfs: list[int]
     mode: str
     k: int
-    shared: bool
+    via: str
+
+
+class _DriverQuery(NamedTuple):
+    """One query for the driver route (SearchEngine._driver_pages): its
+    (term_id, idf) slots in term-string order (the canonical fold's order),
+    its mode and k, the term ids whose docs it excludes, and its cursor."""
+
+    slots: list[tuple[int, float]]
+    mode: str
+    k: int
+    exclude_ids: tuple[int, ...] = ()
+    after: tuple[float, int] | None = None
 
 
 def _page(
@@ -227,21 +260,27 @@ class SearchEngine:
         self.tokenizer_mode = tokenizer_mode
         self._postings = catalog.read_table("postings")
         _check_block_format(self._postings)
-        row = catalog.read_table("corpus_stats").collect()[0]
-        self.n_docs = int(row["n_docs"])
-        self.avgdl = float(row["avgdl"])
-        self.store_positions = bool(row["store_positions"])
         self._term_stats = catalog.read_table("term_stats")
         #: table -> (frame, its snapshot files) for _snapshot_rows, which
         #: reads the files with Arrow; a table that is not a file scan
-        #: (Iceberg's DSv2 tables) lists none and is read by Spark
+        #: (Iceberg's DSv2 tables) lists none and is read by Spark. On a
+        #: parquet catalog nothing here launches a Spark job.
         self._snapshots = {
             name: (frame, frame.inputFiles())
             for name, frame in (
                 ("term_stats", self._term_stats),
                 ("postings", self._postings),
+                *(
+                    (name, catalog.read_table(name))
+                    for name in ("corpus_stats", "tombstones", "hot_meta")
+                    if catalog.table_exists(name)
+                ),
             )
         }
+        row = self._snapshot_rows("corpus_stats").to_pylist()[0]
+        self.n_docs = int(row["n_docs"])
+        self.avgdl = float(row["avgdl"])
+        self.store_positions = bool(row["store_positions"])
         #: term -> (term_id, df, max_salt_bits) | None for confirmed-absent
         #: (the g_termFreqCache analog, `Posdb.cpp:306`; snapshot-bound)
         self._plan_cache: dict[str, tuple | None] = {}
@@ -260,12 +299,18 @@ class SearchEngine:
         self._serp_cache: OrderedDict = OrderedDict()
         self._serp_cache_max = 256
         # ranged tombstones from incremental updates (operators/updates.py):
-        # ignore a doc's postings from segments with seg_seq <= upto_seq
-        if catalog.table_exists("tombstones"):
-            t = catalog.read_table("tombstones")
-            self._tombstones = t if t.limit(1).count() else None
-        else:
-            self._tombstones = None
+        # ignore a doc's postings from segments with seg_seq <= upto_seq.
+        # The Spark paths join the frame; the driver route searches the
+        # (doc_id ascending, upto_seq) arrays (one row per doc)
+        self._tombstones = self._tomb_arrays = None
+        if "tombstones" in self._snapshots:
+            t = self._snapshot_rows("tombstones", ["doc_id", "upto_seq"])
+            if t.num_rows:
+                self._tombstones = self._snapshots["tombstones"][0]
+                t = t.sort_by("doc_id")
+                self._tomb_arrays = tuple(
+                    t.column(c).to_numpy() for c in ("doc_id", "upto_seq")
+                )
         # high-frequency-term shortcut cache (operators/hot_cache.py);
         # consulted only while FRESH: built from the current postings
         # snapshot (any later update, merge or rebuild commits a new one),
@@ -274,8 +319,8 @@ class SearchEngine:
         # different params would silently serve a wrongly-selected top-k
         self._hot_topk = None
         self._hot_meta: dict | None = None
-        if catalog.table_exists("hot_meta") and catalog.table_exists("hot_topk"):
-            meta = catalog.read_table("hot_meta").collect()[0].asDict()
+        if "hot_meta" in self._snapshots and catalog.table_exists("hot_topk"):
+            meta = self._snapshot_rows("hot_meta").to_pylist()[0]
             if (
                 meta.get("postings_snapshot") == catalog.snapshot_id("postings")
                 and float(meta["k1"]) == self.params.k1
@@ -318,20 +363,34 @@ class SearchEngine:
         return rows.sort_values(["df", "term"]).reset_index(drop=True)
 
     def _snapshot_rows(
-        self, table: str, cols: list[str], key: str, values: list
+        self,
+        table: str,
+        cols: list[str] | None = None,
+        key: str | None = None,
+        values: list | None = None,
     ) -> pa.Table:
-        """``cols`` of the rows of this engine's ``table`` snapshot
-        ("term_stats" or "postings") whose ``key`` is in ``values``, read in
-        the driver with Arrow from the snapshot's own files: no Spark job.
-        A catalog whose table lists no files (Iceberg) is read with a
-        filtered Spark scan instead."""
+        """``cols`` (None: all) of the rows of this engine's ``table``
+        snapshot (a key of ``_snapshots``) whose ``key`` is in ``values``
+        (no ``key``: every row), read in the driver with Arrow from the
+        snapshot's own files: no Spark job. The filter carries the values'
+        range too: Arrow prunes row groups by their statistics for a range,
+        never for ``isin`` alone. A catalog whose table lists no files
+        (Iceberg) is read with a filtered Spark scan instead."""
         frame, files = self._snapshots[table]
         if not files:
-            return frame.where(F.col(key).isin(values)).select(*cols).toArrow()
+            if key is not None:
+                frame = frame.where(F.col(key).isin(values))
+            return (frame if cols is None else frame.select(*cols)).toArrow()
+        where = None
+        if key is not None:
+            field = pc.field(key)
+            where = field.isin(values)
+            if values:
+                where = (field >= min(values)) & (field <= max(values)) & where
         fs = FileSystem.from_uri(files[0])[0]
         return pads.dataset(
             [FileSystem.from_uri(f)[1] for f in files], filesystem=fs
-        ).to_table(columns=cols, filter=pc.field(key).isin(values))
+        ).to_table(columns=cols, filter=where)
 
     def tokenize_query(self, query: str) -> list[str]:
         return tokenize(query, self.tokenizer_mode)
@@ -440,21 +499,151 @@ class SearchEngine:
         filter_docs: DataFrame | None = None,
     ) -> DataFrame:
         """Exact BM25 top-k. Returns (doc_id, score, matched) DataFrame,
-        ordered score desc / doc_id asc, limited to k (Spark executes this
-        as TakeOrderedAndProject: per-partition partial top-k + tiny final
-        merge, the TopTree -> Msg3a shape).
+        ordered score desc / doc_id asc, limited to k.
 
-        Unrestricted single-term queries on precomputed hot terms answer
-        from the shortcut cache (hot_cache.py) -- bit-identical results,
-        no postings decode (plan-gated)."""
-        uniq = sorted(set(query_terms))
-        if len(uniq) == 1 and not exclude_terms and filter_docs is None:
-            fast = self._hot_single_term(uniq[0], k)
-            if fast is not None:
-                return fast
+        A plan that ``route`` sends to the driver is answered there
+        (_driver_pages: no Spark job); any other plan, and every
+        ``filter_docs`` call, runs the Spark exact path, which executes the
+        page as TakeOrderedAndProject: per-partition partial top-k + tiny
+        final merge, the TopTree -> Msg3a shape. Unrestricted single-term
+        queries on precomputed hot terms answer from the shortcut cache
+        (hot_cache.py) first -- bit-identical results, no postings decode
+        (plan-gated)."""
+        if filter_docs is None:
+            return self._search(query_terms, mode, k, exclude_terms)
         return _page(
             self.score_terms(query_terms, mode, exclude_terms, filter_docs), k
         )
+
+    def _search(
+        self,
+        query_terms: list[str],
+        mode: str,
+        k: int,
+        exclude_terms: list[str] | None = None,
+        after: tuple[float, int] | None = None,
+        wand_df_cutoff: int | None = None,
+        wand: bool = False,
+    ) -> DataFrame:
+        """The exact page strictly after ``after`` (search_after), on the
+        route ``route`` picks from the plan (``wand_df_cutoff`` overrides
+        its cutoff): the driver, the Spark exact path, or -- when ``wand``
+        (search_auto) -- block-max WAND; without ``wand`` a WAND plan runs
+        the Spark exact path. The hot-term cache answers an unrestricted
+        page 1 of one hot term before either exact path."""
+        plan = self.plan_terms(query_terms)
+        if _unanswerable(plan, query_terms, mode):
+            return _local_frame(self.spark, _SCORED)
+        ex_plan = self.plan_terms(exclude_terms) if exclude_terms else None
+        ex_ids = () if ex_plan is None else tuple(map(int, ex_plan["term_id"]))
+        ex_df = 0 if ex_plan is None else int(ex_plan["df"].sum())
+        via = route(plan, mode, wand_df_cutoff, ex_df)[0]
+        if via == "wand" and wand:
+            from .wand import wand_search
+
+            return wand_search(
+                self, query_terms, mode, k, exclude_terms=exclude_terms
+            )
+        if len(set(query_terms)) == 1 and not exclude_terms and after is None:
+            fast = self._hot_single_term(query_terms[0], k)
+            if fast is not None:
+                return fast
+        if via == "driver":
+            by_term = sorted(zip(plan["term"], plan["term_id"], plan["idf"]))
+            page = self._driver_pages([_DriverQuery(
+                [(int(t), float(i)) for _, t, i in by_term], mode, k, ex_ids,
+                after,
+            )])[0]
+            return _local_frame(self.spark, _SCORED, page)
+        return _page(self._score_plan(plan, mode, exclude_terms), k, after)
+
+    def _live_postings(self, term_ids: list[int]) -> tuple[np.ndarray, ...]:
+        """(term_id, doc_id, tf, dl) of ``term_ids``' live postings as numpy
+        arrays sorted by term_id, read in the driver: one Arrow read of
+        their blocks (_snapshot_rows), flattened by codec.decode_blocks,
+        less the postings this engine's tombstones annihilate (a doc's
+        postings from segments with seg_seq <= its upto_seq)."""
+        blocks = self._snapshot_rows(
+            "postings", ["term_id", "doc_ids", "tfs", "dls", "seg_seq"],
+            "term_id", term_ids,
+        )
+        doc, tf, dl, _, counts = decode_blocks(blocks, False)
+
+        def per_posting(name: str) -> np.ndarray:
+            return np.repeat(blocks.column(name).to_numpy(), counts)
+
+        tid = per_posting("term_id")
+        if self._tomb_arrays is not None:
+            t_doc, t_upto = self._tomb_arrays
+            i = np.minimum(np.searchsorted(t_doc, doc), t_doc.size - 1)
+            live = (t_doc[i] != doc) | (per_posting("seg_seq") > t_upto[i])
+            tid, doc, tf, dl = tid[live], doc[live], tf[live], dl[live]
+        order = np.argsort(tid, kind="stable")
+        return tid[order], doc[order], tf[order], dl[order]
+
+    def _driver_pages(self, queries: list[_DriverQuery]) -> list[list[tuple]]:
+        """The driver route: each query's exact page as (doc_id, score,
+        matched) rows, from ONE Arrow read of every query's and every
+        excluded term's blocks (_live_postings) and a numpy fold -- no
+        Spark job, and bit-identical to the Spark exact path:
+
+        * contrib = idf * tf_norm with bm25's numpy formulas, whose
+          operations are the SQL text's (tf_norm_sql), in the same order;
+        * per doc, 0.0 + c_slot0 + c_slot1 ... in term-string order, an
+          absent slot adding 0.0: _aggregate_scores' canonical fold;
+          ``matched`` counts the doc's contribution rows, and AND keeps
+          matched = n;
+        * a doc holding an excluded term is dropped ('-term'), the cursor
+          keeps (score < s0) OR (score = s0 AND doc_id > d0), and the page
+          is the top k by (score desc, doc_id asc).
+
+        Memory bound: the read holds the postings of the queries' terms and
+        excluded terms, at most their summed dictionary df -- which
+        ``route`` caps at WAND_DF_CUTOFF for one query -- plus the
+        superseded versions updates have not compacted away yet; each
+        query's fold holds its own terms' postings."""
+        ids = sorted(
+            {t for q in queries for t, _ in q.slots}
+            | {t for q in queries for t in q.exclude_ids}
+        )
+        tid, doc, tf, dl = self._live_postings(ids)
+        lo = dict(zip(ids, np.searchsorted(tid, ids, "left").tolist()))
+        hi = dict(zip(ids, np.searchsorted(tid, ids, "right").tolist()))
+        norm = tf_norm(tf, dl, self.avgdl, self.params)
+        pages = []
+        for q in queries:
+            spans = [(lo[t], hi[t]) for t, _ in q.slots]
+            udoc, inv = np.unique(
+                np.concatenate([doc[a:b] for a, b in spans]),
+                return_inverse=True,
+            )
+            score = np.zeros(udoc.size)
+            start = 0
+            for (_, idf), (a, b) in zip(q.slots, spans):
+                rows = inv[start:start + b - a]
+                score += np.bincount(rows, idf * norm[a:b], udoc.size)
+                start += b - a
+            matched = np.bincount(inv, minlength=udoc.size)
+            keep = (
+                matched == len(q.slots) if q.mode == "AND"
+                else np.ones(udoc.size, dtype=bool)
+            )
+            if q.exclude_ids:
+                ex = np.concatenate([doc[lo[t]:hi[t]] for t in q.exclude_ids])
+                keep &= ~np.isin(udoc, ex)
+            if q.after is not None:
+                s0, d0 = float(q.after[0]), int(q.after[1])
+                keep &= (score < s0) | ((score == s0) & (udoc > d0))
+            top = np.flatnonzero(keep)
+            k = max(int(q.k), 0)
+            if top.size > k > 0:
+                kth = np.partition(score[top], top.size - k)[top.size - k]
+                top = top[score[top] >= kth]
+            top = top[np.lexsort((udoc[top], -score[top]))][:k]
+            pages.append(list(zip(
+                udoc[top].tolist(), score[top].tolist(), matched[top].tolist()
+            )))
+        return pages
 
     def search_cached(
         self,
@@ -510,24 +699,15 @@ class SearchEngine:
         exclude_terms: list[str] | None = None,
         wand_df_cutoff: int | None = None,
     ) -> DataFrame:
-        """Adaptive single-query strategy choice: the exact scan
-        (search_terms) or block-max WAND (wand.wand_search), as ``route``
+        """Adaptive single-query strategy choice: the driver route, the
+        Spark exact scan or block-max WAND (wand.wand_search), as ``route``
         decides from the plan before any termlist is touched (plan_terms
         reads the dictionary in the driver: no Spark job). ``wand_df_cutoff``
-        overrides route's WAND_DF_CUTOFF. Both paths are rank-identical to
-        search_terms (the WAND side is gated bit-equal), so results do NOT
-        depend on the route -- only the plan shape does."""
-        plan = self.plan_terms(query_terms)
-        if plan.empty:
-            return _local_frame(self.spark, _SCORED)
-        if route(plan, mode, wand_df_cutoff)[0] == "exact":
-            return self.search_terms(
-                query_terms, mode=mode, k=k, exclude_terms=exclude_terms
-            )
-        from .wand import wand_search
-
-        return wand_search(
-            self, query_terms, mode, k, exclude_terms=exclude_terms
+        overrides route's WAND_DF_CUTOFF. Every route is rank-identical to
+        search_terms (the driver and WAND sides are gated bit-equal), so
+        results do NOT depend on the route -- only the plan shape does."""
+        return self._search(
+            query_terms, mode, k, exclude_terms, None, wand_df_cutoff, True
         )
 
     def _hot_single_term(self, term: str, k: int) -> DataFrame | None:
@@ -1068,9 +1248,10 @@ class SearchEngine:
     ) -> tuple[pd.DataFrame, list[_BatchQuery]]:
         """The one batch planner (search_many, rerank.batch_rerank): the
         plan of every batch term, and per answerable query its present
-        terms, dfs, mode, k and route -- the shared scan, or its own union
-        branch when its sum(df) exceeds SHARED_SCAN_MAX_ROWS. Unanswerable
-        queries are dropped: they have no rows (search_terms contract)."""
+        terms, dfs, mode, k and where it runs -- the driver when ``route``
+        says so, else the shared scan, or its own union branch when its
+        sum(df) exceeds SHARED_SCAN_MAX_ROWS. Unanswerable queries are
+        dropped: they have no rows (search_terms contract)."""
         plan = self.plan_terms(
             sorted({t for q in queries for t in q["terms"]})
         )
@@ -1083,16 +1264,21 @@ class SearchEngine:
             if _unanswerable(present, terms, mode):
                 continue
             dfs = [int(df_of[t]) for t in present]
+            via = (
+                "driver" if route({"df": dfs}, mode)[0] == "driver"
+                else "shared" if sum(dfs) <= SHARED_SCAN_MAX_ROWS
+                else "branch"
+            )
             planned.append(_BatchQuery(
                 str(q["query_id"]), present, dfs, mode,
-                int(q.get("k", default_k)), sum(dfs) <= SHARED_SCAN_MAX_ROWS,
+                int(q.get("k", default_k)), via,
             ))
         return plan, planned
 
     def search_many(
         self, queries: list[dict], default_k: int = 10
     ) -> DataFrame:
-        """Batch serving: MANY queries answered in ONE distributed job.
+        """Batch serving: MANY queries answered in ONE pass.
 
         ``queries`` = [{"query_id": str, "terms": [...], "mode": "AND"|"OR",
         "k": int}]. Returns (query_id, rank, doc_id, score, matched) with
@@ -1103,7 +1289,11 @@ class SearchEngine:
         workload. Per-doc scores aggregate with the same canonical term
         order, so identity holds bit-exactly.
 
-        Adaptive routing (_plan_batch): the shared scan replicates each
+        Adaptive routing (_plan_batch): every query ``route`` sends to the
+        driver is answered from ONE Arrow read of the union of those
+        queries' terms (_driver_pages); if no other query remains, the
+        batch launches no Spark job. The rest share ONE distributed job:
+        the shared scan replicates each
         term's postings into every query using the term, so a query over
         all-common terms contributes sum(df) rows to the scoring shuffle --
         at 10M docs a 2-common-term query is ~10M shuffled rows for 10
@@ -1118,15 +1308,34 @@ class SearchEngine:
         from pyspark.sql import Window
 
         plan, planned = self._plan_batch(queries, default_k)
-        shared = [q for q in planned if q.shared]
+        tid_of = dict(zip(plan["term"], plan["term_id"]))
+        idf_of = dict(zip(plan["term"], plan["idf"]))
+        local = sorted(
+            (q for q in planned if q.via == "driver"), key=lambda q: q.qid
+        )
+        shared = [q for q in planned if q.via == "shared"]
         frames = [
             _rank_branch(q.qid, self.search_terms(q.present, q.mode, q.k))
             for q in planned
-            if not q.shared
+            if q.via == "branch"
         ]
+        pages = self._driver_pages([
+            _DriverQuery(
+                [(int(tid_of[t]), float(idf_of[t])) for t in q.present],
+                q.mode, q.k,
+            )
+            for q in local
+        ]) if local else []
+        rows = [
+            (q.qid, rank, *row)
+            for q, page in zip(local, pages)
+            for rank, row in enumerate(page, 1)
+        ]
+        if not frames and not shared:
+            return _local_frame(self.spark, _BATCH_SCHEMA, rows)
+        if rows:
+            frames.append(_local_frame(self.spark, _BATCH_SCHEMA, rows))
         if shared:
-            tid_of = dict(zip(plan["term"], plan["term_id"]))
-            idf_of = dict(zip(plan["term"], plan["idf"]))
             # each query's term at its own slot `pos` (the index in its
             # ascending term list), so the batch folds exactly search_terms'
             # 0.0 + c_t1 + c_t2 ... per (query, doc). The per-term constants
@@ -1181,8 +1390,6 @@ class SearchEngine:
                     "score", "matched",
                 )
             ))
-        if not frames:
-            return _local_frame(self.spark, _BATCH_SCHEMA)
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
@@ -2154,7 +2361,7 @@ class SearchEngine:
         `Msg3a.cpp:1011` setTermFreqWeights is exactly this table) as a
         DataFrame an operator can join/log: per query term its dictionary
         row (present, df, idf) plus the query-level routing decision under
-        ``mode``: search_auto's ``route`` (exact|wand), its ``reason``
+        ``mode``: search_auto's ``route`` (driver|exact|wand), its ``reason``
         (sum_df|rarest_df|pruning) and the ``sum_df`` of the plan.
 
         Costs ZERO Spark jobs (plan_terms reads the dictionary in the
@@ -2207,11 +2414,10 @@ class SearchEngine:
         resumes without skips or repeats. An engine with
         nondeterministic float accumulation cannot offer this operator.
 
-        ``after=None`` is page 1 (identical to search_terms).
+        ``after=None`` is page 1 (identical to search_terms). The driver
+        route applies the same predicate before its numpy top-k.
         """
-        return _page(
-            self.score_terms(query_terms, mode, exclude_terms), k, after
-        )
+        return self._search(query_terms, mode, k, exclude_terms, after)
 
     def search_relaxed(
         self,

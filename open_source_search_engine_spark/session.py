@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import glob
 import os
+from functools import lru_cache
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -137,6 +138,12 @@ def _ship_package(spark: SparkSession) -> None:
     spark._osse_shipped = True
 
 
+@lru_cache(maxsize=64)
+def _ddl_schema(ddl: str):
+    """A DDL schema string parsed once: parsing is a JVM call."""
+    return _parse_datatype_string(ddl)
+
+
 def _local_frame(spark: SparkSession, schema, rows=()) -> DataFrame:
     """Driver-held ``rows`` (a collected page, a cache hit, a few plan
     constants; none for an empty answer) as a frame that plans as a
@@ -146,7 +153,7 @@ def _local_frame(spark: SparkSession, schema, rows=()) -> DataFrame:
     would be a Python RDD, paying a Python task per partition. An empty
     frame launches no task at all, even under a join."""
     if isinstance(schema, str):
-        schema = _parse_datatype_string(schema)
+        schema = _ddl_schema(schema)
     arrow = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(arrow)
     table = pa.Table.from_arrays(

@@ -65,6 +65,20 @@ def _groups_calls(monkeypatch) -> list:
     return calls
 
 
+def _driver_calls(monkeypatch, eng) -> list:
+    """Record every SearchEngine._driver_pages call on ``eng``: it runs
+    exactly when a query takes the driver route."""
+    calls = []
+    real = eng._driver_pages
+
+    def recording(queries):
+        calls.append(queries)
+        return real(queries)
+
+    monkeypatch.setattr(eng, "_driver_pages", recording)
+    return calls
+
+
 def test_rows_match_plan_and_absent_contract(eng):
     got = {
         r["term"]: r
@@ -83,7 +97,7 @@ def test_rows_match_plan_and_absent_contract(eng):
 
 
 def test_route_flips_at_cutoff_and_matches_search_auto(eng):
-    # sum_df(alpha, bravo) = 5: cutoff 5 -> exact, cutoff 4 -> wand under
+    # sum_df(alpha, bravo) = 5: cutoff 5 -> driver, cutoff 4 -> wand under
     # OR; an AND over them stays exact at any cutoff (rarest df 2)
     def routes(mode, cutoff):
         return {
@@ -92,7 +106,7 @@ def test_route_flips_at_cutoff_and_matches_search_auto(eng):
             .collect()
         }
 
-    assert routes("OR", 5) == {("exact", "sum_df")}
+    assert routes("OR", 5) == {("driver", "sum_df")}
     assert routes("OR", 4) == {("wand", "pruning")}
     assert routes("AND", 4) == {("exact", "rarest_df")}
     # both routes give identical pages (search_auto's stated contract)
@@ -104,7 +118,7 @@ def test_route_flips_at_cutoff_and_matches_search_auto(eng):
 @pytest.mark.parametrize(
     "wand_cutoff,rarest_cutoff,want",
     [
-        (5, 100_000, ("exact", "sum_df")),
+        (5, 100_000, ("driver", "sum_df")),
         (4, 100_000, ("exact", "rarest_df")),
         (4, 1, ("wand", "pruning")),
     ],
@@ -118,8 +132,11 @@ def test_explained_route_is_the_executed_route(
     explained = eng.explain_terms(terms).collect()
     assert {(r["route"], r["reason"]) for r in explained} == {want}
     calls = _groups_calls(monkeypatch)
+    local = _driver_calls(monkeypatch, eng)
     page = eng.search_auto(terms, "AND", 10).collect()
-    assert ("wand" if calls else "exact") == want[0]
+    assert len(calls) + len(local) <= 1
+    executed = "wand" if calls else "driver" if local else "exact"
+    assert executed == want[0]
     assert page == eng.search_terms(terms, "AND", 10).collect()
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from open_source_search_engine_spark.catalog import Catalog
+from open_source_search_engine_spark.operators import query
 from open_source_search_engine_spark.operators.index_build import (
     IndexConfig,
     build_index,
@@ -42,6 +43,12 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _spark_exact(monkeypatch) -> None:
+    """Route every plan to the Spark exact path (a zero driver cutoff), so
+    a query the cache declines shows a postings scan in its plan."""
+    monkeypatch.setattr(query, "WAND_DF_CUTOFF", 0)
+
+
 def test_cached_single_term_is_bit_identical(pair):
     hot, cold = pair
     for term in ["the", "spark", "index"]:
@@ -51,8 +58,9 @@ def test_cached_single_term_is_bit_identical(pair):
         assert a  # the synthetic corpus contains these
 
 
-def test_cached_plan_skips_postings(pair):
+def test_cached_plan_skips_postings(pair, monkeypatch):
     hot, cold = pair
+    _spark_exact(monkeypatch)
     p = _physical(hot.search_terms(["the"], "AND", 10))
     assert "hot_topk" in p
     assert "postings" not in p  # no decode, no postings scan
@@ -60,8 +68,9 @@ def test_cached_plan_skips_postings(pair):
     assert "postings" in p2
 
 
-def test_fast_path_declines_when_inapplicable(pair):
+def test_fast_path_declines_when_inapplicable(pair, monkeypatch):
     hot, _ = pair
+    _spark_exact(monkeypatch)
     # k beyond cache depth for a term with df > cache_k -> full scan
     p = _physical(hot.search_terms(["the"], "AND", 500))
     assert "postings" in p
@@ -74,7 +83,7 @@ def test_fast_path_declines_when_inapplicable(pair):
     assert "postings" in p3
 
 
-def test_cache_rejected_on_bm25_param_mismatch(pair):
+def test_cache_rejected_on_bm25_param_mismatch(pair, monkeypatch):
     """The cached within-term ranking is the tf_norm order, which depends
     on k1/b -- an engine whose params differ from the cache's build params
     must fall back to the full scan (and still rank correctly)."""
@@ -86,6 +95,7 @@ def test_cache_rejected_on_bm25_param_mismatch(pair):
         params=BM25Params(k1=0.4, b=0.1), tokenizer_mode="ascii",
     )
     assert eng._hot_topk is None  # cache not accepted
+    _spark_exact(monkeypatch)
     p = _physical(eng.search_terms(["the"], "AND", 10))
     assert "postings" in p
     # matching params still accept it
@@ -136,7 +146,7 @@ def test_compact_rebuilds_cache_with_original_params(spark, tmp_path_factory):
     )
 
 
-def test_cache_invalidates_after_updates(spark, tmp_path_factory):
+def test_cache_invalidates_after_updates(spark, tmp_path_factory, monkeypatch):
     from open_source_search_engine_spark.operators.updates import apply_updates
 
     docs = transcripts_to_docs(synth_transcripts(spark, 300))
@@ -152,6 +162,7 @@ def test_cache_invalidates_after_updates(spark, tmp_path_factory):
     apply_updates(spark, cat, upserts=upsert, config=IndexConfig(tokenizer_mode="ascii"))
     eng = SearchEngine(spark, cat, tokenizer_mode="ascii")
     # stale cache is ignored: plan scans postings and sees the new text
+    _spark_exact(monkeypatch)
     p = _physical(eng.search_terms(["the"], "AND", 10))
     assert "postings" in p
     top = _rows(eng.search_terms(["replacement"], "AND", 5))

@@ -52,7 +52,9 @@ def test_column_pruning_skips_positions(eng):
     assert scan2 and any("positions" in ln.split("ReadSchema")[1] for ln in scan2)
 
 
-def test_topk_is_take_ordered(eng):
+def test_topk_is_take_ordered(eng, monkeypatch):
+    # the Spark exact path: a zero cutoff routes the plan off the driver
+    monkeypatch.setattr(query, "WAND_DF_CUTOFF", 0)
     df = eng.search_terms(["spark", "index"], "AND", 10)
     p = _physical(df)
     assert "TakeOrderedAndProject" in p
@@ -253,12 +255,14 @@ def test_phrase_postings_prunes_scan(eng):
     assert "Cartesian" not in p
 
 
-def test_search_many_pre_topk_below_window(eng):
+def test_search_many_pre_topk_below_window(eng, monkeypatch):
     # r4 batch-serving fix: a bounded per-partition top-k (the partial
     # WindowGroupLimit) must sit BELOW the per-query rank window and its
     # shuffle, so the window ranks at most n_partitions*k rows per query
     # instead of fully sorting every query's candidate set (the 10M-index
-    # 590s anti-pattern)
+    # 590s anti-pattern). A zero cutoff keeps both queries off the driver
+    # route, in the shared scan.
+    monkeypatch.setattr(query, "WAND_DF_CUTOFF", 0)
     batch = [
         {"query_id": "a", "terms": ["spark", "index"], "mode": "AND", "k": 5},
         {"query_id": "b", "terms": ["the"], "mode": "OR", "k": 5},
@@ -709,7 +713,11 @@ def test_wand_reads_a_fileless_postings_through_spark(
         )
 
 
-def test_exact_and_query_over_unplanned_terms_launches_two_jobs(spark, eng):
+def test_exact_and_query_over_unplanned_terms_launches_two_jobs(
+    spark, eng, monkeypatch
+):
+    # the Spark exact path: a zero cutoff routes the AND query rarest_df
+    monkeypatch.setattr(query, "WAND_DF_CUTOFF", 0)
     warm = SearchEngine(spark, eng.catalog)
     warm.search_auto(["merge", "shard"], "AND", 10).collect()
     q = ["vector", "stream"]

@@ -75,7 +75,11 @@ def test_cursor_resumes_inside_tie_run(eng):
     assert nxt[0]["score"] == full[tie_idx + 1]["score"]
 
 
-def test_deep_page_plan_is_single_topk(eng):
+def test_deep_page_plan_is_single_topk(eng, monkeypatch):
+    from open_source_search_engine_spark.operators import query
+
+    # the Spark exact path: a zero cutoff routes the plan off the driver
+    monkeypatch.setattr(query, "WAND_DF_CUTOFF", 0)
     p = (
         eng.search_after(Q, "OR", k=10, after=(0.5, 123))
         ._jdf.queryExecution()
