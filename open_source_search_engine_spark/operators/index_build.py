@@ -71,7 +71,6 @@ from ..functions.bm25 import BM25Params
 from ..functions.hashing import (
     doc_id_col,
     py_block_ids,
-    py_term_id,
     py_term_ids,
 )
 from ..functions.tokenizer import (
@@ -87,6 +86,7 @@ TOKENS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("term", T.StringType(), False),
+        T.StructField("term_id", T.LongType(), False),
         T.StructField("tf", T.IntegerType(), False),
         T.StructField("positions", T.ArrayType(T.IntegerType(), False), False),
         T.StructField("dl", T.IntegerType(), False),
@@ -403,24 +403,13 @@ def _tokenize(
     return {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
 
 
-def py_any_term_id(term: str) -> int:
-    """Term id for unigram OR bigram term strings. A bigram term is the
-    space-joined member pair ("t1 t2" -- the tokenizer never emits spaces,
-    so the space is unambiguous); its id mixes the member unigram ids
-    exactly like the build combiner (_bigram_ids), so incremental updates
-    assign NEW bigram terms the same id a full rebuild would."""
-    if " " in term:
-        a, b = term.split(" ", 1)
-        ha = np.array([py_term_id(a)], dtype=np.int64)
-        hb = np.array([py_term_id(b)], dtype=np.int64)
-        return int(_bigram_ids(ha, hb)[0])
-    return py_term_id(term)
-
-
 def tokenize_docs(
     docs: DataFrame, mode: str = "unicode", bigrams: bool = False
 ) -> DataFrame:
-    """(doc_id, text, ...) -> (doc_id, term, tf, positions, dl) tuples.
+    """(doc_id, text, ...) -> (doc_id, term, term_id, tf, positions, dl)
+    tuples; ``term_id`` is the build tokenizer's id, so a bigram's is its
+    member-id mix (_bigram_ids) and an update gives a NEW term the id a
+    rebuild would.
 
     The "metaList" (reference `XmlDoc.cpp:12322` getMetaList) as a
     DataFrame. Used for term-stats deltas and tests; the BUILD path uses the
@@ -445,6 +434,7 @@ def tokenize_docs(
                         [term_strings[t] for t in tk["tid"].tolist()],
                         pa.string(),
                     ),
+                    pa.array(tk["tid"], pa.int64()),
                     pa.array(tk["tf"], pa.int32()),
                     codec.doc_positions(tk["tf"], tk["pos_flat"]),
                     pa.array(tk["dl"], pa.int32()),

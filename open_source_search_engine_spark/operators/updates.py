@@ -38,8 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import pandas as pd
-
 from ..catalog import Catalog
 from ..functions.bm25 import BM25Params
 from ..session import _local_frame
@@ -49,25 +47,12 @@ from .index_build import (
     _check_block_format,
     finish_index,
     load_documents,
-    py_any_term_id,
     segment,
     stored_positions,
     tokenize_docs,
     without_skip_terms,
     write_corpus_stats,
 )
-
-
-def _py_term_id_udf():
-    # built lazily: pandas_udf type resolution needs an active SparkSession.
-    # py_any_term_id handles unigram AND bigram ("t1 t2") term strings, so
-    # a NEW bigram term first seen in a delta gets the same id a rebuild
-    # would assign (the member-id mix, index_build._bigram_ids)
-    @F.pandas_udf("long")
-    def udf(terms: pd.Series) -> pd.Series:
-        return terms.map(py_any_term_id).astype("int64")
-
-    return udf
 
 
 def tombstones(spark: SparkSession, catalog: Catalog) -> DataFrame:
@@ -132,15 +117,23 @@ def apply_updates(
     n_new = upserts.count()
 
     # ---- stats deltas: negative keys for old text, positive for new ------
+    # each row carries the tokenizer's term id (``tid``, a function of the
+    # term), so a term new to the dictionary takes its id from the delta
     neg = tokenize_docs(old_docs, config.tokenizer_mode, config.bigrams).select(
-        "term", F.lit(-1).alias("ddf"), (-F.col("tf")).cast("long").alias("dcf")
+        "term",
+        F.col("term_id").alias("tid"),
+        F.lit(-1).alias("ddf"),
+        (-F.col("tf")).cast("long").alias("dcf"),
     )
     pos = tokenize_docs(upserts, config.tokenizer_mode, config.bigrams).select(
-        "term", F.lit(1).alias("ddf"), F.col("tf").cast("long").alias("dcf")
+        "term",
+        F.col("term_id").alias("tid"),
+        F.lit(1).alias("ddf"),
+        F.col("tf").cast("long").alias("dcf"),
     )
     delta = (
         neg.unionByName(pos)
-        .groupBy("term")
+        .groupBy("term", "tid")
         .agg(F.sum("ddf").alias("ddf"), F.sum("dcf").alias("dcf"))
     )
     # skip words have no termlists and no term_stats rows in the built
@@ -157,9 +150,7 @@ def apply_updates(
     new_ts = (
         ts.join(delta, "term", "full_outer")
         .select(
-            F.coalesce("term_id", _py_term_id_udf()(F.col("term"))).alias(
-                "term_id"
-            ),
+            F.coalesce("term_id", "tid").alias("term_id"),
             "term",
             (F.coalesce("df", F.lit(0)) + F.coalesce("ddf", F.lit(0)))
             .cast("long")

@@ -17,12 +17,21 @@ from hypothesis import strategies as st
 from open_source_search_engine_spark.functions.hashing import py_term_id
 from open_source_search_engine_spark.functions.tokenizer import _pattern
 from open_source_search_engine_spark.operators.index_build import (
+    _bigram_ids,
     _fnv_hash_tokens,
     _tokenize_batch,
     _tokenize_batch_fast,
-    py_any_term_id,
 )
 from open_source_search_engine_spark.sources.transcripts import PLANTED
+
+
+def _term_id(term):
+    """A term string's id from hashing.py_term_id alone: a bigram ("t1
+    t2") mixes its members' ids."""
+    if " " not in term:
+        return py_term_id(term)
+    a, b = (np.array([py_term_id(w)], dtype=np.int64) for w in term.split(" "))
+    return int(_bigram_ids(a, b)[0])
 
 
 def _groups_slow(b):
@@ -73,7 +82,7 @@ def _assert_bigram_paths_agree(b):
     assert slow == fast
     groups, ts = fast
     for tid, term in ts.items():
-        assert py_any_term_id(term) == tid
+        assert _term_id(term) == tid
     for d, term, _f, _dl, _pos in groups or []:
         # every bigram term string is two registered unigram strings
         assert all(w in ts.values() for w in term.split(" "))
